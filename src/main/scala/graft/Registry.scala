@@ -6,19 +6,18 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * rows-only check; used for probabilistic / streaming-stateful /
   * binary-payload operators whose outputs aren't ANSI-SQL-expressible).
   *
-  * `planFn`: for queries whose runtime form eagerly checkpoints interior
-  * frames (the ADVICE r5/r6 cache-release pattern — the checkpoint
-  * collapses everything behind it to a LogicalRDD leaf), the SAME
-  * composition built lazily with no checkpoint/cache-release, so plan
-  * audits (PlanAuditSpec, PlanSpec) can still inspect the full physical
-  * plan. Semantically identical to `fn`; never run for results.
+  * `fn` is the one body of the query: results, benchmarks and plan
+  * audits all run it. A body that caches intermediates does so inside
+  * [[graft.util.Materialize.scoped]] and returns a materialized result,
+  * so nothing stays in the session cache after it returns. Plan audits
+  * see every action the body ran through
+  * [[org.apache.spark.sql.graft.ExecutedPlans.capture]].
   */
 final case class QueryDef(
     name: String,
     fn: (SparkSession, String) => DataFrame,
     oracle: Option[String],
-    doc: String,
-    planFn: Option[(SparkSession, String) => DataFrame] = None)
+    doc: String)
 
 /** Aggregates every module's queries into the driver contract maps. */
 object Registry {
@@ -43,10 +42,4 @@ object Registry {
 
   def oracleSql: Map[String, String] =
     all.flatMap(q => q.oracle.map(q.name -> _)).toMap
-
-  /** Plan-audit form: the lazy un-checkpointed composition where one
-    * exists, the runtime form otherwise.
-    */
-  def planForms: Map[String, (SparkSession, String) => DataFrame] =
-    all.map(q => q.name -> q.planFn.getOrElse(q.fn)).toMap
 }

@@ -21,9 +21,9 @@ object Verify {
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
-      // queries that .cache() intermediates (q42/q44) would otherwise pin
-      // partitions for the remaining ~80 queries of the run (Bench does the
-      // same per-query isolation)
+      // registry queries release their own caches (PlanAuditSpec pins
+      // that); the clear only keeps each query's run independent of the
+      // ones before it, the same per-query isolation Bench applies
       finally spark.catalog.clearCache()
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.{QueryDef, Tables}
 import graft.clean.TextOps
-import graft.util.Det
+import graft.util.{Det, Materialize}
 
 /** Corpus-curation operators — the filtering/cleaning stages of a
   * large-scale training-data pipeline (builder mandate, beyond the
@@ -365,7 +365,7 @@ object CurationQueries {
     * occurrence stream — all linear, all shuffle-on-gram; V rides along as
     * a broadcast 1-row frame, not a driver action.
     */
-  private def q142(s: SparkSession, d: String): DataFrame = {
+  private def q142(s: SparkSession, d: String): DataFrame = Materialize.scoped { m =>
     val w = Window.partitionBy("doc_id").orderBy("pos")
     val tri = tokenStream(s, d)
       .select(col("doc_id"), col("w"),
@@ -375,8 +375,8 @@ object CurationQueries {
       .select(col("doc_id"),
         concat_ws(" ", col("w"), col("w1")).as("big"),
         concat_ws(" ", col("w"), col("w1"), col("w2")).as("gram"))
-      .cache() // feeds three consumers (ct, cb, the occurrence join) —
-               // evaluate the posexplode+window stream once (see q42)
+      .transform(m.cache) // feeds three consumers (ct, cb, the occurrence join) —
+                          // evaluate the posexplode+window stream once (see q42)
     val ct = tri.groupBy("gram").agg(count(lit(1)).as("ct"))
     val cb = tri.groupBy("big").agg(count(lit(1)).as("cb"))
     val vocab = broadcast(
@@ -392,6 +392,7 @@ object CurationQueries {
           .as("n_rare"),
         min("p").as("min_p"))
       .orderBy("doc_id")
+      .localCheckpoint(true)
   }
 
   private val q142Sql =
@@ -584,7 +585,7 @@ object CurationQueries {
   /** The q163 tokenizer's PINNED merge table (a frozen tokenizer artifact,
     * like a released tokenizer.json): q163's billing query deliberately
     * keeps a fixed model so its numbers are stable across corpus edits.
-    * q158 below replays the TRAINED table from [[bpeTrain]] instead.
+    * q158 below replays the TRAINED table from [[bpeTrainSpine]] instead.
     */
   private val bpeMerges: Seq[(String, String)] = Seq(
     "a" -> "t", "e" -> "r", "t" -> "h", "th" -> "e",
@@ -653,48 +654,36 @@ object CurationQueries {
     * statistics). Returns (per-round 1-row winner frames
     * (round, a, b, n), final merged spine).
     *
-    * Eager mode mirrors q137/q181: the vocab-sized spine is cached once
-    * (the corpus pass happens once; `release()` it after consuming the
-    * result), and each round's winner is a 1-row `localCheckpoint(true)`
-    * — WITHOUT it the plan is exponential in k (round r's spine embeds
-    * every earlier winner's whole subtree: T(r) = Σ T(<r)). With it,
-    * round r's plan is the cached spine + r broadcast 1-row joins —
-    * linear, and the corpus is never re-read. The lazy form (plan
-    * audits) keeps the full composition un-checkpointed, so audited k
-    * must stay small (the per-round plan SHAPE is k-independent).
+    * Runs over any word-frequency spine (w, freq, s) — PropertySpec
+    * fuzzes it on generated corpora. The caller caches a corpus-derived
+    * spine (q137/q181's shape: the corpus pass happens once). Each
+    * round's winner is a 1-row `localCheckpoint(true)` — WITHOUT it the
+    * plan is exponential in k (round r's spine embeds every earlier
+    * winner's whole subtree: T(r) = Σ T(<r)). With it, round r's plan is
+    * the spine + r broadcast 1-row joins — linear, and the corpus is
+    * never re-read.
     */
-  private def bpeTrain(s: SparkSession, d: String, k: Int, eager: Boolean)
-      : (Seq[DataFrame], DataFrame, () => Unit) =
-    bpeTrainSpine(bpeSpine(s, d), k, eager)
-
-  /** [[bpeTrain]] over an arbitrary word-frequency spine (w, freq, s) —
-    * lets PropertySpec fuzz the trainer on generated corpora.
-    */
-  private[graft] def bpeTrainSpine(spine0: DataFrame, k: Int, eager: Boolean)
-      : (Seq[DataFrame], DataFrame, () => Unit) = {
-    val sp0 = if (eager) spine0.cache() else spine0
-    var sp = sp0
+  private[graft] def bpeTrainSpine(spine: DataFrame, k: Int)
+      : (Seq[DataFrame], DataFrame) = {
+    var sp = spine
     val winners = Seq.newBuilder[DataFrame]
     for (r <- 1 to k) {
-      val win0 = bpePairs(sp).orderBy(desc("n"), asc("a"), asc("b")).limit(1)
-      val win = if (eager) {
-        val w = win0.localCheckpoint(true)
-        // Exhausted pair table (every word fully merged before round k):
-        // bpeMergeStep's crossJoin would silently EMPTY the spine, and the
-        // DuckDB mirror empties identically, so the oracle cannot catch
-        // it — fail loudly instead (ADVICE r7).
-        require(!w.isEmpty,
-          s"BPE training round $r: pair table exhausted — k=$k exceeds what this corpus can merge")
-        w
-      } else win0
+      val win = bpePairs(sp).orderBy(desc("n"), asc("a"), asc("b")).limit(1)
+        .localCheckpoint(true)
+      // Exhausted pair table (every word fully merged before round k):
+      // bpeMergeStep's crossJoin would silently EMPTY the spine, and the
+      // DuckDB mirror empties identically, so the oracle cannot catch
+      // it — fail loudly instead (ADVICE r7).
+      require(!win.isEmpty,
+        s"BPE training round $r: pair table exhausted — k=$k exceeds what this corpus can merge")
       winners += win.select(lit(r.toLong).as("round"),
         col("a"), col("b"), col("n"))
       sp = bpeMergeStep(sp, win)
     }
-    (winners.result(), sp, () => { if (eager) { sp0.unpersist(); () } })
+    (winners.result(), sp)
   }
 
-  /** Shared DuckDB mirror of [[bpeTrain]]: CTE chain s0 (spaced spine),
+  /** Shared DuckDB mirror of [[bpeTrainSpine]]: CTE chain s0 (spaced spine),
     * then per round r: p_r (pair counts), m_r (argmax winner), s_r
     * (merged spine) — programmatic, like q137's iterSql.
     */
@@ -752,23 +741,16 @@ object CurationQueries {
     if (f.isFile) s"${f.lastModified}:${f.length}" else ""
   }
 
-  /** Best-effort release of a localCheckpoint frame's blocks (the leaf
-    * LogicalRDD's rdd — Dataset.unpersist can't reach it).
-    */
-  private def releaseCheckpoint(df: DataFrame): Unit =
-    try df.queryExecution.analyzed.collect {
-      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.unpersist(false)
-    } catch { case _: Throwable => () }
-
   private def trainedWinners(s: SparkSession, d: String): Seq[DataFrame] =
     bpeMemo.synchronized {
       val key = (s.sparkContext.applicationId, d, datasetToken(d))
       bpeMemo.getOrElse(key, {
         val stale = bpeMemo.keySet.filterNot(_ == key)
         stale.toList.foreach(k =>
-          bpeMemo.remove(k).foreach(_.foreach(releaseCheckpoint)))
-        val (winners, _, release) = bpeTrain(s, d, BpeRounds, eager = true)
-        release()
+          bpeMemo.remove(k).foreach(_.foreach(Materialize.releaseCheckpoint)))
+        val winners = Materialize.scoped { m =>
+          bpeTrainSpine(m.cache(bpeSpine(s, d)), BpeRounds)._1
+        }
         bpeMemo.put(key, winners)
         winners
       })
@@ -780,12 +762,6 @@ object CurationQueries {
     */
   private def q186(s: SparkSession, d: String): DataFrame =
     trainedWinners(s, d).reduce(_ unionAll _).orderBy("round")
-
-  /** Lazy small-k form for plan audits (see [[bpeTrain]]). */
-  private[graft] def q186Lazy(s: SparkSession, d: String): DataFrame = {
-    val (winners, _, _) = bpeTrain(s, d, 2, eager = false)
-    winners.reduce(_ unionAll _).orderBy("round")
-  }
 
   private val q186Sql =
     "WITH " + bpeTrainSql(BpeRounds) + "\nSELECT round, a, b, n FROM (" +
@@ -806,11 +782,6 @@ object CurationQueries {
     // no cache is needed (each frame has exactly one consumer)
     val fin = trainedWinners(s, d)
       .foldLeft(bpeSpine(s, d))((sp, win) => bpeMergeStep(sp, win))
-    bpeApplyProjection(fin)
-  }
-
-  private[graft] def q158Lazy(s: SparkSession, d: String): DataFrame = {
-    val (_, fin, _) = bpeTrain(s, d, 2, eager = false)
     bpeApplyProjection(fin)
   }
 
@@ -901,7 +872,7 @@ object CurationQueries {
     * apply is a SEQUENTIAL fold in rank order (identical in both engines)
     * so even that corner is deterministic.
     *
-    * Plan shape per round (eager): pair-count over the cached spine →
+    * Plan shape per round: pair-count over the (caller-cached) spine →
     * top-candM `localCheckpoint` (≤32 rows) → window rank + anti-join +
     * rank filter, checkpointed again (≤8 rows) → ONE crossJoin of a 1-row
     * collected batch array + an `aggregate` fold of literal replaces.
@@ -915,11 +886,9 @@ object CurationQueries {
     * rounds sequentially; Zipfian real vocabularies have far more
     * symbol-disjoint high-count pairs and fill the 8-merge cap.
     */
-  private[graft] def bpeBatchTrainSpine(spine0: DataFrame, rounds: Int,
-      candM: Int, batchM: Int, eager: Boolean)
-      : (Seq[DataFrame], DataFrame, () => Unit) = {
-    val sp0 = if (eager) spine0.cache() else spine0
-    var sp = sp0
+  private[graft] def bpeBatchTrainSpine(spine: DataFrame, rounds: Int,
+      candM: Int, batchM: Int): (Seq[DataFrame], DataFrame) = {
+    var sp = spine
     val batches = Seq.newBuilder[DataFrame]
     for (r <- 1 to rounds) {
       val rankW = Window.orderBy(desc("n"), asc("a"), asc("b"))
@@ -929,7 +898,7 @@ object CurationQueries {
       // duplicates its subtree inside the batch job — measured WORSE
       // (interleaved A/B median 3.69 vs 3.05 s): the two serial stage
       // chains inside one job cost more than the checkpoint round-trip.
-      val cand = (if (eager) cand0.localCheckpoint(true) else cand0)
+      val cand = cand0.localCheckpoint(true)
         .withColumn("rk", row_number().over(rankW))
       val hi = cand.select(col("rk").as("hrk"),
         col("a").as("ha"), col("b").as("hb"))
@@ -938,19 +907,16 @@ object CurationQueries {
           (col("ha") === col("a") || col("ha") === col("b") ||
             col("hb") === col("a") || col("hb") === col("b")),
         "left_anti")
-      val batch0 = free
+      val batch = free
         .withColumn("j", row_number().over(Window.orderBy("rk")))
         .filter(col("j") <= batchM)
         .select(lit(r.toLong).as("round"), col("j").cast("long").as("j"),
           col("a"), col("b"), col("n"))
-      val batch = if (eager) {
-        val b = batch0.localCheckpoint(true)
-        // same loud-failure contract as bpeTrainSpine (ADVICE r7): an
-        // exhausted pair table would silently empty the spine downstream
-        require(!b.isEmpty,
-          s"batched BPE training round $r: pair table exhausted")
-        b
-      } else batch0
+        .localCheckpoint(true)
+      // same loud-failure contract as bpeTrainSpine (ADVICE r7): an
+      // exhausted pair table would silently empty the spine downstream
+      require(!batch.isEmpty,
+        s"batched BPE training round $r: pair table exhausted")
       batches += batch
       // whole-batch apply: ONE 1-row broadcast (the batch as a j-sorted
       // struct array) + a sequential `aggregate` fold of symbol-boundary
@@ -966,12 +932,11 @@ object CurationQueries {
               concat(lit("|"), m.getField("a"), m.getField("b"),
                 lit("|")))).as("s"))
     }
-    (batches.result(), sp,
-      () => { if (eager) { sp0.unpersist(); () } })
+    (batches.result(), sp)
   }
 
   /** Run `body` with AQE off, restoring the previous setting. The batched
-    * trainer's eager loop checkpoints ~3 vocab-sized frames per round;
+    * trainer's loop checkpoints ~3 vocab-sized frames per round;
     * under AQE every exchange materializes as its own stage-job, turning
     * 8 rounds into ~200 scheduler round-trips of 8–15 ms each (profiled:
     * 5.3 s wall, almost no executor time). With AQE off each checkpoint
@@ -997,28 +962,16 @@ object CurationQueries {
     // Interleaved A/B (with the bpePairs rewrite in): median 3.53 →
     // 3.22 s, 5/5 pairs.
     val k = math.min(s.sparkContext.defaultParallelism, 8)
-    val spine = bpeSpine(s, d).repartition(k).cache()
-    spine.count() // corpus pass runs NOW, before the conf narrows
-    graft.streaming.Pipeline.withShufflePartitions(s, k) {
-      val (batches, _, release) = bpeBatchTrainSpine(spine,
-        Q192Rounds, Q192CandM, Q192BatchM, eager = true)
-      // release in a finally (ADVICE r16): a throwing round (the
-      // exhausted-pair require, or any failure in the final reduce/
-      // checkpoint) must not leave the session-lifetime spine cache
-      // pinned. spine.unpersist() too — cache() of an already-cached
-      // frame aliases the same entry, so the extra call is a safe no-op
-      // today and correct if the re-cache ever stops aliasing.
-      try batches.reduce(_ unionAll _).orderBy("round", "j")
-        .localCheckpoint(true) // materialize while AQE is off; ≤64 rows
-      finally { release(); spine.unpersist(); () }
+    Materialize.scoped { m =>
+      val spine = m.cache(bpeSpine(s, d).repartition(k))
+      spine.count() // corpus pass runs NOW, before the conf narrows
+      graft.streaming.Pipeline.withShufflePartitions(s, k) {
+        val (batches, _) = bpeBatchTrainSpine(spine,
+          Q192Rounds, Q192CandM, Q192BatchM)
+        batches.reduce(_ unionAll _).orderBy("round", "j")
+          .localCheckpoint(true) // materialize while AQE is off; ≤64 rows
+      }
     }
-  }
-
-  /** Lazy small-rounds form for plan audits (see [[bpeBatchTrainSpine]]). */
-  private[graft] def q192Lazy(s: SparkSession, d: String): DataFrame = {
-    val (batches, _, _) = bpeBatchTrainSpine(bpeSpine(s, d),
-      2, Q192CandM, Q192BatchM, eager = false)
-    batches.reduce(_ unionAll _).orderBy("round", "j")
   }
 
   /** DuckDB mirror of [[bpeBatchTrainSpine]]. The batch apply unrolls the
@@ -1871,13 +1824,6 @@ object CurationQueries {
     vocab
   }
 
-  private def q224Frame(s: SparkSession, spine: DataFrame,
-      caps: Seq[Int]): DataFrame =
-    ulmTrain(s, spine, caps)
-      .select(col("piece"), length(col("piece")).cast("long").as("piece_len"),
-        col("cnt").as("n_uses"), col("fp"))
-      .orderBy("piece")
-
   /** Session-scoped memo of the trained vocabulary ROWS (plain data, ≤
     * |charset|+24 tuples) — q224 and q225 share one training run; the
     * bpeMemo recipe (one (app, dataset, mtime) generation) without the
@@ -1909,13 +1855,6 @@ object CurationQueries {
       .orderBy("piece")
   }
 
-  /** 1-round form on the un-checkpointed spine for plan audits (the
-    * per-round plan shape is round-independent; earlier rounds complete
-    * during construction via the bounded vocab collects).
-    */
-  private[graft] def q224Lazy(s: SparkSession, d: String): DataFrame =
-    q224Frame(s, ulmSpine(s, d), UlmPruneCaps.take(1))
-
   /** Trained-tokenizer APPLY: Viterbi-segment the corpus vocabulary with
     * the q224 model — the q158 shape (apply once per unique word, weight
     * by freq).
@@ -1924,16 +1863,6 @@ object CurationQueries {
     val spine = ulmSpine(s, d).localCheckpoint(true)
     val rows = ulmTrainedRows(s, d, () => spine)
     ulmViterbi(spine, ulmVocabLit(rows))
-      .select(col("w"), col("freq"), col("seg").as("pieces"),
-        size(split(col("seg"), " ")).cast("long").as("n_pieces"),
-        col("score").as("fp_score"))
-      .orderBy("w")
-  }
-
-  private[graft] def q225Lazy(s: SparkSession, d: String): DataFrame = {
-    val spine = ulmSpine(s, d)
-    val vocab = ulmTrain(s, spine, UlmPruneCaps.take(1))
-    ulmViterbi(spine, ulmVocabLit(ulmVocabRows(vocab)))
       .select(col("w"), col("freq"), col("seg").as("pieces"),
         size(split(col("seg"), " ")).cast("long").as("n_pieces"),
         col("score").as("fp_score"))
@@ -2136,11 +2065,9 @@ object CurationQueries {
     QueryDef("q230_erasure_cascade", q230, Some(q230Sql),
       "right-to-be-forgotten erasure cascade: broadcast subject set, FK-cascaded deletes, per-table ledger + orphan audit"),
     QueryDef("q224_unigram_lm_train", q224, Some(q224Sql),
-      "unigram-LM (SentencePiece-style) tokenizer training: substring seed + hard-EM Viterbi rounds + loss-contribution pruning, fixed-point log-probs",
-      planFn = Some(q224Lazy)),
+      "unigram-LM (SentencePiece-style) tokenizer training: substring seed + hard-EM Viterbi rounds + loss-contribution pruning, fixed-point log-probs"),
     QueryDef("q225_unigram_lm_apply", q225, Some(q225Sql),
-      "unigram-LM tokenizer apply: Viterbi segmentation of the corpus vocabulary under the q224-trained model",
-      planFn = Some(q225Lazy)),
+      "unigram-LM tokenizer apply: Viterbi segmentation of the corpus vocabulary under the q224-trained model"),
     QueryDef("q235_dp_histogram", q235, Some(q235Sql),
       "ε-DP histogram release: two-sided geometric (discrete Laplace) noise at ε=ln2, exact dyadic inverse-CDF in int64, clamped post-processing"),
     QueryDef("q215_k_anonymity", q215, Some(q215Sql),
@@ -2172,14 +2099,11 @@ object CurationQueries {
     QueryDef("q153_model_filter", q153, Some(q153Sql),
       "model-based quality filter: pinned fixed-point linear classifier inference"),
     QueryDef("q158_bpe_apply", q158, Some(q158Sql),
-      "tokenizer apply: greedy BPE replay of the q186-trained merge table",
-      planFn = Some(q158Lazy)),
+      "tokenizer apply: greedy BPE replay of the q186-trained merge table"),
     QueryDef("q186_bpe_train", q186, Some(q186Sql),
-      "iterative BPE tokenizer training: 8 unrolled argmax-merge-recount rounds",
-      planFn = Some(q186Lazy)),
+      "iterative BPE tokenizer training: 8 unrolled argmax-merge-recount rounds"),
     QueryDef("q192_bpe_batch_train", q192, Some(q192Sql),
-      "batched-merge BPE training: up to 8 symbol-disjoint merges per round (64-merge capacity in 8 rounds)",
-      planFn = Some(q192Lazy)),
+      "batched-merge BPE training: up to 8 symbol-disjoint merges per round (64-merge capacity in 8 rounds)"),
     QueryDef("q159_dsir_select", q159, Some(q159Sql),
       "DSIR-style importance-ratio data selection (target vs raw unigram models)"),
     QueryDef("q163_token_accounting", q163, Some(q163Sql),

@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.GraftFunctions.sortedIntersectCount
 
 import graft.{QueryDef, Tables}
-import graft.util.Det
+import graft.util.{Det, Materialize}
 
 /** Deduplication operator family over `documents` — the training-data-
   * pipeline operators: exact dedup, blocked token-set Jaccard, word-n-gram
@@ -426,12 +426,13 @@ object DedupQueries {
     * The exact (non-probabilistic) reference answer that q44's LSH
     * approximates.
     */
-  private def q42(s: SparkSession, d: String): DataFrame = {
+  private def q42(s: SparkSession, d: String): DataFrame = Materialize.scoped { m =>
     val docs = spreadDocs(s, d)
       .select(col("doc_id"), col("lang"), hashedToks(col("text")).as("arr"))
-      .cache() // evaluate token hashing once per doc, not per pair (see q43)
+      .transform(m.cache) // evaluate token hashing once per doc, not per pair (see q43)
     jaccardPairs(docs, 9, 10, BlockCap, langStatsFrame(s, d))
       .select("id_a", "id_b", "jaccard")
+      .localCheckpoint(true)
   }
 
   private val q42Sql =
@@ -449,7 +450,7 @@ object DedupQueries {
     * the per-token hash array (each token hashed once, not once per
     * shingle).
     */
-  private def q43(s: SparkSession, d: String): DataFrame = {
+  private def q43(s: SparkSession, d: String): DataFrame = Materialize.scoped { m =>
     // Shingles are built RELATIONALLY (posexplode → lead window), not as an
     // array expression: `element_at(transform(...), i)` looks innocent but
     // Catalyst inlines lambda-bound subtrees, so the whole token-hash array
@@ -489,9 +490,10 @@ object DedupQueries {
     val docsArr = postings
       .groupBy("doc_id", "lang")
       .agg(sort_array(collect_list(col("g"))).as("arr"))
-      .cache() // evaluate shingle arrays once per doc, not per pair
+      .transform(m.cache) // evaluate shingle arrays once per doc, not per pair
     jaccardPairs(docsArr, 1, 10, BlockCap, langStatsFrame(s, d))
       .select("id_a", "id_b", "jaccard")
+      .localCheckpoint(true)
   }
 
   private val q43Sql =
@@ -576,7 +578,7 @@ object DedupQueries {
       .select("id_a", "id_b")
   }
 
-  private def q44(s: SparkSession, d: String): DataFrame = {
+  private def q44(s: SparkSession, d: String): DataFrame = Materialize.scoped { m =>
     // TWO-TIER (lesson 19 — round 9 collapsed the MIRROR to rep space;
     // the round-10 sf1 bench caught the engine still flat at 50.9 s):
     // identical (lang, toks) docs share signatures, band keys, and every
@@ -592,7 +594,7 @@ object DedupQueries {
       .select(col("doc_id"), col("lang"), hashedToks(col("text")).as("toks"))
       .groupBy("lang", "toks")
       .agg(min("doc_id").as("doc_id"), collect_list(col("doc_id")).as("members"))
-      .cache() // hash once per distinct content, not per candidate pair
+      .transform(m.cache) // hash once per distinct content, not per candidate pair
     val reps = groups.select("doc_id", "lang", "toks")
     val candidateIds = minhashCandidateIds(reps)
     val repsA = broadcast(reps.select(col("doc_id").as("id_a"), col("toks").as("toks_a")))
@@ -621,7 +623,7 @@ object DedupQueries {
       .select(col("xa"), explode(col("members")).as("xb"))
       .filter(col("xa") < col("xb"))
       .select(col("xa").as("id_a"), col("xb").as("id_b"), lit(1.0).as("jaccard"))
-    cross.unionByName(within).orderBy("id_a", "id_b")
+    cross.unionByName(within).orderBy("id_a", "id_b").localCheckpoint(true)
   }
 
   /** q44's mirror is TWO-TIER like the engine (lesson 19): identical
@@ -732,13 +734,13 @@ object DedupQueries {
     * 100 TB the group-by keys a 128-bit content hash, not the raw array
     * (q41's note), and `members` lists cap at the group level.
     */
-  private def clusterLabels(s: SparkSession, d: String): DataFrame = {
+  private def clusterLabels(s: SparkSession, d: String): DataFrame = Materialize.scoped { m =>
     import s.implicits._
     val all = Tables.documents(s, d)
       .select(col("doc_id"), col("lang"), hashedToks(col("text")).as("arr"))
     val groups = all.groupBy(col("lang"), col("arr"))
       .agg(min("doc_id").as("rep"), collect_list("doc_id").as("members"))
-      .cache()
+      .transform(m.cache)
     val reps = groups.select(col("rep").as("doc_id"), col("lang"), col("arr"))
     // routing stats deliberately over-estimate from the RAW lang column
     // (file-size-gated like every caller — lesson 14 — and routing is
@@ -771,14 +773,11 @@ object DedupQueries {
     }
     val repLabels = labeled.toDF("rep_id", "label")
     // expand rep labels back to every member of each set-equal group; the
-    // eager checkpoint materializes the (doc_id, label) frame so `groups`
-    // can be unpersisted HERE — without it each q58/q154/q156 invocation
-    // would leave a cached frame behind for the session (ADVICE r5)
-    val expanded = groups.join(repLabels, col("rep") === col("rep_id"))
+    // checkpoint materializes the (doc_id, label) frame before the scope
+    // releases `groups`
+    groups.join(repLabels, col("rep") === col("rep_id"))
       .select(explode(col("members")).as("doc_id"), col("label"))
       .localCheckpoint(true)
-    groups.unpersist()
-    expanded
   }
 
   private def q58(s: SparkSession, d: String): DataFrame =
@@ -1051,41 +1050,28 @@ object DedupQueries {
     * store (q129 writes it bucketed by band-key range; the probe prunes
     * to matching buckets); the fp table is the same store's exact tier.
     */
-  private def q161(s: SparkSession, d: String): DataFrame = q161Body(s, d, eager = true)
-
-  /** Lazy full-plan form for audits (QueryDef.planFn). */
-  private[graft] def q161Lazy(s: SparkSession, d: String): DataFrame =
-    q161Body(s, d, eager = false)
-
-  private def q161Body(s: SparkSession, d: String, eager: Boolean): DataFrame = {
+  private def q161(s: SparkSession, d: String): DataFrame = Materialize.scoped { m =>
     val all = Tables.documents(s, d)
-    // The delta cut is one scalar. Eager form reads it driver-side (a
-    // 1-row action — bounded by construction) so every consumer sees a
-    // LITERAL instead of a broadcast-crossJoin subquery; the lazy/audit
-    // form keeps the subquery so its plan stays action-free.
-    val cutCol =
-      if (eager) lit(all.agg(expr("(max(doc_id) + 1) * 9 div 10")).head().getLong(0))
-      else col("cut") // resolved via the crossJoin below
+    // The delta cut is one scalar, read driver-side (a 1-row action —
+    // bounded by construction) so every consumer sees a LITERAL instead
+    // of a broadcast-crossJoin subquery.
+    val cut = all.agg(expr("(max(doc_id) + 1) * 9 div 10")).head().getLong(0)
     val fpExpr = aggregate(col("toks"), lit(7L),
       (acc, h) => (acc * 31 + h) % lit(1000000007L))
-    // Cached (eager form): tokenization + fingerprint run ONCE over the
+    // Cached: tokenization + fingerprint run ONCE over the
     // corpus; six consumers read it (tier-1 dSide/bSide, tier-2
     // band input, and both candidate-attach scans). The round-6 form
     // recomputed hashedToks per consumer, doubling warm cost (VERDICT r6
     // "What's wrong" 1). An executor-distributed cache (MEMORY_AND_DISK,
     // spills) — not a driver broadcast — so it holds at scale; released
-    // before return via the eager output checkpoint. `text` is NOT
-    // cached — no consumer below reads it.
-    val base0 =
-      if (eager) all
-      else all.crossJoin(broadcast(
-        all.agg(expr("(max(doc_id) + 1) * 9 div 10").as("cut"))))
-    val docs0 = base0
+    // once the output checkpoint has run. `text` is NOT cached — no
+    // consumer below reads it.
+    val docs = all
       .select(col("doc_id"), col("lang"),
-        (col("doc_id") >= cutCol).as("is_delta"),
+        (col("doc_id") >= cut).as("is_delta"),
         hashedToks(col("text")).as("toks"))
       .withColumn("fp", fpExpr)
-    val docs = if (eager) docs0.cache() else docs0
+      .transform(m.cache)
     val inter = sortedIntersectCount(col("toks_a"), col("toks_b"))
     val union = size(col("toks_a")) + size(col("toks_b")) - inter
     // tier 1: exact copies via fingerprint equi-join, verified set-equal
@@ -1120,7 +1106,7 @@ object DedupQueries {
     // broadcast of the candidate set (bounded by the band-collision
     // count, never corpus-sized — ADVICE r5 still holds: what is
     // broadcast is the candidate ids, then candidate ids + delta-side
-    // toks). This replaces the round-7 form's eager candidate checkpoint
+    // toks). This replaces the round-7 form's candidate checkpoint
     // plus two left-semi prunes: the candidate frame now has exactly ONE
     // consumer per step, so nothing re-executes without the checkpoint,
     // and the serial job chain shrinks by ~2× (the r7 warm cost was
@@ -1148,13 +1134,8 @@ object DedupQueries {
       .select(col("delta_id"), col("m.base_id").as("dup_of"),
         col("m.jaccard").as("jaccard"),
         col("n_dup_bases"), lit("near").as("match_kind"))
-    val res = exact.unionByName(near).orderBy("delta_id")
-    if (!eager) res
-    else {
-      val out = res.localCheckpoint(true) // per-delta rows; corpus cache can go
-      docs.unpersist()
-      out
-    }
+    exact.unionByName(near).orderBy("delta_id")
+      .localCheckpoint(true) // per-delta rows; the corpus cache can go
   }
 
   private val q161Sql =
@@ -1232,7 +1213,7 @@ object DedupQueries {
     * text length is 44); shorter strings would need the length-aware
     * segmenting of the PassJoin paper.
     */
-  private def q59(s: SparkSession, d: String): DataFrame = {
+  private def q59(s: SparkSession, d: String): DataFrame = Materialize.scoped { m =>
     // TWO-TIER like the mirror (lesson 19; the round-10 sf1 bench caught
     // the engine still flat at 28.8 s): the pair verdict depends only on
     // (lang, pfx), so segment-join + DP-verify one REP per identical
@@ -1243,7 +1224,7 @@ object DedupQueries {
       .select(col("doc_id"), col("lang"), substring(col("text"), 1, 16).as("pfx"))
       .groupBy("lang", "pfx")
       .agg(min("doc_id").as("doc_id"), collect_list(col("doc_id")).as("members"))
-      .cache()
+      .transform(m.cache)
     val docs = groups.select("doc_id", "lang", "pfx")
     // a-side: the 4 fixed segments, each 4 chars at position 4s
     val segs = docs.select(col("doc_id").as("id_a"), col("lang"),
@@ -1286,7 +1267,7 @@ object DedupQueries {
       .select(col("xa"), explode(col("members")).as("xb"))
       .filter(col("xa") < col("xb"))
       .select(col("xa").as("id_a"), col("xb").as("id_b"), lit(0L).as("dist"))
-    cross.unionByName(within).orderBy("id_a", "id_b")
+    cross.unionByName(within).orderBy("id_a", "id_b").localCheckpoint(true)
   }
 
   private val q59Sql =
@@ -1477,10 +1458,10 @@ object DedupQueries {
           // rename). The store is laid out partitionBy(kind, bkt); the
           // probe below opens ONLY the kind=b bucket directories that
           // appear in this batch, and the append is blind.
-          val bands = bandFrame(batch)
-            .withColumn("bkt", pmod(col("band_key"), lit(q129StoreBuckets)).cast("int"))
-            .cache()
-          try {
+          Materialize.scoped { m =>
+            val bands = bandFrame(batch)
+              .withColumn("bkt", pmod(col("band_key"), lit(q129StoreBuckets)).cast("int"))
+              .transform(m.cache)
             // The bucket-list collect doubles as the cache fill (the
             // minhash aggregation runs once, parallel — it must NOT first
             // run inside the write job, whose final stage is narrower),
@@ -1541,8 +1522,7 @@ object DedupQueries {
                 lit(-1).cast("int").as("bkt"), col("doc_id").as("k")))
               .repartition(col("kind"), col("bkt")).write.mode("append")
               .partitionBy("kind", "bkt").parquet(store)
-          } finally bands.unpersist()
-          ()
+          }
         }
         .queryName("graft_q129").start()
       input.grouped(slice).foreach { sl =>
@@ -1611,7 +1591,7 @@ object DedupQueries {
     * corpora (PropertySpec) where overlapping/adjacent/contained spans
     * are dense, not just on the testdata distribution.
     */
-  private[graft] def dupSpans(docs: DataFrame): DataFrame = {
+  private[graft] def dupSpans(docs: DataFrame): DataFrame = Materialize.scoped { m =>
     val w = Window.partitionBy("doc_id").orderBy("pos")
     val toks = docs
       .select(col("doc_id"),
@@ -1623,8 +1603,8 @@ object DedupQueries {
         lead("w", SpanN - 1).over(w).as("wLast"))
       .filter(col("wLast").isNotNull)
       .select(col("doc_id"), col("pos"), Det.polyHash(col("gram")).as("h"))
-      .cache() // consumed twice (dup-set aggregate + occurrence join) —
-               // hash the gram stream once (see q42)
+      .transform(m.cache) // consumed twice (dup-set aggregate + occurrence join) —
+                          // hash the gram stream once (see q42)
     val dupGrams = grams.groupBy("h")
       .agg(countDistinct(col("doc_id")).as("nd"))
       .filter(col("nd") > 1)
@@ -1648,6 +1628,7 @@ object DedupQueries {
         coalesce(col("dup_covered"), lit(0L)).as("dup_covered"),
         coalesce(col("n_dup_spans"), lit(0L)).as("n_dup_spans"))
       .orderBy("doc_id")
+      .localCheckpoint(true)
   }
 
   private def q140(s: SparkSession, d: String): DataFrame =
@@ -1847,11 +1828,11 @@ object DedupQueries {
     dropped.distinct()
   }
 
-  private def q149(s: SparkSession, d: String): DataFrame = {
+  private def q149(s: SparkSession, d: String): DataFrame = Materialize.scoped { m =>
     val docs = spreadDocs(s, d)
       .select(col("doc_id"), col("lang"), hashedToks(col("text")).as("arr"))
-      .cache()
-    containmentPairs(docs, BlockCap, langStatsFrame(s, d))
+      .transform(m.cache)
+    containmentPairs(docs, BlockCap, langStatsFrame(s, d)).localCheckpoint(true)
   }
 
   private val q149Sql =
@@ -1875,25 +1856,19 @@ object DedupQueries {
     * form's sort below the aggregate) — output linear in the corpus.
     * q42 remains registered as the debug/inspection form.
     */
-  private def q176(s: SparkSession, d: String): DataFrame = q176Body(s, d, eager = true)
-
-  private[graft] def q176Lazy(s: SparkSession, d: String): DataFrame =
-    q176Body(s, d, eager = false)
-
-  private def q176Body(s: SparkSession, d: String, eager: Boolean): DataFrame = {
-    val docs0 = spreadDocs(s, d)
-      .select(col("doc_id"), col("lang"), hashedToks(col("text")).as("arr"))
-    val docs = if (eager) docs0.cache() else docs0
-    // eager form: checkpoint the (small) dropped-id set so the corpus-
-    // sized token cache can be released before returning (ADVICE r6: each
-    // q176 call used to leave `docs` cached for the session); the final
-    // keep-bit join only needs the one-column doc_id scan, not the cache
-    val dropped0 = jaccardDropStats(docs, 9, 10, BlockCap, langStatsFrame(s, d))
-      .select("doc_id")
-      .withColumn("hit", lit(1))
-    val dropped = if (eager) {
-      val ck = dropped0.localCheckpoint(true); docs.unpersist(); ck
-    } else dropped0
+  private def q176(s: SparkSession, d: String): DataFrame = {
+    // checkpoint the (small) dropped-id set inside the scope, so the
+    // corpus-sized token cache is released before the final keep-bit
+    // join, which only needs the one-column doc_id scan
+    val dropped = Materialize.scoped { m =>
+      val docs = spreadDocs(s, d)
+        .select(col("doc_id"), col("lang"), hashedToks(col("text")).as("arr"))
+        .transform(m.cache)
+      jaccardDropStats(docs, 9, 10, BlockCap, langStatsFrame(s, d))
+        .select("doc_id")
+        .withColumn("hit", lit(1))
+        .localCheckpoint(true)
+    }
     Tables.documents(s, d).select("doc_id")
       .join(dropped, Seq("doc_id"), "left")
       .select(col("doc_id"), col("hit").isNull.as("keep"))
@@ -1920,22 +1895,17 @@ object DedupQueries {
     * decision form that never expands group pairs (judge r8: the
     * pair-list route cost 153 s on the fresh 10× corpus).
     */
-  private def q177(s: SparkSession, d: String): DataFrame = q177Body(s, d, eager = true)
-
-  private[graft] def q177Lazy(s: SparkSession, d: String): DataFrame =
-    q177Body(s, d, eager = false)
-
-  private def q177Body(s: SparkSession, d: String, eager: Boolean): DataFrame = {
-    val docs0 = spreadDocs(s, d)
-      .select(col("doc_id"), col("lang"), hashedToks(col("text")).as("arr"))
-    val docs = if (eager) docs0.cache() else docs0
+  private def q177(s: SparkSession, d: String): DataFrame = {
     // same release pattern as q176: checkpoint the dropped-id set, then
     // drop the corpus token cache before the final keep-bit join
-    val dropped0 = containmentDropIds(docs, BlockCap, langStatsFrame(s, d))
-      .withColumn("hit", lit(1))
-    val dropped = if (eager) {
-      val ck = dropped0.localCheckpoint(true); docs.unpersist(); ck
-    } else dropped0
+    val dropped = Materialize.scoped { m =>
+      val docs = spreadDocs(s, d)
+        .select(col("doc_id"), col("lang"), hashedToks(col("text")).as("arr"))
+        .transform(m.cache)
+      containmentDropIds(docs, BlockCap, langStatsFrame(s, d))
+        .withColumn("hit", lit(1))
+        .localCheckpoint(true)
+    }
     Tables.documents(s, d).select("doc_id")
       .join(dropped, Seq("doc_id"), "left")
       .select(col("doc_id"), col("hit").isNull.as("keep"))
@@ -2296,16 +2266,11 @@ object DedupQueries {
     * be the broadcast-built right side — a driver OOM at 100 TB).
     * Thresholds that drop nothing are re-attached by a 5-row left join.
     */
-  private def q179(s: SparkSession, d: String): DataFrame = q179Body(s, d, eager = true)
-
-  private[graft] def q179Lazy(s: SparkSession, d: String): DataFrame =
-    q179Body(s, d, eager = false)
-
-  private def q179Body(s: SparkSession, d: String, eager: Boolean): DataFrame = {
+  private def q179(s: SparkSession, d: String): DataFrame = Materialize.scoped { m =>
     import s.implicits._
-    val docs0 = spreadDocs(s, d)
+    val docs = spreadDocs(s, d)
       .select(col("doc_id"), col("lang"), hashedToks(col("text")).as("arr"))
-    val docs = if (eager) docs0.cache() else docs0
+      .transform(m.cache)
     val thr = Seq(50L, 60L, 70L, 80L, 90L).toDF("threshold_pct")
     // one row per distinct dropped doc: its strongest pair's integer
     // ratio — the decision form, computed in rep space on capped blocks
@@ -2315,7 +2280,7 @@ object DedupQueries {
       .join(broadcast(thr), col("max_ratio") >= col("threshold_pct"))
       .groupBy("threshold_pct")
       .agg(count(lit(1)).as("n_hits"))
-    val res = thr
+    thr
       .join(broadcast(counted), Seq("threshold_pct"), "left")
       .select(col("threshold_pct"),
         coalesce(col("n_hits"), lit(0L)).as("n_dropped"))
@@ -2323,12 +2288,7 @@ object DedupQueries {
       .select(col("threshold_pct"), col("n_dropped"),
         (col("n_docs") - col("n_dropped")).as("n_kept"))
       .orderBy("threshold_pct")
-    if (!eager) res
-    else {
-      val out = res.localCheckpoint(true) // 5 rows; corpus cache can drop
-      docs.unpersist()
-      out
-    }
+      .localCheckpoint(true) // 5 rows; the corpus cache can drop
   }
 
   private val q179Sql =
@@ -2377,12 +2337,7 @@ object DedupQueries {
     * Nothing here is new machinery — that's the point: the report
     * measures the real operators, not a model of them.
     */
-  private def q184(s: SparkSession, d: String): DataFrame = q184Body(s, d, eager = true)
-
-  private[graft] def q184Lazy(s: SparkSession, d: String): DataFrame =
-    q184Body(s, d, eager = false)
-
-  private def q184Body(s: SparkSession, d: String, eager: Boolean): DataFrame = {
+  private def q184(s: SparkSession, d: String): DataFrame = Materialize.scoped { m =>
     // TWO-TIER COUNTING (round-10 sf1 bench caught this at 135.9 s: the
     // flat plan banded all docs and MATERIALIZED both member-expanded
     // pair lists only to count them — on the duplicate-heavy dir that is
@@ -2395,11 +2350,11 @@ object DedupQueries {
     // REP pair is, contributing m_a·m_b. Sums are exact int64, so
     // n_cand/n_exact/n_hit — and the two double divisions — are
     // bit-identical to the flat plan's.
-    val groups0 = Tables.documents(s, d)
+    val groups = Tables.documents(s, d)
       .select(col("doc_id"), col("lang"), hashedToks(col("text")).as("toks"))
       .groupBy("lang", "toks")
       .agg(min("doc_id").as("doc_id"), count(lit(1)).as("m"))
-    val groups = if (eager) groups0.cache() else groups0
+      .transform(m.cache)
     val reps = groups.select("doc_id", "lang", "toks")
     val multsA = groups.select(col("doc_id").as("id_a"), col("m").as("m_a"))
     val multsB = groups.select(col("doc_id").as("id_b"), col("m").as("m_b"))
@@ -2412,8 +2367,7 @@ object DedupQueries {
     val wPairs = groups
       .filter(col("toks").isNotNull && size(col("toks")) > 0)
       .agg(coalesce(sum(expr("(m * (m - 1)) div 2")), lit(0L)).as("w"))
-    val candRep0 = minhashCandidateIds(reps) // weighed twice (cand, hit)
-    val candRep = if (eager) candRep0.cache() else candRep0
+    val candRep = m.cache(minhashCandidateIds(reps)) // weighed twice (cand, hit)
     // routing by the base table's lang counts as before (over-estimates
     // rep block sizes → at worst a borderline block takes the capped
     // path; results are routing-independent)
@@ -2422,7 +2376,7 @@ object DedupQueries {
       9, 10, BlockCap, langStatsFrame(s, d))
       .select("id_a", "id_b")
     val hitRep = candRep.join(exactRep, Seq("id_a", "id_b"), "left_semi")
-    val res = wPairs
+    wPairs
       .crossJoin(weighted(exactRep, "xc"))
       .crossJoin(weighted(candRep, "cc"))
       .crossJoin(weighted(hitRep, "hc"))
@@ -2432,12 +2386,7 @@ object DedupQueries {
       .select(col("n_exact"), col("n_cand"), col("n_hit"),
         (col("n_hit").cast("double") / col("n_cand")).as("precision"),
         (col("n_hit").cast("double") / col("n_exact")).as("recall"))
-    if (!eager) res
-    else {
-      val out = res.localCheckpoint(true) // 1 row; releases the caches
-      groups.unpersist(); candRep.unpersist()
-      out
-    }
+      .localCheckpoint(true) // 1 row; the caches can go
   }
 
   private val q184Sql =
@@ -2638,11 +2587,9 @@ object DedupQueries {
     QueryDef("q149_subset_pairs", q149, Some(q149Sql),
       "token-set subsumption (containment-1.0) pairs, sub/sup oriented"),
     QueryDef("q176_jaccard_keep", q176, Some(q176Sql),
-      "decision-form Jaccard dedup: per-doc keep bit (linear output; q42's headline form)",
-      planFn = Some(q176Lazy)),
+      "decision-form Jaccard dedup: per-doc keep bit (linear output; q42's headline form)"),
     QueryDef("q177_containment_keep", q177, Some(q177Sql),
-      "decision-form containment dedup: per-doc keep bit (linear output; q149's headline form)",
-      planFn = Some(q177Lazy)),
+      "decision-form containment dedup: per-doc keep bit (linear output; q149's headline form)"),
     QueryDef("q140_dup_spans", q140, Some(q140Sql),
       "duplicated 8-token-span coverage (substring-level dedup statistic)"),
     QueryDef("q129_stream_dedup_lsh", q129, Some(q129Sql),
@@ -2660,15 +2607,13 @@ object DedupQueries {
     QueryDef("q156_leakage_safe_split", q156, Some(q156Sql),
       "dup-cluster-aware train/val/test split (near-dups never straddle splits)"),
     QueryDef("q161_snapshot_dedup", q161, Some(q161Sql),
-      "incremental snapshot dedup: delta shard LSH-probed against the base corpus",
-      planFn = Some(q161Lazy)),
+      "incremental snapshot dedup: delta shard LSH-probed against the base corpus"),
     QueryDef("q164_winnowing", q164, Some(q164Sql),
       "winnowing (MOSS) fingerprint sketch: rightmost-min window selection per doc"),
     QueryDef("q178_chunk_dedup", q178, Some(q178Sql),
       "chunk-level (line) dedup: global first-occurrence retention per 32-token chunk"),
     QueryDef("q179_threshold_curve", q179, Some(q179Sql),
-      "dedup threshold sensitivity: docs dropped/kept at Jaccard 0.5-0.9",
-      planFn = Some(q179Lazy)),
+      "dedup threshold sensitivity: docs dropped/kept at Jaccard 0.5-0.9"),
     QueryDef("q198_bloom_dedup", q198, Some(q198Sql),
       "Bloom-filter dedup pre-filter: relational bitmap build + broadcast probe, exact verify on candidates"),
     QueryDef("q194_cdc_chunks", q194, Some(q194Sql),
@@ -2676,8 +2621,7 @@ object DedupQueries {
     QueryDef("q180_chunk_clean", q180, Some(q180Sql),
       "chunk-dedup transform: cleaned corpus (kept chunks re-concatenated per doc)"),
     QueryDef("q184_lsh_tuning", q184, Some(q184Sql),
-      "LSH tuning report: banded-candidate precision/recall vs exact Jaccard 0.9",
-      planFn = Some(q184Lazy)),
+      "LSH tuning report: banded-candidate precision/recall vs exact Jaccard 0.9"),
     QueryDef("q185_cluster_decontam", q185, Some(q185Sql),
       "cluster-propagated decontamination: purge whole dup clusters touching the benchmark"))
 }

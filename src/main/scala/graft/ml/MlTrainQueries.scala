@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.{QueryDef, Tables}
-import graft.util.Det
+import graft.util.{Det, Materialize}
 
 /** ML training operators — the reference's model-building stage (PPTX
   * slides 13-16: SMOTE oversampling to balance classes, then an SGD
@@ -181,16 +181,6 @@ object MlTrainQueries {
   private val frameMemo =
     scala.collection.mutable.HashMap.empty[(String, String, String), DataFrame]
 
-  /** Best-effort release of the blocks behind a `localCheckpoint(true)`
-    * frame: the checkpointed RDD is the leaf `LogicalRDD`'s rdd.
-    * `Dataset.unpersist` cannot reach it (the persistence was applied to
-    * the internal RDD, not through the cache manager).
-    */
-  private def releaseCheckpoint(df: DataFrame): Unit =
-    try df.queryExecution.analyzed.collect {
-      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.unpersist(false)
-    } catch { case _: Throwable => () }
-
   /** Memoize under a lock (a bare getOrElseUpdate can run `build` — an
     * 8-iteration training job — twice under concurrent first calls), and
     * bound the memo to ONE (app, dataset) at a time: on a dataset switch
@@ -205,7 +195,7 @@ object MlTrainQueries {
     val key = (s.sparkContext.applicationId, d, what)
     frameMemo.getOrElse(key, {
       val stale = frameMemo.keySet.filterNot(k => k._1 == key._1 && k._2 == key._2)
-      stale.toList.foreach(k => frameMemo.remove(k).foreach(releaseCheckpoint))
+      stale.toList.foreach(k => frameMemo.remove(k).foreach(Materialize.releaseCheckpoint))
       val df = build
       frameMemo.put(key, df)
       df

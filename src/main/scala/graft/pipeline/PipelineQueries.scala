@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.{QueryDef, Tables}
-import graft.util.Det
+import graft.util.{Det, Materialize}
 
 /** Training-data pipeline operators beyond the reference: sequence packing
   * for LLM pretraining batches and inverted-index construction. Both are
@@ -145,7 +145,7 @@ object PipelineQueries {
   private val cmsParams: Seq[(Long, Long)] =
     Seq((131L, 7L), (137L, 89L), (139L, 283L), (149L, 659L))
 
-  private def q99(s: SparkSession, d: String): DataFrame = {
+  private def q99(s: SparkSession, d: String): DataFrame = Materialize.scoped { m =>
     val P = 1000000007L
     val W = 256L
     val ev = Tables.events(s, d).select(col("user_id"))
@@ -160,7 +160,7 @@ object PipelineQueries {
       // the four broadcast subtrees each re-scan + re-aggregate the full
       // event stream (measured: 0 ReusedExchange, 4 builds — the q99 sf1
       // line PERF.md flagged). The cached relation is d×w = 1024 rows.
-      .cache()
+      .transform(m.cache)
     val probes = ev.filter(col("user_id") < 20).distinct()
       .select(col("user_id").as("k"))
     val probeCells = probes.select(col("k") +: cmsParams.zipWithIndex.map {
@@ -177,6 +177,7 @@ object PipelineQueries {
     est.join(exact, "k")
       .select(col("k"), col("est"), col("exact"), (col("est") - col("exact")).as("over"))
       .orderBy("k")
+      .localCheckpoint(true)
   }
 
   private val q99Sql = {
@@ -578,16 +579,10 @@ object PipelineQueries {
     * skew-routed pairs, broadcast benchmark set, per-stratum windows);
     * the handoffs are doc_id joins — no driver round-trip between
     * stages (the one bounded collect is jaccardPairs' lang-stats routing
-    * decision). Eager form caches the pair set (used by dedup AND
-    * decontam) and checkpoints the 6-row ledger, releasing everything.
+    * decision). Caches the pair set (used by dedup AND decontam) and
+    * checkpoints the 6-row ledger, releasing everything.
     */
-  private def q188(s: SparkSession, d: String): DataFrame =
-    q188Body(s, d, eager = true)
-
-  private[graft] def q188Lazy(s: SparkSession, d: String): DataFrame =
-    q188Body(s, d, eager = false)
-
-  private def q188Body(s: SparkSession, d: String, eager: Boolean): DataFrame = {
+  private def q188(s: SparkSession, d: String): DataFrame = Materialize.scoped { m =>
     import graft.curation.CurationQueries
     import graft.dedup.DedupQueries
     val docs = Tables.documents(s, d)
@@ -600,34 +595,33 @@ object PipelineQueries {
     // countDistinct = distinct array length; casts keep the long types
     // the ledger sums expect). Interleaved A/B at sf0.1: q188 median
     // 7.66 → 7.16 s, optimized arm won 5/5 pairs; oracle hash-exact.
-    val feats0 = docs
+    val feats = docs
       .select(col("doc_id"), col("lang"),
         size(split(col("text"), " ")).cast("long").as("n_tokens"),
         size(array_distinct(split(col("text"), " "))).cast("long").as("n_distinct"))
       .select(col("doc_id"), col("lang"), col("n_tokens"),
         expr("n_distinct * 1000 div n_tokens").as("quality_fp"))
-    val feats = if (eager) feats0.cache() else feats0
+      .transform(m.cache)
     // stage 1: quality gate. Cached: the gate's two-level aggregate
     // otherwise re-executes once per downstream ledger row (5×).
-    val s1raw = feats.join(
-      CurationQueries.q113(s, d).filter(col("keep")).select("doc_id"), "doc_id")
-    val s1 = if (eager) s1raw.cache() else s1raw
+    val s1 = m.cache(feats.join(
+      CurationQueries.q113(s, d).filter(col("keep")).select("doc_id"), "doc_id"))
     // stage 2: near-dedup among gate survivors
     val s1tok = docs
       .join(s1.select("doc_id"), "doc_id")
       .select(col("doc_id"), col("lang"),
         DedupQueries.hashedToks(col("text")).as("arr"))
-    val pairs0 = DedupQueries
+    val pairs = DedupQueries
       .jaccardPairs(s1tok, 9, 10, DedupQueries.BlockCap,
         DedupQueries.langStatsFrame(s, d))
       .select("id_a", "id_b")
-    val pairs = if (eager) pairs0.cache() else pairs0
-    val s2raw = s1.join(
-      pairs.select(col("id_b").as("doc_id")).distinct(), Seq("doc_id"), "left_anti")
+      .transform(m.cache)
     // every stage frontier from here on is a tiny (doc_id, lang, stats)
     // frame with 2-4 downstream consumers (its own ledger row + later
-    // stages); eager checkpoints pin each stage to ONE execution
-    val s2 = if (eager) s2raw.localCheckpoint(true) else s2raw
+    // stages); checkpoints pin each stage to ONE execution
+    val s2 = s1.join(
+      pairs.select(col("id_b").as("doc_id")).distinct(), Seq("doc_id"), "left_anti")
+      .localCheckpoint(true)
     // stage 3: decontamination (direct + one-hop via the pair set + the
     // benchmark rows themselves).
     // r17 probe, REJECTED: contam feeds BOTH union branches of drop3
@@ -650,22 +644,21 @@ object PipelineQueries {
     // run went 310 s → 31 s from this cache/checkpoint pass PLUS
     // jaccardPairs' exact-content collapse — the dedup stage was the
     // larger share.)
-    val drop3raw = contam.unionAll(contamHop).unionAll(bench).distinct()
-    val drop3 = if (eager) drop3raw.localCheckpoint(true) else drop3raw
-    val s3raw = s2.join(drop3, Seq("doc_id"), "left_anti")
-    val s3 = if (eager) s3raw.localCheckpoint(true) else s3raw
+    val drop3 = contam.unionAll(contamHop).unionAll(bench).distinct()
+      .localCheckpoint(true)
+    val s3 = s2.join(drop3, Seq("doc_id"), "left_anti").localCheckpoint(true)
     // stage 4: token-budget selection over the surviving corpus
     val budget = broadcast(
       s3.groupBy("lang").agg(expr("sum(n_tokens) div 2").as("budget")))
     val wSel = Window.partitionBy("lang")
       .orderBy(desc("quality_fp"), asc("doc_id"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val s4raw = s3
+    val s4 = s3
       .withColumn("cum_tokens", sum("n_tokens").over(wSel))
       .join(budget, "lang")
       .filter(col("cum_tokens") <= col("budget"))
       .select("doc_id", "lang", "n_tokens")
-    val s4 = if (eager) s4raw.localCheckpoint(true) else s4raw
+      .localCheckpoint(true)
     // stage 5: shard packing of the selected set (q183's two-phase
     // distributed prefix sum — never a global single-partition window)
     val nb = 256
@@ -693,19 +686,14 @@ object PipelineQueries {
         .select(lit(stage.toLong).as("stage"), lit(name).as("name"),
           col("n_docs"), col("n_tokens"), col("n_shards"))
     val noShards = sharded.filter(lit(false))
-    val res = row(0, "ingest", feats, noShards)
+    row(0, "ingest", feats, noShards)
       .unionAll(row(1, "quality_gate", s1, noShards))
       .unionAll(row(2, "near_dedup", s2, noShards))
       .unionAll(row(3, "decontam", s3, noShards))
       .unionAll(row(4, "token_budget", s4, noShards))
       .unionAll(row(5, "shard_pack", s4, sharded))
       .orderBy("stage")
-    if (!eager) res
-    else {
-      val out = res.localCheckpoint(true) // 6 rows; caches can go
-      feats.unpersist(); pairs.unpersist(); s1.unpersist()
-      out
-    }
+      .localCheckpoint(true) // 6 rows; the caches can go
   }
 
   private val q188Sql = {
@@ -979,8 +967,7 @@ object PipelineQueries {
     QueryDef("q216_join_size_est", q216, Some(q216Sql),
       "KMV-sketch join-size estimation (weighted sketches, Horvitz-Thompson over the union sample) with self-reported error vs the exact join"),
     QueryDef("q188_pipeline_ledger", q188, Some(q188Sql),
-      "end-to-end curation pipeline: gate→dedup→decontam→budget→shard, per-stage ledger",
-      planFn = Some(q188Lazy)),
+      "end-to-end curation pipeline: gate→dedup→decontam→budget→shard, per-stage ledger"),
     QueryDef("q172_dict_encode", q172, Some(q172Sql),
       "order-preserving dictionary encoding (dense codes, broadcast encode join)"),
     QueryDef("q173_kmv_distinct", q173, Some(q173Sql),

@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.{QueryDef, Tables}
-import graft.util.Det
+import graft.util.{Det, Materialize}
 
 /** Similarity-search operator family over `embeddings` (Array[Float], 64-d):
   * cosine near-dup pairs, brute-force ANN top-k, and a partition-pruned
@@ -565,10 +565,10 @@ object SimilarityQueries {
     * statistic q85 materializes; the dense rerank touches only the top-10
     * candidate ids, so the embedding table is probed, never scanned.
     */
-  private def q144(s: SparkSession, d: String): DataFrame = {
+  private def q144(s: SparkSession, d: String): DataFrame = Materialize.scoped { m =>
     val docTok = Tables.documents(s, d)
       .select(col("doc_id"), explode(split(col("text"), " ")).as("w"))
-      .cache() // feeds df, the query-term set, and tf — tokenize once
+      .transform(m.cache) // feeds df, the query-term set, and tf — tokenize once
     val df_ = docTok.distinct().groupBy("w")
       .agg(count(lit(1)).as("df"))
     // Corpus size as a broadcast 1-row frame, not a driver-side count():
@@ -610,6 +610,7 @@ object SimilarityQueries {
           col("q_norm"), col("norm")).as("cos"))
       .withColumn("final_rank", row_number().over(finW).cast("long"))
       .orderBy("final_rank")
+      .localCheckpoint(true)
   }
 
   private val q144Sql =
@@ -835,18 +836,7 @@ object SimilarityQueries {
   // 32-partition sort-merge joins that AQE was converting to broadcasts
   // at runtime — same adjudication as q236/q232, opposite of q192 (whose
   // loop has no joinable frames). The sweep keeps AQE.
-  private def q223(s: SparkSession, d: String): DataFrame =
-    q223Impl(s, d, IvfIters, eager = true)
-
-  /** Lazy 1-iteration form for plan audits (shape per iteration is
-    * iteration-count-independent; the eager checkpoints would collapse
-    * the audited plan to LogicalRDD leaves).
-    */
-  private[graft] def q223Lazy(s: SparkSession, d: String): DataFrame =
-    q223Impl(s, d, 1, eager = false)
-
-  private def q223Impl(s: SparkSession, d: String, iters: Int,
-      eager: Boolean): DataFrame = {
+  private def q223(s: SparkSession, d: String): DataFrame = {
     val e = Tables.embeddings(s, d)
       .select(col("vec_id"), col("embedding"),
         sqrt(Det.seqNormSq(col("embedding"))).as("norm"),
@@ -859,7 +849,7 @@ object SimilarityQueries {
       .select((row_number().over(Window.orderBy("h", "vec_id")) - 1)
         .cast("long").as("cell"),
         col("embedding").cast("array<double>").as("carr"))
-    if (eager) cent = cent.localCheckpoint(true)
+      .localCheckpoint(true)
     def d2v(x: Column, xn2: Column, c: Column): Column =
       xn2 + Det.seqNormSq(c) - lit(2.0) * Det.seqDot(x, c)
     def assign(ct: DataFrame): DataFrame = {
@@ -870,7 +860,7 @@ object SimilarityQueries {
         .withColumn("rn", row_number().over(aw)).filter(col("rn") === 1)
         .select("vec_id", "cell", "embedding", "norm")
     }
-    for (_ <- 1 to iters) {
+    for (_ <- 1 to IvfIters) {
       val means = assign(cent)
         .select(col("cell"), col("vec_id"),
           posexplode(col("embedding")).as(Seq("dim", "v")))
@@ -882,11 +872,10 @@ object SimilarityQueries {
         .groupBy("cell")
         .agg(transform(array_sort(collect_list(struct(col("dim"), col("mean_v")))),
           x => x.getField("mean_v")).as("carr"))
-      var next = cent.select(col("cell"), col("carr").as("carr_prev"))
+      cent = cent.select(col("cell"), col("carr").as("carr_prev"))
         .join(means, Seq("cell"), "left")
         .select(col("cell"), coalesce(col("carr"), col("carr_prev")).as("carr"))
-      if (eager) next = next.localCheckpoint(true)
-      cent = next
+        .localCheckpoint(true)
     }
     val cells = assign(cent)
     val q = broadcast(e.filter(col("vec_id") < 20)
@@ -2071,8 +2060,7 @@ object SimilarityQueries {
     QueryDef("q162_cluster_quality", q162, Some(q162Sql),
       "clustering-quality eval: per-cluster inertia + nearest-centroid separation"),
     QueryDef("q223_ivf_nprobe_sweep", q223, Some(q223Sql),
-      "multi-probe IVF over trained k-means cells (nprobe 1/2/4/8): per-nprobe recall@3 + probe cost vs exact top-3",
-      planFn = Some(q223Lazy)),
+      "multi-probe IVF over trained k-means cells (nprobe 1/2/4/8): per-nprobe recall@3 + probe cost vs exact top-3"),
     QueryDef("q160_ann_recall", q160, Some(q160Sql),
       "ANN index-quality eval: exact per-query recall@3 of IVF nprobe=1 vs brute force"),
     QueryDef("q157_int8_quant", q157, Some(q157Sql),

@@ -3,6 +3,8 @@ package graft.sources
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.util.Materialize
+
 /** INCREMENTAL VIEW MAINTENANCE over the store changelog (VERDICT r13
   * task 2 — the last mile of the CDC work): a materialized aggregate
   * view is REFRESHED by consuming only the net row-level changes since
@@ -222,17 +224,17 @@ object GraftIVM {
         sums.map { case (viewCol, baseCol) =>
           (sign * col(baseCol)).as(viewCol)
         }: _*)
-    val applied = view
-      .filter(memberPred(col(partitionCol), touched)) // pruned scan
-      .unionByName(deltas)
-      .groupBy(groupCols.map(col): _*)
-      .agg(sum(col(countCol)).as(countCol),
-        sums.map { case (viewCol, _) =>
-          coalesce(sum(col(viewCol)), lit(0L)).as(viewCol) }: _*)
-      .filter(col(countCol) > 0L)
-      .select(view.columns.map(col): _*)
-      .cache()
-    try {
+    Materialize.scoped { m =>
+      val applied = view
+        .filter(memberPred(col(partitionCol), touched)) // pruned scan
+        .unionByName(deltas)
+        .groupBy(groupCols.map(col): _*)
+        .agg(sum(col(countCol)).as(countCol),
+          sums.map { case (viewCol, _) =>
+            coalesce(sum(col(viewCol)), lit(0L)).as(viewCol) }: _*)
+        .filter(col(countCol) > 0L)
+        .select(view.columns.map(col): _*)
+        .transform(m.cache)
       val survived: Set[Any] = applied.select(col(partitionCol)).distinct()
         .collect().map(_.get(0)).toSet
       // the survived-collect executed the observed subtree already
@@ -249,7 +251,7 @@ object GraftIVM {
              if (v == null) null else v.toString))).mkString(",")))
         .overwritePartitions()
       observed(obs, changelog)
-    } finally { applied.unpersist(); () }
+    }
   }
 
   /** TOUCHED-GROUP RE-AGGREGATION (VERDICT r15 task 2) — the refresh
@@ -298,10 +300,10 @@ object GraftIVM {
       s"graft_ivm_${java.util.UUID.randomUUID().toString.take(8)}")
     val baseObs = org.apache.spark.sql.Observation(
       s"graft_ivm_base_${java.util.UUID.randomUUID().toString.take(8)}")
-    val keyFrame = changelog
-      .observe(obs, count(lit(1)).as("consumed"))
-      .select(groupCols.map(col): _*).distinct().cache()
-    try {
+    Materialize.scoped { m =>
+      val keyFrame = changelog
+        .observe(obs, count(lit(1)).as("consumed"))
+        .select(groupCols.map(col): _*).distinct().transform(m.cache)
       // small key sets travel as an IN-list (predicate pushdown reaches
       // the store scan); small multi-column sets as a broadcast semi
       // join. r17 (VERDICT r16 item 6): a batch that overflows the
@@ -311,42 +313,44 @@ object GraftIVM {
       // plain semi join shuffles both sides when big, and AQE still
       // broadcasts it at runtime whenever the key frame measures small.
       val probe = keyFrame.limit(InListKeyLimit + 1).collect()
-      if (probe.isEmpty) return 0L
-      val keysBounded = probe.length <= InListKeyLimit
-      val (touchedBase, untouchedView) =
-        if (groupCols.size == 1 && keysBounded) {
-          val p = memberPred(col(groupCols.head), probe.map(_.get(0)).toSeq)
-          (base.filter(p), view.filter(!p))
-        } else {
-          def cond(l: DataFrame) =
-            groupCols.map(c => l(c) <=> keyFrame(c)).reduce(_ && _)
-          val kf = if (keysBounded) broadcast(keyFrame) else keyFrame
-          (base.join(kf, cond(base), "left_semi"),
-            view.join(kf, cond(view), "left_anti"))
-        }
-      val aggCols: Seq[Column] =
-        sums.map { case (vc, bc) => sum(col(bc)).as(vc) } ++
-          mins.map { case (vc, bc) => min(col(bc)).as(vc) } ++
-          maxs.map { case (vc, bc) => max(col(bc)).as(vc) }
-      val recomputed = touchedBase
-        .observe(baseObs, count(lit(1)).as("rows"))
-        .groupBy(groupCols.map(col): _*)
-        .agg(count(lit(1)).as(countCol), aggCols: _*)
-        .select(view.columns.map(col): _*)
-      untouchedView.select(view.columns.map(col): _*)
-        .unionByName(recomputed)
-        .writeTo(viewTable).overwrite(lit(true))
-      LastTouchedGroupBaseRows.set(
-        try {
-          import scala.concurrent.duration._
-          val row = scala.concurrent.Await.result(baseObs.future, 30.seconds)
-          if (row.length == 0 || row.schema == null) -1L // see observed()
-          else row.getAs[Long]("rows")
-        } catch {
-          case _: java.util.concurrent.TimeoutException => -1L
-        })
-      observed(obs, changelog)
-    } finally { keyFrame.unpersist(); () }
+      if (probe.isEmpty) 0L
+      else {
+        val keysBounded = probe.length <= InListKeyLimit
+        val (touchedBase, untouchedView) =
+          if (groupCols.size == 1 && keysBounded) {
+            val p = memberPred(col(groupCols.head), probe.map(_.get(0)).toSeq)
+            (base.filter(p), view.filter(!p))
+          } else {
+            def cond(l: DataFrame) =
+              groupCols.map(c => l(c) <=> keyFrame(c)).reduce(_ && _)
+            val kf = if (keysBounded) broadcast(keyFrame) else keyFrame
+            (base.join(kf, cond(base), "left_semi"),
+              view.join(kf, cond(view), "left_anti"))
+          }
+        val aggCols: Seq[Column] =
+          sums.map { case (vc, bc) => sum(col(bc)).as(vc) } ++
+            mins.map { case (vc, bc) => min(col(bc)).as(vc) } ++
+            maxs.map { case (vc, bc) => max(col(bc)).as(vc) }
+        val recomputed = touchedBase
+          .observe(baseObs, count(lit(1)).as("rows"))
+          .groupBy(groupCols.map(col): _*)
+          .agg(count(lit(1)).as(countCol), aggCols: _*)
+          .select(view.columns.map(col): _*)
+        untouchedView.select(view.columns.map(col): _*)
+          .unionByName(recomputed)
+          .writeTo(viewTable).overwrite(lit(true))
+        LastTouchedGroupBaseRows.set(
+          try {
+            import scala.concurrent.duration._
+            val row = scala.concurrent.Await.result(baseObs.future, 30.seconds)
+            if (row.length == 0 || row.schema == null) -1L // see observed()
+            else row.getAs[Long]("rows")
+          } catch {
+            case _: java.util.concurrent.TimeoutException => -1L
+          })
+        observed(obs, changelog)
+      }
+    }
   }
 
   /** [[refreshAggregateTouchedGroups]] for a view PARTITIONED on one of
@@ -399,10 +403,10 @@ object GraftIVM {
       .distinct().collect().map(_.get(0)).toSeq
     if (touchedParts.isEmpty) return 0L
     val partPred = memberPred(col(partitionCol), touchedParts)
-    val keyFrame = changelog
-      .observe(obs, count(lit(1)).as("consumed"))
-      .select(groupCols.map(col): _*).distinct().cache()
-    try {
+    Materialize.scoped { m =>
+      val keyFrame = changelog
+        .observe(obs, count(lit(1)).as("consumed"))
+        .select(groupCols.map(col): _*).distinct().transform(m.cache)
       val probe = keyFrame.limit(InListKeyLimit + 1).collect()
       val keysBounded = probe.length <= InListKeyLimit
       val (touchedBase, carriedView) =
@@ -434,30 +438,28 @@ object GraftIVM {
           .groupBy(groupCols.map(col): _*)
           .agg(count(lit(1)).as(countCol), aggCols: _*)
           .select(view.columns.map(col): _*))
-        .cache()
-      try {
-        val survived: Set[Any] = republish.select(col(partitionCol))
-          .distinct().collect().map(_.get(0)).toSet
-        val vanished = touchedParts.filterNot(survived)
-        val w = republish.writeTo(viewTable)
-        (if (vanished.isEmpty) w
-         else w.option(GraftStore.AlsoReplacePartitionsOption,
-           vanished.map(v => GraftStore.encodePartValue(
-             partitionCol + "=" + GraftStore.encodePartValue(
-               if (v == null) null else v.toString))).mkString(",")))
-          .overwritePartitions()
-        LastTouchedGroupBaseRows.set(
-          try {
-            import scala.concurrent.duration._
-            val row = scala.concurrent.Await.result(baseObs.future, 30.seconds)
-            if (row.length == 0 || row.schema == null) -1L // see observed()
-            else row.getAs[Long]("rows")
-          } catch {
-            case _: java.util.concurrent.TimeoutException => -1L
-          })
-        observed(obs, changelog)
-      } finally { republish.unpersist(); () }
-    } finally { keyFrame.unpersist(); () }
+        .transform(m.cache)
+      val survived: Set[Any] = republish.select(col(partitionCol))
+        .distinct().collect().map(_.get(0)).toSet
+      val vanished = touchedParts.filterNot(survived)
+      val w = republish.writeTo(viewTable)
+      (if (vanished.isEmpty) w
+       else w.option(GraftStore.AlsoReplacePartitionsOption,
+         vanished.map(v => GraftStore.encodePartValue(
+           partitionCol + "=" + GraftStore.encodePartValue(
+             if (v == null) null else v.toString))).mkString(",")))
+        .overwritePartitions()
+      LastTouchedGroupBaseRows.set(
+        try {
+          import scala.concurrent.duration._
+          val row = scala.concurrent.Await.result(baseObs.future, 30.seconds)
+          if (row.length == 0 || row.schema == null) -1L // see observed()
+          else row.getAs[Long]("rows")
+        } catch {
+          case _: java.util.concurrent.TimeoutException => -1L
+        })
+      observed(obs, changelog)
+    }
   }
 
   /** Above this many touched group keys the base prune switches from an

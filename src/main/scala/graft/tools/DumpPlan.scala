@@ -4,14 +4,17 @@ import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.ExplainUtils
+import org.apache.spark.sql.graft.ExecutedPlans
 
-/** Dev-only: write `.explain("formatted")` for a list of queries to
+/** Dev-only: write the physical plans a list of queries actually ran to
   * `<outDir>/<name>_<suffix>.txt` — the optimization-round evidence files
-  * (plans/r16/<query>_before.txt / _after.txt). Uses the plan-audit form
-  * ([[graft.Registry.planForms]]) so eagerly-checkpointed compositions show
-  * their full physical plan instead of a LogicalRDD leaf; queries whose
-  * runtime form is lifecycle-driven (streaming harnesses, store DDL) dump
-  * whatever their plan form exposes.
+  * (plans/r16/<query>_before.txt / _after.txt). Each query's body runs
+  * once under [[ExecutedPlans.capture]]; the file holds the formatted
+  * final plan of every action it executed (each checkpoint, collect,
+  * write …) in order, then the plan of the frame it returned, so a query
+  * that checkpoints its interior shows every stage, not a LogicalRDD
+  * leaf.
   * Usage: runMain graft.tools.DumpPlan <q1,q2,...> <sfDir> <outDir> <suffix>
   */
 object DumpPlan {
@@ -29,14 +32,17 @@ object DumpPlan {
     spark.sparkContext.setLogLevel("WARN")
     Files.createDirectories(Paths.get(outDir))
     names.foreach { name =>
-      graft.Registry.planForms.get(name) match {
+      graft.Registry.queries.get(name) match {
         case None => System.err.println(s"[dumpplan] $name: UNKNOWN")
         case Some(fn) =>
           try {
             spark.catalog.clearCache()
-            val df = fn(spark, sfDir)
-            val txt = df.queryExecution.explainString(
-              org.apache.spark.sql.execution.FormattedMode)
+            val run = ExecutedPlans.capture(spark)(fn(spark, sfDir))
+            val txt = run.plans.zipWithIndex.map { case (p, i) =>
+              val sb = new StringBuilder(s"== Plan ${i + 1} of ${run.plans.size} ==\n")
+              ExplainUtils.processPlan(p, (str: String) => { sb.append(str); () })
+              sb.toString
+            }.mkString("\n")
             Files.write(Paths.get(outDir, s"${name}_$suffix.txt"),
               txt.getBytes(StandardCharsets.UTF_8))
             println(s"[dumpplan] $name -> ${name}_$suffix.txt")

@@ -34,9 +34,7 @@ object TempDirs {
     */
   def create(prefix: String): String = {
     val shm = java.nio.file.Paths.get("/dev/shm")
-    val useShm = Files.isDirectory(shm) &&
-      graft.tools.OptToggle.on("tmpfs_scratch")
-    val p = if (useShm) Files.createTempDirectory(shm, prefix)
+    val p = if (Files.isDirectory(shm)) Files.createTempDirectory(shm, prefix)
             else Files.createTempDirectory(prefix)
     registered.synchronized { registered += p }
     p.toString

@@ -1,27 +1,60 @@
 package graft
 
+import org.apache.spark.sql.graft.ExecutedPlans
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Global physical-plan audit across the whole registry: no query may
-  * silently degrade to a non-broadcast Cartesian product — the one plan
-  * shape that is always a scale bug (broadcast nested-loop joins against
-  * a bounded side are whitelisted where they ARE the algorithm, e.g. the
-  * brute-force ANN baseline and the broadcast bloom/bounds single-row
-  * frames).
+/** Registry-wide audit of what every query actually runs. Each query's
+  * body runs once and its result is consumed; the audit then checks the
+  * final physical plan of every action the query executed (its interior
+  * checkpoints and collects included) and the session cache:
+  *
+  *  - no plan may contain a non-broadcast CartesianProduct — the one plan
+  *    shape that is always a scale bug (broadcast nested-loop joins
+  *    against a bounded side are fine where they ARE the algorithm, e.g.
+  *    the brute-force ANN baseline and the 1-row scalar attaches);
+  *  - no query may leave a frame in the session cache after it returns.
+  *
+  * A query that throws is an offender too.
   */
 class PlanAuditSpec extends AnyFunSuite {
   import TestSpark.{spark, sf}
 
-  test("no query's physical plan contains a CartesianProduct") {
-    // planFn (where present) is the lazy un-checkpointed form: eager-
-    // checkpointing queries would otherwise show only a LogicalRDD leaf
-    // here, silently exempting their interior joins from the audit
-    val offenders = Registry.all.flatMap { q =>
-      val plan =
-        try q.planFn.getOrElse(q.fn)(spark, sf).queryExecution.executedPlan.toString
-        catch { case e: Throwable => s"<failed: ${e.getMessage}>" }
-      if (plan.contains("CartesianProduct")) Some(q.name) else None
+  /** Each query's problems: Left(exception) if it threw, else
+    * Right((executed a CartesianProduct, left a cached frame)).
+    */
+  private lazy val audit: Seq[(String, Either[Throwable, (Boolean, Boolean)])] = {
+    val cacheManager = spark.sharedState.cacheManager
+    spark.catalog.clearCache() // judge the registry, not earlier suites
+    Registry.all.map { q =>
+      val result =
+        try {
+          val run = ExecutedPlans.capture(spark) {
+            val df = q.fn(spark, sf)
+            df.write.format("noop").mode("overwrite").save()
+            df
+          }
+          Right((run.plans.exists(_.toString.contains("CartesianProduct")),
+            !cacheManager.isEmpty))
+        } catch { case e: Throwable => Left(e) }
+      // each query is judged on its own: drop what an offender left behind
+      spark.catalog.clearCache()
+      q.name -> result
     }
-    assert(offenders.isEmpty, s"CartesianProduct in: ${offenders.mkString(", ")}")
+  }
+
+  private def offenders(problem: ((Boolean, Boolean)) => Option[String]): Seq[String] =
+    audit.flatMap {
+      case (name, Left(e)) => Some(s"$name: threw $e")
+      case (name, Right(flags)) => problem(flags).map(p => s"$name: $p")
+    }
+
+  test("no query's physical plan contains a CartesianProduct") {
+    val found = offenders { case (cartesian, _) => Option.when(cartesian)("CartesianProduct") }
+    assert(found.isEmpty, found.mkString("offenders:\n", "\n", ""))
+  }
+
+  test("no registry query leaves a frame in the session cache") {
+    val found = offenders { case (_, cached) => Option.when(cached)("left a cached frame") }
+    assert(found.isEmpty, found.mkString("offenders:\n", "\n", ""))
   }
 }

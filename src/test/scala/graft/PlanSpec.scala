@@ -1,5 +1,12 @@
 package graft
 
+import org.apache.spark.sql.catalyst.optimizer.{BuildLeft, BuildRight}
+import org.apache.spark.sql.execution.{SparkPlan, UnaryExecNode}
+import org.apache.spark.sql.execution.adaptive.QueryStageExec
+import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
+import org.apache.spark.sql.execution.joins.BroadcastNestedLoopJoinExec
+import org.apache.spark.sql.graft.ExecutedPlans
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Physical-plan assertions: the scale story is only real if Catalyst
@@ -10,8 +17,13 @@ import org.scalatest.funsuite.AnyFunSuite
 class PlanSpec extends AnyFunSuite {
   import TestSpark.{spark, sf}
 
-  private def physicalPlan(name: String): String =
-    Registry.queries(name)(spark, sf).queryExecution.executedPlan.toString
+  /** Every plan the query's body executed (one per action, final plan
+    * only), then the plan of the frame it returned.
+    */
+  private def physicalPlans(name: String): Seq[SparkPlan] =
+    ExecutedPlans.capture(spark)(Registry.queries(name)(spark, sf)).plans
+
+  private def physicalPlan(name: String): String = physicalPlans(name).mkString("\n")
 
   test("q11 filters and projection are pushed to the parquet scan") {
     val plan = physicalPlan("q11_filter_project")
@@ -219,11 +231,9 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("q161 snapshot dedup verify stage broadcasts the token sets") {
-    // the runtime form eagerly checkpoints its output (cache-release
-    // pattern), which collapses the executed plan to a LogicalRDD leaf;
-    // audit the lazy plan form instead (same composition, no checkpoint)
-    val plan = Registry.planForms("q161_snapshot_dedup")(spark, sf)
-      .queryExecution.executedPlan.toString
+    // the query checkpoints its output; the checkpoint's executed plan
+    // holds the verify stage
+    val plan = physicalPlan("q161_snapshot_dedup")
     assert(plan.contains("BroadcastHashJoin"),
       s"candidate verify should broadcast-join token sets:\n$plan")
     assert(!plan.contains("CartesianProduct"), s"no all-pairs stage allowed:\n$plan")
@@ -306,16 +316,38 @@ class PlanSpec extends AnyFunSuite {
       s"per-row detector must not shuffle:\n$plan")
   }
 
+  // The plan does hold BroadcastNestedLoopJoins: "no NLJ" in this title
+  // means no nested-loop join over a non-scalar side, which the next test
+  // pins.
   test("q208 triangles: every stage an equi-join, no cartesian/NLJ anywhere") {
     val plan = physicalPlan("q208_triangles")
     assert(!plan.contains("CartesianProduct"),
       s"wedge/closure stages must be keyed equi-joins:\n$plan")
     // at sf0.001 every side fits a broadcast; the invariant is that the
-    // wedge and closure joins are KEYED (equi) joins of any flavor — the
-    // only NLJ allowed is the fixture's 1-row corpus-count cross join
+    // wedge and closure joins are KEYED (equi) joins of any flavor
     assert("BroadcastHashJoin|SortMergeJoin|ShuffledHashJoin".r
       .findAllIn(plan).size >= 4,
       s"expected keyed equi-joins for degree/wedge/closure stages:\n$plan")
+  }
+
+  test("q208 triangles: every nested-loop join broadcasts a 1-row global aggregate") {
+    val plans = physicalPlans("q208_triangles")
+    // a nested-loop join may only attach a scalar: its broadcast side is
+    // a global aggregate (no grouping keys, so exactly 1 row)
+    def globalAgg(p: SparkPlan): Boolean = p match {
+      case a: BaseAggregateExec => a.groupingExpressions.isEmpty
+      case s: QueryStageExec => globalAgg(s.plan)
+      case r: ReusedExchangeExec => globalAgg(r.child)
+      case u: UnaryExecNode => globalAgg(u.child)
+      case _ => false
+    }
+    for (p <- plans; j <- p.collect { case j: BroadcastNestedLoopJoinExec => j }) {
+      val built = j.buildSide match {
+        case BuildLeft => j.left
+        case BuildRight => j.right
+      }
+      assert(globalAgg(built), s"nested-loop join broadcasts more than a 1-row aggregate:\n$j")
+    }
   }
 
   test("q209 BM25: stats and model sides broadcast; corpus side keyed only") {
@@ -376,21 +408,17 @@ class PlanSpec extends AnyFunSuite {
     // below the sketch aggregate, so WITHOUT the shared cache the four
     // broadcast probe joins each rebuilt the sketch from a full event
     // scan (0 ReusedExchange, 4 builds — the inflated sf1 bench line)
-    val df = Registry.planForms("q99_countmin")(spark, sf)
-    df.count() // materialize so the executed plan reflects the cache
-    val plan = df.queryExecution.executedPlan.toString
-    try {
-      // all four probe joins must read the CACHED relation ("Scan
-      // parquet" occurrences are not countable here: each
-      // InMemoryRelation prints its stored build plan, scans included)
-      val memScans = "InMemoryTableScan".r.findAllIn(plan).length
-      assert(memScans == 4, s"expected the 4 probe joins to hit the cached " +
-        s"sketch, saw $memScans InMemoryTableScan:\n${plan.take(800)}")
-    } finally spark.catalog.clearCache()
+    val plan = physicalPlan("q99_countmin")
+    // all four probe joins must read the CACHED relation ("Scan
+    // parquet" occurrences are not countable here: each
+    // InMemoryRelation prints its stored build plan, scans included)
+    val memScans = "InMemoryTableScan".r.findAllIn(plan).length
+    assert(memScans == 4, s"expected the 4 probe joins to hit the cached " +
+      s"sketch, saw $memScans InMemoryTableScan:\n${plan.take(800)}")
   }
 
   test("q249 seq-source pushdown: no residual Filter, pushed set visible on the scan") {
-    val df = Registry.planForms("q249_dsv2_filter_pushdown")(spark, sf)
+    val df = Registry.queries("q249_dsv2_filter_pushdown")(spark, sf)
     val plan = df.queryExecution.executedPlan.toString
     assert(plan.contains("PushedFilters: ["), s"pushdown not advertised:\n$plan")
     assert(plan.contains("GreaterThan(val"), s"val predicate not pushed:\n$plan")
@@ -398,7 +426,7 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("q250 graft-store read: partition filter pushed, pruned ReadSchema on the DSv2 scan") {
-    val df = Registry.planForms("q250_store_partitioned")(spark, sf)
+    val df = Registry.queries("q250_store_partitioned")(spark, sf)
     val plan = df.queryExecution.executedPlan.toString
     assert(plan.contains("graft-store"), s"DSv2 scan missing:\n$plan")
     assert(plan.contains("PushedFilters: [") && plan.contains("EqualTo(time_of_day,day)"),
@@ -411,7 +439,7 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("q252 graft-store scan carries a dynamicpruning runtime filter and the dim broadcasts") {
-    val df = Registry.planForms("q252_store_dpp")(spark, sf)
+    val df = Registry.queries("q252_store_dpp")(spark, sf)
     val plan = df.queryExecution.executedPlan.toString
     assert(plan.contains("graft-store"), s"DSv2 scan missing:\n$plan")
     assert(plan.contains("dynamicpruning"),
@@ -420,7 +448,7 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("q253 graft-store scan advertises the data-column skip filters (zone maps) and fewer scan rows") {
-    val df = Registry.planForms("q253_store_zonemap")(spark, sf)
+    val df = Registry.queries("q253_store_zonemap")(spark, sf)
     val plan = df.queryExecution.executedPlan.toString
     assert(plan.contains("graft-store"), s"DSv2 scan missing:\n$plan")
     // the probe predicates reach the scan as SkipFilters (residual
@@ -440,7 +468,7 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("q255 graft-store columnar read: ColumnarToRow over the batch scan") {
-    val df = Registry.planForms("q255_store_columnar")(spark, sf)
+    val df = Registry.queries("q255_store_columnar")(spark, sf)
     df.collect() // ColumnarToRow is inserted when AQE finalizes the plan
     val plan = df.queryExecution.executedPlan.toString
     assert(plan.contains("graft-store"), s"DSv2 scan missing:\n$plan")

@@ -361,8 +361,8 @@ class PropertySpec extends AnyFunSuite {
       val spine = wf.toSeq.toDF("w", "freq")
         .select(col("w"), col("freq"),
           trim(regexp_replace(col("w"), "(.)", "|$1| ")).as("s"))
-      val (winners, fin, _) =
-        graft.curation.CurationQueries.bpeTrainSpine(spine, 3, eager = false)
+      val (winners, fin) =
+        graft.curation.CurationQueries.bpeTrainSpine(spine, 3)
       val got = winners.map(_.collect().head)
         .map(r => (r.getLong(0), r.getString(1), r.getString(2), r.getLong(3)))
       val (exp, expSyms) = refTrain(wf, 3)
@@ -418,15 +418,15 @@ class PropertySpec extends AnyFunSuite {
         .select(col("w"), col("freq"),
           trim(regexp_replace(col("w"), "(.)", "|$1| ")).as("s"))
       def runBatched(batchM: Int) = {
-        val (batches, _, _) = graft.curation.CurationQueries
-          .bpeBatchTrainSpine(spine, 3, 16, batchM, eager = false)
+        val (batches, _) = graft.curation.CurationQueries
+          .bpeBatchTrainSpine(spine, 3, 16, batchM)
         batches.flatMap(_.collect().sortBy(_.getLong(1)))
           .map(r => (r.getLong(0), r.getLong(1), r.getString(2),
             r.getString(3), r.getLong(4)))
       }
       // batchM=1 degenerates to the sequential argmax trainer
-      val (seqWinners, _, _) =
-        graft.curation.CurationQueries.bpeTrainSpine(spine, 3, eager = false)
+      val (seqWinners, _) =
+        graft.curation.CurationQueries.bpeTrainSpine(spine, 3)
       val seq = seqWinners.map(_.collect().head)
         .map(r => (r.getLong(0), 1L, r.getString(1), r.getString(2), r.getLong(3)))
       assert(runBatched(1) == seq, s"batchM=1 != sequential on $wf")

@@ -18,8 +18,7 @@ rows = []
 for f in glob.glob(f"{ROOT}/src/main/scala/graft/**/*.scala", recursive=True):
     mod = f.split("graft/")[-1]
     for m in re.finditer(
-            r'QueryDef\("(q\d+[a-z_0-9]*)",\s*\w+,\s*(Some\(\w+\)|None),\s*\n?\s*"([^"]+)"'
-            r'(?:,\s*\n?\s*planFn\s*=\s*Some\(\w+\))?\)',
+            r'QueryDef\("(q\d+[a-z_0-9]*)",\s*\w+,\s*(Some\(\w+\)|None),\s*\n?\s*"([^"]+)"\)',
             open(f).read()):
         doc = m.group(3)
         if m.group(1) in NOTES:
