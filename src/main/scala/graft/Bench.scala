@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 object Bench {
@@ -9,26 +8,20 @@ object Bench {
     // silently recorded at local[4] because this default was "4" and the
     // recording shell didn't export SPARK_GRAFT_CPUS — producing two
     // incomparable points in the official trend series. The default is now
-    // the HOST width (capped at the baseline's 32), the artifact stamps
+    // the HOST width (LocalSpark.cpus), the artifact stamps
     // both the requested width and the host width, and a run whose width
     // differs from the baseline series' 32 refuses to pass silently: it
     // stamps "width_ok":false and prints a loud stderr banner.
     val BaselineWidth = 32
     val hostCpus = Runtime.getRuntime.availableProcessors
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      math.min(hostCpus, BaselineWidth).toString)
-    val widthOk = cpus.toInt == BaselineWidth && hostCpus >= BaselineWidth
+    val cpus = LocalSpark.cpus
+    val widthOk = cpus == BaselineWidth && hostCpus >= BaselineWidth
     if (!widthOk) System.err.println(
       s"[bench] WIDTH MISMATCH: requested local[$cpus] on a $hostCpus-CPU " +
         s"host; the baseline series is local[$BaselineWidth]. This record " +
         "is NOT comparable to the official series — do not commit it as " +
         "BENCH_SF01_r*/BENCH_SF1.")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSpark.session()
 
     // Contention sentinel (VERDICT r8 task 1): a fixed trivial scan-filter
     // (q39 shape, ~0.1 s warm) timed every SENTINEL_EVERY queries.  Its

@@ -2,20 +2,24 @@ package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, for the driver's DuckDB compare.
+  * Usage: runMain graft.Verify <sfDir> <outDir> [q1,q2,...]
+  * The optional list restricts both the results and the oracle file to
+  * those queries.
+  */
 object Verify {
   def main(args: Array[String]): Unit = {
-    val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val only = args.lift(2).map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
+    val spark = LocalSpark.session()
+    run(spark, args(0), args(1), only)
+    spark.stop()
+  }
+
+  def run(spark: SparkSession, sfDir: String, outDir: String,
+      only: Option[Set[String]]): Unit = {
+    def wanted(name: String) = only.forall(_(name))
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries.foreach { case (name, fn) =>
+    SparkEntry.queries.filter(q => wanted(q._1)).foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
@@ -26,6 +30,12 @@ object Verify {
       // ones before it, the same per-query isolation Bench applies
       finally spark.catalog.clearCache()
     }
+    writeOracleSql(s"$outDir/oracle_sql.json",
+      SparkEntry.oracleSql.filter(q => wanted(q._1)))
+  }
+
+  /** The driver-contract oracle file: one JSON object, query name → SQL. */
+  def writeOracleSql(path: String, sql: Map[String, String]): Unit = {
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
     // driver's json.load fail and silently zero the round's correctness.
@@ -38,9 +48,7 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    spark.stop()
+    val json = sql.map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+    Files.writeString(Paths.get(path), json)
   }
 }

@@ -176,7 +176,8 @@ object TextQueries {
     * The ALGORITHM's correctness over general English is what
     * StemmerSpec's published Snowball vectors pin; this oracle proves
     * the distributed application (tokenize → per-token stem → rejoin)
-    * end to end. Map regenerated by tools/StemDump.
+    * end to end. StemmerSpec checks every pair against Porter2.stem and
+    * prints the corrected map on a mismatch.
     */
   private[graft] val stemMap: Seq[(String, String)] = Seq(
     "a" -> "a", "agg" -> "agg", "batch" -> "batch", "big" -> "big",

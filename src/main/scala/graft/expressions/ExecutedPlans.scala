@@ -40,10 +40,14 @@ object ExecutedPlans {
     spark.listenerManager.register(listener)
     try {
       val result = body
-      spark.sparkContext.listenerBus.waitUntilEmpty()
+      drainListenerBus(spark)
       Run(result, seen.asScala.toSeq :+ finalPlan(result.queryExecution.executedPlan))
     } finally spark.listenerManager.unregister(listener)
   }
+
+  /** Blocks until every event posted so far has reached its listeners. */
+  def drainListenerBus(spark: SparkSession): Unit =
+    spark.sparkContext.listenerBus.waitUntilEmpty()
 
   /** `p` with every adaptive node (subqueries included) replaced by the
     * plan it currently runs — the final plan once it has executed.

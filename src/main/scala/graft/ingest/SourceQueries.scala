@@ -539,8 +539,8 @@ object SourceQueries {
       |GROUP BY 1 ORDER BY 1""".stripMargin
 
   /** VECTORIZED graft-store read (VERDICT r10 task 5; the DEFAULT read
-    * path — measured 1.4x on scan-bound aggregates in
-    * `tools/ColumnarAb`, `columnar=false` selects the row reader): the
+    * path — measured 1.4x on scan-bound aggregates, PERF.md "Columnar
+    * A/B"; `columnar=false` selects the row reader): the
     * committed store read through the `ColumnarBatch` path — the
     * reader fills 4096-row `OnHeapColumnVector`s and Spark consumes
     * the scan through `ColumnarToRow` whole-stage codegen instead of a

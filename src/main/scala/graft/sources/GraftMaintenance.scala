@@ -243,8 +243,9 @@ object GraftMaintenance {
         // Every output file then spans a NARROW range of EVERY dimension
         // (lexicographic clustering gives a tight zone map only on the
         // leading column), so multi-dimensional probes prune files on
-        // each predicate — SortAb records the planned-file counts under
-        // both layouts. Ranking per type (VERDICT r13 task 7):
+        // each predicate — PERF.md round 13 records the planned-file
+        // counts under both layouts (18 → 9). Ranking per type (VERDICT
+        // r13 task 7):
         //  - integral: exact linear rank against the data min/max
         //    (driver-computed divisor, overflow-safe for any long range);
         //  - string/double: RANK AGAINST STATS — the cut points are the

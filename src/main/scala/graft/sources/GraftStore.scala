@@ -187,8 +187,8 @@ object GraftStore {
     * `auto` (default since VERDICT r14 task 6 — the commit decides PER
     * FILE from its own matched-row counts: files whose cumulative
     * deleted fraction reaches [[AutoRewriteFractionConf]] rewrite their
-    * kept rows on executors, the rest bind deletion vectors; StoreAb
-    * measures 139 KiB vs 36 MB write-amp on a 4M-row mixed delete),
+    * kept rows on executors, the rest bind deletion vectors; 139 KiB vs
+    * 36 MB write-amp on a 4M-row mixed delete, PERF.md round 14),
     * `copy-on-write` (rewrite the surviving rows of every matching
     * file) or `merge-on-read` (VERDICT r12 task 3 — matched rows commit
     * as per-file DELETION VECTORS; UPDATE/MERGE additionally write their
@@ -216,14 +216,6 @@ object GraftStore {
     * files) through one node while holding the table's metadata lock.
     */
   val DriverMaterializations = new java.util.concurrent.atomic.AtomicLong(0L)
-
-  /** DIAGNOSTIC: wall-clock nanos the most recent delta (MOR/auto) DML
-    * commit spent inside the table's metadata lock. With executor-side
-    * rewrites the lock covers only validations + DV sidecar writes + the
-    * manifest swap, so this stays FLAT as rewrite bytes grow
-    * (tools/StoreAb measures it).
-    */
-  val LastDvCommitLockNanos = new java.util.concurrent.atomic.AtomicLong(0L)
 
   /** DIAGNOSTIC: how many DELTA changelog partitions were read through
     * the ROW-INDEX seek path (vs the full-scan fallback) — RowIndexSpec
@@ -707,7 +699,8 @@ private[sources] final class GraftCountingOutputStream(out: java.io.OutputStream
   * blocks holding changed ordinals instead of streaming the whole
   * file. This is what turns the DV changelog read from O(file) into
   * O(changed rows): with it, "refresh the view from the last N
-  * commits" costs the churn, not the table (tools/IvmAb measures it).
+  * commits" costs the churn, not the table (PERF.md round 15: IVM
+  * refresh 5.1 s → ~1.0 s at 32M rows).
   *
   * Named `ridx-<datafile>` beside its data file — a prefix NO lister
   * matches (`part-*`/`merged-*`/`rewrite-*` globs, manifest entries,
@@ -1015,7 +1008,7 @@ private[sources] class GraftStoreTable(
 
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
     // vectorized by default (measured 1.4x on scan-bound aggregates,
-    // tools/ColumnarAb); `columnar=false` selects the row reader — both
+    // PERF.md "Columnar A/B"); `columnar=false` selects the row reader — both
     // paths stay oracled/spec-pinned byte-equal. `versionAsOf` pins a
     // committed manifest version (store-level time travel, r11 task 1).
     // `startingVersion` seeds a streaming read (VERDICT r12 task 2).
@@ -3273,7 +3266,8 @@ private[sources] class GraftCowBatchWrite(
   *
   * Write amplification becomes O(matched rows) instead of O(bytes of
   * matched files) — the bound VERDICT r12 asked for; the read-side cost
-  * is one small bitset load per DV'd file (measured in tools/StoreAb).
+  * is one small bitset load per DV'd file (1.03x full-scan overhead,
+  * PERF.md round 13).
   */
 private[sources] class GraftDeltaOperation(
     path: String, schema: StructType, partCols: Seq[String],
@@ -3517,7 +3511,6 @@ private[sources] class GraftDvBatchWrite(
         }.toMap
       }
       try {
-        val lock0 = System.nanoTime()
         GraftCommit.withMetaLock(dir) {
           GraftCommit.retryingCommit(s"merge-on-read ${op.command()}") {
             val mf = GraftCommit.readManifestFull(dir)
@@ -3571,7 +3564,6 @@ private[sources] class GraftDvBatchWrite(
             v
           }
         }
-        GraftStore.LastDvCommitLockNanos.set(System.nanoTime() - lock0)
         committed = true
       } catch {
         case _: StaleRewriteAttempt =>

@@ -69,7 +69,7 @@ object Pipeline {
     * redeliveries all arrive inside the delay (first occurrence always
     * emits; longer retention can only keep suppressing) — those batches
     * are pure fixed cost: at sf0.1 they were ~35-40% of q69's and q101's
-    * micro-batch count for byte-identical output (StreamProf, r17).
+    * micro-batch count for byte-identical output (OPTIMIZATION_r17.md).
     * Queries whose append-mode EMISSION is the eviction (q146 outer join,
     * q214/q229 closed-window emits) must keep them (or replace them with
     * an explicit quiescence feed — q146's two-sentinel close).

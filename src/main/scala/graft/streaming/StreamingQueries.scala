@@ -492,7 +492,7 @@ object StreamingQueries {
     // No-data micro-batches OFF (r17, guide §2.4): dedup emits each key's
     // FIRST occurrence during its data batch; the no-data batches only
     // evict expired keys (3 of the 6 batches, ~0.7 s of a 2.35 s warm run
-    // — StreamProf). Suppressing eviction can only retain state LONGER,
+    // — OPTIMIZATION_r17.md). Suppressing eviction can only retain state LONGER,
     // and since every redelivery here already arrives inside the delay
     // (the current output equals plain DISTINCT — the oracle pins it),
     // longer retention changes nothing: first occurrences still emit,
@@ -593,7 +593,7 @@ object StreamingQueries {
     // the watermark-advance no-data batches only evict
     // provably-unmatchable state, producing no rows — with 2 data batches
     // they were half the micro-batch count for byte-identical output
-    // (StreamProf: 2 × ~0.75 s of a 4.1 s warm run). Eviction still
+    // (OPTIMIZATION_r17.md: 2 × ~0.75 s of a 4.1 s warm run). Eviction still
     // happens during later data batches; q146 (LEFT OUTER — emission IS
     // the eviction) replaces them with an explicit two-sentinel close.
     // Interleaved A/B (sf0.1): median 3.58 → 2.24 s, 5/5 pairs; oracle

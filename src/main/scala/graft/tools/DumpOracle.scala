@@ -1,7 +1,5 @@
 package graft.tools
 
-import java.nio.file.{Files, Paths}
-
 /** Dump the CURRENT registry's oracle_sql.json without running any
   * query (the map is static — no Spark session needed). Lets a long
   * Verify run's outputs be re-compared after oracle-mirror-only edits
@@ -10,18 +8,7 @@ import java.nio.file.{Files, Paths}
 object DumpOracle {
   def main(args: Array[String]): Unit = {
     val Array(outPath) = args
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = graft.SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(outPath), json)
+    graft.Verify.writeOracleSql(outPath, graft.SparkEntry.oracleSql)
     println(s"[dump] ${graft.SparkEntry.oracleSql.size} oracle entries -> $outPath")
   }
 }

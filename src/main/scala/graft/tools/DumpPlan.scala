@@ -3,7 +3,6 @@ package graft.tools
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainUtils
 import org.apache.spark.sql.graft.ExecutedPlans
 
@@ -23,13 +22,7 @@ object DumpPlan {
     val sfDir = args(1)
     val outDir = args(2)
     val suffix = args(3)
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.LocalSpark.session()
     Files.createDirectories(Paths.get(outDir))
     names.foreach { name =>
       graft.Registry.queries.get(name) match {

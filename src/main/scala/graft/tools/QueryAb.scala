@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.LocalSpark
 
 /** Dev-only A/B harness for the r16 optimization round. This host shows
   * minute-scale contention drift (±40% on identical code — see
@@ -8,12 +8,13 @@ import org.apache.spark.sql.SparkSession
   * JVMs cannot resolve sub-second effects. This tool times ONE registered
   * query with an optimization toggled ON and OFF in strict alternation
   * inside one JVM: both arms sample the same contention windows, and the
-  * per-arm MIN approximates the uncontended floor for each form.
+  * per-arm MIN approximates the uncontended floor for each form. Each run
+  * is [[LocalSpark.timed]]: the full result, at the session's width.
   *
   * Toggles are system properties `graft.opt.<flag>` read at DataFrame
   * construction time via [[OptToggle]]; they exist only while an
   * optimization is being adjudicated and are inlined away once a winner
-  * is recorded.
+  * is recorded: ToolBoundarySpec fails while engine code reads one.
   *
   * Usage: runMain graft.tools.QueryAb <query> <flag> [sfDir] [pairs]
   */
@@ -29,19 +30,11 @@ object QueryAb {
     val flag = args(1)
     val sfDir = if (args.length > 2) args(2) else "/root/testdata/sf0.1"
     val pairs = if (args.length > 3) args(3).toInt else 5
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSpark.session()
     val fn = graft.Registry.queries(name)
     def once(on: Boolean): Double = {
       sys.props.put(s"graft.opt.$flag", on.toString)
-      spark.catalog.clearCache()
-      val t0 = System.nanoTime()
-      fn(spark, sfDir).count()
-      (System.nanoTime() - t0) / 1e9
+      LocalSpark.timed(spark, fn, sfDir).seconds
     }
     once(true); once(false) // untimed warm-ups, both codegen paths paid
     val (ons, offs) = (1 to pairs).map { i =>

@@ -1,11 +1,11 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Dev-only scale harness: materialize an N× copy of a testdata SF dir
   * (ids shifted per copy so rows stay distinct and foreign keys stay
-  * coherent) laid out like a testdata sf dir, so Verify/TimeOne can
+  * coherent) laid out like a testdata sf dir, so Verify/Profile can
   * measure correctness and cost one decade past the largest provided SF
   * (VERDICT r8 task 7 — the sf1-volume oracle gate).
   *
@@ -28,12 +28,7 @@ object ScaleGen {
   def main(args: Array[String]): Unit = {
     val src = args(0); val out = args(1); val n = args(2).toInt
     val docsOnly = args.length > 3 && args(3) == "docsOnly"
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.LocalSpark.session()
     val copies = spark.range(n).select(col("id").as("copy"))
 
     def strideOf(df: DataFrame, key: String): Long =

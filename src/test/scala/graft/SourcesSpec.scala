@@ -2804,7 +2804,7 @@ class SourcesSpec extends AnyFunSuite {
       .option("path", dir).load()
     val expect = read().agg(sum("v")).head().getLong(0)
 
-    val bytes = graft.tools.GraftCommit0.allBytes(dir)
+    val bytes = StoreFiles.allBytes(dir)
     GraftMaintenance.compactSorted(dir, Seq("x", "y"), spark,
       targetBytes = math.max(1L, bytes / 16), zOrder = true)
     val total = read().rdd.getNumPartitions
@@ -2859,7 +2859,7 @@ class SourcesSpec extends AnyFunSuite {
       .option("path", dir).load()
     val expect = read().agg(sum("v")).head().getLong(0)
 
-    val bytes = graft.tools.GraftCommit0.allBytes(dir)
+    val bytes = StoreFiles.allBytes(dir)
     GraftMaintenance.compactSorted(dir, Seq("s", "x"), spark,
       targetBytes = math.max(1L, bytes / 16), zOrder = true)
     val total = read().rdd.getNumPartitions

@@ -170,6 +170,14 @@ class StemmerSpec extends AnyFunSuite {
       "governments" -> "govern", "governor" -> "governor")
   }
 
+  test("q49's pinned oracle stem map equals Porter2.stem for every word") {
+    import graft.clean.TextQueries.stemMap
+    val stale = stemMap.filter { case (w, s) => Porter2.stem(w) != s }
+    val corrected = stemMap.map { case (w, _) => s"\"$w\" -> \"${Porter2.stem(w)}\"" }
+    assert(stale.isEmpty, s"stale pairs $stale; paste back into TextQueries.stemMap:\n" +
+      corrected.mkString(", "))
+  }
+
   test("stemTokens maps over arrays inside a plan") {
     import TestSpark.spark
     import org.apache.spark.sql.functions._
