@@ -17,10 +17,10 @@ object Tables {
     * a per-query driver-latency tax paid by all ~259 queries (interleaved
     * A/B: q10 median 0.39 → 0.29 s, 10/10 pairs — ~50 ms per table()
     * call). The schema of a testdata table is immutable for the process
-    * lifetime, so infer once and hand the result to the reader thereafter
-    * (same memo shape as Pipeline's ts-type probe). This caches METADATA
-    * only — every query still scans the parquet data itself, and a fresh
-    * JVM (every bench/oracle invocation) re-infers from the file. At
+    * lifetime, so infer once and hand the result to the reader
+    * thereafter. This caches METADATA only — every query still scans the
+    * parquet data itself, and a fresh JVM (every bench/oracle invocation)
+    * re-infers from the file. At
     * cluster scale the same move is "declare the table schema": inference
     * over a multi-file dataset is a driver-side listing + footer pass.
     *
@@ -50,35 +50,22 @@ object Tables {
   def part(s: SparkSession, d: String): DataFrame      = table(s, d, "part")
   def orders(s: SparkSession, d: String): DataFrame    = table(s, d, "orders")
   def lineitem(s: SparkSession, d: String): DataFrame  = table(s, d, "lineitem")
-  /** `events.ts` is parquet TIMESTAMP(NANOS), which Spark 4's vectorized
-    * reader rejects outright. Read it as a raw nanosecond long
-    * (`nanosAsLong`) and convert to a microsecond TIMESTAMP in the plan
-    * (integer floor-division — deterministic truncation; sub-µs precision
-    * is below every grain our queries use, and orderings always tiebreak
-    * on `event_id`, never on `ts`).
+  /** `events.ts` is parquet TIMESTAMP(NANOS). Spark 4.1 reads it
+    * natively as TIMESTAMP_NTZ (micros truncation happens in the reader;
+    * sub-µs precision is below every grain our queries use, and orderings
+    * always tiebreak on `event_id`, never on `ts`). The NTZ wall-clock
+    * fields are the UTC rendering of the epoch nanos, so recover the
+    * instant with pure field arithmetic: micros since the NTZ epoch
+    * (timestampdiff on two NTZ values — no time zone consulted) fed to
+    * timestamp_micros (epoch-based — also tz-free). A plain
+    * cast("timestamp") would interpret the fields in the session time
+    * zone and silently shift every instant in a non-UTC session (ADVICE
+    * r7; to_utc_timestamp on NTZ input turned out session-dependent too —
+    * probed).
     */
-  def events(s: SparkSession, d: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val raw = table(s, d, "events")
-    raw.schema("ts").dataType match {
-      // pre-4.1 path: nanosAsLong honored, ts arrives as a raw long
-      case org.apache.spark.sql.types.LongType =>
-        raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))
-      // Spark 4.1+ reads TIMESTAMP(NANOS) natively as TIMESTAMP_NTZ
-      // (micros truncation happens in the reader); the legacy conf is
-      // ignored. The NTZ wall-clock fields are the UTC rendering of the
-      // epoch nanos, so recover the instant with pure field arithmetic:
-      // micros since the NTZ epoch (timestampdiff on two NTZ values —
-      // no time zone consulted) fed to timestamp_micros (epoch-based —
-      // also tz-free). A plain cast("timestamp") would interpret the
-      // fields in the session time zone and silently shift every
-      // instant in a non-UTC session (ADVICE r7; to_utc_timestamp on
-      // NTZ input turned out session-dependent too — probed).
-      case _ =>
-        raw.withColumn("ts", timestamp_micros(expr(
-          "timestampdiff(MICROSECOND, TIMESTAMP_NTZ '1970-01-01 00:00:00', ts)")))
-    }
-  }
+  def events(s: SparkSession, d: String): DataFrame =
+    table(s, d, "events").withColumn("ts", timestamp_micros(expr(
+      "timestampdiff(MICROSECOND, TIMESTAMP_NTZ '1970-01-01 00:00:00', ts)")))
   def documents(s: SparkSession, d: String): DataFrame = table(s, d, "documents")
   def embeddings(s: SparkSession, d: String): DataFrame = table(s, d, "embeddings")
 }

@@ -3,6 +3,7 @@ package graft.analyze
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Sessions
 
 import graft.{QueryDef, Tables}
 import graft.util.Det._
@@ -1445,9 +1446,10 @@ object Eda {
     * surface: small-quantity lineitems vs 0.5× their part's mean quantity.
     * Catalyst decorrelates this into an aggregate + join — asserted in
     * PlanSpec (no per-row subquery execution survives). The mean uses the
-    * decimal-exact formulation on both sides (Det rules).
+    * decimal-exact formulation on both sides (Det rules). The temp view
+    * lives on this query's session clone.
     */
-  private def q13(s: SparkSession, d: String): DataFrame = {
+  private def q13(s: SparkSession, d: String): DataFrame = Sessions.isolated(s) { s =>
     Tables.lineitem(s, d).createOrReplaceTempView("graft_lineitem")
     s.sql(
       """SELECT l_partkey,

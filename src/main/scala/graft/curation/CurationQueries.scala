@@ -3,6 +3,7 @@ package graft.curation
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Sessions
 
 import graft.{QueryDef, Tables}
 import graft.clean.TextOps
@@ -935,28 +936,23 @@ object CurationQueries {
     (batches.result(), sp)
   }
 
-  /** Run `body` with AQE off, restoring the previous setting. The batched
-    * trainer's loop checkpoints ~3 vocab-sized frames per round;
-    * under AQE every exchange materializes as its own stage-job, turning
-    * 8 rounds into ~200 scheduler round-trips of 8–15 ms each (profiled:
-    * 5.3 s wall, almost no executor time). With AQE off each checkpoint
-    * is ONE job with its stages chained — the plans here are tiny and
-    * fixed-shape, so nothing AQE would re-plan is lost.
+  /** AQE off for the whole body: the batched trainer's loop checkpoints
+    * ~3 vocab-sized frames per round; under AQE every exchange
+    * materializes as its own stage-job, turning 8 rounds into ~200
+    * scheduler round-trips of 8–15 ms each (profiled: 5.3 s wall, almost
+    * no executor time). With AQE off each checkpoint is ONE job with its
+    * stages chained — the plans here are tiny and fixed-shape, so nothing
+    * AQE would re-plan is lost.
     */
-  private def withAqeOff[T](s: SparkSession)(body: => T): T = {
-    val prev = s.conf.get("spark.sql.adaptive.enabled", "true")
-    s.conf.set("spark.sql.adaptive.enabled", "false")
-    try body finally s.conf.set("spark.sql.adaptive.enabled", prev)
-  }
-
-  private def q192(s: SparkSession, d: String): DataFrame = withAqeOff(s) {
+  private def q192(s: SparkSession, d: String): DataFrame =
+      Sessions.isolated(s, "spark.sql.adaptive.enabled" -> "false") { s =>
     // r16 optimization: every frame in the round loop is vocab-bounded
     // (the spine is the word-freq table; candidates/batches are ≤32
     // rows), yet with AQE off each round ran ~3 shuffles at the session
     // width (32) plus 32-task cache scans — per-task constants, not
     // compute. Materialize the (only corpus-sized) spine pass FIRST at
     // session width, re-lay the vocab-sized result out at the round
-    // width, then scope the loop's shuffles to that width. The width is
+    // width, then narrow the loop's shuffles to that width. The width is
     // min(defaultParallelism, 8), not a host constant: bounded frames
     // stay narrow at any scale while the corpus pass keeps full width.
     // Interleaved A/B (with the bpePairs rewrite in): median 3.53 →
@@ -965,12 +961,11 @@ object CurationQueries {
     Materialize.scoped { m =>
       val spine = m.cache(bpeSpine(s, d).repartition(k))
       spine.count() // corpus pass runs NOW, before the conf narrows
-      graft.streaming.Pipeline.withShufflePartitions(s, k) {
-        val (batches, _) = bpeBatchTrainSpine(spine,
-          Q192Rounds, Q192CandM, Q192BatchM)
-        batches.reduce(_ unionAll _).orderBy("round", "j")
-          .localCheckpoint(true) // materialize while AQE is off; ≤64 rows
-      }
+      s.conf.set("spark.sql.shuffle.partitions", k.toString) // the clone's conf
+      val (batches, _) = bpeBatchTrainSpine(spine,
+        Q192Rounds, Q192CandM, Q192BatchM)
+      batches.reduce(_ unionAll _).orderBy("round", "j")
+        .localCheckpoint(true) // materialize while AQE is off; ≤64 rows
     }
   }
 

@@ -5,9 +5,10 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import org.apache.spark.sql.graft.GraftFunctions.sortedIntersectCount
+import org.apache.spark.sql.graft.Sessions
 
 import graft.{QueryDef, Tables}
-import graft.util.{Det, Materialize}
+import graft.util.{Det, Materialize, TempDirs}
 
 /** Deduplication operator family over `documents` — the training-data-
   * pipeline operators: exact dedup, blocked token-set Jaccard, word-n-gram
@@ -1436,102 +1437,100 @@ object DedupQueries {
     */
   private val q129StoreBuckets = 16
 
-  private[graft] def q129WithSlices(s: SparkSession, d: String, nSlices: Int): DataFrame = {
+  private[graft] def q129WithSlices(s: SparkSession, d: String, nSlices: Int): DataFrame =
+      Sessions.isolated(s, "spark.sql.shuffle.partitions" -> "4") { s =>
     import s.implicits._
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import graft.streaming.Pipeline
-    val store = graft.util.TempDirs.create("graft_lsh_store_") + "/store"
+    val store = TempDirs.create("graft_lsh_store_") + "/store"
     val input = Tables.documents(s, d).select(col("doc_id"), col("text"))
       .orderBy("doc_id").as[DocRow].collect().toSeq
     val slice = math.max(1, (input.size + nSlices - 1) / nSlices)
     val stream = MemoryStream[DocRow](s)
-    val ckpt = Pipeline.checkpointDir("ckpt_q129")
-    Pipeline.withShufflePartitions(s, 4) {
-      val q = stream.toDF().writeStream.outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          val sp = batch.sparkSession
-          // one store, two row kinds ('b' = band fingerprint, 'a' = accept
-          // mark), ONE write job per batch. With partitionBy(kind, bkt)
-          // the job commits several files, so bands-without-marks safety
-          // rests on the committer's job-level commit (not a single-file
-          // rename). The store is laid out partitionBy(kind, bkt); the
-          // probe below opens ONLY the kind=b bucket directories that
-          // appear in this batch, and the append is blind.
-          Materialize.scoped { m =>
-            val bands = bandFrame(batch)
-              .withColumn("bkt", pmod(col("band_key"), lit(q129StoreBuckets)).cast("int"))
-              .transform(m.cache)
-            // The bucket-list collect doubles as the cache fill (the
-            // minhash aggregation runs once, parallel — it must NOT first
-            // run inside the write job, whose final stage is narrower),
-            // and drives the store read: matching bucket directories are
-            // handed to the reader as explicit paths with an explicit
-            // schema. Round 6 expressed the same restriction as a
-            // broadcast-semi-join + dynamic partition pruning over a
-            // discovery-listed store — 5+ extra jobs per batch (full
-            // store listing, schema inference, DPP subquery, broadcast)
-            // to avoid one driver round-trip that is at most
-            // `q129StoreBuckets` ints (VERDICT r6 "What's wrong" 2).
-            // The collect is bounded by the bucket-count knob, never the
-            // corpus, so it holds at 100 TB.
-            val batchBkts = bands.select("bkt").distinct()
-              .as[Int].collect().sorted
-            val bktDirs = batchBkts
-              .map(b => new java.io.File(s"$store/kind=b/bkt=$b"))
-              .filter(_.isDirectory).map(_.toString).toSeq
-            // DISTINCT before the probe join: the store is a key SET, but
-            // appended batches can repeat a key (and round-10's sf1 bench
-            // caught the cost of not collapsing: duplicate-heavy corpora
-            // put the same band_key in the store once per copy, so the
-            // membership left-join multiplied batch rows by store
-            // multiplicity — 42 s vs 12 s for the 3-batch run at sf1).
-            // A max over duplicated rows was CORRECT, just quadratic.
-            val storeKeys =
-              if (bktDirs.nonEmpty)
-                sp.read.schema("k LONG").parquet(bktDirs: _*)
-                  .select(col("k").as("band_key")).distinct()
-                  .select(col("band_key"), lit(true).as("in_store"))
-              else sp.range(0).select(col("id").as("band_key"),
-                lit(true).as("in_store"))
-            // one pass over the cached bands: a band dooms its doc if the
-            // store already holds it, or an earlier same-batch doc does
-            // (min-over-window); max() over the doc's bands folds that to
-            // the accept bit. Row multiplication from duplicate store
-            // keys can't change a max. (Round-6 shape was agg + two
-            // joins + an anti-join against a re-read of the micro-batch
-            // source — two more plans and a broadcast per batch.)
-            val accepted = bands
-              .withColumn("first_id",
-                min("doc_id").over(Window.partitionBy("band_key")))
-              .join(storeKeys, Seq("band_key"), "left")
-              .groupBy("doc_id")
-              .agg(max(coalesce(col("in_store"), lit(false)) ||
-                col("doc_id") > col("first_id")).as("dup"))
-              .filter(!col("dup")).select("doc_id")
-            // repartition on the layout keys — NOT coalesce(1): coalesce
-            // propagates its 1-task width into the whole final stage
-            // (probe joins + accept anti-join all single-threaded); the
-            // repartition exchange keeps upstream parallel and still
-            // lands one file per (kind, bkt) directory.
-            // the 'b' rows are a probe key SET — write each key once per
-            // batch (same sf1 lesson as the probe-side distinct above)
-            bands.select(lit("b").as("kind"), col("bkt"), col("band_key").as("k"))
-              .distinct()
-              .unionAll(accepted.select(lit("a").as("kind"),
-                lit(-1).cast("int").as("bkt"), col("doc_id").as("k")))
-              .repartition(col("kind"), col("bkt")).write.mode("append")
-              .partitionBy("kind", "bkt").parquet(store)
-          }
+    val ckpt = TempDirs.create("ckpt_q129")
+    val q = stream.toDF().writeStream.outputMode("append")
+      .option("checkpointLocation", ckpt)
+      .foreachBatch { (batch: DataFrame, _: Long) =>
+        val sp = batch.sparkSession
+        // one store, two row kinds ('b' = band fingerprint, 'a' = accept
+        // mark), ONE write job per batch. With partitionBy(kind, bkt)
+        // the job commits several files, so bands-without-marks safety
+        // rests on the committer's job-level commit (not a single-file
+        // rename). The store is laid out partitionBy(kind, bkt); the
+        // probe below opens ONLY the kind=b bucket directories that
+        // appear in this batch, and the append is blind.
+        Materialize.scoped { m =>
+          val bands = bandFrame(batch)
+            .withColumn("bkt", pmod(col("band_key"), lit(q129StoreBuckets)).cast("int"))
+            .transform(m.cache)
+          // The bucket-list collect doubles as the cache fill (the
+          // minhash aggregation runs once, parallel — it must NOT first
+          // run inside the write job, whose final stage is narrower),
+          // and drives the store read: matching bucket directories are
+          // handed to the reader as explicit paths with an explicit
+          // schema. Round 6 expressed the same restriction as a
+          // broadcast-semi-join + dynamic partition pruning over a
+          // discovery-listed store — 5+ extra jobs per batch (full
+          // store listing, schema inference, DPP subquery, broadcast)
+          // to avoid one driver round-trip that is at most
+          // `q129StoreBuckets` ints (VERDICT r6 "What's wrong" 2).
+          // The collect is bounded by the bucket-count knob, never the
+          // corpus, so it holds at 100 TB.
+          val batchBkts = bands.select("bkt").distinct()
+            .as[Int].collect().sorted
+          val bktDirs = batchBkts
+            .map(b => new java.io.File(s"$store/kind=b/bkt=$b"))
+            .filter(_.isDirectory).map(_.toString).toSeq
+          // DISTINCT before the probe join: the store is a key SET, but
+          // appended batches can repeat a key (and round-10's sf1 bench
+          // caught the cost of not collapsing: duplicate-heavy corpora
+          // put the same band_key in the store once per copy, so the
+          // membership left-join multiplied batch rows by store
+          // multiplicity — 42 s vs 12 s for the 3-batch run at sf1).
+          // A max over duplicated rows was CORRECT, just quadratic.
+          val storeKeys =
+            if (bktDirs.nonEmpty)
+              sp.read.schema("k LONG").parquet(bktDirs: _*)
+                .select(col("k").as("band_key")).distinct()
+                .select(col("band_key"), lit(true).as("in_store"))
+            else sp.range(0).select(col("id").as("band_key"),
+              lit(true).as("in_store"))
+          // one pass over the cached bands: a band dooms its doc if the
+          // store already holds it, or an earlier same-batch doc does
+          // (min-over-window); max() over the doc's bands folds that to
+          // the accept bit. Row multiplication from duplicate store
+          // keys can't change a max. (Round-6 shape was agg + two
+          // joins + an anti-join against a re-read of the micro-batch
+          // source — two more plans and a broadcast per batch.)
+          val accepted = bands
+            .withColumn("first_id",
+              min("doc_id").over(Window.partitionBy("band_key")))
+            .join(storeKeys, Seq("band_key"), "left")
+            .groupBy("doc_id")
+            .agg(max(coalesce(col("in_store"), lit(false)) ||
+              col("doc_id") > col("first_id")).as("dup"))
+            .filter(!col("dup")).select("doc_id")
+          // repartition on the layout keys — NOT coalesce(1): coalesce
+          // propagates its 1-task width into the whole final stage
+          // (probe joins + accept anti-join all single-threaded); the
+          // repartition exchange keeps upstream parallel and still
+          // lands one file per (kind, bkt) directory.
+          // the 'b' rows are a probe key SET — write each key once per
+          // batch (same sf1 lesson as the probe-side distinct above)
+          bands.select(lit("b").as("kind"), col("bkt"), col("band_key").as("k"))
+            .distinct()
+            .unionAll(accepted.select(lit("a").as("kind"),
+              lit(-1).cast("int").as("bkt"), col("doc_id").as("k")))
+            .repartition(col("kind"), col("bkt")).write.mode("append")
+            .partitionBy("kind", "bkt").parquet(store)
         }
-        .queryName("graft_q129").start()
-      input.grouped(slice).foreach { sl =>
-        stream.addData(sl)
-        q.processAllAvailable()
       }
-      q.stop(); q.awaitTermination()
+      .queryName("graft_q129").start()
+    input.grouped(slice).foreach { sl =>
+      stream.addData(sl)
+      q.processAllAvailable()
     }
-    Pipeline.dropCheckpoint(ckpt)
+    q.stop(); q.awaitTermination()
+    TempDirs.delete(ckpt)
     val acc = s.read.parquet(store).filter(col("kind") === "a")
       .select(col("k").as("doc_id"), lit(true).as("accepted"))
     Tables.documents(s, d).select("doc_id")

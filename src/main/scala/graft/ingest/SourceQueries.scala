@@ -3,6 +3,7 @@ package graft.ingest
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Sessions
 import org.apache.spark.sql.types._
 
 import graft.{QueryDef, Tables}
@@ -471,49 +472,39 @@ object SourceQueries {
       |WHERE event_id >= 100 AND event_id < 400
       |GROUP BY 1 ORDER BY 1""".stripMargin
 
+  /** Runs a store query on its own session clone with the `graft`
+    * catalog bound to a fresh warehouse, plus `conf`: each execution owns
+    * its tables and DML modes, so two executions never see each other's
+    * DDL, and the caller's session gets no catalog binding. `body` gets
+    * the clone and the warehouse path.
+    */
+  private def onGraftCatalog(s: SparkSession, conf: (String, String)*)(
+      body: (SparkSession, String) => DataFrame): DataFrame = {
+    val wh = graft.util.TempDirs.create("graft_warehouse_")
+    Sessions.isolated(s, Seq("spark.sql.catalog.graft" -> "graft.sources.GraftCatalog",
+      "spark.sql.catalog.graft.warehouse" -> wh) ++ conf: _*)(body(_, wh))
+  }
+
   /** NAMED-TABLE SQL through the graft `TableCatalog` (VERDICT r10 task
     * 3 — the reference's S12/S13 story is *named-table* access,
     * `NB cell 16 (ln 1238)` / `S/reddit_lambda.py:46`; the path-option
     * provider alone can't serve `CREATE TABLE ... / INSERT / SELECT`).
     * The engine side is PURE SQL: create the namespace and a
     * partitioned table in the `graft` catalog
-    * ([[graft.sources.GraftCatalog]], registered lazily on the
-    * session), INSERT the enriched events through the V2 commit
-    * protocol, and aggregate with a partition predicate — which arrives
+    * ([[graft.sources.GraftCatalog]], bound to a fresh warehouse on the
+    * query's session clone), INSERT the enriched events through the V2
+    * commit protocol, and aggregate with a partition predicate — which arrives
     * at the same graft-store scan with directory pruning intact (the
     * catalog reconstitutes the identical Table, so pushdown/zone
     * maps/DPP all apply to named tables for free). The oracle
     * recomputes the aggregate from the source parquet.
     */
-  /** Lazy once-per-session `graft` catalog registration (VERDICT r11
-    * task 6): idempotent — a repeat call with the catalog already bound
-    * keeps the EXISTING warehouse (Spark caches the initialized catalog
-    * instance, so silently "re-pointing" the conf would lie about where
-    * tables live; the one-warehouse-per-session contract is now explicit
-    * instead of a silent ignore).
-    */
-  private def ensureGraftCatalog(s: SparkSession): Unit = {
-    s.conf.getOption("spark.sql.catalog.graft") match {
-      case None =>
-        s.conf.set("spark.sql.catalog.graft", "graft.sources.GraftCatalog")
-        s.conf.set("spark.sql.catalog.graft.warehouse",
-          graft.util.TempDirs.create("graft_warehouse_"))
-      case Some(impl) =>
-        require(impl == "graft.sources.GraftCatalog" &&
-          s.conf.getOption("spark.sql.catalog.graft.warehouse").exists(_.nonEmpty),
-          s"graft: session catalog 'graft' is already bound to '$impl' — " +
-            "one graft warehouse per session; unset spark.sql.catalog.graft first")
-    }
-  }
-
-  private def q254(s: SparkSession, d: String): DataFrame = {
-    ensureGraftCatalog(s)
+  private def q254(s: SparkSession, d: String): DataFrame = onGraftCatalog(s) { (s, _) =>
     Tables.events(s, d)
       .select(col("event_id"), col("user_id"), col("value"),
         graft.enrich.Features.timeOfDay(col("ts")).as("time_of_day"))
       .createOrReplaceTempView("q254_src")
     s.sql("CREATE NAMESPACE IF NOT EXISTS graft.db")
-    s.sql("DROP TABLE IF EXISTS graft.db.events_t")
     s.sql("""CREATE TABLE graft.db.events_t
             |  (event_id BIGINT, user_id BIGINT, value DOUBLE, time_of_day STRING)
             |  PARTITIONED BY (time_of_day)""".stripMargin)
@@ -594,14 +585,12 @@ object SourceQueries {
     * v1–v3; SourcesSpec pins the pinned-scan-survives-GC guarantee and
     * the loud expiry contract.
     */
-  private def q256(s: SparkSession, d: String): DataFrame = {
-    ensureGraftCatalog(s)
+  private def q256(s: SparkSession, d: String): DataFrame = onGraftCatalog(s) { (s, _) =>
     Tables.events(s, d)
       .select(col("event_id"), col("user_id"), col("value"),
         when(col("event_id") % 2 === 0, "even").otherwise("odd").as("half"))
       .createOrReplaceTempView("q256_src")
     s.sql("CREATE NAMESPACE IF NOT EXISTS graft.db")
-    s.sql("DROP TABLE IF EXISTS graft.db.events_tt")
     s.sql("""CREATE TABLE graft.db.events_tt
             |  (event_id BIGINT, user_id BIGINT, value DOUBLE, half STRING)
             |  PARTITIONED BY (half)""".stripMargin) // version 1: empty
@@ -650,13 +639,11 @@ object SourceQueries {
     * The oracle recomputes the surviving aggregate from the source
     * parquet with the negated predicate.
     */
-  private def q257(s: SparkSession, d: String): DataFrame = {
-    ensureGraftCatalog(s)
+  private def q257(s: SparkSession, d: String): DataFrame = onGraftCatalog(s) { (s, _) =>
     Tables.events(s, d)
       .select(col("event_id"), col("user_id"), col("value"), col("event_type"))
       .createOrReplaceTempView("q257_src")
     s.sql("CREATE NAMESPACE IF NOT EXISTS graft.db")
-    s.sql("DROP TABLE IF EXISTS graft.db.events_rtbf")
     s.sql("""CREATE TABLE graft.db.events_rtbf
             |  (event_id BIGINT, user_id BIGINT, value DOUBLE, event_type STRING)
             |  PARTITIONED BY (event_type)""".stripMargin)
@@ -731,14 +718,13 @@ object SourceQueries {
     * the equivalent predicates. SourcesSpec pins the raw changelog's
     * attribution (COW + DV deletes) and the compact-is-silent contract.
     */
-  private def q259(s: SparkSession, d: String): DataFrame = {
-    ensureGraftCatalog(s)
+  private def q259(s: SparkSession, d: String): DataFrame =
+      onGraftCatalog(s, graft.sources.GraftStore.DeleteModeConf -> "copy-on-write") { (s, wh) =>
     Tables.events(s, d)
       .select(col("event_id"), col("user_id"), col("value"),
         when(col("event_id") % 2 === 0, "even").otherwise("odd").as("half"))
       .createOrReplaceTempView("q259_src")
     s.sql("CREATE NAMESPACE IF NOT EXISTS graft.db")
-    s.sql("DROP TABLE IF EXISTS graft.db.events_cdc")
     s.sql("""CREATE TABLE graft.db.events_cdc
             |  (event_id BIGINT, user_id BIGINT, value DOUBLE, half STRING)
             |  PARTITIONED BY (half)""".stripMargin) // version 1: empty
@@ -748,15 +734,12 @@ object SourceQueries {
     s.sql("""INSERT INTO graft.db.events_cdc
             |SELECT /*+ REPARTITION(2) */ event_id, user_id, value, half
             |FROM q259_src WHERE half = 'odd'""".stripMargin) // version 3
-    // v4: COW delete, PINNED (the session default is auto, which would
-    // bind DVs at this churn — the query's point is the COW rewrite's
-    // same-version pair noise and its relational cancellation)
-    val prevCdcMode = s.conf.getOption(graft.sources.GraftStore.DeleteModeConf)
-    s.conf.set(graft.sources.GraftStore.DeleteModeConf, "copy-on-write")
-    try s.sql("DELETE FROM graft.db.events_cdc WHERE user_id % 7 = 3")
-    finally prevCdcMode.fold(s.conf.unset(graft.sources.GraftStore.DeleteModeConf))(
-      s.conf.set(graft.sources.GraftStore.DeleteModeConf, _))
-    val path = s.conf.get("spark.sql.catalog.graft.warehouse") + "/db/events_cdc"
+    // v4: COW delete, PINNED by this query's conf (the session default is
+    // auto, which would bind DVs at this churn — the query's point is the
+    // COW rewrite's same-version pair noise and its relational
+    // cancellation)
+    s.sql("DELETE FROM graft.db.events_cdc WHERE user_id % 7 = 3")
+    val path = wh + "/db/events_cdc"
     graft.sources.GraftMaintenance.compact(path) // v5 (emits no changes)
     val cur = graft.sources.GraftMaintenance.currentVersion(path).get
     graft.sources.GraftCDC.netChanges(s, path, 2L, Some(cur))
@@ -802,15 +785,14 @@ object SourceQueries {
     * All maintained measures are integral, so the incremental totals
     * are EXACTLY the oracle's recomputation (no float-order drift).
     */
-  private def q260(s: SparkSession, d: String): DataFrame = {
-    ensureGraftCatalog(s)
+  private def q260(s: SparkSession, d: String): DataFrame =
+      onGraftCatalog(s, graft.sources.GraftStore.DeleteModeConf -> "copy-on-write",
+        graft.sources.GraftStore.UpdateModeConf -> "merge-on-read") { (s, wh) =>
     Tables.events(s, d)
       .select(col("event_id"), col("user_id"), col("value"),
         when(col("event_id") % 2 === 0, "even").otherwise("odd").as("half"))
       .createOrReplaceTempView("q260_src")
     s.sql("CREATE NAMESPACE IF NOT EXISTS graft.db")
-    s.sql("DROP TABLE IF EXISTS graft.db.events_ivm")
-    s.sql("DROP TABLE IF EXISTS graft.db.events_ivm_view")
     s.sql("""CREATE TABLE graft.db.events_ivm
             |  (event_id BIGINT, user_id BIGINT, value DOUBLE, half STRING)
             |  PARTITIONED BY (half)""".stripMargin) // version 1: empty
@@ -823,25 +805,18 @@ object SourceQueries {
     s.sql("""INSERT INTO graft.db.events_ivm_view
             |SELECT half, count(*), sum(user_id), sum(event_id)
             |FROM graft.db.events_ivm GROUP BY half""".stripMargin)
-    val basePath = s.conf.get("spark.sql.catalog.graft.warehouse") + "/db/events_ivm"
+    val basePath = wh + "/db/events_ivm"
     val v0 = graft.sources.GraftMaintenance.currentVersion(basePath).get
     // the mixed DML batch the view must absorb incrementally
     s.sql("""INSERT INTO graft.db.events_ivm
             |SELECT /*+ REPARTITION(2) */ event_id, user_id, value, half
             |FROM q260_src WHERE event_id % 3 = 0""".stripMargin) // v3: append
-    // v4: COW delete, PINNED (the documented lifecycle is append + COW
-    // + MOR; the auto default would bind DVs at this churn)
-    val prevIvmMode = s.conf.getOption(graft.sources.GraftStore.DeleteModeConf)
-    s.conf.set(graft.sources.GraftStore.DeleteModeConf, "copy-on-write")
-    try s.sql("DELETE FROM graft.db.events_ivm WHERE user_id % 11 = 5")
-    finally prevIvmMode.fold(s.conf.unset(graft.sources.GraftStore.DeleteModeConf))(
-      s.conf.set(graft.sources.GraftStore.DeleteModeConf, _))
-    val prevMode = s.conf.getOption(graft.sources.GraftStore.UpdateModeConf)
-    s.conf.set(graft.sources.GraftStore.UpdateModeConf, "merge-on-read")
-    try s.sql("""UPDATE graft.db.events_ivm SET user_id = user_id + 1000000
-                |WHERE user_id % 13 = 2""".stripMargin) // v5: MOR (DV + reinsert)
-    finally prevMode.fold(s.conf.unset(graft.sources.GraftStore.UpdateModeConf))(
-      s.conf.set(graft.sources.GraftStore.UpdateModeConf, _))
+    // v4: COW delete, v5: MOR update, both PINNED by this query's conf
+    // (the documented lifecycle is append + COW + MOR; the auto default
+    // would bind DVs at this churn)
+    s.sql("DELETE FROM graft.db.events_ivm WHERE user_id % 11 = 5")
+    s.sql("""UPDATE graft.db.events_ivm SET user_id = user_id + 1000000
+            |WHERE user_id % 13 = 2""".stripMargin) // v5: MOR (DV + reinsert)
     // refresh from the changelog alone, addressed in pure SQL
     val changelog = s.sql(
       s"SELECT * FROM graft.db.events_ivm.changes WHERE _commit_version > $v0")
@@ -877,15 +852,14 @@ object SourceQueries {
     * view must equal the oracle's recomputation; StreamingSpec pins
     * the replay and crash-window exactly-once cases directly.
     */
-  private def q261(s: SparkSession, d: String): DataFrame = {
-    ensureGraftCatalog(s)
+  private def q261(s: SparkSession, d: String): DataFrame =
+      onGraftCatalog(s, graft.sources.GraftStore.DeleteModeConf -> "copy-on-write",
+        graft.sources.GraftStore.UpdateModeConf -> "merge-on-read") { (s, wh) =>
     Tables.events(s, d)
       .select(col("event_id"), col("user_id"), col("value"),
         when(col("event_id") % 2 === 0, "even").otherwise("odd").as("half"))
       .createOrReplaceTempView("q261_src")
     s.sql("CREATE NAMESPACE IF NOT EXISTS graft.db")
-    s.sql("DROP TABLE IF EXISTS graft.db.events_sivm")
-    s.sql("DROP TABLE IF EXISTS graft.db.events_sivm_view")
     s.sql("""CREATE TABLE graft.db.events_sivm
             |  (event_id BIGINT, user_id BIGINT, value DOUBLE, half STRING)
             |  PARTITIONED BY (half)""".stripMargin) // version 1: empty
@@ -897,7 +871,6 @@ object SourceQueries {
     s.sql("""INSERT INTO graft.db.events_sivm_view
             |SELECT half, count(*), sum(user_id), sum(event_id)
             |FROM graft.db.events_sivm GROUP BY half""".stripMargin)
-    val wh = s.conf.get("spark.sql.catalog.graft.warehouse")
     val basePath = s"$wh/db/events_sivm"
     val viewPath = s"$wh/db/events_sivm_view"
     // the one-time binding: "this view reflects the base AS OF v2"
@@ -916,19 +889,11 @@ object SourceQueries {
             |FROM q261_src WHERE event_id % 3 = 0""".stripMargin)
     refreshOnce()
     // micro-batch 2: COW delete (pinned) — RESTART from the checkpoint
-    val prevMode = s.conf.getOption(graft.sources.GraftStore.DeleteModeConf)
-    s.conf.set(graft.sources.GraftStore.DeleteModeConf, "copy-on-write")
-    try s.sql("DELETE FROM graft.db.events_sivm WHERE user_id % 11 = 5")
-    finally prevMode.fold(s.conf.unset(graft.sources.GraftStore.DeleteModeConf))(
-      s.conf.set(graft.sources.GraftStore.DeleteModeConf, _))
+    s.sql("DELETE FROM graft.db.events_sivm WHERE user_id % 11 = 5")
     refreshOnce()
-    // micro-batch 3: MOR update — RESTART again
-    val prevUpd = s.conf.getOption(graft.sources.GraftStore.UpdateModeConf)
-    s.conf.set(graft.sources.GraftStore.UpdateModeConf, "merge-on-read")
-    try s.sql("""UPDATE graft.db.events_sivm SET user_id = user_id + 1000000
-                |WHERE user_id % 13 = 2""".stripMargin)
-    finally prevUpd.fold(s.conf.unset(graft.sources.GraftStore.UpdateModeConf))(
-      s.conf.set(graft.sources.GraftStore.UpdateModeConf, _))
+    // micro-batch 3: MOR update (pinned) — RESTART again
+    s.sql("""UPDATE graft.db.events_sivm SET user_id = user_id + 1000000
+            |WHERE user_id % 13 = 2""".stripMargin)
     refreshOnce()
     s.sql("""SELECT half, n, sum_users, sum_events
             |FROM graft.db.events_sivm_view ORDER BY half""".stripMargin)
@@ -960,15 +925,13 @@ object SourceQueries {
     * refresh; the DuckDB oracle recomputes the final state from
     * scratch.
     */
-  private def q262(s: SparkSession, d: String): DataFrame = {
-    ensureGraftCatalog(s)
+  private def q262(s: SparkSession, d: String): DataFrame =
+      onGraftCatalog(s, graft.sources.GraftStore.UpdateModeConf -> "merge-on-read") { (s, wh) =>
     Tables.events(s, d)
       .select(col("event_id"), col("user_id"),
         when(col("event_id") % 2 === 0, "even").otherwise("odd").as("half"))
       .createOrReplaceTempView("q262_src")
     s.sql("CREATE NAMESPACE IF NOT EXISTS graft.db")
-    s.sql("DROP TABLE IF EXISTS graft.db.events_xivm")
-    s.sql("DROP TABLE IF EXISTS graft.db.events_xivm_view")
     s.sql("""CREATE TABLE graft.db.events_xivm
             |  (event_id BIGINT, user_id BIGINT, half STRING)
             |  PARTITIONED BY (half)""".stripMargin) // version 1: empty
@@ -981,7 +944,7 @@ object SourceQueries {
     s.sql("""INSERT INTO graft.db.events_xivm_view
             |SELECT half, count(*), sum(user_id), min(event_id), max(event_id)
             |FROM graft.db.events_xivm GROUP BY half""".stripMargin)
-    val basePath = s.conf.get("spark.sql.catalog.graft.warehouse") + "/db/events_xivm"
+    val basePath = wh + "/db/events_xivm"
     val v0 = graft.sources.GraftMaintenance.currentVersion(basePath).get
     // the max-killing cut, fixed from the PRE-APPEND snapshot (the
     // oracle reproduces it as a scalar subquery over the same rows)
@@ -993,12 +956,8 @@ object SourceQueries {
     // v4: DELETE the top band under the auto DML default — both groups
     // lose their current max; the refresh must find the runner-ups
     s.sql(s"DELETE FROM graft.db.events_xivm WHERE event_id > $cut")
-    val prevMode = s.conf.getOption(graft.sources.GraftStore.UpdateModeConf)
-    s.conf.set(graft.sources.GraftStore.UpdateModeConf, "merge-on-read")
-    try s.sql("""UPDATE graft.db.events_xivm SET user_id = user_id + 1000000
-                |WHERE user_id % 13 = 2""".stripMargin) // v5: MOR (DV + reinsert)
-    finally prevMode.fold(s.conf.unset(graft.sources.GraftStore.UpdateModeConf))(
-      s.conf.set(graft.sources.GraftStore.UpdateModeConf, _))
+    s.sql("""UPDATE graft.db.events_xivm SET user_id = user_id + 1000000
+            |WHERE user_id % 13 = 2""".stripMargin) // v5: MOR (DV + reinsert), pinned
     val changelog = s.sql(
       s"SELECT * FROM graft.db.events_xivm.changes WHERE _commit_version > $v0")
     graft.sources.GraftIVM.refreshAggregateTouchedGroups(s, changelog,

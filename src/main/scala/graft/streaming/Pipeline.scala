@@ -1,16 +1,14 @@
 package graft.streaming
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
-import org.apache.spark.sql.types._
+import org.apache.spark.sql.types.StructType
 
 import graft.enrich.Features
-import graft.util.Det
+import graft.util.{Det, TempDirs}
 
 /** The hot path (SURVEY §3.1) as Structured Streaming: micro-batch source →
   * row-local enrichment → foreachBatch{keyed upsert + batch-local anomaly} +
@@ -33,66 +31,31 @@ import graft.util.Det
   */
 object Pipeline {
 
-  /** Throwaway streaming checkpoint dirs prefer tmpfs (/dev/shm):
-    * checkpoint commit logs are rename/sync-heavy, so host disk-latency
-    * spikes otherwise dominate micro-batch cost and make bench numbers
-    * hostage to IO weather. Durability is irrelevant for these — a
-    * production deployment points checkpointLocation at HDFS/S3; the
-    * checkpoint-recovery spec (StreamingSpec) still uses a real on-disk
-    * location explicitly.
-    */
-  def checkpointDir(prefix: String): String = {
-    val shm = java.nio.file.Paths.get("/dev/shm")
-    (if (Files.isDirectory(shm)) Files.createTempDirectory(shm, prefix)
-     else Files.createTempDirectory(prefix)).toString
-  }
-
-  /** Remove a throwaway checkpoint after the query stops (tmpfs is RAM —
-    * leftovers from repeated runs would otherwise accumulate there).
-    */
-  def dropCheckpoint(path: String): Unit = {
-    val p = java.nio.file.Paths.get(path)
-    if (Files.exists(p)) {
-      Files.walk(p).sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-        .forEach(f => Files.deleteIfExists(f))
-    }
-  }
-
-  /** Run `body` with `spark.sql.streaming.noDataMicroBatches.enabled`
-    * scoped to `enabled`, restoring the previous value after (r17, guide
-    * §2.4 — remove work outright). After any data batch that advances the
-    * watermark, Structured Streaming runs an extra NO-DATA micro-batch so
-    * stateful operators can evict state and emit eviction-driven results.
-    * For queries whose OUTPUT never depends on eviction — inner
-    * stream-stream joins (matches emit during data batches; eviction only
-    * trims provably-unmatchable state) and watermarked dedup whose
-    * redeliveries all arrive inside the delay (first occurrence always
-    * emits; longer retention can only keep suppressing) — those batches
-    * are pure fixed cost: at sf0.1 they were ~35-40% of q69's and q101's
-    * micro-batch count for byte-identical output (OPTIMIZATION_r17.md).
-    * Queries whose append-mode EMISSION is the eviction (q146 outer join,
-    * q214/q229 closed-window emits) must keep them (or replace them with
-    * an explicit quiescence feed — q146's two-sentinel close).
-    */
-  def withNoDataBatches[T](spark: SparkSession, enabled: Boolean)(body: => T): T = {
-    val key = "spark.sql.streaming.noDataMicroBatches.enabled"
-    val prev = spark.conf.get(key)
-    spark.conf.set(key, enabled.toString)
-    try body finally spark.conf.set(key, prev)
-  }
-
-  /** Run `body` with `spark.sql.shuffle.partitions` scoped to `n`,
-    * restoring the previous value after. Stateful streaming queries
+  /** Shuffle width for stateful streaming queries. Stateful operators
     * instantiate one state store per shuffle partition per batch; with
     * ~150 distinct keys, 32 partitions is pure fixed overhead — 8 halves
     * the per-batch cost without touching results (state partitioning
     * never affects content, only layout).
     */
-  def withShufflePartitions[T](spark: SparkSession, n: Int)(body: => T): T = {
-    val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", n.toString)
-    try body finally spark.conf.set("spark.sql.shuffle.partitions", prev)
-  }
+  val StateWidth: (String, String) = "spark.sql.shuffle.partitions" -> "8"
+
+  /** No-data micro-batches off (r17, guide §2.4 — remove work outright).
+    * After any data batch that advances the watermark, Structured
+    * Streaming runs an extra NO-DATA micro-batch so stateful operators can
+    * evict state and emit eviction-driven results. For queries whose
+    * OUTPUT never depends on eviction — inner stream-stream joins (matches
+    * emit during data batches; eviction only trims provably-unmatchable
+    * state) and watermarked dedup whose redeliveries all arrive inside
+    * the delay (first occurrence always emits; longer retention can only
+    * keep suppressing) — those batches are pure fixed cost: at sf0.1 they
+    * were ~35-40% of q69's and q101's micro-batch count for
+    * byte-identical output (OPTIMIZATION_r17.md). Queries whose
+    * append-mode EMISSION is the eviction (q146 outer join, q214/q229
+    * closed-window emits) must keep them (or replace them with an
+    * explicit quiescence feed — q146's two-sentinel close).
+    */
+  val NoDataBatchesOff: (String, String) =
+    "spark.sql.streaming.noDataMicroBatches.enabled" -> "false"
 
   /** A collected event row for MemoryStream feeding (ts as floor-epoch
     * seconds — the reference serializes timestamps as strings and reparses,
@@ -199,13 +162,14 @@ object Pipeline {
     // ONE task → one file per bucket dir (the next probe's file list
     // stays ∝ buckets, not ∝ batches) while buckets write in parallel —
     // the earlier coalesce(1) kept the one-file invariant but serialized
-    // the whole merge (window + write) into a single thread per batch
-    val prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try
-      merged.write.mode("overwrite")
-        .partitionBy("bkt").parquet(dir)
-    finally spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+    // the whole merge (window + write) into a single thread per batch.
+    // The mode is a writer option, so it holds whichever session `merged`
+    // belongs to. An uncommitted store is written STATIC: only a static
+    // overwrite leaves the store-level _SUCCESS marker the probe above
+    // requires (a dynamic one commits the bucket dirs alone).
+    merged.write.mode("overwrite")
+      .option("partitionOverwriteMode", if (committed) "dynamic" else "static")
+      .partitionBy("bkt").parquet(dir)
   }
 
   /** Batch-local Z-score anomalies (ST4): mean/std of THIS micro-batch
@@ -319,10 +283,9 @@ object Pipeline {
       sinkName: String)(build: Dataset[StreamEvent] => DataFrame)(
       foreach: Option[(DataFrame, Long) => Unit] = None): DataFrame = {
     import spark.implicits._
-    spark.catalog.dropTempView(sinkName)
     val stream = MemoryStream[StreamEvent](spark)
     val transformed = build(stream.toDS())
-    val ckpt = checkpointDir(s"ckpt_$sinkName")
+    val ckpt = TempDirs.create(s"ckpt_$sinkName")
     val query: StreamingQuery = foreach match {
       case Some(fn) =>
         transformed.writeStream.outputMode("update")
@@ -340,44 +303,22 @@ object Pipeline {
     }
     query.stop()
     query.awaitTermination()
-    dropCheckpoint(ckpt)
+    TempDirs.delete(ckpt)
     if (foreach.isEmpty) spark.table(sinkName) else spark.emptyDataFrame
   }
 
-  /** Streaming schema for the file-source path (ts read as raw ns long —
-    * see Tables.events).
-    */
-  val eventsFileSchema: StructType = StructType(Seq(
-    StructField("event_id", LongType),
-    StructField("ts", LongType),
-    StructField("user_id", LongType),
-    StructField("event_type", StringType),
-    StructField("value", DoubleType),
-    StructField("props", StringType)))
-
   /** File-source streaming read of the events table (S8/ST2: the Kinesis
     * consumer as `readStream`; `latest`/`TRIM_HORIZON` ↔ file-source
-    * catch-up semantics).
+    * catch-up semantics). A user schema must agree with the reader's
+    * native representation: Spark 4.1 reads parquet TIMESTAMP(NANOS) as
+    * TIMESTAMP_NTZ, and declaring LONG over that read would silently
+    * reinterpret the internal MICROS value as the long, shrinking every
+    * timestamp 1000× (caught by the q60 oracle as a collapsed window
+    * range).
     */
-  private val tsProbe =
-    scala.collection.concurrent.TrieMap.empty[String, Boolean]
-
   def eventsStream(spark: SparkSession, sfDir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    // Probe the BATCH reader's native type for ts and declare the matching
-    // stream schema: pre-4.1 honors nanosAsLong (raw nano long); 4.1+
-    // ignores the legacy conf and reads TIMESTAMP(NANOS) as TIMESTAMP_NTZ.
-    // A user schema must agree with the reader's native representation —
-    // declaring LONG over an NTZ read silently reinterprets the internal
-    // MICROS value as the long, shrinking every timestamp 1000× (caught by
-    // the q60 oracle as a collapsed window range). Memoized per path —
-    // the probe is a file listing + footer read, paid once, not per
-    // streaming query.
-    val tsIsLong = tsProbe.getOrElseUpdate(sfDir,
-      graft.Tables.table(spark, sfDir, "events")
-        .schema("ts").dataType == LongType)
-    val sch = StructType(eventsFileSchema.map(f =>
-      if (f.name == "ts" && !tsIsLong) f.copy(dataType = TimestampNTZType) else f))
+    val sch = StructType.fromDDL("event_id BIGINT, ts TIMESTAMP_NTZ, user_id BIGINT, " +
+      "event_type STRING, value DOUBLE, props STRING")
     // The events table may be a single file (driver testdata) or a
     // Spark-written DIRECTORY of part files (ScaleGen dirs, production
     // layouts). pathGlobFilter matches LEAF file names, so globbing
@@ -390,7 +331,6 @@ object Pipeline {
     val raw =
       if (isDir) base.parquet(evPath.toString)
       else base.option("pathGlobFilter", "events.parquet").parquet(sfDir)
-    if (tsIsLong) raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))
-    else raw.withColumn("ts", col("ts").cast("timestamp"))
+    raw.withColumn("ts", col("ts").cast("timestamp"))
   }
 }

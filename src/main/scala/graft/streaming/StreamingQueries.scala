@@ -5,9 +5,11 @@ import java.nio.file.Files
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Sessions
 
 import graft.{QueryDef, Tables}
-import graft.util.Det
+import graft.util.{Det, TempDirs}
+import Pipeline.{NoDataBatchesOff, StateWidth}
 
 /** Streaming operator family. Each query RUNS a genuine Structured
   * Streaming job (file source or MemoryStream micro-batches) and returns
@@ -15,7 +17,9 @@ import graft.util.Det
   * and batch slicing is pinned — is deterministic and hash-comparable
   * against a batch SQL oracle. This is the strongest correctness statement
   * available for streaming: stream result ≡ batch result over the same
-  * (bounded) input.
+  * (bounded) input. Each body runs on its own session clone
+  * ([[Sessions.isolated]]), so its sink names, state width and trigger
+  * conf stay private to that execution.
   */
 object StreamingQueries {
 
@@ -24,22 +28,19 @@ object StreamingQueries {
     * windows + watermark as engine hygiene) over the file-source stream.
     * Complete output mode materializes every window for the bounded input.
     */
-  private def q60(s: SparkSession, d: String): DataFrame = {
+  private def q60(s: SparkSession, d: String): DataFrame = Sessions.isolated(s, StateWidth) { s =>
     val sinkName = "graft_q60_sink"
-    s.catalog.dropTempView(sinkName)
     val agg = Pipeline.eventsStream(s, d)
       .withWatermark("ts", "10 minutes")
       .groupBy(window(col("ts"), "5 minutes"), col("event_type"))
       .agg(count(lit(1)).as("n"), Det.dsum(col("value")).as("sum_v"))
-    val ckpt = Pipeline.checkpointDir("ckpt_q60")
-    Pipeline.withShufflePartitions(s, 8) {
-      val q = agg.writeStream.outputMode("complete")
-        .option("checkpointLocation", ckpt)
-        .format("memory").queryName(sinkName).start()
-      q.processAllAvailable()
-      q.stop(); q.awaitTermination()
-    }
-    Pipeline.dropCheckpoint(ckpt)
+    val ckpt = TempDirs.create("ckpt_q60")
+    val q = agg.writeStream.outputMode("complete")
+      .option("checkpointLocation", ckpt)
+      .format("memory").queryName(sinkName).start()
+    q.processAllAvailable()
+    q.stop(); q.awaitTermination()
+    TempDirs.delete(ckpt)
     s.table(sinkName)
       .select(date_format(col("window.start"), "yyyy-MM-dd HH:mm:ss").as("win_start"),
         col("event_type"), col("n"), col("sum_v"))
@@ -57,14 +58,12 @@ object StreamingQueries {
     * keyed store, last write per user_id wins. Stream-equals-batch oracle:
     * the final store is exactly "latest event per user, enriched".
     */
-  private def q61(s: SparkSession, d: String): DataFrame = {
+  private def q61(s: SparkSession, d: String): DataFrame = Sessions.isolated(s, StateWidth) { s =>
     val eventsSeq = Pipeline.collectEvents(s, d, 1000)
-    val dir = graft.util.TempDirs.create("graft_upsert_")
-    Pipeline.withShufflePartitions(s, 8) {
-      Pipeline.runSliced(s, eventsSeq, 100, "graft_q61_sink")(
-        ds => Pipeline.enrich(ds.toDF()))(
-        Some((batch, _) => Pipeline.upsertBatch(s, batch, dir)))
-    }
+    val dir = TempDirs.create("graft_upsert_")
+    Pipeline.runSliced(s, eventsSeq, 100, "graft_q61_sink")(
+      ds => Pipeline.enrich(ds.toDF()))(
+      Some((batch, _) => Pipeline.upsertBatch(s, batch, dir)))
     s.read.parquet(dir)
       .select("user_id", "event_id", "value", "pop", "time_of_day")
       .orderBy("user_id")
@@ -99,9 +98,9 @@ object StreamingQueries {
     * over a 100 TB backlog — per-batch work stays ∝ files admitted, and
     * the upsert store probe stays ∝ touched buckets (upsertBatch).
     */
-  private def q227(s: SparkSession, d: String): DataFrame = {
+  private def q227(s: SparkSession, d: String): DataFrame = Sessions.isolated(s, StateWidth) { s =>
     import s.implicits._
-    val base = graft.util.TempDirs.create("graft_mft_")
+    val base = TempDirs.create("graft_mft_")
     val srcDir = new java.io.File(base, "src"); srcDir.mkdirs()
     val store = base + "/store"
     val eventsSeq = Pipeline.collectEvents(s, d, 1000)
@@ -127,19 +126,17 @@ object StreamingQueries {
     // the pinned n_batches oracle even though the upsert is idempotent
     // (ADVICE r9).
     val seenBatchIds = java.util.concurrent.ConcurrentHashMap.newKeySet[Long]()
-    Pipeline.withShufflePartitions(s, 8) {
-      val ckpt = Pipeline.checkpointDir("ckpt_q227")
-      val stream = s.readStream.schema(sch)
-        .option("maxFilesPerTrigger", "1").parquet(srcDir.toString)
-      val q = Pipeline.enrich(stream).writeStream
-        .option("checkpointLocation", ckpt)
-        .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-          seenBatchIds.add(batchId)
-          Pipeline.upsertBatch(s, batch.toDF(), store)
-        }.start()
-      q.processAllAvailable(); q.stop(); q.awaitTermination()
-      Pipeline.dropCheckpoint(ckpt)
-    }
+    val ckpt = TempDirs.create("ckpt_q227")
+    val stream = s.readStream.schema(sch)
+      .option("maxFilesPerTrigger", "1").parquet(srcDir.toString)
+    val q = Pipeline.enrich(stream).writeStream
+      .option("checkpointLocation", ckpt)
+      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
+        seenBatchIds.add(batchId)
+        Pipeline.upsertBatch(s, batch.toDF(), store)
+      }.start()
+    q.processAllAvailable(); q.stop(); q.awaitTermination()
+    TempDirs.delete(ckpt)
     s.read.parquet(store)
       .select("user_id", "event_id", "value", "pop", "time_of_day")
       .crossJoin(broadcast(
@@ -174,26 +171,24 @@ object StreamingQueries {
     * answer derived relationally from the append log — the
     * Kappa-architecture reading of an upsert store.
     */
-  private def q251(s: SparkSession, d: String): DataFrame = {
+  private def q251(s: SparkSession, d: String): DataFrame = Sessions.isolated(s, StateWidth) { s =>
     import s.implicits._
     val eventsSeq = Pipeline.collectEvents(s, d, 1000)
-    val store = graft.util.TempDirs.create("graft_ssink_") + "/store"
-    Pipeline.withShufflePartitions(s, 8) {
-      val ckpt = Pipeline.checkpointDir("ckpt_q251")
-      val stream = org.apache.spark.sql.execution.streaming.runtime
-        .MemoryStream[Pipeline.StreamEvent](s)
-      val q = Pipeline.enrich(stream.toDS().toDF()).writeStream
-        .outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .format("graft.sources.GraftStoreProvider")
-        .option("path", store)
-        .start()
-      eventsSeq.grouped(250).foreach { sl =>
-        stream.addData(sl); q.processAllAvailable()
-      }
-      q.stop(); q.awaitTermination()
-      Pipeline.dropCheckpoint(ckpt)
+    val store = TempDirs.create("graft_ssink_") + "/store"
+    val ckpt = TempDirs.create("ckpt_q251")
+    val stream = org.apache.spark.sql.execution.streaming.runtime
+      .MemoryStream[Pipeline.StreamEvent](s)
+    val q = Pipeline.enrich(stream.toDS().toDF()).writeStream
+      .outputMode("append")
+      .option("checkpointLocation", ckpt)
+      .format("graft.sources.GraftStoreProvider")
+      .option("path", store)
+      .start()
+    eventsSeq.grouped(250).foreach { sl =>
+      stream.addData(sl); q.processAllAvailable()
     }
+    q.stop(); q.awaitTermination()
+    TempDirs.delete(ckpt)
     val t = s.read.format("graft.sources.GraftStoreProvider")
       .option("path", store).load()
     val nRows = t.agg(count(lit(1)).as("n_rows"))
@@ -222,13 +217,12 @@ object StreamingQueries {
     * accumulating per-user totals across 4 MemoryStream micro-batches,
     * emitting the as-of count on every row. Stream ≡ batch running count.
     */
-  private def q62(s: SparkSession, d: String): DataFrame = {
+  private def q62(s: SparkSession, d: String): DataFrame = Sessions.isolated(s, StateWidth) { s =>
     import s.implicits._
     val eventsSeq = Pipeline.collectEvents(s, d, 1000)
-    Pipeline.withShufflePartitions(s, 8) {
-      Pipeline.runSliced(s, eventsSeq, 250, "graft_q62_sink")(
-        ds => Pipeline.authorCounts(ds).toDF())(None)
-    }.orderBy("event_id")
+    Pipeline.runSliced(s, eventsSeq, 250, "graft_q62_sink")(
+      ds => Pipeline.authorCounts(ds).toDF())(None)
+      .orderBy("event_id")
   }
 
   private val q62Sql =
@@ -248,9 +242,9 @@ object StreamingQueries {
     * dashboard aggregate current — O(batch) work per refresh instead of
     * O(history).
     */
-  private def q108(s: SparkSession, d: String): DataFrame = {
+  private def q108(s: SparkSession, d: String): DataFrame = Sessions.isolated(s, StateWidth) { s =>
     val eventsSeq = Pipeline.collectEvents(s, d, 1000)
-    val dir = graft.util.TempDirs.create("graft_incr_agg_")
+    val dir = TempDirs.create("graft_incr_agg_")
     def mergeBatch(batch: DataFrame, @annotation.unused id: Long): Unit = {
       val delta = batch.groupBy("event_type")
         .agg(count(lit(1)).as("n"),
@@ -270,10 +264,8 @@ object StreamingQueries {
     }
     // 3 refresh cycles prove the cross-batch merge; each cycle pays a
     // fixed read-merge-write cost, so slice count is the cost knob
-    Pipeline.withShufflePartitions(s, 8) {
-      Pipeline.runSliced(s, eventsSeq, 334, "graft_q108_sink")(_.toDF())(
-        Some(mergeBatch))
-    }
+    Pipeline.runSliced(s, eventsSeq, 334, "graft_q108_sink")(_.toDF())(
+      Some(mergeBatch))
     s.read.parquet(dir)
       .select(col("event_type"), col("n"),
         col("sum_v_dec").cast("double").as("sum_v"))
@@ -299,9 +291,9 @@ object StreamingQueries {
     * is how dimension history stays current: O(batch + open rows) work
     * per refresh, never O(history).
     */
-  private def q201(s: SparkSession, d: String): DataFrame = {
+  private def q201(s: SparkSession, d: String): DataFrame = Sessions.isolated(s, StateWidth) { s =>
     val eventsSeq = Pipeline.collectEvents(s, d, 1000)
-    val dir = graft.util.TempDirs.create("graft_scd2_stream_")
+    val dir = TempDirs.create("graft_scd2_stream_")
     val histSchema = org.apache.spark.sql.types.StructType.fromDDL(
       "user_id BIGINT, version BIGINT, state STRING, " +
         "valid_from_sec BIGINT, valid_to_sec BIGINT, is_current BIGINT")
@@ -349,10 +341,8 @@ object StreamingQueries {
       fs.delete(new org.apache.hadoop.fs.Path(dir), true)
       fs.rename(new org.apache.hadoop.fs.Path(tmp), new org.apache.hadoop.fs.Path(dir))
     }
-    Pipeline.withShufflePartitions(s, 8) {
-      Pipeline.runSliced(s, eventsSeq, 250, "graft_q201_sink")(_.toDF())(
-        Some(mergeBatch))
-    }
+    Pipeline.runSliced(s, eventsSeq, 250, "graft_q201_sink")(_.toDF())(
+      Some(mergeBatch))
     s.read.parquet(dir)
       .select("user_id", "version", "state", "valid_from_sec",
         "valid_to_sec", "is_current")
@@ -381,24 +371,16 @@ object StreamingQueries {
     * named state + RocksDB store): same semantics, same oracle — proving
     * the engine's custom-state operators port to the successor API
     * unchanged. The RocksDB provider is required by transformWithState
-    * and scoped to this query.
+    * and set on this query's session clone.
     */
-  private def q102(s: SparkSession, d: String): DataFrame = {
+  private def q102(s: SparkSession, d: String): DataFrame = Sessions.isolated(s, StateWidth,
+      "spark.sql.streaming.stateStore.providerClass" ->
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider") { s =>
     import s.implicits._
     val eventsSeq = Pipeline.collectEvents(s, d, 1000)
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = s.conf.getOption(key)
-    s.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      Pipeline.withShufflePartitions(s, 8) {
-        Pipeline.runSliced(s, eventsSeq, 250, "graft_q102_sink")(
-          ds => Pipeline.authorCountsTws(ds).toDF())(None)
-      }.orderBy("event_id")
-    } finally prev match {
-      case Some(v) => s.conf.set(key, v)
-      case None => s.conf.unset(key)
-    }
+    Pipeline.runSliced(s, eventsSeq, 250, "graft_q102_sink")(
+      ds => Pipeline.authorCountsTws(ds).toDF())(None)
+      .orderBy("event_id")
   }
 
   /** Batch-local anomaly detection (ST4/M2): Z-scores computed per
@@ -406,14 +388,12 @@ object StreamingQueries {
     * streaming aggregate; the stats reset every batch exactly like the
     * reference's pandas-per-poll (S/kinesis_processing_2.py:104-119).
     */
-  private def q63(s: SparkSession, d: String): DataFrame = {
+  private def q63(s: SparkSession, d: String): DataFrame = Sessions.isolated(s, StateWidth) { s =>
     val eventsSeq = Pipeline.collectEvents(s, d, 1000)
-    val dir = graft.util.TempDirs.create("graft_anomaly_")
-    Pipeline.withShufflePartitions(s, 8) {
-      Pipeline.runSliced(s, eventsSeq, 250, "graft_q63_sink")(_.toDF())(
-        Some((batch, id) =>
-          Pipeline.batchAnomalies(batch, id).write.mode("append").parquet(dir)))
-    }
+    val dir = TempDirs.create("graft_anomaly_")
+    Pipeline.runSliced(s, eventsSeq, 250, "graft_q63_sink")(_.toDF())(
+      Some((batch, id) =>
+        Pipeline.batchAnomalies(batch, id).write.mode("append").parquet(dir)))
     s.read.parquet(dir)
       .select("batch_id", "event_id", "user_id", "value", "z")
       .orderBy("event_id")
@@ -443,26 +423,23 @@ object StreamingQueries {
     * produces). Every event_id must be emitted exactly once, so the final
     * sink equals plain DISTINCT over the bounded input.
     */
-  private def q64(s: SparkSession, d: String): DataFrame = {
+  private def q64(s: SparkSession, d: String): DataFrame = Sessions.isolated(s, StateWidth) { s =>
     val eventsSeq = Pipeline.collectEvents(s, d, 300)
     // overlapping slices: [0,150), [100,250), [200,300) — 50% resend
     val slices = (0 until 300 by 100).map(i => eventsSeq.slice(i, i + 150))
       .filter(_.nonEmpty)
     import s.implicits._
-    s.catalog.dropTempView("graft_q64_sink")
     val stream = org.apache.spark.sql.execution.streaming.runtime
       .MemoryStream[Pipeline.StreamEvent](s)
-    val ckpt = Pipeline.checkpointDir("ckpt_q64")
-    Pipeline.withShufflePartitions(s, 8) {
-      val q = stream.toDS().dropDuplicates("event_id")
-        .select(col("event_id"), col("user_id"), col("value"))
-        .writeStream.outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .format("memory").queryName("graft_q64_sink").start()
-      slices.foreach { sl => stream.addData(sl); q.processAllAvailable() }
-      q.stop(); q.awaitTermination()
-    }
-    Pipeline.dropCheckpoint(ckpt)
+    val ckpt = TempDirs.create("ckpt_q64")
+    val q = stream.toDS().dropDuplicates("event_id")
+      .select(col("event_id"), col("user_id"), col("value"))
+      .writeStream.outputMode("append")
+      .option("checkpointLocation", ckpt)
+      .format("memory").queryName("graft_q64_sink").start()
+    slices.foreach { sl => stream.addData(sl); q.processAllAvailable() }
+    q.stop(); q.awaitTermination()
+    TempDirs.delete(ckpt)
     s.table("graft_q64_sink").orderBy("event_id")
   }
 
@@ -480,15 +457,15 @@ object StreamingQueries {
     * oracle applies; at-least-once delivery outside the watermark is the
     * documented (and inherent) trade.
     */
-  private def q101(s: SparkSession, d: String): DataFrame = {
+  private def q101(s: SparkSession, d: String): DataFrame =
+      Sessions.isolated(s, StateWidth, NoDataBatchesOff) { s =>
     val eventsSeq = Pipeline.collectEvents(s, d, 300)
     val slices = (0 until 300 by 100).map(i => eventsSeq.slice(i, i + 150))
       .filter(_.nonEmpty)
     import s.implicits._
-    s.catalog.dropTempView("graft_q101_sink")
     val stream = org.apache.spark.sql.execution.streaming.runtime
       .MemoryStream[Pipeline.StreamEvent](s)
-    val ckpt = Pipeline.checkpointDir("ckpt_q101")
+    val ckpt = TempDirs.create("ckpt_q101")
     // No-data micro-batches OFF (r17, guide §2.4): dedup emits each key's
     // FIRST occurrence during its data batch; the no-data batches only
     // evict expired keys (3 of the 6 batches, ~0.7 s of a 2.35 s warm run
@@ -500,21 +477,17 @@ object StreamingQueries {
     // outside the watermark is unchanged at scale — eviction still runs,
     // during data batches. Interleaved A/B (sf0.1): median 1.75 → 1.11 s,
     // 5/5 pairs; oracle PASS.
-    Pipeline.withNoDataBatches(s, enabled = false) {
-      Pipeline.withShufflePartitions(s, 8) {
-        val q = stream.toDS()
-          .withColumn("ts", timestamp_seconds(col("ts_sec")))
-          .withWatermark("ts", "1 hour")
-          .dropDuplicatesWithinWatermark("event_id")
-          .select(col("event_id"), col("user_id"), col("value"))
-          .writeStream.outputMode("append")
-          .option("checkpointLocation", ckpt)
-          .format("memory").queryName("graft_q101_sink").start()
-        slices.foreach { sl => stream.addData(sl); q.processAllAvailable() }
-        q.stop(); q.awaitTermination()
-      }
-    }
-    Pipeline.dropCheckpoint(ckpt)
+    val q = stream.toDS()
+      .withColumn("ts", timestamp_seconds(col("ts_sec")))
+      .withWatermark("ts", "1 hour")
+      .dropDuplicatesWithinWatermark("event_id")
+      .select(col("event_id"), col("user_id"), col("value"))
+      .writeStream.outputMode("append")
+      .option("checkpointLocation", ckpt)
+      .format("memory").queryName("graft_q101_sink").start()
+    slices.foreach { sl => stream.addData(sl); q.processAllAvailable() }
+    q.stop(); q.awaitTermination()
+    TempDirs.delete(ckpt)
     s.table("graft_q101_sink").orderBy("event_id")
   }
 
@@ -528,12 +501,10 @@ object StreamingQueries {
     * per-user snapshot (highest event count) must equal the batch gap-flag
     * formulation — lag() + cumulative sum — over the same bounded input.
     */
-  private def q68(s: SparkSession, d: String): DataFrame = {
+  private def q68(s: SparkSession, d: String): DataFrame = Sessions.isolated(s, StateWidth) { s =>
     val eventsSeq = Pipeline.collectEvents(s, d, 1000)
-    val snapshots = Pipeline.withShufflePartitions(s, 8) {
-      Pipeline.runSliced(s, eventsSeq, 250, "graft_q68_sink")(
-        ds => Pipeline.sessionize(ds, 1800L).toDF("user_id", "n_sessions", "n_events"))(None)
-    }
+    val snapshots = Pipeline.runSliced(s, eventsSeq, 250, "graft_q68_sink")(
+      ds => Pipeline.sessionize(ds, 1800L).toDF("user_id", "n_sessions", "n_events"))(None)
     // final snapshot per user: n_events strictly increases, so max(struct)
     // picks the last state deterministically
     snapshots
@@ -566,10 +537,10 @@ object StreamingQueries {
     * oracle's integer-seconds band. Watermarks bound the join state — the
     * piece that makes this viable on an unbounded 100 TB/day stream.
     */
-  private def q69(s: SparkSession, d: String): DataFrame = {
+  private def q69(s: SparkSession, d: String): DataFrame =
+      Sessions.isolated(s, StateWidth, NoDataBatchesOff) { s =>
     import s.implicits._
     val eventsSeq = Pipeline.collectEvents(s, d, 1000)
-    s.catalog.dropTempView("graft_q69_sink")
     val stream = org.apache.spark.sql.execution.streaming.runtime
       .MemoryStream[Pipeline.StreamEvent](s)
     val base = stream.toDS()
@@ -587,7 +558,7 @@ object StreamingQueries {
       col("p_user") === col("c_user") &&
         col("c_ts") >= col("p_ts") - expr("INTERVAL 10 MINUTES") &&
         col("c_ts") < col("p_ts"))
-    val ckpt = Pipeline.checkpointDir("ckpt_q69")
+    val ckpt = TempDirs.create("ckpt_q69")
     // No-data micro-batches OFF (r17, guide §2.4): an INNER stream-stream
     // join emits every match during the data batch that completes it;
     // the watermark-advance no-data batches only evict
@@ -598,16 +569,12 @@ object StreamingQueries {
     // the eviction) replaces them with an explicit two-sentinel close.
     // Interleaved A/B (sf0.1): median 3.58 → 2.24 s, 5/5 pairs; oracle
     // PASS.
-    Pipeline.withNoDataBatches(s, enabled = false) {
-      Pipeline.withShufflePartitions(s, 8) {
-        val q = joined.writeStream.outputMode("append")
-          .option("checkpointLocation", ckpt)
-          .format("memory").queryName("graft_q69_sink").start()
-        eventsSeq.grouped(500).foreach { sl => stream.addData(sl); q.processAllAvailable() }
-        q.stop(); q.awaitTermination()
-      }
-    }
-    Pipeline.dropCheckpoint(ckpt)
+    val q = joined.writeStream.outputMode("append")
+      .option("checkpointLocation", ckpt)
+      .format("memory").queryName("graft_q69_sink").start()
+    eventsSeq.grouped(500).foreach { sl => stream.addData(sl); q.processAllAvailable() }
+    q.stop(); q.awaitTermination()
+    TempDirs.delete(ckpt)
     s.table("graft_q69_sink")
       .select(col("p_user").as("user_id"), col("purchase_id"), col("click_id"))
       .orderBy("purchase_id", "click_id")
@@ -642,7 +609,8 @@ object StreamingQueries {
     * by watermark delay + interval width; the outer side adds no state,
     * only an eviction-time emit.
     */
-  private def q146(s: SparkSession, d: String): DataFrame = {
+  private def q146(s: SparkSession, d: String): DataFrame =
+      Sessions.isolated(s, StateWidth, NoDataBatchesOff) { s =>
     import s.implicits._
     val eventsSeq = Pipeline.collectEvents(s, d, 1000)
     val maxTs = eventsSeq.map(_.ts_sec).max
@@ -661,7 +629,6 @@ object StreamingQueries {
     val sentinels2 = Seq(
       Pipeline.StreamEvent(9999993L, maxTs + 2 * 86400L, -999L, "purchase", 0.0, "{}"),
       Pipeline.StreamEvent(9999994L, maxTs + 2 * 86400L, -999L, "click", 0.0, "{}"))
-    s.catalog.dropTempView("graft_q146_sink")
     val stream = org.apache.spark.sql.execution.streaming.runtime
       .MemoryStream[Pipeline.StreamEvent](s)
     val base = stream.toDS()
@@ -680,7 +647,7 @@ object StreamingQueries {
         col("c_ts") >= col("p_ts") - expr("INTERVAL 10 MINUTES") &&
         col("c_ts") < col("p_ts"),
       "left_outer")
-    val ckpt = Pipeline.checkpointDir("ckpt_q146")
+    val ckpt = TempDirs.create("ckpt_q146")
     // Two-sentinel quiescence instead of no-data micro-batches (r17,
     // guide §2.4): the outer join ran 6 micro-batches — 3 data + 3
     // watermark-advance no-data batches whose only job was evicting state
@@ -691,18 +658,14 @@ object StreamingQueries {
     // by sentinel batch 2 — the watermark after sentinel 1 exceeds every
     // real p_ts + band). Interleaved A/B (sf0.1): median 4.49 → 3.34 s,
     // 5/5 pairs; oracle PASS.
-    Pipeline.withNoDataBatches(s, enabled = false) {
-      Pipeline.withShufflePartitions(s, 8) {
-        val q = joined.writeStream.outputMode("append")
-          .option("checkpointLocation", ckpt)
-          .format("memory").queryName("graft_q146_sink").start()
-        eventsSeq.grouped(500).foreach { sl => stream.addData(sl); q.processAllAvailable() }
-        stream.addData(sentinels); q.processAllAvailable()
-        stream.addData(sentinels2); q.processAllAvailable()
-        q.stop(); q.awaitTermination()
-      }
-    }
-    Pipeline.dropCheckpoint(ckpt)
+    val q = joined.writeStream.outputMode("append")
+      .option("checkpointLocation", ckpt)
+      .format("memory").queryName("graft_q146_sink").start()
+    eventsSeq.grouped(500).foreach { sl => stream.addData(sl); q.processAllAvailable() }
+    stream.addData(sentinels); q.processAllAvailable()
+    stream.addData(sentinels2); q.processAllAvailable()
+    q.stop(); q.awaitTermination()
+    TempDirs.delete(ckpt)
     s.table("graft_q146_sink")
       .filter(col("p_user") =!= -999L)
       .select(col("p_user").as("user_id"), col("purchase_id"), col("click_id"))
@@ -730,9 +693,8 @@ object StreamingQueries {
     * reference data without re-reading it per batch. Stream ≡ batch: the
     * final aggregate equals the same join+aggregate run in batch SQL.
     */
-  private def q123(s: SparkSession, d: String): DataFrame = {
+  private def q123(s: SparkSession, d: String): DataFrame = Sessions.isolated(s, StateWidth) { s =>
     val sinkName = "graft_q123_sink"
-    s.catalog.dropTempView(sinkName)
     val dim = Tables.nation(s, d)
       .select(pmod(col("n_nationkey"), lit(5L)).as("mod5"), col("n_name"))
       .groupBy("mod5").agg(min("n_name").as("dim_name"))
@@ -741,15 +703,13 @@ object StreamingQueries {
       .join(broadcast(dim), "mod5")
       .groupBy("dim_name")
       .agg(count(lit(1)).as("n"), Det.dsum(col("value")).as("sum_v"))
-    val ckpt = Pipeline.checkpointDir("ckpt_q123")
-    Pipeline.withShufflePartitions(s, 8) {
-      val q = joined.writeStream.outputMode("complete")
-        .option("checkpointLocation", ckpt)
-        .format("memory").queryName(sinkName).start()
-      q.processAllAvailable()
-      q.stop(); q.awaitTermination()
-    }
-    Pipeline.dropCheckpoint(ckpt)
+    val ckpt = TempDirs.create("ckpt_q123")
+    val q = joined.writeStream.outputMode("complete")
+      .option("checkpointLocation", ckpt)
+      .format("memory").queryName(sinkName).start()
+    q.processAllAvailable()
+    q.stop(); q.awaitTermination()
+    TempDirs.delete(ckpt)
     s.table(sinkName).orderBy("dim_name")
   }
 
@@ -785,30 +745,27 @@ object StreamingQueries {
     * (window × user) counts over the same 400 events, so the top-3 ranks
     * match the all-batch formulation exactly.
     */
-  private def q214(s: SparkSession, d: String): DataFrame = {
+  private def q214(s: SparkSession, d: String): DataFrame = Sessions.isolated(s, StateWidth) { s =>
     import s.implicits._
     val eventsSeq = Pipeline.collectEvents(s, d, 400)
     val sentinel = Pipeline.StreamEvent(-1L,
       eventsSeq.map(_.ts_sec).max + 86400L, -1L, "sentinel", 0.0, "{}")
     val slices = (0 until 400 by 100).map(i => eventsSeq.slice(i, i + 100))
       .filter(_.nonEmpty) :+ Seq(sentinel)
-    s.catalog.dropTempView("graft_q214_sink")
     val stream = org.apache.spark.sql.execution.streaming.runtime
       .MemoryStream[Pipeline.StreamEvent](s)
-    val ckpt = Pipeline.checkpointDir("ckpt_q214")
-    Pipeline.withShufflePartitions(s, 8) {
-      val q = stream.toDS()
-        .withColumn("ts", timestamp_seconds(col("ts_sec")))
-        .withWatermark("ts", "10 minutes")
-        .groupBy(window(col("ts"), "5 minutes"), col("user_id"))
-        .agg(count(lit(1)).as("n"))
-        .writeStream.outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .format("memory").queryName("graft_q214_sink").start()
-      slices.foreach { sl => stream.addData(sl); q.processAllAvailable() }
-      q.stop(); q.awaitTermination()
-    }
-    Pipeline.dropCheckpoint(ckpt)
+    val ckpt = TempDirs.create("ckpt_q214")
+    val q = stream.toDS()
+      .withColumn("ts", timestamp_seconds(col("ts_sec")))
+      .withWatermark("ts", "10 minutes")
+      .groupBy(window(col("ts"), "5 minutes"), col("user_id"))
+      .agg(count(lit(1)).as("n"))
+      .writeStream.outputMode("append")
+      .option("checkpointLocation", ckpt)
+      .format("memory").queryName("graft_q214_sink").start()
+    slices.foreach { sl => stream.addData(sl); q.processAllAvailable() }
+    q.stop(); q.awaitTermination()
+    TempDirs.delete(ckpt)
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("win_start").orderBy(desc("n"), asc("user_id"))
     s.table("graft_q214_sink")
@@ -911,31 +868,28 @@ object StreamingQueries {
     * gap-islands SQL over the same 600 events (session end = last event
     * + 30 min gap, second granularity — the feed carries epoch seconds).
     */
-  private def q229(s: SparkSession, d: String): DataFrame = {
+  private def q229(s: SparkSession, d: String): DataFrame = Sessions.isolated(s, StateWidth) { s =>
     import s.implicits._
     val eventsSeq = Pipeline.collectEvents(s, d, 600)
     val sentinel = Pipeline.StreamEvent(-1L,
       eventsSeq.map(_.ts_sec).max + 30L * 86400L, -1L, "sentinel", 0.0, "{}")
     val slices = (0 until 600 by 150).map(i => eventsSeq.slice(i, i + 150))
       .filter(_.nonEmpty) :+ Seq(sentinel)
-    s.catalog.dropTempView("graft_q229_sink")
     val stream = org.apache.spark.sql.execution.streaming.runtime
       .MemoryStream[Pipeline.StreamEvent](s)
-    val ckpt = Pipeline.checkpointDir("ckpt_q229")
-    Pipeline.withShufflePartitions(s, 8) {
-      val q = stream.toDS()
-        .filter(col("user_id") < 30 || col("user_id") === -1L)
-        .withColumn("ts", timestamp_seconds(col("ts_sec")))
-        .withWatermark("ts", "10 minutes")
-        .groupBy(col("user_id"), session_window(col("ts"), "30 minutes"))
-        .agg(count(lit(1)).as("n_events"))
-        .writeStream.outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .format("memory").queryName("graft_q229_sink").start()
-      slices.foreach { sl => stream.addData(sl); q.processAllAvailable() }
-      q.stop(); q.awaitTermination()
-    }
-    Pipeline.dropCheckpoint(ckpt)
+    val ckpt = TempDirs.create("ckpt_q229")
+    val q = stream.toDS()
+      .filter(col("user_id") < 30 || col("user_id") === -1L)
+      .withColumn("ts", timestamp_seconds(col("ts_sec")))
+      .withWatermark("ts", "10 minutes")
+      .groupBy(col("user_id"), session_window(col("ts"), "30 minutes"))
+      .agg(count(lit(1)).as("n_events"))
+      .writeStream.outputMode("append")
+      .option("checkpointLocation", ckpt)
+      .format("memory").queryName("graft_q229_sink").start()
+    slices.foreach { sl => stream.addData(sl); q.processAllAvailable() }
+    q.stop(); q.awaitTermination()
+    TempDirs.delete(ckpt)
     s.table("graft_q229_sink")
       .filter(col("user_id") >= 0)
       .select(col("user_id"),

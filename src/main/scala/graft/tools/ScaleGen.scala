@@ -50,7 +50,6 @@ object ScaleGen {
       .repartition(32)
       .write.mode("overwrite").parquet(s"$out/embeddings.parquet")
 
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true") // events ts
     if (docsOnly) {
       // corpus-only decade dir: relational tables pass through unchanged
       for (t <- Seq("region", "nation", "customer", "supplier", "part",

@@ -5,8 +5,8 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.streaming.Pipeline
 import graft.streaming.Pipeline.StreamEvent
+import graft.util.TempDirs
 
 /** Operability checks beyond query results: checkpoint-restart recovery
   * (the property that makes a 100 TB streaming job survive executor and
@@ -24,7 +24,7 @@ class ObservabilitySpec extends AnyFunSuite {
     val stream = MemoryStream[StreamEvent](spark)
     val agg = stream.toDF()
       .groupBy("user_id").agg(count(lit(1)).as("n"), sum("value").as("s"))
-    val ckpt = Pipeline.checkpointDir("ckpt_restart_spec")
+    val ckpt = TempDirs.create("ckpt_restart_spec")
 
     // run 1: two users, then stop
     stream.addData(ev(1, 1, 1.0), ev(2, 1, 2.0), ev(3, 2, 4.0))
@@ -44,7 +44,7 @@ class ObservabilitySpec extends AnyFunSuite {
     val got = spark.table("restart_s2").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).sortBy(_._1)
     assert(got.toSeq == Seq((1L, 3L, 11.0), (2L, 1L, 4.0), (3L, 1L, 16.0)))
-    Pipeline.dropCheckpoint(ckpt)
+    TempDirs.delete(ckpt)
     spark.catalog.dropTempView("restart_s1")
     spark.catalog.dropTempView("restart_s2")
   }

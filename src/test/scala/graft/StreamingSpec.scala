@@ -62,7 +62,7 @@ class StreamingSpec extends AnyFunSuite {
     val stream = org.apache.spark.sql.execution.streaming.runtime
       .MemoryStream[StreamEvent](spark)
     spark.catalog.dropTempView("spec_wmdedup_sink")
-    val ckpt = Pipeline.checkpointDir("ckpt_spec_wmdedup")
+    val ckpt = graft.util.TempDirs.create("ckpt_spec_wmdedup")
     val base = 1719792000L
     val q = stream.toDS()
       .withColumn("ts", timestamp_seconds(col("ts_sec")))
@@ -81,7 +81,7 @@ class StreamingSpec extends AnyFunSuite {
     batch(Seq(7), base + 7200)              // one more batch so eviction commits
     val stateRows = q.lastProgress.stateOperators.head.numRowsTotal
     q.stop(); q.awaitTermination()
-    Pipeline.dropCheckpoint(ckpt)
+    graft.util.TempDirs.delete(ckpt)
     assert(spark.table("spec_wmdedup_sink").count() == 7) // every id emitted once
     assert(stateRows < 7, s"expected evicted state, store still holds $stateRows rows")
   }
@@ -96,6 +96,19 @@ class StreamingSpec extends AnyFunSuite {
     val state = spark.read.parquet(dir).collect()
       .map(r => r.getAs[Long]("user_id") -> r.getAs[Long]("event_id")).toMap
     assert(state == Map(10L -> 5L, 20L -> 4L))
+  }
+
+  test("keyed upsert: a batch touching one user of a shared bucket keeps the bucket's other users") {
+    // users 1 and 9 share bucket 1 (user_id mod 8); the second batch
+    // rewrites that bucket, so it must merge the stored user 9 back in
+    val events = Seq(ev(1, 1, 1.0), ev(2, 9, 2.0), ev(3, 1, 3.0))
+    val dir = Files.createTempDirectory("spec_upsert_shared_").toString
+    Pipeline.runSliced(spark, events, 2, "spec_upsert_shared_sink")(
+      ds => Pipeline.enrich(ds.toDF()))(
+      Some((b, _) => Pipeline.upsertBatch(spark, b, dir)))
+    val state = spark.read.parquet(dir).collect()
+      .map(r => r.getAs[Long]("user_id") -> r.getAs[Long]("event_id")).toMap
+    assert(state == Map(1L -> 3L, 9L -> 2L))
   }
 
   test("keyed upsert keeps one file per touched bucket dir (r17 one-exchange merge)") {
