@@ -714,12 +714,13 @@ object CurationQueries {
     (spine +: rounds).mkString(",\n")
   }
 
-  /** Session-scoped memo of the TRAINED winner frames — q186 (the merge
-    * table) and q158 (its replay) share one training run instead of each
-    * paying the 8-round loop (~2.5 s/suite at sf0.1). The MlTrainQueries
-    * frameMemo recipe: build under a lock, bound to ONE (app, dataset)
-    * generation, release evicted checkpoints' blocks. The memoized state
-    * is 8 one-row checkpointed frames — bytes, not corpus data.
+  /** Session memo of the TRAINED winner frames — q186 (the merge table)
+    * and q158 (its replay) share one training run instead of each paying
+    * the 8-round loop (~2.5 s/suite at sf0.1). Bound to one generation of
+    * documents.parquet, so a dataset regenerated at the same path within
+    * one app retrains; evicted winners' checkpoint blocks are released.
+    * The memoized state is 8 one-row checkpointed frames — bytes, not
+    * corpus data.
     *
     * BENCH ATTRIBUTION (judge r7 "What's wrong" 2): whichever of
     * q158/q186 the bench harness happens to run FIRST pays the full
@@ -727,34 +728,14 @@ object CurationQueries {
     * (q186's 0.06 s bench line is this artifact, not a 0.06 s trainer).
     * Deliberate — it mirrors real train-once/apply-many pipelines.
     */
-  private val bpeMemo =
-    scala.collection.mutable.HashMap.empty[(String, String, String), Seq[DataFrame]]
-
-  /** Dataset-generation token for the memo key: documents.parquet
-    * mtime+length. Regenerating the dataset at the SAME path within one
-    * Spark app (the decade-harness hygiene workflow does exactly that)
-    * must invalidate the memo, or q186/q158 would replay a stale trained
-    * table (ADVICE r7). One stat syscall; "" when the path is a directory
-    * or missing (then the (app, dir) part of the key still scopes it).
-    */
-  private def datasetToken(d: String): String = {
-    val f = new java.io.File(s"$d/documents.parquet")
-    if (f.isFile) s"${f.lastModified}:${f.length}" else ""
-  }
+  private val bpeMemo = Materialize.memo[Seq[DataFrame]]("documents.parquet")(
+    _.foreach(Materialize.releaseCheckpoint))
 
   private def trainedWinners(s: SparkSession, d: String): Seq[DataFrame] =
-    bpeMemo.synchronized {
-      val key = (s.sparkContext.applicationId, d, datasetToken(d))
-      bpeMemo.getOrElse(key, {
-        val stale = bpeMemo.keySet.filterNot(_ == key)
-        stale.toList.foreach(k =>
-          bpeMemo.remove(k).foreach(_.foreach(Materialize.releaseCheckpoint)))
-        val winners = Materialize.scoped { m =>
-          bpeTrainSpine(m.cache(bpeSpine(s, d)), BpeRounds)._1
-        }
-        bpeMemo.put(key, winners)
-        winners
-      })
+    bpeMemo(s, d) {
+      Materialize.scoped { m =>
+        bpeTrainSpine(m.cache(bpeSpine(s, d)), BpeRounds)._1
+      }
     }
 
   /** q186: the trained merge table itself — round, merged pair, and its
@@ -1819,28 +1800,20 @@ object CurationQueries {
     vocab
   }
 
-  /** Session-scoped memo of the trained vocabulary ROWS (plain data, ≤
-    * |charset|+24 tuples) — q224 and q225 share one training run; the
-    * bpeMemo recipe (one (app, dataset, mtime) generation) without the
-    * checkpoint bookkeeping since nothing here pins executor blocks.
+  /** Session memo of the trained vocabulary ROWS (plain data, ≤
+    * |charset|+24 tuples) — q224 and q225 share one training run, bound
+    * to one generation of documents.parquet like [[bpeMemo]]; nothing here
+    * pins executor blocks, so eviction releases nothing.
     * BENCH ATTRIBUTION: whichever of q224/q225 runs first pays the full
     * EM loop; the other replays the memoized model — deliberate, it
     * mirrors real train-once/apply-many pipelines (same as q186/q158).
     */
   private val ulmMemo =
-    scala.collection.mutable.HashMap.empty[(String, String, String), Seq[(String, Long, Long)]]
+    Materialize.memo[Seq[(String, Long, Long)]]("documents.parquet")(_ => ())
 
   private def ulmTrainedRows(s: SparkSession, d: String,
       spine: () => DataFrame): Seq[(String, Long, Long)] =
-    ulmMemo.synchronized {
-      val key = (s.sparkContext.applicationId, d, datasetToken(d))
-      ulmMemo.getOrElse(key, {
-        ulmMemo.keySet.filterNot(_ == key).toList.foreach(ulmMemo.remove)
-        val rows = ulmVocabRows(ulmTrain(s, spine(), UlmPruneCaps))
-        ulmMemo.put(key, rows)
-        rows
-      })
-    }
+    ulmMemo(s, d)(ulmVocabRows(ulmTrain(s, spine(), UlmPruneCaps)))
 
   private def q224(s: SparkSession, d: String): DataFrame = {
     val rows = ulmTrainedRows(s, d, () => ulmSpine(s, d).localCheckpoint(true))

@@ -23,8 +23,8 @@ import org.apache.spark.sql.util.{ExecutionListenerBus, QueryExecutionListener}
   * session that touches `.streams` registers a listener bus on the
   * SparkContext that Spark never removes; the buses of the clone and of
   * the sessions its streaming queries run on are removed once those
-  * queries' last events have been delivered, and so is the clone's
-  * query-execution bus.
+  * queries' last events have been delivered, and so are those sessions'
+  * query-execution buses.
   *
   * The returned frame is rebound to the caller's session: the caller's
   * action on it plans and runs under the caller's conf, as for any other
@@ -39,33 +39,36 @@ object Sessions {
     val parent = s.asInstanceOf[classic.SparkSession]
     val cloned = parent.cloneSession()
     conf.foreach { case (k, v) => cloned.conf.set(k, v) }
+    // A session with query-execution listeners has its own bus for them,
+    // freed by Spark only when the session is garbage-collected; this
+    // marker finds it.
+    val qeMarker = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = ()
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
     val marker = new StreamingQueryListener {
       @volatile var started = false
       // Runs on the query's thread, with the query already registered. The
-      // query plans its batches on a session of its own, whose bus (made
-      // when its state stores start) leaks the same way: mark it too.
+      // query runs its batches on a session of its own, whose buses leak
+      // the same way: its streaming bus (made when its state stores start)
+      // and its execution bus (made when a batch registers an
+      // `Observation`). Mark both.
       override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit = {
         started = true
-        Option(cloned.streams.get(e.id)).foreach(q =>
-          q.asInstanceOf[StreamingQueryWrapper].streamingQuery.sparkSessionForStream
-            .streams.addListener(this))
+        Option(cloned.streams.get(e.id)).foreach { q =>
+          val session = q.asInstanceOf[StreamingQueryWrapper].streamingQuery.sparkSessionForStream
+          session.streams.addListener(this)
+          session.listenerManager.register(qeMarker)
+        }
       }
       override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit = ()
       override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit = ()
     }
     (parent.streams.listListeners() :+ marker).foreach(cloned.streams.addListener)
-    // A clone that inherited query-execution listeners has its own bus for
-    // them, freed by Spark only when the clone is garbage-collected; a
-    // marker finds it. (Registering one on a clone without listeners
-    // would make the bus, so none is.)
-    val qeMarker = Option.when(cloned.listenerManager.listListeners().nonEmpty) {
-      val m = new QueryExecutionListener {
-        override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = ()
-        override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
-      }
-      cloned.listenerManager.register(m)
-      m
-    }
+    // Registering the marker on a clone without listeners would make the
+    // bus, so only a clone that inherited some gets it.
+    val cloneListens = cloned.listenerManager.listListeners().nonEmpty
+    if (cloneListens) cloned.listenerManager.register(qeMarker)
     try {
       val df = body(cloned).asInstanceOf[classic.Dataset[Row]]
       classic.Dataset.ofRows(parent, df.logicalPlan)
@@ -76,11 +79,11 @@ object Sessions {
       // its progress and terminated events, and the clone's execution
       // events, arrive through the bus. A bus still busy after the drain's
       // 10 s loses those events, not the query.
-      if (marker.started || qeMarker.nonEmpty)
+      if (marker.started || cloneListens)
         try bus.waitUntilEmpty() catch { case _: java.util.concurrent.TimeoutException => }
       bus.listeners.asScala.foreach {
         case b: StreamingQueryListenerBus if b.listeners.contains(marker) => bus.removeListener(b)
-        case b: ExecutionListenerBus if qeMarker.exists(b.listeners.contains) => bus.removeListener(b)
+        case b: ExecutionListenerBus if b.listeners.contains(qeMarker) => bus.removeListener(b)
         case _ =>
       }
     }

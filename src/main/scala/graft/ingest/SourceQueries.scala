@@ -78,21 +78,33 @@ object SourceQueries {
       |  CAST(sum(CAST(value AS DECIMAL(18,4))) AS DOUBLE) AS sum_v
       |FROM events GROUP BY 1 ORDER BY 1""".stripMargin
 
+  /** Runs `body` with one fresh catalog table name per prefix, then drops
+    * those tables. The session catalog is shared by every session of the
+    * app, so fixed names would collide between concurrent executions. The
+    * tables must be external (`path` option): the frame `body` returns is
+    * already analyzed against their files, which the drop leaves in place.
+    */
+  private def withScratchTables(s: SparkSession, prefixes: String*)(
+      body: Seq[String] => DataFrame): DataFrame = {
+    val names = prefixes.map(p => p + "_" + java.util.UUID.randomUUID().toString.replace("-", ""))
+    try body(names) finally names.foreach(n => s.sql(s"DROP TABLE IF EXISTS $n"))
+  }
+
   /** Catalog round trip (S12/S13): saveAsTable an aggregate, scan it back
     * through `spark.sql` — the notebook's Hive-table detour (NB cell 16 →
     * cell 19). External-path table under a temp dir keeps the warehouse
     * clean.
     */
-  private def q71(s: SparkSession, d: String): DataFrame = {
+  private def q71(s: SparkSession, d: String): DataFrame =
+      withScratchTables(s, "graft_orders_by_month") { case Seq(table) =>
     val path = graft.util.TempDirs.create("graft_tbl_") + "/orders_by_month"
-    s.sql("DROP TABLE IF EXISTS graft_orders_by_month")
     Tables.orders(s, d)
       .groupBy(year(col("o_orderdate")).cast("long").as("y"),
         month(col("o_orderdate")).cast("long").as("m"))
       .agg(count(lit(1)).as("n"), Det.dsum(col("o_totalprice")).as("total"))
       .write.mode("overwrite").option("path", path)
-      .saveAsTable("graft_orders_by_month")
-    s.sql("""SELECT y, m, n, total FROM graft_orders_by_month
+      .saveAsTable(table)
+    s.sql(s"""SELECT y, m, n, total FROM $table
              WHERE n > 0 ORDER BY y, m""")
   }
 
@@ -160,24 +172,29 @@ object SourceQueries {
     * turns a recurring 100 TB fact⋈fact join from the dominant cost into a
     * local merge. PlanSpec asserts the absence of Exchange above the scans.
     */
-  private def q74(s: SparkSession, d: String): DataFrame = {
-    val wh = graft.util.TempDirs.create("graft_bucketed_")
-    s.sql("DROP TABLE IF EXISTS graft_orders_b")
-    s.sql("DROP TABLE IF EXISTS graft_customer_b")
-    Tables.orders(s, d)
-      .write.mode("overwrite").option("path", s"$wh/orders_b")
-      .bucketBy(8, "o_custkey").sortBy("o_custkey")
-      .saveAsTable("graft_orders_b")
-    Tables.customer(s, d)
-      .write.mode("overwrite").option("path", s"$wh/customer_b")
-      .bucketBy(8, "c_custkey").sortBy("c_custkey")
-      .saveAsTable("graft_customer_b")
-    s.table("graft_orders_b")
-      .join(s.table("graft_customer_b"),
-        col("o_custkey") === col("c_custkey"))
+  private def q74(s: SparkSession, d: String): DataFrame =
+      withScratchTables(s, "graft_orders_b", "graft_customer_b") { names =>
+    bucketedJoin(s, d, names)
       .groupBy("c_mktsegment")
       .agg(count(lit(1)).as("n"), Det.dsum(col("o_totalprice")).as("revenue"))
       .orderBy("c_mktsegment")
+  }
+
+  /** Writes orders and customer as external tables `names` (orders
+    * first), each bucketed on the join key into 8 buckets, and joins them.
+    */
+  private def bucketedJoin(s: SparkSession, d: String, names: Seq[String]): DataFrame = {
+    val Seq(ordersB, customerB) = names
+    val wh = graft.util.TempDirs.create("graft_bucketed_")
+    Tables.orders(s, d)
+      .write.mode("overwrite").option("path", s"$wh/orders_b")
+      .bucketBy(8, "o_custkey").sortBy("o_custkey")
+      .saveAsTable(ordersB)
+    Tables.customer(s, d)
+      .write.mode("overwrite").option("path", s"$wh/customer_b")
+      .bucketBy(8, "c_custkey").sortBy("c_custkey")
+      .saveAsTable(customerB)
+    s.table(ordersB).join(s.table(customerB), col("o_custkey") === col("c_custkey"))
   }
 
   private val q74Sql =
@@ -211,12 +228,9 @@ object SourceQueries {
   /** Internal: the bucketed join DataFrame without the aggregation, for
     * PlanSpec's no-Exchange assertion.
     */
-  private[graft] def bucketedJoinPlan(s: SparkSession, d: String): DataFrame = {
-    q74(s, d) // ensures tables exist
-    s.table("graft_orders_b")
-      .join(s.table("graft_customer_b"), col("o_custkey") === col("c_custkey"))
-      .select("o_orderkey", "c_name")
-  }
+  private[graft] def bucketedJoinPlan(s: SparkSession, d: String): DataFrame =
+    withScratchTables(s, "graft_orders_b", "graft_customer_b")(
+      bucketedJoin(s, d, _).select("o_orderkey", "c_name"))
 
   /** ORC round trip: the second columnar format Spark ships natively
     * (vectorized reader, predicate pushdown, zlib/zstd codecs — the
@@ -820,9 +834,9 @@ object SourceQueries {
     // refresh from the changelog alone, addressed in pure SQL
     val changelog = s.sql(
       s"SELECT * FROM graft.db.events_ivm.changes WHERE _commit_version > $v0")
-    graft.sources.GraftIVM.refreshAggregate(s, changelog,
-      "graft.db.events_ivm_view", groupCols = Seq("half"), countCol = "n",
-      sums = Seq("sum_users" -> "user_id", "sum_events" -> "event_id"))
+    graft.sources.GraftIVM.refresh(changelog,
+      graft.sources.GraftIVM.View("graft.db.events_ivm_view", Seq("half"), "n",
+        sums = Seq("sum_users" -> "user_id", "sum_events" -> "event_id")), None)
     s.sql("""SELECT half, n, sum_users, sum_events
             |FROM graft.db.events_ivm_view ORDER BY half""".stripMargin)
   }
@@ -877,12 +891,11 @@ object SourceQueries {
     graft.sources.GraftIVM.bind(viewPath,
       graft.sources.GraftMaintenance.currentVersion(basePath).get)
     val ckpt = graft.util.TempDirs.create("graft_q261_ckpt_")
-    def refreshOnce(): Unit = {
-      val q = graft.sources.GraftIVM.streamRefresh(s, basePath,
-        "graft.db.events_sivm_view", viewPath, Seq("half"), "n",
-        Seq("sum_users" -> "user_id", "sum_events" -> "event_id"), ckpt)
-      q.awaitTermination()
-    }
+    val view = graft.sources.GraftIVM.View("graft.db.events_sivm_view",
+      Seq("half"), "n", sums = Seq("sum_users" -> "user_id", "sum_events" -> "event_id"))
+    def refreshOnce(): Unit =
+      graft.sources.GraftIVM.streamRefresh(s, basePath, view, viewPath, ckpt)
+        .awaitTermination()
     // micro-batch 1: append — stream run 1, then STOPPED
     s.sql("""INSERT INTO graft.db.events_sivm
             |SELECT /*+ REPARTITION(2) */ event_id, user_id, value, half
@@ -912,8 +925,8 @@ object SourceQueries {
   /** TOUCHED-GROUP IVM for NON-INVERTIBLE aggregates (VERDICT r16 task
     * 2): a view carrying MIN/MAX cannot be maintained from signed deltas
     * — a DELETE that removes a group's current maximum needs the base
-    * data to find the runner-up. [[graft.sources.GraftIVM
-    * .refreshAggregateTouchedGroups]] re-aggregates ONLY the groups
+    * data to find the runner-up. [[graft.sources.GraftIVM.refresh]],
+    * given the base table, re-aggregates ONLY the groups
     * present in the changelog (keys from the delta; one PRUNED base
     * scan over exactly those groups — SourcesSpec pins base input =
     * touched groups' rows, never table size) while untouched groups'
@@ -960,12 +973,12 @@ object SourceQueries {
             |WHERE user_id % 13 = 2""".stripMargin) // v5: MOR (DV + reinsert), pinned
     val changelog = s.sql(
       s"SELECT * FROM graft.db.events_xivm.changes WHERE _commit_version > $v0")
-    graft.sources.GraftIVM.refreshAggregateTouchedGroups(s, changelog,
-      s.table("graft.db.events_xivm"), "graft.db.events_xivm_view",
-      groupCols = Seq("half"), countCol = "n",
-      sums = Seq("sum_users" -> "user_id"),
-      mins = Seq("min_event" -> "event_id"),
-      maxs = Seq("max_event" -> "event_id"))
+    graft.sources.GraftIVM.refresh(changelog,
+      graft.sources.GraftIVM.View("graft.db.events_xivm_view", Seq("half"), "n",
+        sums = Seq("sum_users" -> "user_id"),
+        mins = Seq("min_event" -> "event_id"),
+        maxs = Seq("max_event" -> "event_id")),
+      Some(s.table("graft.db.events_xivm")))
     s.sql("""SELECT half, n, sum_users, min_event, max_event
             |FROM graft.db.events_xivm_view ORDER BY half""".stripMargin)
   }

@@ -170,40 +170,21 @@ object MlTrainQueries {
     * rows; on real data the label column simply replaces the teacher
     * expression.
     */
-  /** Session-scoped memo for [[featureFrame]] and [[trainedWeights]] —
-    * keyed by (applicationId, dataset dir) so entries never cross Spark
-    * contexts or datasets. Training is deterministic and the cached frames
-    * are localCheckpointed (materialized, lineage-free), so sharing them
+  /** Session memo for [[featureFrame]] and [[trainedWeights]], bound to
+    * one generation of the orders and lineitem files they are built from.
+    * Training is deterministic and the memoized frames are
+    * localCheckpointed (materialized, lineage-free), so sharing them
     * across q137/q138/q139/q168/q169 cannot change any oracle output; it
     * removes the redundant 8-iteration retrain each evaluation query paid
-    * (~12 s of the round-5 bench — VERDICT r5 finding 2).
+    * (~12 s of the round-5 bench — VERDICT r5 finding 2). Evicted frames'
+    * checkpoint blocks are released; `trainedWeights`' build reads
+    * `featureFrame` through the same memo.
     */
-  private val frameMemo =
-    scala.collection.mutable.HashMap.empty[(String, String, String), DataFrame]
-
-  /** Memoize under a lock (a bare getOrElseUpdate can run `build` — an
-    * 8-iteration training job — twice under concurrent first calls), and
-    * bound the memo to ONE (app, dataset) at a time: on a dataset switch
-    * the previous dataset's checkpointed frames are evicted AND their
-    * blocks released, so a long-lived session walking many datasets holds
-    * at most one dataset's worth of checkpoint blocks (ADVICE r6).
-    * The lock is reentrant, so `trainedWeights`' build calling
-    * [[featureFrame]] (which re-enters memo) is safe.
-    */
-  private def memo(s: SparkSession, d: String, what: String)(
-      build: => DataFrame): DataFrame = frameMemo.synchronized {
-    val key = (s.sparkContext.applicationId, d, what)
-    frameMemo.getOrElse(key, {
-      val stale = frameMemo.keySet.filterNot(k => k._1 == key._1 && k._2 == key._2)
-      stale.toList.foreach(k => frameMemo.remove(k).foreach(Materialize.releaseCheckpoint))
-      val df = build
-      frameMemo.put(key, df)
-      df
-    })
-  }
+  private val frameMemo = Materialize.memo[DataFrame]("orders.parquet",
+    "lineitem.parquet")(Materialize.releaseCheckpoint)
 
   private def featureFrame(s: SparkSession, d: String): DataFrame =
-    memo(s, d, "feats")(featureFrameBuild(s, d))
+    frameMemo(s, d, "feats")(featureFrameBuild(s, d))
 
   private def featureFrameBuild(s: SparkSession, d: String): DataFrame =
     Tables.orders(s, d)
@@ -266,7 +247,7 @@ object MlTrainQueries {
     * dataset; the result is an eagerly checkpointed 1-row frame.
     */
   private def trainedWeights(s: SparkSession, d: String): DataFrame =
-    memo(s, d, "weights") {
+    frameMemo(s, d, "weights") {
       val train = featureFrame(s, d).filter(col("bkt") < 80)
       var w = zeroWeights(s)
       for (_ <- 1 to EvalIters) w = updateWeights(trainStep(train, w), 1, 1)

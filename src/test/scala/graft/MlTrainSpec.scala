@@ -146,4 +146,32 @@ class MlTrainSpec extends AnyFunSuite {
     assert(out.length == 1)
     assert(out(0).getString(1) == "aa")
   }
+
+  test("q138 after orders.parquet is rewritten in place equals q138 on the rewritten data at a fresh path") {
+    import java.nio.file.{Files, Paths, StandardCopyOption}
+    def copyDataset(to: String): Unit =
+      new java.io.File(sf).listFiles().foreach(f =>
+        Files.copy(f.toPath, Paths.get(to, f.getName)))
+    def q138(d: String): Seq[String] =
+      Registry.queries("q138_model_eval")(spark, d).collect().map(_.toString).toSeq.sorted
+    val inPlace = graft.util.TempDirs.create("graft_memo_a_")
+    val fresh = graft.util.TempDirs.create("graft_memo_b_")
+    val staging = graft.util.TempDirs.create("graft_memo_orders_")
+    try {
+      copyDataset(inPlace)
+      copyDataset(fresh)
+      val full = q138(inPlace)
+      spark.read.parquet(s"$sf/orders.parquet").filter(col("o_orderkey") % 3 =!= 0)
+        .coalesce(1).write.mode("overwrite").parquet(s"$staging/o")
+      val subset = new java.io.File(s"$staging/o").listFiles()
+        .find(_.getName.endsWith(".parquet")).get.toPath
+      Seq(inPlace, fresh).foreach(d =>
+        Files.copy(subset, Paths.get(d, "orders.parquet"), StandardCopyOption.REPLACE_EXISTING))
+      val rewritten = q138(inPlace)
+      val expected = q138(fresh)
+      assert(expected != full, "the subset must change q138's result")
+      assert(rewritten == expected,
+        "q138 replayed the memoized model of the orders.parquet it replaced")
+    } finally Seq(inPlace, fresh, staging).foreach(graft.util.TempDirs.delete)
+  }
 }

@@ -2130,9 +2130,9 @@ class SourcesSpec extends AnyFunSuite {
 
     val changelog = spark.sql(
       s"SELECT * FROM graft.ivm2db.t.changes WHERE _commit_version > $v0")
-    val consumed = graft.sources.GraftIVM.refreshAggregate(spark, changelog,
-      "graft.ivm2db.view", groupCols = Seq("k"), countCol = "n",
+    val ivm2 = graft.sources.GraftIVM.View("graft.ivm2db.view", Seq("k"), "n",
       sums = Seq("sv" -> "v"))
+    val consumed = graft.sources.GraftIVM.refresh(changelog, ivm2, None).consumed
     // input size = the NET changelog: 20 inserts + 10 deletes + 5
     // update pairs (delete+insert) = 40 rows — not the 1010-row table
     assert(consumed == 40L,
@@ -2149,9 +2149,9 @@ class SourcesSpec extends AnyFunSuite {
     // a group whose count reaches zero DISAPPEARS from the view
     spark.sql("DELETE FROM graft.ivm2db.t WHERE k = 3")
     val v1 = graft.sources.GraftMaintenance.currentVersion(tpath).get
-    graft.sources.GraftIVM.refreshAggregate(spark,
+    graft.sources.GraftIVM.refresh(
       spark.sql(s"SELECT * FROM graft.ivm2db.t.changes WHERE _commit_version >= $v1"),
-      "graft.ivm2db.view", Seq("k"), "n", Seq("sv" -> "v"))
+      ivm2, None)
     assert(!spark.table("graft.ivm2db.view").collect().exists(_.getLong(0) == 3L),
       "an emptied group must leave the maintained view")
     spark.sql("DROP TABLE graft.ivm2db.t")
@@ -2205,9 +2205,10 @@ class SourcesSpec extends AnyFunSuite {
 
     val changelog = spark.sql(
       s"SELECT * FROM graft.xivmdb.t.changes WHERE _commit_version > $v0")
-    graft.sources.GraftIVM.refreshAggregateTouchedGroups(spark, changelog,
-      spark.table("graft.xivmdb.t"), "graft.xivmdb.view", Seq("k"), "n",
+    val xview = graft.sources.GraftIVM.View("graft.xivmdb.view", Seq("k"), "n",
       sums = Seq("sv" -> "v"), mins = Seq("mn" -> "v"), maxs = Seq("mx" -> "v"))
+    val baseRows = graft.sources.GraftIVM.refresh(changelog, xview,
+      Some(spark.table("graft.xivmdb.t"))).baseRows
     val expect = recompute()
     assert(viewState() == expect,
       s"touched-group refresh drift: ${viewState()} vs $expect")
@@ -2218,17 +2219,15 @@ class SourcesSpec extends AnyFunSuite {
     val touchedRows = spark.sql(
       "SELECT count(*) FROM graft.xivmdb.t WHERE k IN (2, 4, 77) OR k IS NULL")
       .head().getLong(0)
-    assert(graft.sources.GraftIVM.LastTouchedGroupBaseRows.get() == touchedRows,
-      s"refresh scanned ${graft.sources.GraftIVM.LastTouchedGroupBaseRows.get()} " +
-        s"base rows; the touched groups hold only $touchedRows")
+    assert(baseRows == touchedRows,
+      s"refresh scanned $baseRows base rows; the touched groups hold only $touchedRows")
 
     // a touched group that empties LEAVES the view (no zombie row)
     val v1 = graft.sources.GraftMaintenance.currentVersion(tpath).get
     spark.sql("DELETE FROM graft.xivmdb.t WHERE k = 77")
-    graft.sources.GraftIVM.refreshAggregateTouchedGroups(spark,
+    graft.sources.GraftIVM.refresh(
       spark.sql(s"SELECT * FROM graft.xivmdb.t.changes WHERE _commit_version > $v1"),
-      spark.table("graft.xivmdb.t"), "graft.xivmdb.view", Seq("k"), "n",
-      sums = Seq("sv" -> "v"), mins = Seq("mn" -> "v"), maxs = Seq("mx" -> "v"))
+      xview, Some(spark.table("graft.xivmdb.t")))
     assert(viewState() == recompute())
     assert(!viewState().contains(Some(77L)), "the emptied group must leave")
 
@@ -2246,10 +2245,11 @@ class SourcesSpec extends AnyFunSuite {
     val t2path = s"$wh/xivmdb/t2"
     val v2 = graft.sources.GraftMaintenance.currentVersion(t2path).get
     spark.sql("DELETE FROM graft.xivmdb.t2 WHERE k = 5 AND k2 = 1 AND v > 800")
-    graft.sources.GraftIVM.refreshAggregateTouchedGroups(spark,
+    graft.sources.GraftIVM.refresh(
       spark.sql(s"SELECT * FROM graft.xivmdb.t2.changes WHERE _commit_version > $v2"),
-      spark.table("graft.xivmdb.t2"), "graft.xivmdb.view2", Seq("k", "k2"), "n",
-      sums = Seq("sv" -> "v"), mins = Seq.empty, maxs = Seq("mx" -> "v"))
+      graft.sources.GraftIVM.View("graft.xivmdb.view2", Seq("k", "k2"), "n",
+        sums = Seq("sv" -> "v"), maxs = Seq("mx" -> "v")),
+      Some(spark.table("graft.xivmdb.t2")))
     val exp2 = spark.sql(
       """SELECT k, k2, count(*) n, sum(v) sv, max(v) mx
         |FROM graft.xivmdb.t2 GROUP BY k, k2""".stripMargin).collect()
@@ -2289,10 +2289,11 @@ class SourcesSpec extends AnyFunSuite {
     // churn every group: 1500 touched keys > InListKeyLimit (1000)
     spark.sql("""INSERT INTO graft.bigivmdb.t
                 |SELECT id, id % 1500, id FROM range(3000, 4500)""".stripMargin)
-    graft.sources.GraftIVM.refreshAggregateTouchedGroups(spark,
+    graft.sources.GraftIVM.refresh(
       spark.sql(s"SELECT * FROM graft.bigivmdb.t.changes WHERE _commit_version > $v0"),
-      spark.table("graft.bigivmdb.t"), "graft.bigivmdb.view", Seq("k"), "n",
-      sums = Seq("sv" -> "v"), mins = Seq.empty, maxs = Seq("mx" -> "v"))
+      graft.sources.GraftIVM.View("graft.bigivmdb.view", Seq("k"), "n",
+        sums = Seq("sv" -> "v"), maxs = Seq("mx" -> "v")),
+      Some(spark.table("graft.bigivmdb.t")))
     val got = spark.table("graft.bigivmdb.view").collect()
       .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2), r.getLong(3)))).toMap
     val exp = spark.sql(
@@ -2343,11 +2344,11 @@ class SourcesSpec extends AnyFunSuite {
                 |SELECT id, 4L, (id DIV 6) % 2, id FROM range(1000, 1020)""".stripMargin)
     spark.sql("DELETE FROM graft.pxivmdb.t WHERE k = 3")
     val viewV0 = graft.sources.GraftMaintenance.currentVersion(vpath).get
-    graft.sources.GraftIVM.refreshAggregateTouchedGroupsPartitioned(spark,
+    val baseRows = graft.sources.GraftIVM.refresh(
       spark.sql(s"SELECT * FROM graft.pxivmdb.t.changes WHERE _commit_version > $v0"),
-      spark.table("graft.pxivmdb.t"), "graft.pxivmdb.view", "k",
-      Seq("k", "k2"), "n", sums = Seq("sv" -> "v"),
-      mins = Seq.empty, maxs = Seq("mx" -> "v"))
+      graft.sources.GraftIVM.View("graft.pxivmdb.view", Seq("k", "k2"), "n",
+        sums = Seq("sv" -> "v"), maxs = Seq("mx" -> "v"), partitionCol = Some("k")),
+      Some(spark.table("graft.pxivmdb.t"))).baseRows
     // ONE atomic commit, vanished partition included
     assert(graft.sources.GraftMaintenance.currentVersion(vpath).get
       == viewV0 + 1, "the partitioned touched-group refresh must be ONE version")
@@ -2373,9 +2374,8 @@ class SourcesSpec extends AnyFunSuite {
       """SELECT count(*) FROM graft.pxivmdb.t
         |WHERE (k = 2 AND k2 = 0) OR k = 3 OR k = 4""".stripMargin)
       .head().getLong(0)
-    assert(graft.sources.GraftIVM.LastTouchedGroupBaseRows.get() == touchedRows,
-      s"base input ${graft.sources.GraftIVM.LastTouchedGroupBaseRows.get()} " +
-        s"must equal the touched groups' $touchedRows rows")
+    assert(baseRows == touchedRows,
+      s"base input $baseRows must equal the touched groups' $touchedRows rows")
     spark.sql("DROP TABLE graft.pxivmdb.t")
     spark.sql("DROP TABLE graft.pxivmdb.view")
   }
@@ -2418,8 +2418,9 @@ class SourcesSpec extends AnyFunSuite {
     val changelog = spark.sql(
       s"SELECT * FROM graft.pivmdb.t.changes WHERE _commit_version > $v0")
     val viewV0 = graft.sources.GraftMaintenance.currentVersion(vpath).get
-    val consumed = graft.sources.GraftIVM.refreshAggregatePartitioned(spark,
-      changelog, "graft.pivmdb.view", "k", Seq("k"), "n", Seq("sv" -> "v"))
+    val pview = graft.sources.GraftIVM.View("graft.pivmdb.view", Seq("k"), "n",
+      sums = Seq("sv" -> "v"), partitionCol = Some("k"))
+    val consumed = graft.sources.GraftIVM.refresh(changelog, pview, None).consumed
     assert(consumed == 140L, // 100 deletes + 40 inserts
       s"refresh input must be the changelog, got $consumed")
     // ATOMIC republish: survivor overwrite + vanished-partition
@@ -2453,9 +2454,9 @@ class SourcesSpec extends AnyFunSuite {
     val v1 = graft.sources.GraftMaintenance.currentVersion(tpath).get
     spark.sql("""INSERT INTO graft.pivmdb.t
                 |SELECT id, CAST(NULL AS BIGINT), id FROM range(0, 7)""".stripMargin)
-    graft.sources.GraftIVM.refreshAggregatePartitioned(spark,
+    graft.sources.GraftIVM.refresh(
       spark.sql(s"SELECT * FROM graft.pivmdb.t.changes WHERE _commit_version > $v1"),
-      "graft.pivmdb.view", "k", Seq("k"), "n", Seq("sv" -> "v"))
+      pview, None)
     val nullRow = spark.table("graft.pivmdb.view")
       .filter(col("k").isNull).collect()
     assert(nullRow.length == 1 && nullRow.head.getLong(1) == 7L &&
@@ -2464,9 +2465,9 @@ class SourcesSpec extends AnyFunSuite {
     val v2 = graft.sources.GraftMaintenance.currentVersion(tpath).get
     val viewV2 = graft.sources.GraftMaintenance.currentVersion(vpath).get
     spark.sql("DELETE FROM graft.pivmdb.t WHERE k IS NULL")
-    graft.sources.GraftIVM.refreshAggregatePartitioned(spark,
+    graft.sources.GraftIVM.refresh(
       spark.sql(s"SELECT * FROM graft.pivmdb.t.changes WHERE _commit_version > $v2"),
-      "graft.pivmdb.view", "k", Seq("k"), "n", Seq("sv" -> "v"))
+      pview, None)
     assert(spark.table("graft.pivmdb.view")
       .filter(col("k").isNull).isEmpty,
       "the vanished null-key group must leave the view")

@@ -399,9 +399,9 @@ class StreamingSpec extends AnyFunSuite {
     val viewPath = s"$wh/sivmdb/view"
     GraftIVM.bind(viewPath, GraftMaintenance.currentVersion(basePath).get)
     val ckpt = graft.util.TempDirs.create("graft_sivm_ckpt_")
-    def runStream(): Unit = GraftIVM.streamRefresh(spark, basePath,
-      "graft.sivmdb.view", viewPath, Seq("k"), "n", Seq("sv" -> "v"), ckpt)
-      .awaitTermination()
+    val view = GraftIVM.View("graft.sivmdb.view", Seq("k"), "n", sums = Seq("sv" -> "v"))
+    def runStream(): Unit =
+      GraftIVM.streamRefresh(spark, basePath, view, viewPath, ckpt).awaitTermination()
     def viewState(): Map[Long, (Long, Long)] =
       spark.table("graft.sivmdb.view").collect()
         .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2)))).toMap
@@ -419,8 +419,7 @@ class StreamingSpec extends AnyFunSuite {
 
     // FULL REPLAY: re-applying the already-applied slice is a no-op
     val slice13 = GraftCDC.changes(spark, basePath, 2L, Some(3L))
-    assert(GraftIVM.applyBatchExactlyOnce(spark, slice13, "graft.sivmdb.view",
-      viewPath, Seq("k"), "n", Seq("sv" -> "v")) == 0L,
+    assert(GraftIVM.applyBatchExactlyOnce(slice13, view, viewPath, basePath).consumed == 0L,
       "a replayed applied batch must be skipped")
     assert(viewState() == recompute())
 
@@ -431,15 +430,13 @@ class StreamingSpec extends AnyFunSuite {
     spark.sql("DELETE FROM graft.sivmdb.t WHERE id % 7 = 3") // v4
     val v4 = GraftMaintenance.currentVersion(basePath).get
     val slice34 = GraftCDC.changes(spark, basePath, b1._1, Some(v4))
-    assert(GraftIVM.applyBatchExactlyOnce(spark, slice34, "graft.sivmdb.view",
-      viewPath, Seq("k"), "n", Seq("sv" -> "v")) > 0L)
+    assert(GraftIVM.applyBatchExactlyOnce(slice34, view, viewPath, basePath).consumed > 0L)
     val after2 = viewState()
     assert(after2 == recompute())
     java.nio.file.Files.writeString( // the simulated crash: old marker
       java.nio.file.Paths.get(viewPath, "_IVM_APPLIED"),
       s"${b1._1}\t${b1._2}\n")
-    assert(GraftIVM.applyBatchExactlyOnce(spark, slice34, "graft.sivmdb.view",
-      viewPath, Seq("k"), "n", Seq("sv" -> "v")) > 0L,
+    assert(GraftIVM.applyBatchExactlyOnce(slice34, view, viewPath, basePath).consumed > 0L,
       "the crash-window replay re-applies from the PINNED view version")
     assert(viewState() == after2,
       "a crash-window replay must not double-apply the deltas")
@@ -489,9 +486,10 @@ class StreamingSpec extends AnyFunSuite {
     val viewPath = s"$wh/spivmdb/view"
     GraftIVM.bind(viewPath, GraftMaintenance.currentVersion(basePath).get)
     val ckpt = graft.util.TempDirs.create("graft_spivm_ckpt_")
-    def runStream(): Unit = GraftIVM.streamRefresh(spark, basePath,
-      "graft.spivmdb.view", viewPath, Seq("k"), "n", Seq("sv" -> "v"), ckpt,
-      partitionCol = Some("k")).awaitTermination()
+    val view = GraftIVM.View("graft.spivmdb.view", Seq("k"), "n",
+      sums = Seq("sv" -> "v"), partitionCol = Some("k"))
+    def runStream(): Unit =
+      GraftIVM.streamRefresh(spark, basePath, view, viewPath, ckpt).awaitTermination()
     def viewState(): Map[Long, (Long, Long)] =
       spark.table("graft.spivmdb.view").collect()
         .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2)))).toMap
@@ -527,15 +525,13 @@ class StreamingSpec extends AnyFunSuite {
     finally spark.conf.unset("spark.graft.store.update.mode")
     val v5 = GraftMaintenance.currentVersion(basePath).get
     val slice = GraftCDC.changes(spark, basePath, b1._1, Some(v5))
-    assert(GraftIVM.applyBatchExactlyOnce(spark, slice, "graft.spivmdb.view",
-      viewPath, Seq("k"), "n", Seq("sv" -> "v"), Some("k")) > 0L)
+    assert(GraftIVM.applyBatchExactlyOnce(slice, view, viewPath, basePath).consumed > 0L)
     val after2 = viewState()
     assert(after2 == recompute())
     java.nio.file.Files.writeString( // simulated crash: old marker back
       java.nio.file.Paths.get(viewPath, "_IVM_APPLIED"),
       s"${b1._1}\t${b1._2}\n")
-    assert(GraftIVM.applyBatchExactlyOnce(spark, slice, "graft.spivmdb.view",
-      viewPath, Seq("k"), "n", Seq("sv" -> "v"), Some("k")) > 0L,
+    assert(GraftIVM.applyBatchExactlyOnce(slice, view, viewPath, basePath).consumed > 0L,
       "the crash-window replay re-applies from the PINNED view version")
     assert(viewState() == after2,
       "a crash-window replay must not double-apply the deltas")
@@ -557,8 +553,7 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("streaming touched-group IVM: MIN/MAX exactly-once across restart and crash window, pruned republish") {
-    // The streaming form of the non-invertible refresh (completes the
-    // IVM matrix): each micro-batch re-aggregates ONLY the touched
+    // The streaming form of the non-invertible refresh: each micro-batch re-aggregates ONLY the touched
     // groups from the base AS OF the batch's end version, republishes
     // only the touched partitions, and replays byte-identically — the
     // base pin makes the recompute idempotent even though no signed
@@ -585,10 +580,10 @@ class StreamingSpec extends AnyFunSuite {
     val viewPath = s"$wh/sxivmdb/view"
     GraftIVM.bind(viewPath, GraftMaintenance.currentVersion(basePath).get)
     val ckpt = graft.util.TempDirs.create("graft_sxivm_ckpt_")
-    def runStream(): Unit = GraftIVM.streamRefreshTouchedGroups(spark,
-      basePath, "graft.sxivmdb.view", viewPath, Seq("k"), "n",
-      Seq("sv" -> "v"), Seq("mn" -> "v"), Seq("mx" -> "v"), ckpt,
-      partitionCol = Some("k")).awaitTermination()
+    val view = GraftIVM.View("graft.sxivmdb.view", Seq("k"), "n", sums = Seq("sv" -> "v"),
+      mins = Seq("mn" -> "v"), maxs = Seq("mx" -> "v"), partitionCol = Some("k"))
+    def runStream(): Unit =
+      GraftIVM.streamRefresh(spark, basePath, view, viewPath, ckpt).awaitTermination()
     def viewState(): Map[Long, (Long, Long, Long, Long)] =
       spark.table("graft.sxivmdb.view").collect()
         .map(r => r.getLong(0) ->
@@ -620,17 +615,13 @@ class StreamingSpec extends AnyFunSuite {
     finally spark.conf.unset("spark.graft.store.update.mode")
     val v = GraftMaintenance.currentVersion(basePath).get
     val slice = GraftCDC.changes(spark, basePath, b1._1, Some(v))
-    assert(GraftIVM.applyBatchExactlyOnceTouchedGroups(spark, slice,
-      basePath, "graft.sxivmdb.view", viewPath, Seq("k"), "n",
-      Seq("sv" -> "v"), Seq("mn" -> "v"), Seq("mx" -> "v"), Some("k")) > 0L)
+    assert(GraftIVM.applyBatchExactlyOnce(slice, view, viewPath, basePath).consumed > 0L)
     val after2 = viewState()
     assert(after2 == recompute())
     java.nio.file.Files.writeString( // simulated crash: old marker back
       java.nio.file.Paths.get(viewPath, "_IVM_APPLIED"),
       s"${b1._1}\t${b1._2}\n")
-    assert(GraftIVM.applyBatchExactlyOnceTouchedGroups(spark, slice,
-      basePath, "graft.sxivmdb.view", viewPath, Seq("k"), "n",
-      Seq("sv" -> "v"), Seq("mn" -> "v"), Seq("mx" -> "v"), Some("k")) > 0L,
+    assert(GraftIVM.applyBatchExactlyOnce(slice, view, viewPath, basePath).consumed > 0L,
       "the crash-window replay recomputes from the PINNED base+view versions")
     assert(viewState() == after2,
       "a crash-window extrema replay must land on the identical state")
@@ -647,5 +638,73 @@ class StreamingSpec extends AnyFunSuite {
       GraftMaintenance.currentVersion(basePath).get)
     spark.sql("DROP TABLE graft.sxivmdb.t")
     spark.sql("DROP TABLE graft.sxivmdb.view")
+  }
+
+  test("streaming touched-group IVM on an unpartitioned view: MIN/MAX exactly-once through the stream, a direct batch and its crash-window replay") {
+    // The whole-view overwrite with the touched-group algebra: the base
+    // is re-read AS OF each batch's end version and the untouched groups
+    // carry from the pinned view version, so a replay lands on the
+    // identical state.
+    import graft.sources.{GraftCDC, GraftIVM, GraftMaintenance}
+    if (spark.conf.getOption("spark.sql.catalog.graft").isEmpty) {
+      spark.conf.set("spark.sql.catalog.graft", "graft.sources.GraftCatalog")
+      spark.conf.set("spark.sql.catalog.graft.warehouse",
+        graft.util.TempDirs.create("graft_sivm_wh_"))
+    }
+    spark.sql("CREATE NAMESPACE IF NOT EXISTS graft.suxivmdb")
+    spark.sql("DROP TABLE IF EXISTS graft.suxivmdb.t")
+    spark.sql("DROP TABLE IF EXISTS graft.suxivmdb.view")
+    spark.sql("CREATE TABLE graft.suxivmdb.t (id BIGINT, k BIGINT, v BIGINT)")
+    spark.sql("INSERT INTO graft.suxivmdb.t SELECT id, id % 8, id FROM range(0, 800)") // v2
+    spark.sql("""CREATE TABLE graft.suxivmdb.view
+                |  (k BIGINT, n BIGINT, sv BIGINT, mn BIGINT, mx BIGINT)""".stripMargin)
+    spark.sql("""INSERT INTO graft.suxivmdb.view
+                |SELECT k, count(*), sum(v), min(v), max(v)
+                |FROM graft.suxivmdb.t GROUP BY k""".stripMargin)
+    val wh = spark.conf.get("spark.sql.catalog.graft.warehouse")
+    val basePath = s"$wh/suxivmdb/t"
+    val viewPath = s"$wh/suxivmdb/view"
+    GraftIVM.bind(viewPath, GraftMaintenance.currentVersion(basePath).get)
+    val ckpt = graft.util.TempDirs.create("graft_suxivm_ckpt_")
+    val view = GraftIVM.View("graft.suxivmdb.view", Seq("k"), "n", sums = Seq("sv" -> "v"),
+      mins = Seq("mn" -> "v"), maxs = Seq("mx" -> "v"))
+    def viewState(): Map[Long, (Long, Long, Long, Long)] =
+      spark.table("graft.suxivmdb.view").collect()
+        .map(r => r.getLong(0) ->
+          ((r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4)))).toMap
+    def recompute(): Map[Long, (Long, Long, Long, Long)] =
+      spark.sql("""SELECT k, count(*), sum(v), min(v), max(v)
+                  |FROM graft.suxivmdb.t GROUP BY k""".stripMargin).collect()
+        .map(r => r.getLong(0) ->
+          ((r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4)))).toMap
+
+    // through the stream: a MAX-KILLING delete in k=3 — its max (795)
+    // goes, the runner-up (699) must surface
+    spark.sql("DELETE FROM graft.suxivmdb.t WHERE k = 3 AND v >= 700") // v3
+    GraftIVM.streamRefresh(spark, basePath, view, viewPath, ckpt).awaitTermination()
+    assert(viewState() == recompute(), "the stream must refresh MIN/MAX")
+    assert(viewState()(3L)._4 == 699L, "the killed max must become the runner-up")
+
+    // a DIRECT batch, then the crash window: the old marker comes back
+    // and the replay must land on the identical state
+    val b1 = GraftIVM.binding(viewPath).get
+    spark.sql("DELETE FROM graft.suxivmdb.t WHERE k = 6 AND v < 100") // kills k=6's min
+    val v = GraftMaintenance.currentVersion(basePath).get
+    val slice = GraftCDC.changes(spark, basePath, b1._1, Some(v))
+    assert(GraftIVM.applyBatchExactlyOnce(slice, view, viewPath, basePath).consumed > 0L)
+    val after = viewState()
+    assert(after == recompute(), "the direct batch must equal the recompute")
+    java.nio.file.Files.writeString( // simulated crash: old marker back
+      java.nio.file.Paths.get(viewPath, "_IVM_APPLIED"),
+      s"${b1._1}\t${b1._2}\n")
+    // a commit after the slice: the replay's base pin must ignore it
+    spark.sql("INSERT INTO graft.suxivmdb.t SELECT id, 6L, id FROM range(5000, 5003)")
+    assert(GraftIVM.applyBatchExactlyOnce(slice, view, viewPath, basePath).consumed > 0L,
+      "the crash-window replay recomputes from the PINNED base+view versions")
+    assert(viewState() == after,
+      "a crash-window replay must land on the identical state")
+    assert(GraftIVM.binding(viewPath).get._1 == v)
+    spark.sql("DROP TABLE graft.suxivmdb.t")
+    spark.sql("DROP TABLE graft.suxivmdb.view")
   }
 }

@@ -24,17 +24,16 @@ class ConcurrentSessionSpec extends AnyFunSuite {
   private def sortedRows(name: String): Seq[String] =
     Registry.queries(name)(spark, sf).collect().map(_.toString).toSeq.sorted
 
-  test("two copies each of five session-owning queries on 4 threads match their serial runs") {
-    val serial = names.map(n => n -> sortedRows(n)).toMap
-    val bus = spark.sparkContext.listenerBus
-    val listeners0 = bus.listeners.asScala.toSet
-    val conf0 = spark.conf.getAll
+  /** Runs two adjacent copies of each of `queries` on 4 threads, so both
+    * copies of a query overlap, and fails on any whose sorted rows differ
+    * from `serial`.
+    */
+  private def assertConcurrentMatch(queries: Seq[String], serial: Map[String, Seq[String]]): Unit = {
     val pool = Executors.newFixedThreadPool(4)
     val got =
       try {
         implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-        // both copies of a query start together, so they overlap
-        Await.result(Future.traverse(names.flatMap(n => Seq(n, n)))(n =>
+        Await.result(Future.traverse(queries.flatMap(n => Seq(n, n)))(n =>
           Future(n -> Try(sortedRows(n)))), 10.minutes)
       } finally pool.shutdown()
     val wrong = got.collect {
@@ -42,10 +41,41 @@ class ConcurrentSessionSpec extends AnyFunSuite {
         s"$n: ${r.fold(e => s"threw $e", rows => s"${rows.size} rows differ from serial ${serial(n).size}")}"
     }
     assert(wrong.isEmpty, wrong.mkString("\n"))
-    // Spark itself drops the buses of garbage-collected sessions, so the
-    // check is that no listener was added, not that the count is equal
-    val added = bus.listeners.asScala.filterNot(listeners0.contains)
+  }
+
+  /** Fails if a SparkContext listener was added since `listeners0`. Spark
+    * itself drops the buses of garbage-collected sessions, so the check is
+    * that no listener was added, not that the count is equal.
+    */
+  private def assertNoListenerAdded(listeners0: Set[AnyRef]): Unit = {
+    val added = spark.sparkContext.listenerBus.listeners.asScala.filterNot(listeners0.contains)
     assert(added.isEmpty, s"SparkContext listeners added: $added")
+  }
+
+  private def listeners(): Set[AnyRef] = spark.sparkContext.listenerBus.listeners.asScala.toSet
+
+  test("two copies each of five session-owning queries on 4 threads match their serial runs") {
+    val serial = names.map(n => n -> sortedRows(n)).toMap
+    val listeners0 = listeners()
+    val conf0 = spark.conf.getAll
+    assertConcurrentMatch(names, serial)
+    assertNoListenerAdded(listeners0)
     assert(spark.conf.getAll == conf0)
+  }
+
+  test("one q261 execution adds no SparkContext listener") {
+    spark.streams // the caller's own streaming bus is made on first use
+    val listeners0 = listeners()
+    Registry.queries("q261_store_stream_ivm")(spark, sf).collect()
+    assertNoListenerAdded(listeners0)
+  }
+
+  test("two copies each of q71 and q74 on 4 threads match a serial run and leave no catalog table") {
+    val tableQueries = Seq("q71_sql_catalog", "q74_bucketed_join")
+    val serial = tableQueries.map(n => n -> sortedRows(n)).toMap
+    assertConcurrentMatch(tableQueries, serial)
+    val left = spark.catalog.listTables().collect().map(_.name)
+      .filter(t => Seq("graft_orders_by_month", "graft_orders_b", "graft_customer_b").exists(t.startsWith))
+    assert(left.isEmpty, s"tables left in the session catalog: ${left.mkString(", ")}")
   }
 }
