@@ -51,7 +51,7 @@ object Bench {
         spark.catalog.clearCache()
         val t0 = System.nanoTime()
         val ok =
-          try { fn(spark, sfDir).count(); true }
+          try { LocalSpark.timed(spark, fn, sfDir); true }
           catch { case e: Throwable =>
             failed += name
             System.err.println(s"[bench] $name FAILED: ${e.getMessage}")

@@ -23,8 +23,9 @@ import graft.util.Det._
   *  - Dimension joins (`nation`, `region`, `customer`) are broadcast — no
   *    shuffle of the fact table.
   *  - Top-k is `orderBy.limit` → `TakeOrderedAndProject` (no full sort).
-  *  - Every ORDER BY carries a unique tiebreak so output order is total
-  *    (the oracle hash-compare needs identical row order).
+  *  - Results are unordered unless order is the result (top-k): the
+  *    oracle compares sorted content, and a terminal sort would cost a
+  *    sampling job and a range exchange per query.
   */
 object Eda {
 
@@ -36,7 +37,6 @@ object Eda {
     Tables.events(s, d)
       .groupBy("event_type")
       .agg(count(lit(1)).as("n"))
-      .orderBy(desc("n"), asc("event_type"))
 
   private val q01Sql =
     """SELECT event_type, count(*) AS n
@@ -49,7 +49,6 @@ object Eda {
     Tables.events(s, d)
       .groupBy(col("event_type"), hour(col("ts")).cast("long").as("hr"))
       .agg(count(lit(1)).as("n"))
-      .orderBy("event_type", "hr")
 
   private val q02Sql =
     """SELECT event_type, CAST(hour(ts) AS BIGINT) AS hr, count(*) AS n
@@ -68,7 +67,6 @@ object Eda {
         dsum(col("l_extendedprice") * (lit(1.0) - col("l_discount")))
           .as("sum_disc_price"),
         count(lit(1)).as("n"))
-      .orderBy("l_returnflag", "l_linestatus")
 
   private val q03Sql =
     """SELECT l_returnflag, l_linestatus,
@@ -102,7 +100,6 @@ object Eda {
     counts.withColumn("rn", row_number().over(w))
       .filter(col("rn") === 1)
       .drop("rn")
-      .orderBy("event_type")
   }
 
   private val q05Sql =
@@ -126,7 +123,6 @@ object Eda {
     Tables.events(s, d)
       .select(col("event_id"), col("user_id"),
         count(lit(1)).over(w).as("rc"))
-      .orderBy("event_id")
   }
 
   private val q06Sql =
@@ -144,7 +140,6 @@ object Eda {
     parts.reduce(_ unionByName _)
       .groupBy("l_returnflag")
       .agg(count(lit(1)).as("n"), dsum(col("l_quantity")).as("sum_qty"))
-      .orderBy("l_returnflag")
   }
 
   private val q07Sql =
@@ -171,7 +166,6 @@ object Eda {
       .join(r, col("n_regionkey") === col("r_regionkey"))
       .groupBy("r_name")
       .agg(dsum(col("o_totalprice")).as("revenue"), count(lit(1)).as("n_orders"))
-      .orderBy("r_name")
   }
 
   private val q08Sql =
@@ -195,7 +189,6 @@ object Eda {
       .join(n, col("c_nationkey") === col("n_nationkey"))
       .groupBy("n_name")
       .agg(count(lit(1)).as("n"))
-      .orderBy("n_name")
   }
 
   private val q09Sql =
@@ -229,7 +222,6 @@ object Eda {
       .select(col("n_name"),
         coalesce(col("n_cust"), lit(0L)).as("n_cust"),
         coalesce(col("n_supp"), lit(0L)).as("n_supp"))
-      .orderBy("n_name")
   }
 
   private val q89Sql =
@@ -258,7 +250,6 @@ object Eda {
         exists(arr, x => x > 5).cast("long").as("has_gt5"),
         forall(arr, x => x < 20).cast("long").as("all_lt20"),
         aggregate(slice(arr, 1, 3), lit(0L), (a, x) => a + x).as("head3_sum"))
-      .orderBy("event_id")
   }
 
   private val q91Sql =
@@ -288,7 +279,6 @@ object Eda {
           struct(col("o_totalprice"), col("o_orderkey"))).as("bottom_order"),
         bool_and(col("o_totalprice") > 0).cast("long").as("all_positive"),
         bool_or(col("o_totalprice") > 400000).cast("long").as("any_huge"))
-      .orderBy("o_orderpriority")
 
   private val q92Sql =
     """WITH ranked AS (
@@ -309,7 +299,7 @@ object Eda {
   /** UNPIVOT/melt (the inverse of q26's pivot): part's numeric metrics as
     * (key, metric, val) long-form rows via the `stack` generator — the
     * reshape every feature store needs going INTO training. Generator
-    * output, no shuffle until the final sort.
+    * output, no shuffle.
     */
   private def q93(s: SparkSession, d: String): DataFrame =
     Tables.part(s, d)
@@ -317,7 +307,6 @@ object Eda {
         """stack(2,
           |  'retailprice', cast(p_retailprice as double),
           |  'size', cast(p_size as double)) as (metric, val)""".stripMargin)
-      .orderBy("p_partkey", "metric")
 
   private val q93Sql =
     """SELECT p_partkey, 'retailprice' AS metric, CAST(p_retailprice AS DOUBLE) AS val
@@ -336,7 +325,6 @@ object Eda {
       .select(coalesce(col("o_orderpriority"), lit("<all>")).as("priority"),
         coalesce(col("o_orderstatus"), lit("<all>")).as("status"),
         col("n"), col("revenue"))
-      .orderBy("priority", "status")
 
   private val q97Sql =
     """SELECT coalesce(o_orderpriority, '<all>') AS priority,
@@ -372,7 +360,6 @@ object Eda {
           ordered.foldLeft(0.0)((acc, e) => acc + e.value))
       }
       .toDF()
-      .orderBy("user_id")
   }
 
   private val q98Sql =
@@ -404,7 +391,6 @@ object Eda {
         date_format(col("d"), "yyyy-MM-dd").as("day"),
         last(col("total"), ignoreNulls = true).over(w).as("total_filled"),
         when(col("total").isNull, 1L).otherwise(0L).as("was_missing"))
-      .orderBy("o_orderpriority", "day")
   }
 
   private val q94Sql =
@@ -476,7 +462,6 @@ object Eda {
       .select(col("event_type"), date_format(col("d"), "yyyy-MM-dd").as("day"),
         col("n"), col("ewma_fp"),
         coalesce(col("n") * 1000L > col("prev") * 2L, lit(false)).as("spike"))
-      .orderBy("event_type", "day")
   }
 
   private val q237Sql =
@@ -542,7 +527,6 @@ object Eda {
         count(lit(1)).as("n"))
       .select(col("event_type"), date_format(col("day"), "yyyy-MM-dd").as("day"),
         col("p50"), col("p95"), col("n"))
-      .orderBy("event_type", "day")
   }
 
   private val q241Sql =
@@ -614,7 +598,6 @@ object Eda {
         min(when(col("cw") >= ceil(col("tw") * 0.9), col("unit_price"))).as("wp90"),
         max(col("tw")).as("total_units"),
         count(lit(1)).as("n_lines"))
-      .orderBy("priority")
   }
 
   private val q242Sql =
@@ -692,7 +675,6 @@ object Eda {
         Window.partitionBy("ta", "tb").orderBy(abs(col("corr")).desc, col("lag").asc)))
       .select(col("ta"), col("tb"), col("lag"), col("nd"), col("corr"),
         (col("rn") === 1).as("is_best_lag"))
-      .orderBy("ta", "tb", "lag")
   }
 
   private val q245Sql =
@@ -792,7 +774,6 @@ object Eda {
       .select(least(greatest(floor(col("value") / 20), lit(0L)), lit(9L)).as("bucket"))
       .groupBy("bucket")
       .agg(count(lit(1)).as("n"))
-      .orderBy("bucket")
 
   private val q96Sql =
     """SELECT least(greatest(CAST(floor(value / 20) AS BIGINT), 0), 9) AS bucket,
@@ -826,7 +807,6 @@ object Eda {
         ((col("n") * col("sxh") - col("sx") * col("sh")) /
           (sqrt(col("n") * col("sx2") - col("sx") * col("sx")) *
             sqrt(col("n") * col("sh2") - col("sh") * col("sh")))).as("corr"))
-      .orderBy("event_type")
   }
 
   private val q100Sql =
@@ -870,7 +850,6 @@ object Eda {
           (col("n") * col("sx2") - col("sx") * col("sx"))).as("slope"))
       .select(col("event_type"), col("n"), col("slope"),
         ((col("sy") - col("slope") * col("sx")) / col("n")).as("intercept"))
-      .orderBy("event_type")
   }
 
   private val q151Sql =
@@ -894,7 +873,6 @@ object Eda {
       .join(Tables.orders(s, d), col("c_custkey") === col("o_custkey"), "left_anti")
       .groupBy("c_mktsegment")
       .agg(count(lit(1)).as("n"))
-      .orderBy("c_mktsegment")
 
   private val q10Sql =
     """SELECT c_mktsegment, count(*) AS n
@@ -911,7 +889,6 @@ object Eda {
     Tables.events(s, d)
       .filter(col("value") > 150.0 && col("event_type") === "purchase")
       .select("event_id", "user_id", "value")
-      .orderBy("event_id")
 
   private val q11Sql =
     """SELECT event_id, user_id, value FROM events
@@ -926,7 +903,6 @@ object Eda {
       .select(floor(col("l_quantity")).cast("long").as("qty_int"))
       .groupBy("qty_int")
       .agg(count(lit(1)).as("n"))
-      .orderBy("qty_int")
 
   private val q12Sql =
     """SELECT CAST(floor(l_quantity) AS BIGINT) AS qty_int, count(*) AS n
@@ -941,7 +917,6 @@ object Eda {
         year(col("o_orderdate")).cast("long").as("y"),
         month(col("o_orderdate")).cast("long").as("m"))
       .agg(count(lit(1)).as("n"), dsum(col("o_totalprice")).as("total"))
-      .orderBy("y", "m")
 
   private val q14Sql =
     """SELECT CAST(year(o_orderdate) AS BIGINT) AS y,
@@ -961,7 +936,6 @@ object Eda {
           .otherwise("active").as("kind"))
       .groupBy("tod", "kind")
       .agg(count(lit(1)).as("n"))
-      .orderBy("tod", "kind")
 
   private val q15Sql =
     """SELECT CASE WHEN hour(ts) BETWEEN 6 AND 17 THEN 'day' ELSE 'night' END AS tod,
@@ -1024,7 +998,6 @@ object Eda {
         // zero-variance guard — see Pipeline.batchAnomalies
         when(std > 0, (col("value") - mean) / std).as("z"))
       .filter(abs(col("z")) > 2.5)
-      .orderBy("event_id")
   }
 
   private val q18Sql =
@@ -1052,7 +1025,6 @@ object Eda {
         count(lit(1)).as("n"),
         dmean(col("value")).as("mean_v"),
         dstddev(col("value")).as("std_v"))
-      .orderBy("event_type")
 
   private val q19Sql =
     """SELECT event_type, count(*) AS n,
@@ -1094,7 +1066,6 @@ object Eda {
       .groupBy("event_type")
       .agg(countDistinct(col("user_id")).as("n_users"),
         count(lit(1)).as("n"))
-      .orderBy("event_type")
 
   private val q21Sql =
     """SELECT event_type, count(DISTINCT user_id) AS n_users, count(*) AS n
@@ -1109,7 +1080,6 @@ object Eda {
       .filter(col("user_id") < 20)
       .select(col("event_id"), col("user_id"),
         (col("value") - lag(col("value"), 1).over(w)).as("delta"))
-      .orderBy("event_id")
   }
 
   private val q22Sql =
@@ -1127,7 +1097,6 @@ object Eda {
       .select(col("o_orderpriority"), col("o_orderkey"), col("o_totalprice"),
         rank().over(w).cast("long").as("rnk"))
       .filter(col("rnk") <= 3)
-      .orderBy("o_orderpriority", "rnk", "o_orderkey")
   }
 
   private val q23Sql =
@@ -1153,7 +1122,6 @@ object Eda {
       .groupBy("event_type")
       .agg(sum(col("part_sum")).cast("double").as("sum_v"),
         sum(col("part_n")).as("n"))
-      .orderBy("event_type")
 
   private val q24Sql =
     """SELECT event_type,
@@ -1173,7 +1141,6 @@ object Eda {
       .select(coalesce(col("event_type"), lit("<all>")).as("event_type"),
         coalesce(col("tod"), lit("<all>")).as("tod"),
         col("n"), col("sum_v"))
-      .orderBy("event_type", "tod")
 
   private val q25Sql =
     """SELECT coalesce(event_type, '<all>') AS event_type,
@@ -1198,7 +1165,6 @@ object Eda {
         count(when(col("event_type") === "purchase", 1)).as("n_purchase"),
         count(when(col("event_type") === "signup", 1)).as("n_signup"),
         count(when(col("event_type") === "error", 1)).as("n_error"))
-      .orderBy("hr")
 
   private val q26Sql =
     """SELECT CAST(hour(ts) AS BIGINT) AS hr,
@@ -1239,7 +1205,6 @@ object Eda {
       .select(col("event_type"), col("n_users_exact"), col("n"),
         (abs(col("approx_users") - col("n_users_exact")) * 100 <=
           col("n_users_exact") * 5).as("within_bound"))
-      .orderBy("event_type")
 
   private val q27Sql =
     """SELECT event_type,
@@ -1332,7 +1297,6 @@ object Eda {
         col("v_empty"), col("est_hll"), col("est_merged"),
         (col("n_mismatch") === 0 && col("est_hll") === col("est_merged"))
           .as("merge_law_holds"))
-      .orderBy("event_type")
   }
 
   private val q248Sql = {
@@ -1406,7 +1370,6 @@ object Eda {
     val (buyers, clickers, errorers) =
       (usersOf("purchase"), usersOf("click"), usersOf("error"))
     buyers.intersect(clickers).except(errorers)
-      .orderBy("user_id")
   }
 
   private val q28Sql =
@@ -1432,7 +1395,6 @@ object Eda {
       .select(col("event_id"), col("event_type"), col("value"),
         count(lit(1)).over(wRange).as("n_within_50"),
         ntile(4).over(wTile).cast("long").as("quartile"))
-      .orderBy("event_id")
   }
 
   private val q29Sql =
@@ -1497,7 +1459,6 @@ object Eda {
     p.join(c, Seq("user_id"))
       .filter(col("c_ts") >= col("p_ts") - 600 && col("c_ts") < col("p_ts"))
       .select("user_id", "purchase_id", "click_id")
-      .orderBy("purchase_id", "click_id")
   }
 
   private val q76Sql =
@@ -1527,7 +1488,6 @@ object Eda {
         cume_dist().over(w).as("cd"),
         first(col("o_orderkey")).over(wFrame).as("cheapest_key"),
         last(col("o_orderkey")).over(wFrame).as("priciest_key"))
-      .orderBy("o_orderkey")
   }
 
   private val q77Sql =
@@ -1552,7 +1512,6 @@ object Eda {
         date_format(add_months(col("o_orderdate"), 3), "yyyy-MM-dd").as("plus_3m"),
         date_format(last_day(col("o_orderdate")), "yyyy-MM-dd").as("month_end"),
         dayofweek(col("o_orderdate")).cast("long").as("dow"))
-      .orderBy("o_orderkey")
 
   private val q78Sql =
     """SELECT o_orderkey,
@@ -1573,7 +1532,6 @@ object Eda {
         .as(Seq("k", "v")))
       .groupBy("k", "v")
       .agg(count(lit(1)).as("n"))
-      .orderBy("k", "v")
 
   private val q79Sql =
     """SELECT k, v, count(*) AS n FROM (
@@ -1611,7 +1569,6 @@ object Eda {
       .groupBy("n_name")
       .agg(dsum(col("l_extendedprice") * (lit(1.0) - col("l_discount")))
         .as("revenue"))
-      .orderBy(desc("revenue"), asc("n_name"))
 
   private val q202Sql =
     """SELECT n_name,
@@ -1643,7 +1600,6 @@ object Eda {
       .pivot("event_type", Seq("click", "view", "purchase", "signup", "error"))
       .count()
       .na.fill(0L)
-      .orderBy("hr_bucket")
 
   private val q203Sql =
     """SELECT CAST(hour(ts) % 6 AS BIGINT) AS hr_bucket,
@@ -1685,7 +1641,6 @@ object Eda {
       .select(date_format(col("cohort"), "yyyy-MM-dd").as("cohort"),
         col("offset"), col("n_active"), col("n_users"),
         expr("n_active * 10000 div n_users").as("retention_bp"))
-      .orderBy("cohort", "offset")
   }
 
   private val q218Sql =
@@ -1762,7 +1717,6 @@ object Eda {
         countDistinct(col("p_id")).as("n_purchases"),
         sum("lin_cents").as("lin_cents"),
         sum("lt_cents").as("lt_cents"))
-      .orderBy("channel")
   }
 
   private val q231Sql =
@@ -1865,7 +1819,6 @@ object Eda {
     point.join(ci, "lang")
       .select(col("lang"), col("n_docs"), col("point_fp"),
         col("lo_fp"), col("hi_fp"), col("b_used"))
-      .orderBy("lang")
   }
 
   private val q233Sql =

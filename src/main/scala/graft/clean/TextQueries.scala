@@ -21,7 +21,6 @@ object TextQueries {
   private def q30(s: SparkSession, d: String): DataFrame =
     Tables.documents(s, d)
       .select(col("doc_id"), TextOps.cleanPost(col("text")).as("cleaned"))
-      .orderBy("doc_id")
 
   private val q30Sql =
     s"""SELECT doc_id, ${TextOps.cleanPostSql("text")} AS cleaned
@@ -50,7 +49,6 @@ object TextQueries {
       .select(col("doc_id"),
         array_join(TextOps.removeStopwords(TextOps.tokens(col("text"))), " ")
           .as("body"))
-      .orderBy("doc_id")
 
   private val q32Sql =
     s"""SELECT doc_id,
@@ -68,7 +66,6 @@ object TextQueries {
         size(regexp_extract_all(col("text"), lit("[a-z0-9]+"), lit(0)))
           .cast("long").as("re_tokens"),
         length(col("text")).cast("long").as("chars"))
-      .orderBy("doc_id")
 
   private val q33Sql =
     """SELECT doc_id,
@@ -94,7 +91,6 @@ object TextQueries {
         (nStop.cast("double") / n).as("stop_ratio"),
         ((lit(1.0) - nStop.cast("double") / n) * least(n, lit(100)).cast("double") / 100.0)
           .as("quality"))
-      .orderBy("doc_id")
   }
 
   private val q34Sql =
@@ -132,7 +128,6 @@ object TextQueries {
     }
     Tables.documents(s, d)
       .select(col("doc_id"), col("lang"), pred.as("lang_pred"))
-      .orderBy("doc_id")
   }
 
   private val q35Sql = {
@@ -156,7 +151,6 @@ object TextQueries {
         Det.polyHash(col("text")).as("fp"),
         array_min(transform(TextOps.tokens(col("text")), t => Det.polyHash(t)))
           .as("min_token_hash"))
-      .orderBy("doc_id")
 
   private val q36Sql =
     s"""SELECT doc_id,
@@ -196,7 +190,6 @@ object TextQueries {
       .select(col("doc_id"),
         array_join(Porter2.stemTokens(TextOps.tokens(col("text"))), " ")
           .as("stemmed"))
-      .orderBy("doc_id")
 
   private val q49Sql = {
     val cases = stemMap.map { case (w, st) => s"WHEN '$w' THEN '$st'" }
@@ -218,7 +211,6 @@ object TextQueries {
       .filter(pmod(Det.polyHash(col("doc_id").cast("string")), lit(100)) < 20)
       .groupBy("lang")
       .agg(count(lit(1)).as("n_sampled"))
-      .orderBy("lang")
 
   private val q52Sql =
     s"""SELECT lang, count(*) AS n_sampled FROM documents
@@ -243,7 +235,6 @@ object TextQueries {
       .select(col("lang"), col("doc_id"),
         row_number().over(w).cast("long").as("draw"))
       .filter(col("draw") <= 5)
-      .orderBy("lang", "draw")
   }
 
   private val q147Sql =
@@ -271,7 +262,6 @@ object TextQueries {
         max(when(col("rn") === ceil(col("n") * 0.5), col("n_chars"))).as("p50"),
         max(when(col("rn") === ceil(col("n") * 0.9), col("n_chars"))).as("p90"),
         count(lit(1)).as("n"))
-      .orderBy("lang")
   }
 
   private val q53Sql =
@@ -300,7 +290,6 @@ object TextQueries {
       .select(col("doc_id"),
         size(split(trim(regexp_replace(prepared, " +", " ")), " "))
           .cast("long").as("n_treebank_tokens"))
-      .orderBy("doc_id")
   }
 
   private val q54Sql =
@@ -335,7 +324,6 @@ object TextQueries {
       .withColumn("rnk", row_number().over(w).cast("long"))
       .filter(col("rnk") <= 3)
       .select("doc_id", "word", "score", "rnk")
-      .orderBy("doc_id", "rnk")
   }
 
   private val q57Sql =
@@ -371,7 +359,6 @@ object TextQueries {
       .withColumn("words_per_sentence",
         when(col("n_sentences") > 0,
           floor(col("n_words") * 100 / col("n_sentences"))).otherwise(0L))
-      .orderBy("doc_id")
   }
 
   private val q103Sql =
@@ -451,7 +438,6 @@ object TextQueries {
       .select(col("lang"), col("n"), col("p50_exact"), col("p90_exact"),
         ok("le50", "lt50", 0.5).as("ok_p50"),
         ok("le90", "lt90", 0.9).as("ok_p90"))
-      .orderBy("lang")
   }
 
   private val q107Sql =
@@ -587,7 +573,6 @@ object TextQueries {
       .withColumn("extracted_len", length(col("extracted")).cast("long"))
       .withColumn("round_trip", col("extracted") === col("text"))
       .drop("text")
-      .orderBy("doc_id")
   }
 
   private val q191Sql = {
@@ -690,7 +675,6 @@ object TextQueries {
     canoned.join(groups, "canon")
       .select(col("doc_id"), col("url"), col("canon"), col("host"),
         col("n_same"), (col("doc_id") === col("first_id")).as("is_first"))
-      .orderBy("doc_id")
   }
 
   private val q195Sql = {
@@ -791,7 +775,6 @@ object TextQueries {
         coalesce(col("out_deg"), lit(0L)).as("out_deg"),
         coalesce(col("in_deg"), lit(0L)).as("in_deg"),
         coalesce(col("n_two_hop"), lit(0L)).as("n_two_hop"))
-      .orderBy("doc_id")
   }
 
   private val q196Sql =
@@ -906,7 +889,6 @@ object TextQueries {
       .select(col("lo"), col("x"), col("y"))
     tris.select(explode(array(col("lo"), col("x"), col("y"))).as("doc_id"))
       .groupBy("doc_id").agg(count(lit(1)).as("n_tri"))
-      .orderBy("doc_id")
   }
 
   private val q208Sql =
@@ -983,7 +965,6 @@ object TextQueries {
       .select(col("doc_id"),
         coalesce(col("dist"), lit(-1L)).as("dist"),
         col("dist").isNotNull.as("reached"))
-      .orderBy("doc_id")
   }
 
   private val q232Sql =
@@ -1082,7 +1063,6 @@ object TextQueries {
     val sizes = full.groupBy("component").agg(count(lit(1)).as("comp_size"))
     full.join(sizes, "component")
       .select(col("doc_id"), col("component"), col("comp_size"))
-      .orderBy("doc_id")
   }
 
   private val q234Sql = {
@@ -1172,7 +1152,6 @@ object TextQueries {
     labels.join(sizes, "lbl")
       .select(col("v").as("doc_id"), col("lbl").as("community"),
         col("community_size"))
-      .orderBy("doc_id")
   }
 
   private val q243Sql = {
@@ -1232,7 +1211,6 @@ object TextQueries {
         when(col("deg") >= 2,
           expr("10000 * 2 * coalesce(n_tri, 0) div (deg * (deg - 1))"))
           .otherwise(lit(0L)).as("lcc_bp"))
-      .orderBy("doc_id")
   }
 
   private val q244Sql =
@@ -1267,7 +1245,7 @@ object TextQueries {
     *
     * Pure per-row expressions (replace-based counting for the single-char
     * markers, one codegen'd higher-order filter for the class counts) —
-    * zero shuffles before the final sort; at 100 TB this runs at scan
+    * zero shuffles; at 100 TB this runs at scan
     * speed inside whole-stage codegen.
     */
   private def q207(s: SparkSession, d: String): DataFrame = {
@@ -1292,7 +1270,6 @@ object TextQueries {
         length(col("s")).cast("long").as("n_chars"))
       .withColumn("keep",
         col("n_repl") === 0 && col("n_ctrl") === 0 && col("n_moji") === 0)
-      .orderBy("doc_id")
   }
 
   private val q207Sql =

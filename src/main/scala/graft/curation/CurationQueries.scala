@@ -62,7 +62,6 @@ object CurationQueries {
         regexp_replace(col("text"), redactPat, "[MASK]").as("redacted"),
         size(regexp_extract_all(col("text"), lit(redactPat), lit(0)))
           .cast("long").as("n_redacted"))
-      .orderBy("doc_id")
 
   private val q110Sql =
     """SELECT doc_id,
@@ -148,7 +147,6 @@ object CurationQueries {
       .select(col("doc_id"),
         coalesce(col("n_shared"), lit(0L)).as("n_shared"),
         (coalesce(col("n_shared"), lit(0L)) > 0).as("contaminated"))
-      .orderBy("doc_id")
   }
 
   private def q112(s: SparkSession, d: String): DataFrame =
@@ -212,7 +210,6 @@ object CurationQueries {
           (col("tot_len") * 10 <= col("n_tokens") * 80) &&
           (col("max_cnt") * 5 <= col("n_tokens")) &&
           (col("n_distinct") * 10 >= col("n_tokens") * 4)).as("keep"))
-      .orderBy("doc_id")
 
   private val q113Sql =
     s"""WITH toks AS ($tokenStreamSql),
@@ -253,7 +250,6 @@ object CurationQueries {
             x => x("w")), " ").as("collapsed"),
         count(lit(1)).as("n_kept"),
         (max("n_tot") - count(lit(1))).as("n_removed"))
-      .orderBy("doc_id")
   }
 
   private val q114Sql =
@@ -295,7 +291,6 @@ object CurationQueries {
         array_join(
           transform(array_sort(collect_list(struct(col("pos"), col("w")))),
             x => x("w")), " ").as("chunk_text"))
-      .orderBy("doc_id", "chunk")
 
   private val q120Sql =
     s"""WITH toks AS ($tokenStreamSql),
@@ -392,7 +387,6 @@ object CurationQueries {
         sum((lit(100) * (col("ct") + 1) < col("cb") + col("v")).cast("long"))
           .as("n_rare"),
         min("p").as("min_p"))
-      .orderBy("doc_id")
       .localCheckpoint(true)
   }
 
@@ -560,7 +554,6 @@ object CurationQueries {
           lit(4) * expr("max_cnt * 100 div n_tokens") +
           expr("n_vocab * 100 div n_tokens")).as("score"))
       .select(col("doc_id"), col("score"), (col("score") >= 230).as("keep"))
-      .orderBy("doc_id")
 
   private val q153Sql = {
     val vocabList = modelVocab.map(w => s"'$w'").mkString(", ")
@@ -743,7 +736,7 @@ object CurationQueries {
     * absorb pairs).
     */
   private def q186(s: SparkSession, d: String): DataFrame =
-    trainedWinners(s, d).reduce(_ unionAll _).orderBy("round")
+    trainedWinners(s, d).reduce(_ unionAll _)
 
   private val q186Sql =
     "WITH " + bpeTrainSql(BpeRounds) + "\nSELECT round, a, b, n FROM (" +
@@ -773,7 +766,6 @@ object CurationQueries {
         call_function("replace", col("s"), lit("|"), lit("")).as("subtokens"))
       .select(col("w"), col("freq"), col("subtokens"),
         size(split(col("subtokens"), " ")).cast("int").as("n_subtokens"))
-      .orderBy("w")
 
   private val q158Sql =
     "WITH " + bpeTrainSql(BpeRounds) +
@@ -808,7 +800,6 @@ object CurationQueries {
           transform(array_sort(collect_list(struct(col("pos"), col("w")))),
             x => concat(x("pos").cast("string"), lit(":"), x("w"))))
           .as("spans"))
-      .orderBy("doc_id")
   }
 
   private val q199Sql =
@@ -1032,7 +1023,6 @@ object CurationQueries {
         sum(col("freq") * col("n_sub")).as("n_subtokens"))
       .select(col("source"), col("n_words"), col("n_subtokens"),
         expr("n_subtokens * 1000 div n_words").as("fanout_fp"))
-      .orderBy("source")
   }
 
   private val q163Sql = {
@@ -1100,7 +1090,6 @@ object CurationQueries {
         col("expected"),
         ((col("delta_cnt") - col("expected")) * (col("delta_cnt") - col("expected"))
           / col("expected")).as("chi2_contrib"))
-      .orderBy("dim", "category")
   }
 
   private val q166Sql =
@@ -1163,7 +1152,6 @@ object CurationQueries {
       .filter(col("rnk") <= 3)
       .select(col("source"), col("rnk").cast("long").as("rnk"), col("w"),
         col("c_sw"), col("lift_fp"))
-      .orderBy("source", "rnk")
   }
 
   private val q170Sql =
@@ -1236,7 +1224,6 @@ object CurationQueries {
         expr("r_sum div n_tokens").as("importance_fp"))
       .select(col("doc_id"), col("source"), col("importance_fp"),
         (col("importance_fp") > 1000000L).as("selected"))
-      .orderBy("doc_id")
   }
 
   private val q159Sql =
@@ -1301,7 +1288,6 @@ object CurationQueries {
         (sqrt(col("n_toks").cast("double")) / col("denom")).as("temp_weight"),
         (sqrt(col("n_toks").cast("double")) / col("denom") * col("tot_toks")
           / col("n_toks")).as("boost"))
-      .orderBy("source")
   }
 
   private val q182Sql =
@@ -1359,7 +1345,6 @@ object CurationQueries {
       .crossJoin(broadcast(docs.agg(sum("n_toks").as("tt")))) // 1-row attach
       .select(col("doc_id"), col("n_toks"),
         least(expr("cum div ((tt + 7) div 8)"), lit(7L)).as("shard"))
-      .orderBy("doc_id")
   }
 
   private val q183Sql = {
@@ -1435,7 +1420,6 @@ object CurationQueries {
       .select(col("lang"), col("doc_id"), col("weight"), col("priority"),
         col("rank"),
         greatest(col("weight"), col("tau")).as("est_w"))
-      .orderBy("lang", "rank")
   }
 
   private val q206Sql =
@@ -1495,7 +1479,6 @@ object CurationQueries {
         (col("n") < AnonK).as("risky"),
         col("n_m"),
         (col("n_m") < AnonK).as("risky_after_generalize"))
-      .orderBy("status", "priority", "day")
   }
 
   private val q215Sql =
@@ -1568,7 +1551,6 @@ object CurationQueries {
         lit(-20L) + size(filter(tArr, t => t <= col("h"))).cast("long"))
       .select(col("source_table"), col("cell"), col("n_true"), col("z"),
         greatest(lit(0L), col("n_true") + col("z")).as("n_released"))
-      .orderBy("source_table", "cell")
   }
 
   private val q235Sql = {
@@ -1820,7 +1802,6 @@ object CurationQueries {
     ulmVocabLocal(s, rows)
       .select(col("piece"), length(col("piece")).cast("long").as("piece_len"),
         col("cnt").as("n_uses"), col("fp"))
-      .orderBy("piece")
   }
 
   /** Trained-tokenizer APPLY: Viterbi-segment the corpus vocabulary with
@@ -1834,7 +1815,6 @@ object CurationQueries {
       .select(col("w"), col("freq"), col("seg").as("pieces"),
         size(split(col("seg"), " ")).cast("long").as("n_pieces"),
         col("score").as("fp_score"))
-      .orderBy("w")
   }
 
   /** DuckDB mirror of the full trainer: the same constants drive an
@@ -1990,7 +1970,7 @@ object CurationQueries {
         lit(0L).as("n_before"), col("n_erased"), lit(0L).as("n_after"))
       .unionByName(orphanLi.select(lit("audit_orphan_lineitems").as("table_name"),
         lit(0L).as("n_before"), col("n_erased"), lit(0L).as("n_after")))
-    rows.unionByName(audit).orderBy("table_name")
+    rows.unionByName(audit)
   }
 
   private val q230Sql =

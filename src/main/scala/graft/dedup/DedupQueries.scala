@@ -354,7 +354,6 @@ object DedupQueries {
         .select(col("id_a"), col("id_b"), lit(1.0).as("jaccard"),
           col("sz").as("n_inter"), col("sz").as("n_union"))
       verify(arrSelfJoin(small)).unionAll(cross).unionAll(intra)
-        .orderBy("id_a", "id_b")
     }
   }
 
@@ -417,7 +416,6 @@ object DedupQueries {
       .groupBy("text")
       .agg(min("doc_id").as("canonical_id"), count(lit(1)).as("n_copies"))
       .select("canonical_id", "n_copies")
-      .orderBy("canonical_id")
 
   private val q41Sql =
     """SELECT min(doc_id) AS canonical_id, count(*) AS n_copies
@@ -687,7 +685,6 @@ object DedupQueries {
   private def q45(s: SparkSession, d: String): DataFrame =
     Tables.documents(s, d)
       .select(col("doc_id"), simhashExpr.as("simhash"))
-      .orderBy("doc_id")
 
   private val q45Sql = {
     val terms = (0 until 32).map { i =>
@@ -786,7 +783,6 @@ object DedupQueries {
       .groupBy("label")
       .agg(count(lit(1)).as("cluster_size"))
       .select(col("label").as("canonical_id"), col("cluster_size"))
-      .orderBy("canonical_id")
 
   /** SQL mirror of [[clusterLabels]]: recursive-CTE reachability closure →
     * `labels(doc_id, label)`. Shared prefix of the q58/q154/q156/q185
@@ -870,7 +866,6 @@ object DedupQueries {
         (count(lit(1)) - 1).as("n_discarded"),
         coalesce(sum(when(col("rk") > 1, col("n_chars"))), lit(0L))
           .as("chars_removed"))
-      .orderBy("label")
   }
 
   private val q154Sql =
@@ -921,7 +916,6 @@ object DedupQueries {
       .select(col("doc_id"), col("label").as("cluster"),
         when(bkt < 80, "train").when(bkt < 90, "val").otherwise("test")
           .as("split"))
-      .orderBy("doc_id")
   }
 
   private val q156Sql =
@@ -986,7 +980,6 @@ object DedupQueries {
         coalesce(col("n_fp"), lit(0L)).as("n_fp"),
         coalesce(col("sig"), lit(7L)).as("sig"),
         expr("coalesce(n_fp, 0) * 1000 div n_kgrams").as("density_fp"))
-      .orderBy("doc_id")
   }
 
   private val q164Sql =
@@ -1324,7 +1317,6 @@ object DedupQueries {
       .select(col("id_a"), col("id_b"),
         expr("bit_count(sh_a ^ sh_b)").cast("long").as("hamming"))
       .filter(col("hamming") <= 1)
-      .orderBy("id_a", "id_b")
   }
 
   private val q81Sql = {
@@ -1536,7 +1528,6 @@ object DedupQueries {
     Tables.documents(s, d).select("doc_id")
       .join(acc, Seq("doc_id"), "left")
       .select(col("doc_id"), coalesce(col("accepted"), lit(false)).as("accepted"))
-      .orderBy("doc_id")
   }
 
   private val q129Sql = {
@@ -1626,7 +1617,6 @@ object DedupQueries {
       .select(col("doc_id"), col("n_tokens"),
         coalesce(col("dup_covered"), lit(0L)).as("dup_covered"),
         coalesce(col("n_dup_spans"), lit(0L)).as("n_dup_spans"))
-      .orderBy("doc_id")
       .localCheckpoint(true)
   }
 
@@ -1871,7 +1861,6 @@ object DedupQueries {
     Tables.documents(s, d).select("doc_id")
       .join(dropped, Seq("doc_id"), "left")
       .select(col("doc_id"), col("hit").isNull.as("keep"))
-      .orderBy("doc_id")
   }
 
   private val q176Sql =
@@ -1908,7 +1897,6 @@ object DedupQueries {
     Tables.documents(s, d).select("doc_id")
       .join(dropped, Seq("doc_id"), "left")
       .select(col("doc_id"), col("hit").isNull.as("keep"))
-      .orderBy("doc_id")
   }
 
   private val q177Sql =
@@ -1970,7 +1958,6 @@ object DedupQueries {
       .agg(count(lit(1)).as("n_chunks"),
         sum(when(col("kept"), 1L).otherwise(0L)).as("n_kept"),
         sum(when(!col("kept"), col("n_toks")).otherwise(lit(0L))).as("toks_removed"))
-      .orderBy("doc_id")
 
   private def q178(s: SparkSession, d: String): DataFrame =
     chunkDedup(Tables.documents(s, d), 32)
@@ -2014,7 +2001,6 @@ object DedupQueries {
           transform(array_sort(collect_list(struct(col("chunk"), col("ctext")))),
             x => x("ctext")), " ").as("clean_text"),
         sum(col("n_toks")).as("n_toks_kept"))
-      .orderBy("doc_id")
 
   private val q180Sql =
     s"""WITH toks AS (
@@ -2108,7 +2094,6 @@ object DedupQueries {
       .agg(count(lit(1)).as("n_chunks"),
         sum(when(col("kept"), 1L).otherwise(0L)).as("n_kept"),
         sum(when(!col("kept"), col("n_toks")).otherwise(lit(0L))).as("toks_removed"))
-      .orderBy("doc_id")
   }
 
   private val q194Sql =
@@ -2220,7 +2205,6 @@ object DedupQueries {
     val out = delta.select("doc_id")
       .join(verified, Seq("doc_id"), "left")
       .select(col("doc_id"), coalesce(col("dup"), lit(false)).as("is_dup_of_base"))
-      .orderBy("doc_id")
     (cand, out)
   }
 
@@ -2286,7 +2270,6 @@ object DedupQueries {
       .crossJoin(docs.agg(count(lit(1)).as("n_docs"))) // 1-row attach
       .select(col("threshold_pct"), col("n_dropped"),
         (col("n_docs") - col("n_dropped")).as("n_kept"))
-      .orderBy("threshold_pct")
       .localCheckpoint(true) // 5 rows; the corpus cache can drop
   }
 
@@ -2446,7 +2429,6 @@ object DedupQueries {
     own.join(labels, "doc_id")
       .join(dirty, "label")
       .select(col("doc_id"), col("label"), col("contaminated"), col("purge"))
-      .orderBy("doc_id")
   }
 
   private val q185Sql =
@@ -2536,7 +2518,6 @@ object DedupQueries {
     best.select(col("id_a"), col("id_b"), col("jw"), col("lev"), col("n_cand"),
         (col("jw") >= 0.85).as("is_match"),
         (col("id_b") - 1000000000L === col("id_a")).as("true_match"))
-      .orderBy("id_a")
   }
 
   private val q228Sql =

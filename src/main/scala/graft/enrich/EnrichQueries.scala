@@ -27,7 +27,6 @@ object EnrichQueries {
       .select(col("doc_id"),
         size(matched).cast("long").as("n_matched"),
         Sentiment.polarityExpr(toks).as("sentiment"))
-      .orderBy("doc_id")
   }
 
   private val q37Sql =
@@ -62,7 +61,6 @@ object EnrichQueries {
         Features.timeOfDay(col("ts")).as("time_of_day"),
         length(col("props")).cast("long").as("payload_len"),
         count(lit(1)).over(w).as("author_activity_count"))
-      .orderBy("event_id")
   }
 
   private val q38Sql =
@@ -102,7 +100,6 @@ object EnrichQueries {
       .agg(sum(col("contrib")).as("contrib_sum"), count(lit(1)).as("n"))
       .select(col("event_type"), col("n"),
         (col("contrib_sum").cast("double") / (100.0 * (1L << 20))).as("decayed_sum"))
-      .orderBy("event_type")
   }
 
   private val q109Sql =

@@ -39,7 +39,6 @@ object SourceQueries {
       .groupBy(col("event_type"),
         hour(to_timestamp(col("ts_str"), "yyyy-MM-dd HH:mm:ss")).cast("long").as("hr"))
       .agg(count(lit(1)).as("n"), Det.dsum(col("value")).as("sum_v"))
-      .orderBy("event_type", "hr")
   }
 
   private val q70Sql =
@@ -70,7 +69,6 @@ object SourceQueries {
       .groupBy("event_type")
       .agg(count(lit(1)).as("n"), countDistinct(col("user_id")).as("n_users"),
         Det.dsum(col("value")).as("sum_v"))
-      .orderBy("event_type")
   }
 
   private val q95Sql =
@@ -104,8 +102,7 @@ object SourceQueries {
       .agg(count(lit(1)).as("n"), Det.dsum(col("o_totalprice")).as("total"))
       .write.mode("overwrite").option("path", path)
       .saveAsTable(table)
-    s.sql(s"""SELECT y, m, n, total FROM $table
-             WHERE n > 0 ORDER BY y, m""")
+    s.sql(s"SELECT y, m, n, total FROM $table WHERE n > 0")
   }
 
   private val q71Sql =
@@ -129,7 +126,6 @@ object SourceQueries {
       .agg(corpus.as("corpus"))
       .select(col("lang"), length(col("corpus")).cast("long").as("corpus_len"),
         Det.polyHash(col("corpus")).as("corpus_hash"))
-      .orderBy("lang")
   }
 
   private val q72Sql =
@@ -177,7 +173,6 @@ object SourceQueries {
     bucketedJoin(s, d, names)
       .groupBy("c_mktsegment")
       .agg(count(lit(1)).as("n"), Det.dsum(col("o_totalprice")).as("revenue"))
-      .orderBy("c_mktsegment")
   }
 
   /** Writes orders and customer as external tables `names` (orders
@@ -216,7 +211,6 @@ object SourceQueries {
       .filter(col("event_type").isin("purchase", "signup"))
       .groupBy("event_type")
       .agg(count(lit(1)).as("n"), Det.dsum(col("value")).as("sum_v"))
-      .orderBy("event_type")
   }
 
   private val q75Sql =
@@ -253,7 +247,6 @@ object SourceQueries {
       .groupBy("o_orderpriority")
       .agg(count(lit(1)).as("n"), countDistinct(col("o_custkey")).as("n_cust"),
         Det.dsum(col("o_totalprice")).as("total"))
-      .orderBy("o_orderpriority")
   }
 
   private val q119Sql =
@@ -274,7 +267,6 @@ object SourceQueries {
       .groupBy("label")
       .agg(count(lit(1)).as("n"), min("val").as("v_min"),
         max("val").as("v_max"), sum("val").as("v_sum"))
-      .orderBy("label")
 
   private val q126Sql =
     """WITH g AS (
@@ -308,7 +300,6 @@ object SourceQueries {
       .groupBy("label")
       .agg(count(lit(1)).as("n"), min("val").as("v_min"),
         max("val").as("v_max"), sum("val").as("v_sum"))
-      .orderBy("label")
   }
 
   private val q226Sql =
@@ -341,7 +332,6 @@ object SourceQueries {
       .groupBy("label")
       .agg(count(lit(1)).as("n"), min("id").as("id_min"),
         max("id").as("id_max"), sum("val").as("v_sum"))
-      .orderBy("label")
 
   private val q249Sql =
     """WITH g AS (
@@ -385,7 +375,6 @@ object SourceQueries {
         countDistinct(col("user_id")).as("n_users"),
         sum(col("value").cast("decimal(18,4)")).cast("double").as("total"),
         min("event_id").as("first_event"))
-      .orderBy("event_type")
   }
 
   private val q250Sql =
@@ -432,7 +421,6 @@ object SourceQueries {
       .groupBy("event_type")
       .agg(count(lit(1)).as("n"), countDistinct(col("user_id")).as("n_users"),
         min("event_id").as("first_event"), max("event_id").as("last_event"))
-      .orderBy("event_type")
   }
 
   private val q252Sql =
@@ -475,7 +463,6 @@ object SourceQueries {
       .agg(count(lit(1)).as("n"), min("event_id").as("id_min"),
         max("event_id").as("id_max"),
         sum(col("value").cast("decimal(18,4)")).cast("double").as("total"))
-      .orderBy("event_type")
   }
 
   private val q253Sql =
@@ -530,7 +517,7 @@ object SourceQueries {
             |  CAST(sum(CAST(value AS DECIMAL(18,4))) AS DOUBLE) AS total
             |FROM graft.db.events_t
             |WHERE time_of_day = 'day'
-            |GROUP BY time_of_day ORDER BY time_of_day""".stripMargin)
+            |GROUP BY time_of_day""".stripMargin)
   }
 
   private val q254Sql =
@@ -571,7 +558,6 @@ object SourceQueries {
       .agg(count(lit(1)).as("n"), count(col("big_type")).as("n_big"),
         min("event_id").as("id_min"),
         sum(col("value").cast("decimal(18,4)")).cast("double").as("total"))
-      .orderBy("event_type")
   }
 
   private val q255Sql =
@@ -621,7 +607,7 @@ object SourceQueries {
          |  count(DISTINCT user_id) AS n_users,
          |  CAST(sum(CAST(value AS DECIMAL(18,4))) AS DOUBLE) AS total
          |FROM graft.db.events_tt VERSION AS OF $v""".stripMargin
-    s.sql((1 to 4).map(snap).mkString("", "\nUNION ALL\n", "\nORDER BY snap"))
+    s.sql((1 to 4).map(snap).mkString("\nUNION ALL\n"))
   }
 
   private val q256Sql = {
@@ -671,7 +657,7 @@ object SourceQueries {
             |  min(event_id) AS first_event, max(event_id) AS last_event,
             |  CAST(sum(CAST(value AS DECIMAL(18,4))) AS DOUBLE) AS total
             |FROM graft.db.events_rtbf
-            |GROUP BY event_type ORDER BY event_type""".stripMargin)
+            |GROUP BY event_type""".stripMargin)
   }
 
   private val q257Sql =
@@ -707,7 +693,6 @@ object SourceQueries {
       .groupBy("event_type")
       .agg(count(lit(1)).as("n"), sum("user_id").as("sum_users"),
         sum("event_id").as("sum_events"), avg("user_id").as("avg_user"))
-      .orderBy("event_type")
   }
 
   private val q258Sql =
@@ -761,7 +746,6 @@ object SourceQueries {
       .agg(count(lit(1)).as("n"), countDistinct(col("user_id")).as("n_users"),
         min("event_id").as("first_event"), max("event_id").as("last_event"),
         sum(col("value").cast("decimal(18,4)")).cast("double").as("total"))
-      .orderBy("_change_type", "half")
   }
 
   private val q259Sql =
@@ -838,7 +822,7 @@ object SourceQueries {
       graft.sources.GraftIVM.View("graft.db.events_ivm_view", Seq("half"), "n",
         sums = Seq("sum_users" -> "user_id", "sum_events" -> "event_id")), None)
     s.sql("""SELECT half, n, sum_users, sum_events
-            |FROM graft.db.events_ivm_view ORDER BY half""".stripMargin)
+            |FROM graft.db.events_ivm_view""".stripMargin)
   }
 
   private val q260Sql =
@@ -909,7 +893,7 @@ object SourceQueries {
             |WHERE user_id % 13 = 2""".stripMargin)
     refreshOnce()
     s.sql("""SELECT half, n, sum_users, sum_events
-            |FROM graft.db.events_sivm_view ORDER BY half""".stripMargin)
+            |FROM graft.db.events_sivm_view""".stripMargin)
   }
 
   private val q261Sql =
@@ -980,7 +964,7 @@ object SourceQueries {
         maxs = Seq("max_event" -> "event_id")),
       Some(s.table("graft.db.events_xivm")))
     s.sql("""SELECT half, n, sum_users, min_event, max_event
-            |FROM graft.db.events_xivm_view ORDER BY half""".stripMargin)
+            |FROM graft.db.events_xivm_view""".stripMargin)
   }
 
   private val q262Sql =
@@ -1016,7 +1000,6 @@ object SourceQueries {
       .groupBy("event_type")
       .agg(count(lit(1)).as("n"), countDistinct(col("user_id")).as("n_users"),
         min("event_id").as("first_event"))
-      .orderBy("event_type")
   }
 
   private val q134Sql =
@@ -1040,7 +1023,6 @@ object SourceQueries {
         sum("k").as("sum_k"),
         min("k").as("min_k"),
         max("k").as("max_k"))
-      .orderBy("event_type")
 
   private val q135Sql =
     """SELECT event_type, count(*) AS n,
@@ -1087,7 +1069,6 @@ object SourceQueries {
           .cast("long").as("p_partkey"),
         col("length").as("n_bytes"),
         Det.polyHash(col("content").cast("string")).as("fp"))
-      .orderBy("p_partkey")
   }
 
   private val q152Sql =
@@ -1133,7 +1114,6 @@ object SourceQueries {
         coalesce(sum(when(col("lang").isNull, 1L)), lit(0L)).as("null_lang"),
         coalesce(sum(when(col("source").isNull, 1L)), lit(0L)).as("null_source"),
         coalesce(Det.dsum(col("n_chars").cast("double")), lit(0.0)).as("sum_chars"))
-      .orderBy("generation")
   }
 
   private val q167Sql =

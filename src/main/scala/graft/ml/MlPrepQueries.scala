@@ -30,7 +30,6 @@ object MlPrepQueries {
         when(bucket < 80, "train").when(bucket < 90, "val").otherwise("test").as("split"))
       .groupBy("split", "lang")
       .agg(count(lit(1)).as("n"), min("doc_id").as("first_doc"))
-      .orderBy("split", "lang")
   }
 
   private val q104Sql =
@@ -63,7 +62,6 @@ object MlPrepQueries {
       .filter(col("rk") <= col("cap"))
       .groupBy("label")
       .agg(count(lit(1)).as("n_kept"), min("vec_id").as("first_kept"))
-      .orderBy("label")
   }
 
   private val q105Sql =
@@ -98,7 +96,6 @@ object MlPrepQueries {
       .select(col("vec_id"), col("dim"),
         when(col("hi") > col("lo"), (col("v") - col("lo")) / (col("hi") - col("lo")))
           .otherwise(0.0).as("scaled"))
-      .orderBy("vec_id", "dim")
   }
 
   private val q106Sql =
@@ -131,7 +128,6 @@ object MlPrepQueries {
       .groupBy("doc_id", "bucket")
       .agg(sum("sign").as("weight"))
       .filter(col("weight") =!= 0)
-      .orderBy("doc_id", "bucket")
   }
 
   private val q115Sql = {
@@ -159,7 +155,6 @@ object MlPrepQueries {
       when(col("lang") === l, 1).otherwise(0).as(s"lang_$l"))
     Tables.documents(s, d)
       .select(col("doc_id") +: cols: _*)
-      .orderBy("doc_id")
   }
 
   private val q116Sql =
@@ -196,7 +191,6 @@ object MlPrepQueries {
         when(col("p75") > col("p25"),
           (col("value") - col("p50")) / (col("p75") - col("p25")))
           .otherwise(0.0).as("scaled"))
-      .orderBy("event_id")
   }
 
   private val q117Sql =
@@ -231,7 +225,6 @@ object MlPrepQueries {
       .agg(count(lit(1)).as("n"),
         countDistinct("o_custkey").as("n_customers"),
         graft.util.Det.dsum(col("o_totalprice")).as("total"))
-      .orderBy("fold")
 
   private val q121Sql =
     """SELECT (o_orderkey * 31 + o_custkey) % 5 AS fold,

@@ -84,7 +84,6 @@ object MlTrainQueries {
       element_at(col("z"), 1).as("z0"), element_at(col("z"), 2).as("z1"),
       element_at(col("z"), 3).as("z2"), element_at(col("z"), 4).as("z3"),
       Det.seqNormSq(col("z")).as("znormsq"))
-      .orderBy("label", "src_id", "k")
   }
 
   private val q136Sql =
@@ -264,7 +263,7 @@ object MlTrainQueries {
         (0 until NumFeats).map(j => col(s"w$j")): _*)
       if (t < NumIters) w = updateWeights(step, 1, 2)
     }
-    rows.result().reduce(_ unionAll _).orderBy("iter")
+    rows.result().reduce(_ unionAll _)
   }
 
   /** Shared DuckDB mirror of [[featureFrame]]. */
@@ -346,7 +345,6 @@ object MlTrainQueries {
       .select(col("y"),
         when(marginExpr > 0, 1L).otherwise(-1L).as("pred"))
       .groupBy("y", "pred").agg(count(lit(1)).as("n"))
-      .orderBy("y", "pred")
   }
 
   private val q138Sql = {
@@ -467,7 +465,6 @@ object MlTrainQueries {
         coalesce(sum(when(col("y") === col("pred"), 1L)), lit(0L)).as("correct"))
       .select(col("slice"), col("n"), col("correct"),
         expr("correct * 10000 div n").as("accuracy_fp"))
-      .orderBy("slice")
   }
 
   private val q168Sql = {
@@ -520,7 +517,6 @@ object MlTrainQueries {
         coalesce(sum(when(col("y") === 1, 1L)), lit(0L)).as("n_pos"))
       .select(col("bin"), col("n"), col("n_pos"),
         expr("n_pos * 10000 div n").as("pos_rate_fp"))
-      .orderBy("bin")
   }
 
   private val q169Sql = {
@@ -614,7 +610,6 @@ object MlTrainQueries {
       .filter(col("rn") === 1)
       .select(col("doc_id"), col("lang").as("predicted"), col("actual"),
         (col("lang") === col("actual")).as("correct"), col("score"))
-      .orderBy("doc_id")
   }
 
   private val q205Sql = {

@@ -49,7 +49,6 @@ object MultimodalQueries {
         lower(hex(substring(col("payload"), 1, 8))).as("magic_hex"),
         Det.polyHash(col("payload").cast("string")).as("checksum"),
         col("meta.origin").as("origin"))
-      .orderBy("doc_id")
 
   private val q65Sql =
     s"""SELECT doc_id,
@@ -90,7 +89,6 @@ object MultimodalQueries {
         }
       }
       .toDF("doc_id", "fmt", "width", "height", "luma_sum")
-      .orderBy("doc_id")
   }
 
   // the 64×64 support grids cover the max dims (52×38); filters w/h trim
@@ -148,7 +146,6 @@ object MultimodalQueries {
         }
       }
       .toDF("doc_id", "frame_idx", "thumb_w", "thumb_h", "thumb_luma_sum")
-      .orderBy("doc_id", "frame_idx")
   }
 
   private val q67Sql =
@@ -235,7 +232,6 @@ object MultimodalQueries {
         }
       }
       .toDF("doc_id", "fmt", "width", "height", "within_tol", "roundtrip_stable")
-      .orderBy("doc_id")
   }
 
   private val q187Sql =
@@ -289,7 +285,6 @@ object MultimodalQueries {
       }
       .toDF("doc_id", "fmt", "rate", "n_samples", "sum_abs", "energy",
         "n_zero_cross", "peak")
-      .orderBy("doc_id")
   }
 
   private val q189Sql =
@@ -368,7 +363,6 @@ object MultimodalQueries {
       }
       .toDF("doc_id", "n_frames", "frame_idx", "fmt", "width", "height",
         "within_tol")
-      .orderBy("doc_id", "frame_idx")
   }
 
   private val q193Sql =
@@ -499,7 +493,6 @@ object MultimodalQueries {
         }
       }
       .toDF("doc_id", "n_frames", "frame_idx", "is_cut")
-      .orderBy("doc_id", "frame_idx")
   }
 
   private val q238Sql =
@@ -588,7 +581,6 @@ object MultimodalQueries {
       .toDF("doc_id", "fmt", "n_bytes", "n_units", "feat", "within_tol")
       .select(col("doc_id"), col("fmt"), col("n_units"), col("feat"),
         col("within_tol")) // n_bytes is codec-version-dependent; dropped
-      .orderBy("doc_id")
   }
 
   // lossless rows mirror in closed form (pixel/sample sums from the
@@ -690,7 +682,6 @@ object MultimodalQueries {
       .select(col("doc_id"), col("dhash"),
         coalesce(col("n_near"), lit(0L)).as("n_near"),
         (col("mn").isNull || col("mn") > col("doc_id")).as("keep"))
-      .orderBy("doc_id")
   }
 
   // closed-form mirror: pixels → 9×8 cells (integer box filter) → dHash
@@ -789,7 +780,6 @@ object MultimodalQueries {
         }
       }
       .toDF("doc_id", "frame_idx", "energy", "peak", "n_zero_cross", "active")
-      .orderBy("doc_id", "frame_idx")
   }
 
   private val q212Sql =
@@ -845,7 +835,6 @@ object MultimodalQueries {
         }
       }
       .toDF("doc_id", "variant", "width", "height", "luma_sum", "pos_sum")
-      .orderBy("doc_id", "variant")
   }
 
   // closed-form mirrors per variant: the OUTPUT-coordinate weight (x'+7y')

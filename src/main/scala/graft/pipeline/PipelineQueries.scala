@@ -39,7 +39,6 @@ object PipelineQueries {
       .groupBy("lang", "pack_id")
       .agg(count(lit(1)).as("n_docs"), sum(col("n_tok")).as("pack_tokens"),
         min("doc_id").as("first_doc"))
-      .orderBy("lang", "pack_id")
   }
 
   private val q84Sql =
@@ -122,7 +121,6 @@ object PipelineQueries {
       .join(broadcast(offsets), "pid")
       .select(col("event_id"), col("event_type"), col("value"),
         (col("offset") + col("rn") - 1).as("global_id"))
-      .orderBy("event_id")
   }
 
   private val q90Sql =
@@ -176,7 +174,6 @@ object PipelineQueries {
       .groupBy(col("user_id").as("k")).agg(count(lit(1)).as("exact"))
     est.join(exact, "k")
       .select(col("k"), col("est"), col("exact"), (col("est") - col("exact")).as("over"))
-      .orderBy("k")
       .localCheckpoint(true)
   }
 
@@ -226,7 +223,6 @@ object PipelineQueries {
       .groupBy("source", "pct")
       .agg(count(lit(1)).as("n_in"), sum("kept").as("n_kept"),
         sum(when(col("kept") === 1, col("n_chars")).otherwise(0L)).as("chars_kept"))
-      .orderBy("source")
   }
 
   private val q118Sql = {
@@ -328,7 +324,6 @@ object PipelineQueries {
       .join(budget, "lang")
       .select(col("lang"), col("doc_id"), col("n_tokens"), col("quality_fp"),
         col("cum_tokens"), (col("cum_tokens") <= col("budget")).as("kept"))
-      .orderBy("lang", "cum_tokens", "doc_id")
   }
 
   private val q155Sql =
@@ -381,7 +376,6 @@ object PipelineQueries {
       .select(col("code"), col("source"), col("n"),
         (length(col("source")) > 4).as("range_pred_on_string"),
         (col("code") > 0).as("code_contiguous"))
-      .orderBy("code")
   }
 
   private val q172Sql =
@@ -436,7 +430,6 @@ object PipelineQueries {
         // Spark's non-ANSI int arithmetic would wrap silently
         when(col("k_eff") < K, col("exact_distinct"))
           .otherwise(expr(s"${(K - 1).toLong * P} div h_k")).as("estimate"))
-      .orderBy("lang")
   }
 
   private val q173Sql =
@@ -510,7 +503,6 @@ object PipelineQueries {
             === expr(s"${(K - 1).toLong * P} div h_k_merged")).as("est_agree"),
         (col("k_eff_full") === col("k_eff_merged") &&
           col("h_k_full") === col("h_k_merged")).as("merge_law_holds"))
-      .orderBy("lang")
   }
 
   private val q240Sql = {
@@ -692,7 +684,6 @@ object PipelineQueries {
       .unionAll(row(3, "decontam", s3, noShards))
       .unionAll(row(4, "token_budget", s4, noShards))
       .unionAll(row(5, "shard_pack", s4, sharded))
-      .orderBy("stage")
       .localCheckpoint(true) // 6 rows; the caches can go
   }
 
@@ -830,7 +821,6 @@ object PipelineQueries {
         expr(s"m_sum * ((u_n - 1) * $JP div tau) div u_n").as("join_est"))
       .withColumn("err_bp",
         expr("abs(join_est - true_size) * 10000 div true_size"))
-      .orderBy("u_n")
   }
 
   private val q216Sql =
@@ -918,7 +908,6 @@ object PipelineQueries {
         expr(s"coalesce(n_eqdepth, 0) * ${RbB * 10000L} div n_tot").as("skew_bp_depth"),
         coalesce(col("n_eqwidth"), lit(0L)).as("n_eqwidth"),
         expr(s"coalesce(n_eqwidth, 0) * ${RbB * 10000L} div n_tot").as("skew_bp_width"))
-      .orderBy("bucket")
   }
 
   private val q217Sql =

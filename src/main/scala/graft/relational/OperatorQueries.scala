@@ -53,7 +53,6 @@ object OperatorQueries {
       .filter(col("side") === 1)
       .select(col("purchase_id"), col("user_id"), col("ts_sec"),
         col("asof_click"), col("asof_value"))
-      .orderBy("purchase_id")
   }
 
   private val q82Sql =
@@ -109,7 +108,6 @@ object OperatorQueries {
         posexplode(col("top")).as(Seq("pos", "t")))
       .select(col("o_orderpriority"), (col("pos") + 1).cast("long").as("rank"),
         col("t.key").as("o_orderkey"), col("t.price").as("o_totalprice"))
-      .orderBy("o_orderpriority", "rank")
   }
 
   private val q83Sql =
@@ -173,7 +171,6 @@ object OperatorQueries {
       .join(dim, col("l_suppkey") === col("s_suppkey"), "left_semi")
       .groupBy("l_returnflag")
       .agg(count(lit(1)).as("n"), graft.util.Det.dsum(col("l_quantity")).as("sum_qty"))
-      .orderBy("l_returnflag")
   }
 
   private val q87Sql =
@@ -211,7 +208,7 @@ object OperatorQueries {
   }
 
   private def q88(s: SparkSession, d: String): DataFrame =
-    scd2Frame(s, d).orderBy("user_id", "version")
+    scd2Frame(s, d)
 
   private val q88Sql =
     """WITH ev AS (
@@ -267,7 +264,6 @@ object OperatorQueries {
       .agg(count(lit(1)).as("n"),
         min("px").as("pk_lo"), max("px").as("pk_hi"),
         min("sy").as("sp_lo"), max("sy").as("sp_hi"))
-      .orderBy("zbucket")
   }
 
   private val q124Sql = {
@@ -349,7 +345,6 @@ object OperatorQueries {
       .select(regexp_extract(col("path"), "([^/]+\\.parquet)(/|$)", 1).as("file"),
         col("pn"))
       .groupBy("file").agg(sum("pn").as("n"))
-      .orderBy("file")
   }
 
   private val q127Sql =
@@ -374,7 +369,6 @@ object OperatorQueries {
         date_format(col("session_window.start"), "yyyy-MM-dd HH:mm:ss").as("s_start"),
         date_format(col("session_window.end"), "yyyy-MM-dd HH:mm:ss").as("s_end"),
         col("n_events"))
-      .orderBy("user_id", "s_start")
 
   private val q128Sql =
     """WITH ev AS (
@@ -419,7 +413,6 @@ object OperatorQueries {
         length(col("seq")).cast("long").as("n_events"),
         size(regexp_extract_all(col("seq"), lit("v[^p]*p"), lit(0)))
           .cast("long").as("n_funnel_runs"))
-      .orderBy("user_id")
 
   private val q130Sql =
     """WITH seqs AS (
@@ -454,7 +447,6 @@ object OperatorQueries {
       .unionAll(profile("o_custkey"))
       .unionAll(profile("o_orderstatus"))
       .unionAll(profile("o_orderpriority"))
-      .orderBy("column")
   }
 
   private val q131Sql = {
@@ -600,7 +592,6 @@ object OperatorQueries {
         when(col("op") === "U", "updated")
           .when(col("op") === "I", "inserted")
           .otherwise("base").as("src"))
-      .orderBy("key")
   }
 
   private val q143Sql =
@@ -671,7 +662,6 @@ object OperatorQueries {
       .reduce(_ unionByName _)
       .select(col("contract"), col("n_checked"), col("n_violations"),
         (col("n_violations") === 0).as("passed"))
-      .orderBy("contract")
   }
 
   private val q174Sql =
@@ -729,7 +719,6 @@ object OperatorQueries {
         (col("valid_to_sec").isNull || col("valid_to_sec") > col("as_of_sec")))
       .select(col("user_id"), col("version"), col("state"),
         col("valid_from_sec"), col("as_of_sec"))
-      .orderBy("user_id")
   }
 
   private val q175Sql =
@@ -814,7 +803,6 @@ object OperatorQueries {
           .otherwise("plain"))
       .select("column", "n", "n_distinct", "n_runs", "plain_bytes",
         "dict_bytes", "rle_bytes", "best_encoding")
-      .orderBy("column")
   }
 
   private val q200Sql = {
@@ -916,7 +904,6 @@ object OperatorQueries {
       .select(col("key"), col("val_c"),
         coalesce(col("n_ops"), lit(0L)).as("n_ops"),
         col("lsn").as("last_lsn"))
-      .orderBy("key")
   }
 
   private val q211Sql =
@@ -1004,7 +991,6 @@ object OperatorQueries {
         (coalesce(col("v_incr"), lit(0L)) === coalesce(col("v_full"), lit(0L)) &&
           coalesce(col("n_incr"), lit(0L)) === coalesce(col("n_full"), lit(0L)))
           .as("algebra_holds"))
-      .orderBy("nk")
   }
 
   private val q220Sql =
@@ -1092,7 +1078,6 @@ object OperatorQueries {
       .withColumn("salt_n",
         when(col("n_keys") > 8 && col("skew_x1000") >= 2000,
           expr("(skew_x1000 + 999) div 1000")).otherwise(lit(0L)))
-      .orderBy("table_name", "key_col")
   }
 
   private val q239Sql = {

@@ -14,7 +14,7 @@ import graft.{QueryDef, Tables}
   * deliberately stringified columns, exactly like the original.
   *
   * Scale: pure per-row predicates and casts — fully pushed/codegen'd, no
-  * shuffle except the final presentation sort.
+  * shuffle.
   */
 object ServeQueries {
 
@@ -43,7 +43,6 @@ object ServeQueries {
         // so the conversion is single-rounding in both engines (Det).
         expr("try_cast(v_str as decimal(38,9))").cast("double").as("v_num"),
         expr("try_cast(k_str as decimal(38,9))").cast("double").as("k_num"))
-      .orderBy("event_id")
   }
 
   private val q39Sql =
@@ -70,7 +69,6 @@ object ServeQueries {
         to_json(struct(col("event_type"), col("user_id"))).as("js"))
       .withColumn("user_back",
         expr("try_cast(get_json_object(js, '$.user_id') as bigint)"))
-      .orderBy("event_id")
 
   private val q40Sql =
     """SELECT event_id,

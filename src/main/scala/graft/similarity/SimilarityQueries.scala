@@ -58,7 +58,6 @@ object SimilarityQueries {
         cosinePre(Det.seqDot(col("va"), col("vb")),
           col("norm_a"), col("norm_b")).as("cos"))
       .filter(col("cos") >= 0.4)
-      .orderBy("id_a", "id_b")
   }
 
   private val q46Sql =
@@ -89,7 +88,6 @@ object SimilarityQueries {
           col("q_norm"), col("c_norm")).as("cos"))
       .withColumn("rank", row_number().over(w).cast("long"))
       .filter(col("rank") <= 5)
-      .orderBy("q_id", "rank")
   }
 
   private val q47Sql =
@@ -126,7 +124,6 @@ object SimilarityQueries {
           col("q_norm"), col("c_norm")).as("cos"))
       .withColumn("rank", row_number().over(w).cast("long"))
       .filter(col("rank") <= 3)
-      .orderBy("q_id", "rank")
   }
 
   private val q48Sql =
@@ -173,7 +170,7 @@ object SimilarityQueries {
         lit(0.0), (acc, x) => acc + x) / count(lit(1))).as("mean_v"))
 
   private def q55(s: SparkSession, d: String): DataFrame =
-    centroidFrame(s, d).orderBy("label", "dim")
+    centroidFrame(s, d)
 
   private val q55Sql =
     """WITH expl AS (
@@ -214,7 +211,6 @@ object SimilarityQueries {
     val w = Window.partitionBy("vec_id").orderBy(asc("d2"), asc("c_label"))
     d2.withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
       .select(col("vec_id"), col("c_label").as("label_assigned"), col("d2"))
-      .orderBy("vec_id")
   }
 
   private val q86Sql =
@@ -329,7 +325,6 @@ object SimilarityQueries {
       .filter(col("xa") < col("xb"))
       .select(col("xa").as("id_a"), col("xb").as("id_b"), col("cos"))
     cross.unionByName(within)
-      .orderBy("id_a", "id_b")
   }
 
   private val q80Sql = {
@@ -418,7 +413,6 @@ object SimilarityQueries {
       .select(col("vec_id"), col("j"), col("m.code_id").as("code_id"))
     chosen.groupBy("j", "code_id")
       .agg(count(lit(1)).as("n"))
-      .orderBy("j", "code_id")
   }
 
   private val q133Sql =
@@ -515,7 +509,6 @@ object SimilarityQueries {
        }).distinct()
     e.join(dropped, Seq("vec_id"), "left_anti")
       .select(col("vec_id"), col("label").cast("long").as("label"))
-      .orderBy("vec_id")
   }
 
   /** RP-LSH candidate pairs WITHIN a cluster: the q80 bands with the band
@@ -609,7 +602,6 @@ object SimilarityQueries {
         cosinePre(Det.seqDot(col("qe"), col("embedding")),
           col("q_norm"), col("norm")).as("cos"))
       .withColumn("final_rank", row_number().over(finW).cast("long"))
-      .orderBy("final_rank")
       .localCheckpoint(true)
   }
 
@@ -679,7 +671,6 @@ object SimilarityQueries {
         element_at(col("codes"), 4).as("c3"),
         aggregate(col("codes"), lit(0L), (a, b) => a + b).as("code_sum"),
         Det.seqNormSq(diffs).as("err2"))
-      .orderBy("vec_id")
   }
 
   private val q157Sql =
@@ -756,7 +747,6 @@ object SimilarityQueries {
         coalesce(sum(when(col("hit_id").isNotNull, 1L)), lit(0L)).as("n_hit"))
       .select(col("q_id"), col("n_exact"), col("n_hit"),
         expr("n_hit * 100 div n_exact").as("recall_pct"))
-      .orderBy("q_id")
   }
 
   private val q160Sql =
@@ -929,7 +919,6 @@ object SimilarityQueries {
       .select(col("np"), col("q_id"), col("n_exact"), col("n_hit"),
         expr("n_hit * 100 div n_exact").as("recall_pct"))
       .join(nCand, Seq("np", "q_id"))
-      .orderBy("np", "q_id")
   }
 
   private val q223Sql = {
@@ -1063,7 +1052,6 @@ object SimilarityQueries {
       .select(col("label"), col("n"), col("inertia"),
         (col("inertia") / col("n")).as("mean_inertia"), col("sep2_min"),
         (col("sep2_min") > col("inertia") / col("n")).as("well_separated"))
-      .orderBy("label")
   }
 
   private val q162Sql =
@@ -1135,7 +1123,6 @@ object SimilarityQueries {
     val ynormsq = (0 until 16).map(i => col(s"y$i") * col(s"y$i")).reduce(_ + _)
     proj.select(col("vec_id"), col("y0"), col("y1"), col("y2"), col("y3"),
       ynormsq.as("ynormsq"))
-      .orderBy("vec_id")
   }
 
   private val q165Sql = {
@@ -1195,7 +1182,6 @@ object SimilarityQueries {
       .select(col("label"), col("dim"), col("n_old"), col("n_new"),
         col("mean_old"), col("mean_merged"),
         (col("mean_merged") - col("mean_old")).as("drift"))
-      .orderBy("label", "dim")
   }
 
   private val q171Sql =
@@ -1376,7 +1362,6 @@ object SimilarityQueries {
       .withColumn("rank", row_number().over(wE).cast("long"))
       .filter(col("rank") <= 10)
       .select("q_id", "rank", "vec_id", "cos")
-      .orderBy("q_id", "rank")
   }
 
   /** The shared SQL mirror of [[pqIndex]] — the WITH-chain body through
@@ -1509,7 +1494,6 @@ object SimilarityQueries {
       .withColumn("rank", row_number().over(wE).cast("long"))
       .filter(col("rank") <= 3)
       .select("q_id", "rank", "vec_id", "cos")
-      .orderBy("q_id", "rank")
   }
 
   private val q190Sql =
@@ -1601,7 +1585,6 @@ object SimilarityQueries {
     val w = Window.partitionBy("qid").orderBy(desc("score_fp"), asc("doc_id"))
     byQuery.withColumn("rank", row_number().over(w).cast("long"))
       .filter(col("rank") <= Bm25K)
-      .orderBy("qid", "rank")
   }
 
   private val q209Sql = {
@@ -1691,7 +1674,6 @@ object SimilarityQueries {
       .select(col("qid"), col("dcg_fp"), col("idcg_fp"),
         expr("CASE WHEN idcg_fp = 0 THEN 10000 ELSE (dcg_fp * 10000) div idcg_fp END")
           .as("ndcg_bp"))
-      .orderBy("qid")
   }
 
   private val q210Sql = {
@@ -1780,7 +1762,6 @@ object SimilarityQueries {
         array_join(slice(graft.clean.TextOps.tokens(col("text")),
           (col("start") + 1).cast("int"), lit(2 * SnipHalf + 1)), " ").as("snippet"),
         col("hits"), col("start"))
-      .orderBy("qid", "rank")
   }
 
   private val q219Sql = {
@@ -1913,7 +1894,7 @@ object SimilarityQueries {
         .localCheckpoint(true)
       sel = sel.unionByName(pick).localCheckpoint(true)
     }
-    sel.orderBy("qid", "mmr_rank")
+    sel
   }
 
   private val q236Sql = {
@@ -2007,7 +1988,6 @@ object SimilarityQueries {
       .filter(col("fused_rank") <= 5)
       .select(col("qid"), col("fused_rank"), col("doc_id"),
         col("r_lex"), col("r_dense"), col("rrf_fp"))
-      .orderBy("qid", "fused_rank")
   }
 
   private val q247Sql =

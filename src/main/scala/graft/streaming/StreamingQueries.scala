@@ -44,7 +44,6 @@ object StreamingQueries {
     s.table(sinkName)
       .select(date_format(col("window.start"), "yyyy-MM-dd HH:mm:ss").as("win_start"),
         col("event_type"), col("n"), col("sum_v"))
-      .orderBy("win_start", "event_type")
   }
 
   private val q60Sql =
@@ -66,7 +65,6 @@ object StreamingQueries {
       Some((batch, _) => Pipeline.upsertBatch(s, batch, dir)))
     s.read.parquet(dir)
       .select("user_id", "event_id", "value", "pop", "time_of_day")
-      .orderBy("user_id")
   }
 
   private val q61Sql =
@@ -141,7 +139,6 @@ object StreamingQueries {
       .select("user_id", "event_id", "value", "pop", "time_of_day")
       .crossJoin(broadcast(
         s.range(1).select(lit(seenBatchIds.size().toLong).as("n_batches"))))
-      .orderBy("user_id")
   }
 
   private val q227Sql =
@@ -197,7 +194,6 @@ object StreamingQueries {
       .crossJoin(broadcast(nRows))
       .select(col("user_id"), col("event_id"), col("value"), col("pop"),
         col("time_of_day"), col("n_rows"))
-      .orderBy("user_id")
   }
 
   private val q251Sql =
@@ -222,7 +218,6 @@ object StreamingQueries {
     val eventsSeq = Pipeline.collectEvents(s, d, 1000)
     Pipeline.runSliced(s, eventsSeq, 250, "graft_q62_sink")(
       ds => Pipeline.authorCounts(ds).toDF())(None)
-      .orderBy("event_id")
   }
 
   private val q62Sql =
@@ -269,7 +264,6 @@ object StreamingQueries {
     s.read.parquet(dir)
       .select(col("event_type"), col("n"),
         col("sum_v_dec").cast("double").as("sum_v"))
-      .orderBy("event_type")
   }
 
   private val q108Sql =
@@ -346,7 +340,6 @@ object StreamingQueries {
     s.read.parquet(dir)
       .select("user_id", "version", "state", "valid_from_sec",
         "valid_to_sec", "is_current")
-      .orderBy("user_id", "version")
   }
 
   private val q201Sql =
@@ -380,7 +373,6 @@ object StreamingQueries {
     val eventsSeq = Pipeline.collectEvents(s, d, 1000)
     Pipeline.runSliced(s, eventsSeq, 250, "graft_q102_sink")(
       ds => Pipeline.authorCountsTws(ds).toDF())(None)
-      .orderBy("event_id")
   }
 
   /** Batch-local anomaly detection (ST4/M2): Z-scores computed per
@@ -396,7 +388,6 @@ object StreamingQueries {
         Pipeline.batchAnomalies(batch, id).write.mode("append").parquet(dir)))
     s.read.parquet(dir)
       .select("batch_id", "event_id", "user_id", "value", "z")
-      .orderBy("event_id")
   }
 
   private val q63Sql =
@@ -440,7 +431,7 @@ object StreamingQueries {
     slices.foreach { sl => stream.addData(sl); q.processAllAvailable() }
     q.stop(); q.awaitTermination()
     TempDirs.delete(ckpt)
-    s.table("graft_q64_sink").orderBy("event_id")
+    s.table("graft_q64_sink")
   }
 
   private val q64Sql =
@@ -488,7 +479,7 @@ object StreamingQueries {
     slices.foreach { sl => stream.addData(sl); q.processAllAvailable() }
     q.stop(); q.awaitTermination()
     TempDirs.delete(ckpt)
-    s.table("graft_q101_sink").orderBy("event_id")
+    s.table("graft_q101_sink")
   }
 
   private val q101Sql =
@@ -512,7 +503,6 @@ object StreamingQueries {
       .agg(max(struct(col("n_events"), col("n_sessions"))).as("fin"))
       .select(col("user_id"), col("fin.n_sessions").as("n_sessions"),
         col("fin.n_events").as("n_events"))
-      .orderBy("user_id")
   }
 
   private val q68Sql =
@@ -577,7 +567,6 @@ object StreamingQueries {
     TempDirs.delete(ckpt)
     s.table("graft_q69_sink")
       .select(col("p_user").as("user_id"), col("purchase_id"), col("click_id"))
-      .orderBy("purchase_id", "click_id")
   }
 
   private val q69Sql =
@@ -669,7 +658,6 @@ object StreamingQueries {
     s.table("graft_q146_sink")
       .filter(col("p_user") =!= -999L)
       .select(col("p_user").as("user_id"), col("purchase_id"), col("click_id"))
-      .orderBy("purchase_id", "click_id")
   }
 
   private val q146Sql =
@@ -710,7 +698,7 @@ object StreamingQueries {
     q.processAllAvailable()
     q.stop(); q.awaitTermination()
     TempDirs.delete(ckpt)
-    s.table(sinkName).orderBy("dim_name")
+    s.table(sinkName)
   }
 
   private val q123Sql =
@@ -773,7 +761,6 @@ object StreamingQueries {
         col("user_id"), col("n"))
       .withColumn("rank", row_number().over(w).cast("long"))
       .filter(col("rank") <= 3)
-      .orderBy("win_start", "rank")
   }
 
   private val q214Sql =
@@ -823,7 +810,6 @@ object StreamingQueries {
       .agg(count(lit(1)).as("n_events"),
         sum(when(col("late_s") > col("delay_s"), 1L).otherwise(0L)).as("n_dropped"))
       .withColumn("drop_bp", expr("n_dropped * 10000 div n_events"))
-      .orderBy("delay_s")
   }
 
   private val q222Sql =
@@ -896,7 +882,6 @@ object StreamingQueries {
         date_format(col("session_window.start"), "yyyy-MM-dd HH:mm:ss").as("s_start"),
         date_format(col("session_window.end"), "yyyy-MM-dd HH:mm:ss").as("s_end"),
         col("n_events"))
-      .orderBy("user_id", "s_start")
   }
 
   private val q229Sql =

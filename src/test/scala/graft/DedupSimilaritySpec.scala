@@ -189,7 +189,7 @@ class DedupSimilaritySpec extends AnyFunSuite {
 
   test("q129 streaming LSH filter is batch-boundary independent") {
     def run(n: Int) = graft.dedup.DedupQueries.q129WithSlices(spark, sf, n)
-      .collect().map(r => (r.getLong(0), r.getBoolean(1))).toSeq
+      .collect().map(r => (r.getLong(0), r.getBoolean(1))).toSeq.sortBy(_._1)
     val threeBatches = run(3)
     val oneBatch = run(1) // degenerate: everything in a single micro-batch
     assert(threeBatches == oneBatch)
@@ -213,7 +213,7 @@ class DedupSimilaritySpec extends AnyFunSuite {
     val docs = (nearDup ++ diverse).toDF("doc_id", "lang", "arr")
     def run(cap: Int) =
       graft.dedup.DedupQueries.jaccardPairs(docs, 9, 10, cap, Some(docs.select("lang")))
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq.sorted
     val capped = run(50)      // block of 200 > 50 → prefix-posting path
     val uncapped = run(1000000) // all-pairs path
     assert(capped == uncapped, "routing must not change results")
@@ -257,7 +257,7 @@ class DedupSimilaritySpec extends AnyFunSuite {
       .jaccardPairs(docs, 9, 10, cap, Some(docs.select("lang")))
       .collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getLong(3), r.getLong(4)))
-      .toSeq
+      .toSeq.sortBy(t => (t._1, t._2))
     val capped = run(5) // 30-doc block > 5 → collapse + prefix path
     assert(capped == expected, "capped pair list must equal brute force")
     assert(run(1000000) == expected, "uncapped pair list must equal brute force")
@@ -331,7 +331,7 @@ class DedupSimilaritySpec extends AnyFunSuite {
     } yield b._1).toSet
     val expected = es.map(_._1).filterNot(dropped).sorted.toSeq
     val got = Registry.queries("q141_semantic_dedup")(spark, sf).collect()
-      .map(_.getLong(0)).toSeq
+      .map(_.getLong(0)).sorted.toSeq
     assert(got == expected)
   }
 
@@ -380,11 +380,11 @@ class DedupSimilaritySpec extends AnyFunSuite {
     // cap = 50 < 120 forces the gate; exact duplicates share every band, so
     // the LSH route keeps recall 1 here: min id per duplicate group survives
     val gated = SimilarityQueries.semanticDedup(e, tau = 0.42, cap = 50)
-      .collect().map(_.getLong(0)).toSeq
+      .collect().map(_.getLong(0)).toSeq.sorted
     assert(gated == (0 until 40).map(_ * 3L))
     // and with the cap above the cluster size, the plain path agrees
     val plain = SimilarityQueries.semanticDedup(e, tau = 0.42, cap = 1000)
-      .collect().map(_.getLong(0)).toSeq
+      .collect().map(_.getLong(0)).toSeq.sorted
     assert(plain == gated)
   }
 
@@ -672,7 +672,7 @@ class DedupSimilaritySpec extends AnyFunSuite {
     val t3 = (100 until 140).map(i => s"w$i").mkString(" ")
     val docs = Seq((0L, t0), (1L, t0), (2L, t2), (3L, t3)).toDF("doc_id", "text")
     val got = dedup.DedupQueries.chunkDedup(docs, 32).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSeq
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSeq.sortBy(_._1)
     assert(got == Seq(
       (0L, 2L, 2L, 0L),   // keeper of both of its chunks
       (1L, 2L, 0L, 40L),  // exact copy: both chunks removed, 40 tokens
@@ -685,7 +685,7 @@ class DedupSimilaritySpec extends AnyFunSuite {
   }
 
   test("q179 threshold curve: monotone, conserving, and q176-consistent at 0.9") {
-    val rows = Registry.queries("q179_threshold_curve")(spark, sf).collect()
+    val rows = Registry.queries("q179_threshold_curve")(spark, sf).collect().sortBy(_.getLong(0))
     assert(rows.map(_.getLong(0)).toSeq == Seq(50L, 60L, 70L, 80L, 90L))
     val drops = rows.map(_.getLong(1))
     assert(drops.zip(drops.tail).forall { case (a, b) => a >= b },
@@ -711,9 +711,9 @@ class DedupSimilaritySpec extends AnyFunSuite {
       .map(r => r.getLong(0) -> r.getLong(2)).toMap
     assert(stats(1L) == 0L && stats(2L) == 0L) // would vanish from q180
     val clean = Registry.queries("q180_chunk_clean")(spark, sf).collect()
-      .map(r => (r.getLong(0), r.getString(1), r.getLong(2)))
+      .map(r => (r.getLong(0), r.getString(1), r.getLong(2))).sortBy(_._1)
     val ledger = Registry.queries("q178_chunk_dedup")(spark, sf).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSeq
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSeq.sortBy(_._1)
     // q180 emits exactly the docs whose n_kept > 0, and the kept token
     // count matches the cleaned text's token count
     assert(clean.map(_._1).toSeq == ledger.filter(_._3 > 0).map(_._1))
@@ -986,7 +986,7 @@ class DedupSimilaritySpec extends AnyFunSuite {
     }.sortBy(t => (t._1, t._6))
     val got = Registry.queries("q236_mmr_rerank")(spark, TestSpark.sf).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4), r.getLong(5)))
-      .toSeq
+      .toSeq.sortBy(t => (t._1, t._6))
     assert(got == expected, s"MMR replay mismatch:\n got=$got\n exp=$expected")
     // diversification actually bites: some pick differs from pure-relevance order
     val pureRel = bm.groupBy(_._1).toSeq.flatMap { case (qid, rows) =>
@@ -1024,7 +1024,7 @@ class DedupSimilaritySpec extends AnyFunSuite {
     }.sortBy(t => (t._1, t._2))
     val got = Registry.queries("q247_rrf_fusion")(spark, TestSpark.sf).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
-        r.getLong(4), r.getLong(5))).toSeq
+        r.getLong(4), r.getLong(5))).toSeq.sortBy(t => (t._1, t._2))
     assert(got == expected, s"RRF replay mismatch (first got=${got.headOption})")
     // fusion bites: some fused top-5 ordering differs from pure lexical order
     assert(got.exists(g => g._2 != g._4), "RRF never reordered — dense leg inert")

@@ -112,7 +112,7 @@ class EdaSpec extends AnyFunSuite {
     }.sortBy(t => (t._1, t._2))
     val got = Registry.queries("q237_ewma_chart")(spark, TestSpark.sf).collect()
       .map(r => (r.getString(0), r.getString(1), r.getLong(2), r.getLong(3), r.getBoolean(4)))
-      .toSeq
+      .toSeq.sortBy(t => (t._1, t._2))
     assert(got == expected, s"EWMA replay mismatch (first got=${got.headOption})")
     // smoothing is between the extremes: ewma stays within [min,max]·1000 per key
     got.groupBy(_._1).foreach { case (_, rows) =>
@@ -137,7 +137,7 @@ class EdaSpec extends AnyFunSuite {
     }.sortBy(t => (t._1, t._2))
     val got = Registry.queries("q241_rolling_percentiles")(spark, TestSpark.sf).collect()
       .map(r => (r.getString(0), r.getString(1), r.getDouble(2), r.getDouble(3), r.getLong(4)))
-      .toSeq
+      .toSeq.sortBy(t => (t._1, t._2))
     assert(got == expected, s"rolling percentile mismatch (first got=${got.headOption})")
     // p95 dominates p50 everywhere — the tail is actually a tail
     got.foreach(r => assert(r._4 >= r._3, s"p95 < p50 at $r"))
@@ -164,7 +164,7 @@ class EdaSpec extends AnyFunSuite {
     }.sortBy(_._1)
     val got = Registry.queries("q242_weighted_percentiles")(spark, TestSpark.sf).collect()
       .map(r => (r.getString(0), r.getDouble(1), r.getDouble(2), r.getLong(3), r.getLong(4)))
-      .toSeq
+      .toSeq.sortBy(_._1)
     assert(got == expected, s"weighted percentile mismatch (first got=${got.headOption})")
     // weighting bites: at least one group's weighted p50 differs from unweighted
     val unweighted = li.groupBy(r => pri(r._1)).map { case (p, rows) =>
@@ -208,7 +208,7 @@ class EdaSpec extends AnyFunSuite {
     }.sortBy(t => (t._1, t._2, t._3))
     val got = Registry.queries("q245_leadlag_corr")(spark, TestSpark.sf).collect()
       .map(r => (r.getString(0), r.getString(1), r.getLong(2), r.getLong(3),
-        r.getDouble(4), r.getBoolean(5))).toSeq
+        r.getDouble(4), r.getBoolean(5))).toSeq.sortBy(t => (t._1, t._2, t._3))
     assert(got == withBest, s"lead-lag mismatch (first got=${got.headOption})")
     got.groupBy(g => (g._1, g._2)).foreach { case (k, rows) =>
       assert(rows.count(_._6) == 1, s"pair $k must flag exactly one best lag")

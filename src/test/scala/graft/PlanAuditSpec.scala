@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project, Sort}
 import org.apache.spark.sql.graft.ExecutedPlans
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -15,7 +16,11 @@ import org.scalatest.funsuite.AnyFunSuite
   *  - no query may leave a frame in the session cache after it returns;
   *  - no query may change the session's conf or its temporary tables
   *    (views, memory sinks): a query that owns any of them runs on its
-  *    own session clone.
+  *    own session clone;
+  *  - no query may return a frame whose root is a global sort, unless its
+  *    order is its result (listed in `orderedResults`): results are
+  *    unordered, the oracle compares sorted content, and a terminal sort
+  *    costs a sampling job and a range exchange.
   *
   * A query that throws is an offender too.
   */
@@ -24,7 +29,18 @@ class PlanAuditSpec extends AnyFunSuite {
 
   /** What one query did to the plans it ran and the session it ran on. */
   private final case class Findings(cartesian: Boolean, cached: Boolean,
-      sessionChanged: Option[String])
+      sessionChanged: Option[String], terminalSort: Boolean)
+
+  /** Queries whose row order is their result, with why. */
+  private val orderedResults: Map[String, String] = Map(
+    "q246_benford_audit" -> "EdaSpec asserts the nine digits arrive in order")
+
+  /** Whether `plan`'s root, looked at through projections, is a global sort. */
+  private def terminalSort(plan: LogicalPlan): Boolean = plan match {
+    case Project(_, child) => terminalSort(child)
+    case s: Sort => s.global
+    case _ => false
+  }
 
   private def sessionState(): (Map[String, String], Set[String]) =
     (spark.conf.getAll,
@@ -45,6 +61,7 @@ class PlanAuditSpec extends AnyFunSuite {
             df.write.format("noop").mode("overwrite").save()
             df
           }
+          val sorted = terminalSort(run.result.queryExecution.optimizedPlan)
           val (conf1, views1) = sessionState()
           val confKeys = (conf0.keySet ++ conf1.keySet).filter(k => conf0.get(k) != conf1.get(k))
           val views = (views0 diff views1) ++ (views1 diff views0)
@@ -52,7 +69,8 @@ class PlanAuditSpec extends AnyFunSuite {
             !cacheManager.isEmpty,
             Option.when(confKeys.nonEmpty || views.nonEmpty)(
               s"changed conf ${confKeys.toSeq.sorted.mkString("[", ", ", "]")}, " +
-                s"temporary tables ${views.toSeq.sorted.mkString("[", ", ", "]")}")))
+                s"temporary tables ${views.toSeq.sorted.mkString("[", ", ", "]")}"),
+            sorted))
         } catch { case e: Throwable => Left(e) }
       // each query is judged on its own: drop what an offender left behind
       spark.catalog.clearCache()
@@ -79,5 +97,15 @@ class PlanAuditSpec extends AnyFunSuite {
   test("no registry query changes the caller's session conf or temporary tables") {
     val found = offenders(_.sessionChanged)
     assert(found.isEmpty, found.mkString("offenders:\n", "\n", ""))
+  }
+
+  test("no registry query returns a frame whose root is a global sort, except the listed ones") {
+    val found = offenders(f => Option.when(f.terminalSort)("ends in a global sort"))
+      .filterNot(o => orderedResults.contains(o.takeWhile(_ != ':')))
+    // a listed query that no longer sorts leaves the list
+    val stale = orderedResults.keys.filterNot(n =>
+      audit.exists { case (m, r) => m == n && r.exists(_.terminalSort) })
+    assert(found.isEmpty, found.mkString("offenders:\n", "\n", ""))
+    assert(stale.isEmpty, stale.mkString("listed but not sorted: ", ", ", ""))
   }
 }

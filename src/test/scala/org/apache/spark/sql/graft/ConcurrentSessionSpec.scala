@@ -46,6 +46,14 @@ class ConcurrentSessionSpec extends AnyFunSuite {
   /** Fails if a SparkContext listener was added since `listeners0`. Spark
     * itself drops the buses of garbage-collected sessions, so the check is
     * that no listener was added, not that the count is equal.
+    *
+    * In a full run the shared session already holds one
+    * `QueryExecutionListener`, and its clones inherit it: Spark's own
+    * `classic.ObservationManager$Listener`, which the session's first
+    * `Dataset.observe` registers for the session's lifetime (a direct
+    * `GraftIVM.refresh` in `SourcesSpec`, `ObservabilitySpec`, or
+    * `LocalSpark.timed` in `ProfileSpec`, whichever runs first). No test
+    * leaves a listener of its own.
     */
   private def assertNoListenerAdded(listeners0: Set[AnyRef]): Unit = {
     val added = spark.sparkContext.listenerBus.listeners.asScala.filterNot(listeners0.contains)
