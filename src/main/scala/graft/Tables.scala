@@ -2,6 +2,9 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
+
+import graft.util.{Materialize, Memo}
 
 /** Loaders for the driver's deterministic testdata tables (TESTDATA.md).
   *
@@ -19,28 +22,19 @@ object Tables {
     * call). The schema of a testdata table is immutable for the process
     * lifetime, so infer once and hand the result to the reader
     * thereafter. This caches METADATA only — every query still scans the
-    * parquet data itself, and a fresh JVM (every bench/oracle invocation)
-    * re-infers from the file. At
-    * cluster scale the same move is "declare the table schema": inference
-    * over a multi-file dataset is a driver-side listing + footer pass.
-    *
-    * INVARIANT (ADVICE r16): the memo is keyed on path alone and never
-    * invalidated, so a table file's SCHEMA must be immutable for the JVM
-    * lifetime. That holds for every consumer of this loader — the driver
-    * testdata is read-only, ScaleGen dirs are written before any session
-    * reads them, and bench/oracle runs are each a fresh JVM. Rewriting a
-    * table at the same path with a DIFFERENT schema inside one long-lived
-    * JVM (e.g. a non-forked sbt session after regenerating testdata)
-    * would silently read with the stale schema — restart the session (or
-    * key the memo on file mtime) if a workflow ever needs that.
+    * parquet data itself. Each table's memo is a [[Materialize.memo]],
+    * keyed on the table file's mtime and length, so a table rewritten at
+    * the same path is re-inferred. At cluster scale the same move is
+    * "declare the table schema": inference over a multi-file dataset is
+    * a planning-time listing + footer pass.
     */
-  private val schemaMemo =
-    scala.collection.concurrent.TrieMap.empty[String, org.apache.spark.sql.types.StructType]
+  private val schemaMemos = scala.collection.concurrent.TrieMap.empty[String, Memo[StructType]]
 
   def table(spark: SparkSession, sfDir: String, name: String): DataFrame = {
     val path = s"$sfDir/$name.parquet"
-    val sch = schemaMemo.getOrElseUpdate(path, spark.read.parquet(path).schema)
-    spark.read.schema(sch).parquet(path)
+    val memo = schemaMemos.getOrElseUpdate(name,
+      Materialize.memo[StructType](s"$name.parquet")(_ => ()))
+    spark.read.schema(memo(spark, sfDir)(spark.read.parquet(path).schema)).parquet(path)
   }
 
   def region(s: SparkSession, d: String): DataFrame    = table(s, d, "region")

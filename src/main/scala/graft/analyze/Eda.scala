@@ -743,7 +743,6 @@ object Eda {
         expr("(10000 * coalesce(obs, 0) - n_total * p_bp) * " +
           "(10000 * coalesce(obs, 0) - n_total * p_bp) div (n_total * p_bp * 10000)")
           .as("chi2_contrib"))
-      .orderBy("digit")
   }
 
   private val q246Sql = {

@@ -936,7 +936,7 @@ object CurationQueries {
       s.conf.set("spark.sql.shuffle.partitions", k.toString) // the clone's conf
       val (batches, _) = bpeBatchTrainSpine(spine,
         Q192Rounds, Q192CandM, Q192BatchM)
-      batches.reduce(_ unionAll _).orderBy("round", "j")
+      batches.reduce(_ unionAll _)
         .localCheckpoint(true) // materialize while AQE is off; ≤64 rows
     }
   }

@@ -73,19 +73,16 @@ object DedupQueries {
     * 1.57× vs the 1.14 drift median). `docs.rdd.getNumPartitions` is
     * driver-side planning (file listing + split packing), no job.
     */
-  private val scanWidthMemo =
-    scala.collection.concurrent.TrieMap.empty[String, Int]
+  private val scanWidthMemo = Materialize.memo[Int]("documents.parquet")(_ => ())
 
   private def spreadDocs(s: SparkSession, d: String): DataFrame = {
     val docs = Tables.documents(s, d)
     val width = s.sparkContext.defaultParallelism
-    // scan width memoized per path (ADVICE r16): docs.rdd builds a second
-    // physical plan just to read the partition count — driver-side only,
-    // but paid once per consumer query (7 call sites). The width of a
-    // given path is fixed for the JVM lifetime (file layout + split confs
-    // don't change mid-session — same invariant as Tables.schemaMemo).
-    val scanWidth = scanWidthMemo.getOrElseUpdate(
-      s"$d/documents.parquet", docs.rdd.getNumPartitions)
+    // scan width memoized per corpus file generation (ADVICE r16):
+    // docs.rdd builds a second physical plan just to read the partition
+    // count — no job, but paid once per consumer query (7 call
+    // sites). Split confs don't change mid-session.
+    val scanWidth = scanWidthMemo(s, d)(docs.rdd.getNumPartitions)
     if (scanWidth < width) docs.repartition(width) else docs
   }
 
@@ -329,7 +326,7 @@ object DedupQueries {
       .select(col("id_a"), col("id_b"), (inter.cast("double") / union).as("jaccard"),
         inter.cast("long").as("n_inter"), union.cast("long").as("n_union"))
     val bigLangs = bigLangsOf(countsFrom, cap)
-    if (bigLangs.isEmpty) verify(arrSelfJoin(docs)).orderBy("id_a", "id_b")
+    if (bigLangs.isEmpty) verify(arrSelfJoin(docs))
     else {
       val big = docs.filter(col("lang").isin(bigLangs.map(x => x: Any): _*))
       val small = docs.filter(!col("lang").isin(bigLangs.map(x => x: Any): _*))
@@ -622,7 +619,7 @@ object DedupQueries {
       .select(col("xa"), explode(col("members")).as("xb"))
       .filter(col("xa") < col("xb"))
       .select(col("xa").as("id_a"), col("xb").as("id_b"), lit(1.0).as("jaccard"))
-    cross.unionByName(within).orderBy("id_a", "id_b").localCheckpoint(true)
+    cross.unionByName(within).localCheckpoint(true)
   }
 
   /** q44's mirror is TWO-TIER like the engine (lesson 19): identical
@@ -1128,7 +1125,7 @@ object DedupQueries {
       .select(col("delta_id"), col("m.base_id").as("dup_of"),
         col("m.jaccard").as("jaccard"),
         col("n_dup_bases"), lit("near").as("match_kind"))
-    exact.unionByName(near).orderBy("delta_id")
+    exact.unionByName(near)
       .localCheckpoint(true) // per-delta rows; the corpus cache can go
   }
 
@@ -1261,7 +1258,7 @@ object DedupQueries {
       .select(col("xa"), explode(col("members")).as("xb"))
       .filter(col("xa") < col("xb"))
       .select(col("xa").as("id_a"), col("xb").as("id_b"), lit(0L).as("dist"))
-    cross.unionByName(within).orderBy("id_a", "id_b").localCheckpoint(true)
+    cross.unionByName(within).localCheckpoint(true)
   }
 
   private val q59Sql =
@@ -1752,31 +1749,29 @@ object DedupQueries {
   private[graft] def containmentPairs(docs: DataFrame, cap: Int,
       countsFrom: Option[DataFrame]): DataFrame = {
     val bigLangs = bigLangsOf(countsFrom, cap)
-    val out =
-      if (bigLangs.isEmpty) containOrient(arrSelfJoin(docs))
-      else {
-        val big = docs.filter(col("lang").isin(bigLangs.map(x => x: Any): _*))
-        val small = docs.filter(!col("lang").isin(bigLangs.map(x => x: Any): _*))
-        val (grouped, reps) = collapseGroups(big)
-        // cross-group member pairs: strictly proper, so every sub-group
-        // member is sub_id and every sup-group member is sup_id — no
-        // re-orientation needed, n_shared (= |sub|) carries over
-        val cross = containRepPairs(reps)
-          .join(grouped.select(col("rep").as("sub_id"), col("doc_id").as("xa")),
-            "sub_id")
-          .join(grouped.select(col("rep").as("sup_id"), col("doc_id").as("xb")),
-            "sup_id")
-          .select(col("xa").as("sub_id"), col("xb").as("sup_id"), col("n_shared"))
-        // intra-group pairs: identical sets, mutual containment, id tiebreak
-        val intra = grouped
-          .select(col("rep"), col("doc_id").as("sub_id"),
-            size(col("arr")).cast("long").as("sz"))
-          .join(grouped.select(col("rep"), col("doc_id").as("sup_id")), "rep")
-          .filter(col("sub_id") < col("sup_id"))
-          .select(col("sub_id"), col("sup_id"), col("sz").as("n_shared"))
-        containOrient(arrSelfJoin(small)).unionAll(cross).unionAll(intra)
-      }
-    out.orderBy("sub_id", "sup_id")
+    if (bigLangs.isEmpty) containOrient(arrSelfJoin(docs))
+    else {
+      val big = docs.filter(col("lang").isin(bigLangs.map(x => x: Any): _*))
+      val small = docs.filter(!col("lang").isin(bigLangs.map(x => x: Any): _*))
+      val (grouped, reps) = collapseGroups(big)
+      // cross-group member pairs: strictly proper, so every sub-group
+      // member is sub_id and every sup-group member is sup_id — no
+      // re-orientation needed, n_shared (= |sub|) carries over
+      val cross = containRepPairs(reps)
+        .join(grouped.select(col("rep").as("sub_id"), col("doc_id").as("xa")),
+          "sub_id")
+        .join(grouped.select(col("rep").as("sup_id"), col("doc_id").as("xb")),
+          "sup_id")
+        .select(col("xa").as("sub_id"), col("xb").as("sup_id"), col("n_shared"))
+      // intra-group pairs: identical sets, mutual containment, id tiebreak
+      val intra = grouped
+        .select(col("rep"), col("doc_id").as("sub_id"),
+          size(col("arr")).cast("long").as("sz"))
+        .join(grouped.select(col("rep"), col("doc_id").as("sup_id")), "rep")
+        .filter(col("sub_id") < col("sup_id"))
+        .select(col("sub_id"), col("sup_id"), col("sz").as("n_shared"))
+      containOrient(arrSelfJoin(small)).unionAll(cross).unionAll(intra)
+    }
   }
 
   /** DECISION form of [[containmentPairs]] for q177: the distinct ids a

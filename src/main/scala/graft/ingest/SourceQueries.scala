@@ -352,9 +352,9 @@ object SourceQueries {
     * `time_of_day=<v>/event_type=<v>/part-*.csv` (partition values live
     * ONLY in directory names; data files carry the remaining columns),
     * then read back with a `time_of_day = 'day'` probe. The scan accepts
-    * the partition predicate via `SupportsPushDownFilters` and prunes at
-    * the FIRST directory level — the night subtree is never listed, let
-    * alone parsed (SourcesSpec proves the file set; PlanSpec pins the
+    * the partition predicate via `SupportsPushDownFilters` and prunes the
+    * manifest's files by their first directory level — the night files
+    * are never opened (SourcesSpec proves the file set; PlanSpec pins the
     * pushed filter + pruned ReadSchema). The oracle recomputes the same
     * day-side aggregate from the source table.
     */
@@ -394,9 +394,9 @@ object SourceQueries {
     * pushdown cannot help. The scan advertises `event_type` via
     * `filterAttributes()`, Spark plants a DynamicPruningSubquery that
     * reuses the dim broadcast, and at execution `filter()` receives the
-    * surviving key set so `planInputPartitions` walks only the 2 winning
+    * surviving key set so `planInputPartitions` plans only the 2 winning
     * directories of 5 — the 100 TB serving probe: "read the partitions
-    * some other query selects" without ever listing the rest
+    * some other query selects" without ever opening the rest
     * (SourcesSpec proves the losers are never opened via poisoned
     * files; PlanSpec pins the `dynamicpruning` runtime filter in the
     * executed plan). The oracle recomputes the same top-2 join from the

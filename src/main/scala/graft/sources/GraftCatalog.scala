@@ -263,8 +263,8 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
     val tMs = Math.floorDiv(timestampMicros, 1000L)
     val versions = GraftCommit.retainedVersions(d)
     if (versions.isEmpty) throw new UnsupportedOperationException(
-      s"graft catalog: table $ident has no versions (glob table) — " +
-        "TIMESTAMP AS OF needs a versioned table")
+      s"graft catalog: table $ident has no committed version — " +
+        "TIMESTAMP AS OF needs one")
     val cur = versions.map(_._1).max
     val cands = versions.collect { case (v, Some(ts)) if ts <= tMs => (v, ts) }
     if (cands.isEmpty) throw new IllegalStateException(

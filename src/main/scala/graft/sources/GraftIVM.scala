@@ -276,10 +276,7 @@ object GraftIVM {
         "rebinding rewinds the applied watermark and double-applies " +
         "replayed versions; re-materialize the view and pass force = true " +
         "if that is really what you want")
-    val viewV = GraftCommit.currentManifestVersion(root).getOrElse(
-      throw new IllegalStateException(
-        s"graft-ivm: $viewPath is not a versioned table — materialize the " +
-          "view through the catalog first"))
+    val viewV = GraftCommit.committedVersion(root)
     GraftCommit.writeAtomic(root, AppliedMarker, s"$appliedVersion\t$viewV\n")
   }
 
@@ -327,9 +324,7 @@ object GraftIVM {
     val refreshed = refreshFrom(asOf(viewPath, viewV), live, view,
       Option.when(view.extrema)(asOf(basePath, hi)))
     val root = new java.io.File(viewPath)
-    val newViewV = GraftCommit.currentManifestVersion(root).getOrElse(
-      throw new IllegalStateException(
-        s"graft-ivm: view $viewPath lost its manifest mid-refresh"))
+    val newViewV = GraftCommit.committedVersion(root)
     GraftCommit.writeAtomic(root, AppliedMarker, s"$hi\t$newViewV\n")
     refreshed
   }

@@ -25,8 +25,8 @@ import org.apache.spark.unsafe.types.UTF8String
   *     are self-delimiting: every write ends each record with '\n' and
   *     the parser is quote-aware, so concatenation is exact), staged in
   *     `_temporary/compact-<id>/` and moved into the table under
-  *     `merged-<id>-<n>.csv` — names the default `part-*` glob IGNORES,
-  *     so they are invisible while the old files are still live;
+  *     `merged-<id>-<n>.csv` — invisible, since no manifest lists them
+  *     yet, while the old files are still live;
   *  2. `_STATS` entries for the merged files are derived by MERGING the
   *     inputs' zone maps (sum rows/nulls/sums, min of mins, max of
   *     maxes — no re-parse; a column missing from any input is dropped,
@@ -34,8 +34,7 @@ import org.apache.spark.unsafe.types.UTF8String
   *     walk for the row count);
   *  3. the `_MANIFEST` swap is the COMMIT POINT: one atomic rename
   *     commits version N+1 whose visible set is exactly
-  *     {merged + untouched} (GraftStoreScan plans the manifest verbatim
-  *     when present);
+  *     {merged + untouched} (GraftStoreScan plans the manifest verbatim);
   *  4. the replaced inputs are RETIRED, not deleted: they stay on disk
   *     in the `_RETIRED` ledger so a reader that planned at version N
   *     (or a `versionAsOf` time-travel scan) still collects correctly.
@@ -73,8 +72,8 @@ object GraftMaintenance {
   final case class ExpireResult(expiredFiles: Int, sweptStrays: Int,
     droppedVersions: Int)
 
-  /** Current committed version of a manifest-bearing table (None for a
-    * glob table — versioning starts with the first manifest commit).
+  /** Current committed version of a table (None before its first commit,
+    * which makes version 1).
     */
   def currentVersion(path: String): Option[Long] =
     GraftCommit.currentManifestVersion(new File(path))
@@ -93,15 +92,13 @@ object GraftMaintenance {
     val partCols = GraftStore.readPartitionCols(path)
     val dataFields = schema.fields.filterNot(f => partCols.contains(f.name))
 
-    // the CURRENT visible set: manifest if present, else the glob
-    val mf0 = GraftCommit.readManifestFull(root)
-    val visible: Seq[String] = mf0.map(_.files).getOrElse(
-      GraftCommit.visibleFiles(root))
+    val mf0 = GraftCommit.current(root)
+    val visible = mf0.files
     // DV-carrying files are EXCLUDED from byte-concat compaction: the
     // merge is a raw concatenation, which would resurrect the deleted
     // ordinals (and shift later files' ordinals). compactSorted is the
     // path that materializes DVs away — it reads through the scan.
-    val pinnedDvs = mf0.map(_.dvs).getOrElse(Map.empty[String, String])
+    val pinnedDvs = mf0.dvs
 
     val statsBook = GraftCommit.readStats(root)
     val byDir: Map[String, Seq[String]] = visible
@@ -197,22 +194,16 @@ object GraftMaintenance {
     sortBy.foreach(c => require(schema.fieldNames.contains(c),
       s"compactSorted: sort column '$c' not in ${schema.toDDL}"))
 
-    // PIN the rewrite's input set: adopt a manifest if the table is
-    // still glob-only (under the lock, so no racing append is dropped),
-    // then read exactly that version through the scan — without the pin
-    // the scan's lazy manifest resolution could pick up a CONCURRENT
-    // append's version and the rewrite would duplicate its rows (the
-    // staged output would hold them AND the commit would keep the
-    // appended files). With the pin, a concurrent append's files simply
-    // survive the swap untouched (commitRewrite keeps non-input files).
-    val version: Long = GraftCommit.currentManifestVersion(root).getOrElse {
-      GraftCommit.withMetaLock(root) {
-        GraftCommit.commitManifest(root, GraftCommit.visibleFiles(root),
-          op = "adopt")
-      }
-    }
-    val mfPinned = GraftCommit.readManifestFullAt(root, version)
-    val visible: Seq[String] = mfPinned.files
+    // PIN the rewrite's input set: read exactly the current version
+    // through the scan — without the pin the scan's lazy manifest
+    // resolution could pick up a CONCURRENT append's version and the
+    // rewrite would duplicate its rows (the staged output would hold
+    // them AND the commit would keep the appended files). With the pin,
+    // a concurrent append's files simply survive the swap untouched
+    // (commitRewrite keeps non-input files).
+    val mfPinned = GraftCommit.current(root)
+    val version = mfPinned.version
+    val visible = mfPinned.files
     if (visible.isEmpty) return CompactResult(0, 0, 0)
 
     val totalBytes = visible.map(rel => new File(root, rel).length()).sum
@@ -398,9 +389,8 @@ object GraftMaintenance {
       // check passes on the fresh read, interleaved appends simply ride
       // through the swap; a concurrent DELETE of an input aborts loudly.
       GraftCommit.retryingCommit("compaction") {
-        val mf = GraftCommit.readManifestFull(root)
-        val current: Seq[String] =
-          mf.map(_.files).getOrElse(GraftCommit.visibleFiles(root))
+        val mf = GraftCommit.current(root)
+        val current = mf.files
         if (!replacedList.forall(current.toSet)) {
           merged.foreach { rel =>
             val f = new File(root, rel)
@@ -415,8 +405,7 @@ object GraftMaintenance {
         // vector: the staged rewrite was read under the OLD generation,
         // so committing it would resurrect the newly-deleted rows and
         // silently drop the new DV binding — abort loudly instead
-        val curDvs = mf.map(_.dvs).getOrElse(Map.empty[String, String])
-        if (replacedList.exists(rel => curDvs.get(rel) != pinnedDvs.get(rel))) {
+        if (replacedList.exists(rel => mf.dvs.get(rel) != pinnedDvs.get(rel))) {
           merged.foreach { rel =>
             val f = new File(root, rel)
             Files.deleteIfExists(f.toPath); GraftRidx.deleteFor(f)
@@ -433,7 +422,7 @@ object GraftMaintenance {
         GraftCommit.writeStats(root, (statsNow ++ mergedStats).toSeq.sortBy(_._1))
         val v = GraftCommit.commitManifest(root,
           current.filterNot(replacedSet) ++ merged,
-          op = "compact", base = mf.map(_.version))
+          op = "compact", base = Some(mf.version))
         GraftCommit.retire(root, replacedList, v)
       }
     }
@@ -482,22 +471,18 @@ object GraftMaintenance {
     def relOf(f: File): String = GraftCommit.relOf(root, f)
     val now = System.currentTimeMillis()
     GraftCommit.withMetaLock(root) {
-      val curVersion = GraftCommit.currentManifestVersion(root)
+      val cur = GraftCommit.current(root)
       // protected = every file a kept version can still plan; the floor
       // extends the kept window DOWN to the oldest checkpointed version
       // (a stream diffing (floor, floor+1] needs floor's manifest too)
-      val keptFrom = curVersion.map { c =>
-        val base = math.max(1L, c - keepVersions + 1)
+      val keptFrom = {
+        val base = math.max(1L, cur.version - keepVersions + 1)
         floorVersion.fold(base)(f => math.min(base, math.max(1L, f)))
       }
-      val protectedRels: Set[String] = curVersion match {
-        case None => Set.empty // glob table: no versions, no retire ledger
-        case Some(c) =>
-          (keptFrom.get to c).flatMap { v =>
-            scala.util.Try(GraftCommit.readManifestAt(root, v))
-              .getOrElse(Seq.empty) // an already-expired kept version: nothing to protect
-          }.toSet ++ GraftCommit.readManifest(root).getOrElse(Seq.empty)
-      }
+      val protectedRels: Set[String] = (keptFrom to cur.version).flatMap { v =>
+        scala.util.Try(GraftCommit.readManifestAt(root, v))
+          .getOrElse(Seq.empty) // an already-expired kept version: nothing to protect
+      }.toSet ++ cur.files
       // 1) expire retired files past the window
       val retired = GraftCommit.readRetired(root)
       val (expired, kept) = retired.partition { case (rel, _, ms) =>
@@ -534,7 +519,7 @@ object GraftMaintenance {
             // (Checked FIRST: it is two comparisons, while completeness
             // re-reads the manifest and stats O(files) paths — exactly
             // the pile this clause exists to clear cheaply.)
-            val agedOut = keptFrom.exists(v < _) &&
+            val agedOut = v < keptFrom &&
               now - f.lastModified() >= olderThanMs
             lazy val complete = scala.util.Try(GraftCommit.readManifestAt(root, v))
               .toOption.exists(_.forall(rel => new File(root, rel).isFile))
@@ -552,16 +537,11 @@ object GraftMaintenance {
       }
       // 3) sweep aged strays: on disk, in no kept snapshot, in no ledger
       val keptRels = kept.map(_._1).toSet
-      val visibleNow: Set[String] = curVersion match {
-        case Some(_) => protectedRels
-        case None => GraftCommit.allPartFiles(root)
-          .filter(_.getName.startsWith("part-")).map(relOf).toSet
-      }
       val strays = GraftCommit.allPartFiles(root).filter { f =>
         val rel = relOf(f)
         // (expired files were unlinked above, so the re-listing cannot
         // contain them — no membership test needed)
-        !visibleNow(rel) && !keptRels(rel) &&
+        !protectedRels(rel) && !keptRels(rel) &&
           now - f.lastModified() >= strayGraceMs
       }
       strays.foreach { f => Files.delete(f.toPath); GraftRidx.deleteFor(f) }

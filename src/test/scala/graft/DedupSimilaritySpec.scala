@@ -311,7 +311,7 @@ class DedupSimilaritySpec extends AnyFunSuite {
       (sub, sup, inter.toLong)
     }).sortBy(t => (t._1, t._2)).toSeq
     val got = Registry.queries("q149_subset_pairs")(spark, sf).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq.sortBy(t => (t._1, t._2))
     assert(got == expected)
     assert(expected.nonEmpty)
   }

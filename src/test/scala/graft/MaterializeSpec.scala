@@ -36,4 +36,16 @@ class MaterializeSpec extends AnyFunSuite {
     assert(cacheEmpty)
     assert(res.orderBy("id").collect().map(_.getLong(1)).toSeq == Seq(0L, 4L, 16L, 36L, 64L))
   }
+
+  test("Tables.table re-infers the schema of a table rewritten at the same path") {
+    val dir = graft.util.TempDirs.create("memo_rewrite_")
+    spark.range(3).selectExpr("id", "id * 2 AS v")
+      .write.mode("overwrite").parquet(s"$dir/t.parquet")
+    assert(Tables.table(spark, dir, "t").columns.toSeq == Seq("id", "v"))
+    spark.range(3).selectExpr("id", "CAST(id AS STRING) AS s", "id * 3 AS w")
+      .write.mode("overwrite").parquet(s"$dir/t.parquet")
+    val back = Tables.table(spark, dir, "t")
+    assert(back.columns.toSeq == Seq("id", "s", "w"), "read with a stale schema")
+    assert(back.selectExpr("sum(w)").head().getLong(0) == 9L)
+  }
 }

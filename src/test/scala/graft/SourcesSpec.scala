@@ -223,6 +223,7 @@ class SourcesSpec extends AnyFunSuite {
     val dir = Files.createTempDirectory("graft_store_prune_").toString
     Files.writeString(Paths.get(dir, "_SCHEMA"), "id BIGINT,good BIGINT,poison BIGINT")
     Files.writeString(Paths.get(dir, "part-x-00000.csv"), "1,10,notanumber\n2,20,alsobad\n")
+    Files.writeString(Paths.get(dir, "_MANIFEST"), "#version=1\npart-x-00000.csv\n")
     Files.writeString(Paths.get(dir, "_SUCCESS"), "")
     val t = spark.read.format("graft.sources.GraftStoreProvider")
       .option("path", dir).load()
@@ -1501,19 +1502,20 @@ class SourcesSpec extends AnyFunSuite {
         .write.format("graft.sources.GraftStoreProvider")
         .option("path", dir).option("partitionBy", "day").mode(mode).save()
     w(0, 300, "overwrite")
-    // glob table: versionAsOf is refused loudly (no versions exist yet)
+    val v0 = GraftMaintenance.currentVersion(dir).get
+    // a never-committed version is refused loudly
     intercept[Throwable] {
       spark.read.format("graft.sources.GraftStoreProvider")
-        .option("path", dir).option("versionAsOf", "1").load().count()
+        .option("path", dir).option("versionAsOf", (v0 + 1).toString).load().count()
     }
-    // compaction creates version 1; every later commit increments
+    // compaction commits the next version; every later commit increments
     GraftMaintenance.compact(dir)
-    assert(GraftMaintenance.currentVersion(dir).contains(1L))
-    w(300, 400, "append") // version 2
-    assert(GraftMaintenance.currentVersion(dir).contains(2L))
+    assert(GraftMaintenance.currentVersion(dir).contains(v0 + 1))
+    w(300, 400, "append") // version v0 + 2
+    assert(GraftMaintenance.currentVersion(dir).contains(v0 + 2))
 
-    // PIN a scan at version 2 (plan its partitions), then COMPACT
-    // (version 3, inputs retired) and run retention GC with a real
+    // PIN a scan at version v0 + 2 (plan its partitions), then COMPACT
+    // (version v0 + 3, inputs retired) and run retention GC with a real
     // window: the pinned scan must still read ALL 400 rows — the exact
     // race r10's GraftMaintenance doc admitted as a caveat, now a
     // guarantee
@@ -1522,7 +1524,7 @@ class SourcesSpec extends AnyFunSuite {
     val pinnedRdd = pinned.queryExecution.toRdd
     assert(pinnedRdd.partitions.nonEmpty) // forces planInputPartitions NOW
     GraftMaintenance.compact(dir)
-    assert(GraftMaintenance.currentVersion(dir).contains(3L))
+    assert(GraftMaintenance.currentVersion(dir).contains(v0 + 3))
     GraftMaintenance.expireSnapshots(dir, olderThanMs = 300000L) // 5 min window
     assert(pinnedRdd.count() == 400L,
       "a pinned scan lost rows after a concurrent compact + windowed GC")
@@ -1534,29 +1536,97 @@ class SourcesSpec extends AnyFunSuite {
     }
     assert(read().count() == 400L)
 
-    // versionAsOf: v2 the pre-compact layout, v1 the first 300 rows
-    assert(read(Map("versionAsOf" -> "2")).count() == 400L)
-    assert(read(Map("versionAsOf" -> "1")).count() == 300L)
-    val v1sum = read(Map("versionAsOf" -> "1")).agg(sum("v")).head().getLong(0)
+    // versionAsOf: v0 + 2 the pre-compact layout, v0 + 1 the first 300 rows
+    def asOf(v: Long) = read(Map("versionAsOf" -> v.toString))
+    assert(asOf(v0 + 2).count() == 400L)
+    assert(asOf(v0 + 1).count() == 300L)
+    val v1sum = asOf(v0 + 1).agg(sum("v")).head().getLong(0)
     assert(v1sum == (0L until 300L).map(_ * 5).sum)
     // the pinned version is visible in the plan text
-    val tt = read(Map("versionAsOf" -> "1"))
-    assert(tt.queryExecution.executedPlan.toString.contains("VersionAsOf: 1"))
+    val tt = asOf(v0 + 1)
+    assert(tt.queryExecution.executedPlan.toString.contains(s"VersionAsOf: ${v0 + 1}"))
     // zone maps still skip on a time-travel scan (stats for retired
     // files are retained until GC): probe outside a file range
-    assert(read(Map("versionAsOf" -> "2"))
-      .filter(col("id") >= 350L).count() == 50L)
+    assert(asOf(v0 + 2).filter(col("id") >= 350L).count() == 50L)
 
     // zero-window GC drops expired versions AND their files; expired
     // time travel fails LOUDLY, never a silent fallback
     GraftMaintenance.expireSnapshots(dir, olderThanMs = 0L)
-    intercept[Throwable] { read(Map("versionAsOf" -> "1")).count() }
-    intercept[Throwable] { read(Map("versionAsOf" -> "2")).count() }
+    intercept[Throwable] { asOf(v0 + 1).count() }
+    intercept[Throwable] { asOf(v0 + 2).count() }
     // never-committed version: equally loud
     intercept[Throwable] { read(Map("versionAsOf" -> "99")).count() }
     // current reads are untouched by expiry
     assert(read().count() == 400L)
-    assert(read(Map("versionAsOf" -> "3")).count() == 400L)
+    assert(asOf(v0 + 3).count() == 400L)
+  }
+
+  test("a path-written table is versioned from its first commit") {
+    import graft.sources.GraftMaintenance
+    val dir = graft.util.TempDirs.create("graft_born_") + "/t"
+    def w(lo: Long, hi: Long, mode: String) =
+      spark.range(lo, hi, 1, 2)
+        .select(col("id"), (col("id") % 3).cast("string").as("day"),
+          (col("id") * 5).as("v"))
+        .write.format("graft.sources.GraftStoreProvider")
+        .option("path", dir).option("partitionBy", "day").mode(mode).save()
+    def read(opts: (String, String)*) = {
+      val r = spark.read.format("graft.sources.GraftStoreProvider").option("path", dir)
+      opts.foreach { case (k, v) => r.option(k, v) }
+      r.load()
+    }
+    def dataFiles: Seq[java.io.File] =
+      new java.io.File(dir).listFiles().toSeq.filter(_.isDirectory)
+        .flatMap(_.listFiles().filter(_.getName.startsWith("part-")))
+
+    // the first save() commits version 1, and time travel reads it
+    w(0, 300, "overwrite")
+    assert(GraftMaintenance.currentVersion(dir).contains(1L))
+    assert(read("versionAsOf" -> "1").count() == 300L)
+
+    // the manifest is the one visibility rule: a published part file no
+    // commit lists (an append killed between publish and commit) is
+    // invisible, so an append shows all of its files or none
+    val planted = new java.io.File(dir, "day=0/part-deadbeef-00000.csv")
+    Files.writeString(planted.toPath, "999999,0\n")
+    assert(read().count() == 300L, "an uncommitted part file leaked into a read")
+    Files.delete(planted.toPath)
+    w(300, 400, "append")
+    assert(GraftMaintenance.currentVersion(dir).contains(2L))
+    assert(read().count() == 400L)
+    assert(read("versionAsOf" -> "1").count() == 300L)
+
+    // a path overwrite RETIRES the old files: a scan pinned before it
+    // still reads them, time travel crosses it, and retention GC erases
+    // the bytes
+    val before = dataFiles
+    val pinnedRdd = read().queryExecution.toRdd
+    assert(pinnedRdd.partitions.nonEmpty) // forces planInputPartitions NOW
+    w(1000, 1030, "overwrite")
+    assert(GraftMaintenance.currentVersion(dir).contains(3L))
+    assert(read().count() == 30L)
+    assert(before.forall(_.isFile), "an overwrite unlinked files a pinned scan still needs")
+    assert(pinnedRdd.count() == 400L, "a pinned scan lost rows across an overwrite")
+    assert(read("versionAsOf" -> "2").count() == 400L)
+    GraftMaintenance.expireSnapshots(dir, olderThanMs = 0L)
+    assert(before.forall(!_.isFile), "retention GC left overwritten files on disk")
+    intercept[Throwable] { read("versionAsOf" -> "2").count() }
+    assert(read().agg(sum("v")).head().getLong(0) == (1000L until 1030L).map(_ * 5).sum)
+
+    // a _SUCCESS without a _MANIFEST is not a table this format wrote:
+    // it fails loudly instead of reading as empty
+    val bare = graft.util.TempDirs.create("graft_bare_")
+    Files.writeString(Paths.get(bare, "_SCHEMA"), "id BIGINT,v BIGINT")
+    Files.writeString(Paths.get(bare, "part-x-00000.csv"), "1,10\n")
+    Files.writeString(Paths.get(bare, "_SUCCESS"), "")
+    val e = intercept[Throwable] {
+      spark.read.format("graft.sources.GraftStoreProvider")
+        .option("path", bare).load().count()
+    }
+    def messages(t: Throwable): Seq[String] =
+      Option(t).toSeq.flatMap(x => String.valueOf(x.getMessage) +: messages(x.getCause))
+    assert(messages(e).exists(_.contains("not a versioned graft-store table")),
+      messages(e).mkString(" | "))
   }
 
   test("graft-store SUM/AVG pushdown: answered from _STATS sums, zero file bytes; declines stay honest") {
@@ -2887,41 +2957,43 @@ class SourcesSpec extends AnyFunSuite {
     spark.range(0, 100, 1, 2).select(col("id"), (col("id") * 2).as("v"))
       .write.format("graft.sources.GraftStoreProvider")
       .option("path", dir).mode("overwrite").save()
-    GraftMaintenance.compact(dir) // manifest v1
+    val v0 = GraftMaintenance.currentVersion(dir).get
+    GraftMaintenance.compact(dir) // manifest v0 + 1
     def read() = spark.read.format("graft.sources.GraftStoreProvider")
       .option("path", dir).load()
-    assert(GraftMaintenance.currentVersion(dir).contains(1L))
+    assert(GraftMaintenance.currentVersion(dir).contains(v0 + 1))
     val v1Body = Files.readString(Paths.get(dir, "_MANIFEST"))
 
     // KILL between the history write and the _MANIFEST swap: simulate by
-    // planting a v2 history file while _MANIFEST still says v1 — readers
-    // plan v1 (the swap IS the commit point), currentVersion stays 1.
+    // planting a v0 + 2 history file while _MANIFEST still says v0 + 1 —
+    // readers plan v0 + 1 (the swap IS the commit point), currentVersion
+    // stays v0 + 1.
     // Under the r12 validate-and-swap protocol a CORRUPT orphan (its
     // files don't exist — a real crashed winner's always do, publish
     // precedes commit) is DISCARDED by the next committer, which then
     // reclaims the version number; a COMPLETE orphan would instead be
     // rolled forward (covered in the optimistic-commit spec). Either
     // way the stray can never shadow or wedge a real commit.
-    Files.writeString(Paths.get(dir, "_MANIFEST.v2"),
-      "#version=2\nno-such-file.csv\n")
+    Files.writeString(Paths.get(dir, s"_MANIFEST.v${v0 + 2}"),
+      s"#version=${v0 + 2}\nno-such-file.csv\n")
     assert(read().count() == 100L)
-    assert(GraftMaintenance.currentVersion(dir).contains(1L))
+    assert(GraftMaintenance.currentVersion(dir).contains(v0 + 1))
     assert(Files.readString(Paths.get(dir, "_MANIFEST")) == v1Body,
       "a history write must not move the pointer")
     // the orphan names a missing file -> resolving it fails LOUDLY
     intercept[Throwable] {
       spark.read.format("graft.sources.GraftStoreProvider")
-        .option("path", dir).option("versionAsOf", "2").load().count()
+        .option("path", dir).option("versionAsOf", (v0 + 2).toString).load().count()
     }
-    // next commit claims version 2 and replaces the orphan atomically
+    // next commit claims version v0 + 2 and replaces the orphan atomically
     spark.range(100, 110, 1, 1).select(col("id"), (col("id") * 2).as("v"))
       .write.format("graft.sources.GraftStoreProvider")
       .option("path", dir).mode("append").save()
-    assert(GraftMaintenance.currentVersion(dir).contains(2L))
+    assert(GraftMaintenance.currentVersion(dir).contains(v0 + 2))
     assert(read().count() == 110L)
     assert(spark.read.format("graft.sources.GraftStoreProvider")
-      .option("path", dir).option("versionAsOf", "2").load().count() == 110L)
-    assert(!Files.readString(Paths.get(dir, "_MANIFEST.v2"))
+      .option("path", dir).option("versionAsOf", (v0 + 2).toString).load().count() == 110L)
+    assert(!Files.readString(Paths.get(dir, s"_MANIFEST.v${v0 + 2}"))
       .contains("no-such-file"), "orphan history survived a real commit")
 
     // retention GC drops the aged incomplete orphan class too: plant
@@ -2934,7 +3006,7 @@ class SourcesSpec extends AnyFunSuite {
     GraftMaintenance.expireSnapshots(dir, olderThanMs = 0L)
     assert(!new java.io.File(dir, "_MANIFEST.v9").isFile)
     assert(read().count() == 110L)
-    assert(GraftMaintenance.currentVersion(dir).contains(2L))
+    assert(GraftMaintenance.currentVersion(dir).contains(v0 + 2))
   }
 
   test("INSERT OVERWRITE keeps a catalog table versioned: same-shape history survives until GC") {

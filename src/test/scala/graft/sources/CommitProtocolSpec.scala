@@ -49,13 +49,13 @@ class CommitProtocolSpec extends AnyFunSuite {
         op = "append", base = Some(aRead.version))
     }
     // nothing moved: b.csv is still visible
-    assert(GraftCommit.readManifest(root).get.toSet == Set("a.csv", "b.csv"))
+    assert(GraftCommit.current(root).files.toSet == Set("a.csv", "b.csv"))
     // the REBASE path (what commitAppend's retry loop does): re-read,
     // recompute, commit — all three files survive
     val fresh = GraftCommit.readManifestFull(root).get
     GraftCommit.commitManifest(root, fresh.files :+ "a2.csv",
       op = "append", base = Some(fresh.version))
-    assert(GraftCommit.readManifest(root).get.toSet ==
+    assert(GraftCommit.current(root).files.toSet ==
       Set("a.csv", "b.csv", "a2.csv"))
   }
 
@@ -78,12 +78,12 @@ class CommitProtocolSpec extends AnyFunSuite {
     }
     assert(GraftCommit.currentManifestVersion(root).contains(2L),
       "a complete crashed winner must be rolled forward")
-    assert(GraftCommit.readManifest(root).get.toSet == Set("a.csv", "w.csv"))
+    assert(GraftCommit.current(root).files.toSet == Set("a.csv", "w.csv"))
     // the loser's rebase then lands on v3 with every file intact
     val fresh = GraftCommit.readManifestFull(root).get
     GraftCommit.commitManifest(root, fresh.files :+ "l.csv",
       op = "append", base = Some(fresh.version))
-    assert(GraftCommit.readManifest(root).get.toSet ==
+    assert(GraftCommit.current(root).files.toSet ==
       Set("a.csv", "w.csv", "l.csv"))
   }
 
@@ -97,7 +97,7 @@ class CommitProtocolSpec extends AnyFunSuite {
     assert(v == 2L)
     assert(!Files.readString(Paths.get(root.getPath, "_MANIFEST.v2"))
       .contains("no-such-file"))
-    assert(GraftCommit.readManifest(root).get.toSet == Set("a.csv", "c.csv"))
+    assert(GraftCommit.current(root).files.toSet == Set("a.csv", "c.csv"))
   }
 
   test("concurrent appends through the real write path: all rows survive, versions serialize") {
@@ -105,8 +105,7 @@ class CommitProtocolSpec extends AnyFunSuite {
     spark.range(0, 100, 1, 2).select(col("id"), (col("id") * 2).as("v"))
       .write.format("graft.sources.GraftStoreProvider")
       .option("path", dir).mode("overwrite").save()
-    GraftMaintenance.compact(dir) // adopt a manifest -> versioned (v1)
-    val base = GraftMaintenance.currentVersion(dir).get
+    val base = GraftMaintenance.currentVersion(dir).get // versioned from the first write
     // three appends racing through separate threads (local Spark runs
     // them as concurrent jobs); each commit must rebase over the others
     val threads = (0 until 3).map { k =>
@@ -138,7 +137,7 @@ class CommitProtocolSpec extends AnyFunSuite {
       GraftCommit.commitManifest(root, m.files :+ "x.csv",
         op = "append", base = Some(m.version))
     }
-    assert(GraftCommit.readManifest(root).get.toSet == Set("a.csv", "x.csv"))
+    assert(GraftCommit.current(root).files.toSet == Set("a.csv", "x.csv"))
   }
 
   test("write-skew gate: appended files are refuted by zone maps or conflict the rewrite (ADVICE r12)") {
@@ -153,7 +152,7 @@ class CommitProtocolSpec extends AnyFunSuite {
     val root = new File(dir)
     val schema = StructType(Seq(
       StructField("id", LongType), StructField("v", LongType)))
-    val added = GraftCommit.visibleFiles(root)
+    val added = GraftCommit.current(root).files
     // a DELETE WHERE id = 7: the [200,300) append is provably
     // irrelevant (refuted); the [0,100) one may hold the row -> conflict
     val cond: Array[Filter] = Array(EqualTo("id", 7L))
@@ -175,14 +174,13 @@ class CommitProtocolSpec extends AnyFunSuite {
     import graft.sources.{GraftMaintenance => GM}
     val wh = graft.util.TempDirs.create("graft_dynocc_")
     val dir = s"$wh/t"
-    spark.range(0, 60, 1, 4) // several files per partition -> compact commits
+    spark.range(0, 60, 1, 4)
       .selectExpr("id", "CASE WHEN id < 30 THEN 'a' ELSE 'b' END AS day",
         "id * 2 AS v")
       .write.format("graft.sources.GraftStoreProvider")
       .option("path", dir).option("partitionBy", "day")
       .mode("overwrite").save()
-    GM.compact(dir, targetBytes = 1L << 30) // adopt a manifest (versioned)
-    val base = GM.currentVersion(dir).get
+    val base = GM.currentVersion(dir).get // versioned from the first write
 
     // RACE: a dynamic overwrite of day=a against an append into day=b.
     // Whatever the interleaving, both must commit (the overwrite's CAS
