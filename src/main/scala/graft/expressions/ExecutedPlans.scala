@@ -6,7 +6,7 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
-import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.util.QueryExecutionListener
 
 /** The physical plans a query body actually ran.
@@ -17,7 +17,8 @@ import org.apache.spark.sql.util.QueryExecutionListener
   * `collect`, write …), in completion order, followed by the returned
   * frame's own plan. An executed adaptive plan contributes only its final
   * plan, not AQE's "Initial Plan" section, so counting operators in the
-  * rendered plans counts each operator once per action.
+  * rendered plans counts each operator once per action; its query stages
+  * are replaced by the plans they ran.
   *
   * Lives in this package because draining the bus
   * (`LiveListenerBus.waitUntilEmpty`) is `private[spark]`.
@@ -50,9 +51,12 @@ object ExecutedPlans {
     spark.sparkContext.listenerBus.waitUntilEmpty()
 
   /** `p` with every adaptive node (subqueries included) replaced by the
-    * plan it currently runs — the final plan once it has executed.
+    * plan it currently runs — the final plan once it has executed — and
+    * every query stage by the plan it wraps, so a traversal of the
+    * result sees the operators below each stage (a stage is a leaf).
     */
   private def finalPlan(p: SparkPlan): SparkPlan = p.transformDownWithSubqueries {
     case a: AdaptiveSparkPlanExec => finalPlan(a.executedPlan)
+    case q: QueryStageExec => finalPlan(q.plan)
   }
 }

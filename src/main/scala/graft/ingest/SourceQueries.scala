@@ -282,8 +282,8 @@ object SourceQueries {
     * covers the V2 read contract, [[graft.sources.GraftStoreProvider]]
     * the write side): the deterministic V2 seq source is written through
     * graft-store's two-phase commit (task temp files → job-level rename
-    * + `_SCHEMA` + `_SUCCESS` published last), read back through the
-    * same provider's `_SUCCESS`-gated scan, and aggregated — the oracle
+    * + `_SCHEMA`, made visible by the `_MANIFEST` swap), read back through
+    * the same provider's manifest-pinned scan, and aggregated — the oracle
     * recomputes the generator contract over `range()`, so the whole
     * write/commit/read chain must be value-exact. Commit-protocol
     * failure semantics (aborted job publishes nothing) are asserted in
@@ -1141,7 +1141,7 @@ object SourceQueries {
     QueryDef("q119_orc_roundtrip", q119, Some(q119Sql), "ORC source write/read round trip"),
     QueryDef("q126_dsv2_source", q126, Some(q126Sql), "custom DataSource V2 scan (splits + pruning)"),
     QueryDef("q226_dsv2_write_roundtrip", q226, Some(q226Sql),
-      "DataSource V2 BatchWrite round trip: two-phase commit (task temp -> rename + _SUCCESS last) then _SUCCESS-gated V2 scan"),
+      "DataSource V2 BatchWrite round trip: two-phase commit (task temp -> rename, then the _MANIFEST swap) then manifest-pinned V2 scan"),
     QueryDef("q249_dsv2_filter_pushdown", q249, Some(q249Sql),
       "DataSource V2 filter pushdown: id bounds narrow split planning, val predicate enforced in-reader (S11 scan shape)"),
     QueryDef("q250_store_partitioned", q250, Some(q250Sql),

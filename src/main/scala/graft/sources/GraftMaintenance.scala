@@ -85,8 +85,7 @@ object GraftMaintenance {
     */
   def compact(path: String, targetBytes: Long = 64L << 20): CompactResult = {
     val root = new File(path)
-    require(new File(root, GraftStore.SuccessFile).isFile,
-      s"graft-store: no committed table at $path")
+    GraftCommit.committedVersion(root) // fails loudly before the first commit
     val schema = StructType.fromDDL(new String(Files.readAllBytes(
       new File(root, GraftStore.SchemaFile).toPath), StandardCharsets.UTF_8))
     val partCols = GraftStore.readPartitionCols(path)
@@ -110,8 +109,7 @@ object GraftMaintenance {
     val compactId = java.util.UUID.randomUUID().toString.take(8)
     val stage = new File(new File(root, "_temporary"), s"compact-$compactId")
     var groupNo = 0
-    val mergedRels = Seq.newBuilder[String]
-    val mergedStats = scala.collection.mutable.Map.empty[String, GraftFileStats]
+    val merged = Seq.newBuilder[(String, GraftFileStats)]
     val replaced = Seq.newBuilder[String]
 
     byDir.toSeq.sortBy(_._1).foreach { case (relDir, files) =>
@@ -144,9 +142,8 @@ object GraftMaintenance {
             val destDir = if (relDir.isEmpty) root else new File(root, relDir)
             Files.move(tmp.toPath, new File(destDir, name).toPath,
               StandardCopyOption.ATOMIC_MOVE)
-            mergedRels += rel
-            mergeStats(group.map(statsBook.get), dataFields,
-              new File(destDir, name)).foreach(mergedStats(rel) = _)
+            merged += rel -> mergeStats(group.map(statsBook.get), dataFields,
+              new File(destDir, name))
             replaced ++= group
           }
         }
@@ -154,13 +151,12 @@ object GraftMaintenance {
     }
 
     val replacedList = replaced.result()
-    val merged = mergedRels.result()
     if (replacedList.isEmpty) {
       GraftCommit.deleteTemp(path, s"compact-$compactId")
       return CompactResult(visible.size, visible.size, 0)
     }
-    commitRewrite(root, path, s"compact-$compactId", replacedList, merged,
-      mergedStats.toMap, pinnedDvs)
+    commitRewrite(root, path, s"compact-$compactId", replacedList,
+      merged.result(), pinnedDvs)
     val after = visible.size - replacedList.size + groupNo
     CompactResult(visible.size, after, groupNo)
   }
@@ -186,8 +182,7 @@ object GraftMaintenance {
       targetBytes: Long = 64L << 20, zOrder: Boolean = false): CompactResult = {
     require(sortBy.nonEmpty, "compactSorted requires at least one sort column")
     val root = new File(path)
-    require(new File(root, GraftStore.SuccessFile).isFile,
-      s"graft-store: no committed table at $path")
+    GraftCommit.committedVersion(root) // fails loudly before the first commit
     val schema = StructType.fromDDL(new String(Files.readAllBytes(
       new File(root, GraftStore.SchemaFile).toPath), StandardCharsets.UTF_8))
     val partCols = GraftStore.readPartitionCols(path)
@@ -345,8 +340,7 @@ object GraftMaintenance {
         .replace(File.separatorChar, '/')
     }.sorted
     var n = 0
-    val merged = Seq.newBuilder[String]
-    val mergedStats = scala.collection.mutable.Map.empty[String, GraftFileStats]
+    val merged = Seq.newBuilder[(String, GraftFileStats)]
     stagedRels.foreach { srel =>
       val i = srel.lastIndexOf('/')
       val relDir = if (i < 0) "" else srel.substring(0, i)
@@ -364,67 +358,41 @@ object GraftMaintenance {
         Files.move(sridx.toPath,
           GraftRidx.fileFor(new File(destDir, name)).toPath,
           StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
-      merged += rel
-      stagedStats.get(srel).foreach(mergedStats(rel) = _)
+      merged += rel -> stagedStats(srel) // the staged commit wrote every file's
     }
     commitRewrite(root, path, s"compact-$compactId", visible, merged.result(),
-      mergedStats.toMap, mfPinned.dvs)
+      mfPinned.dvs)
     CompactResult(visible.size, n, n)
   }
 
-  /** The shared COMMIT for both compaction forms: under the metadata
-    * lock, re-read the CURRENT state (a concurrent append's files must
-    * survive the swap; a concurrent DELETE of any input aborts — the
-    * merged file would resurrect deleted rows), merge stats, commit
-    * version N+1, retire the inputs.
+  /** The shared COMMIT for both compaction forms: check the CURRENT
+    * state (a concurrent append's files must survive the swap; a
+    * concurrent DELETE of any input aborts — the merged file would
+    * resurrect deleted rows), then commit version N+1 with the merged
+    * files and their stats, retiring the inputs.
     */
   private def commitRewrite(root: File, path: String, tempJob: String,
-      replacedList: Seq[String], merged: Seq[String],
-      mergedStats: Map[String, GraftFileStats],
+      replacedList: Seq[String], merged: Seq[(String, GraftFileStats)],
       pinnedDvs: Map[String, String]): Unit = {
-    val replacedSet = replacedList.toSet
-    GraftCommit.withMetaLock(root) {
-      // CAS-conflict rebase is safe here (VERDICT r12 task 1): compaction
-      // is data-neutral over immutable inputs, so once the inputs-present
-      // check passes on the fresh read, interleaved appends simply ride
-      // through the swap; a concurrent DELETE of an input aborts loudly.
-      GraftCommit.retryingCommit("compaction") {
-        val mf = GraftCommit.current(root)
-        val current = mf.files
-        if (!replacedList.forall(current.toSet)) {
-          merged.foreach { rel =>
-            val f = new File(root, rel)
-            Files.deleteIfExists(f.toPath); GraftRidx.deleteFor(f)
-          }
-          GraftCommit.deleteTemp(path, tempJob)
-          throw new IllegalStateException(
-            "graft-store: a concurrent writer removed compaction inputs " +
-              s"under $path — nothing was swapped; rerun compact")
-        }
-        // a concurrent MERGE-ON-READ delete changed an input's deletion
-        // vector: the staged rewrite was read under the OLD generation,
-        // so committing it would resurrect the newly-deleted rows and
-        // silently drop the new DV binding — abort loudly instead
-        if (replacedList.exists(rel => mf.dvs.get(rel) != pinnedDvs.get(rel))) {
-          merged.foreach { rel =>
-            val f = new File(root, rel)
-            Files.deleteIfExists(f.toPath); GraftRidx.deleteFor(f)
-          }
-          GraftCommit.deleteTemp(path, tempJob)
-          throw new IllegalStateException(
-            "graft-store: a concurrent merge-on-read DELETE changed a " +
-              s"compaction input's deletion vector under $path — nothing " +
-              "was swapped; rerun compact")
-        }
-        // replaced inputs KEEP their stats entries (they are retired, and
-        // pinned/time-travel scans still skip by them); GC drops both
-        val statsNow = GraftCommit.readStats(root)
-        GraftCommit.writeStats(root, (statsNow ++ mergedStats).toSeq.sortBy(_._1))
-        val v = GraftCommit.commitManifest(root,
-          current.filterNot(replacedSet) ++ merged,
-          op = "compact", base = Some(mf.version))
-        GraftCommit.retire(root, replacedList, v)
-      }
+    def abandon(msg: String): Nothing =
+      GraftCommit.abortStaged(root, tempJob, merged.map(_._1), msg)
+    // CAS-conflict rebase is safe here (VERDICT r12 task 1): compaction
+    // is data-neutral over immutable inputs, so once the inputs-present
+    // check passes on the fresh read, interleaved appends simply ride
+    // through the swap; a concurrent DELETE of an input aborts loudly.
+    GraftCommit.commit(root, "compact") { mf =>
+      if (!replacedList.forall(mf.files.toSet)) abandon(
+        "graft-store: a concurrent writer removed compaction inputs " +
+          s"under $path — nothing was swapped; rerun compact")
+      // a concurrent MERGE-ON-READ delete changed an input's deletion
+      // vector: the staged rewrite was read under the OLD generation,
+      // so committing it would resurrect the newly-deleted rows and
+      // silently drop the new DV binding — abort loudly instead
+      if (replacedList.exists(rel => mf.dvs.get(rel) != pinnedDvs.get(rel))) abandon(
+        "graft-store: a concurrent merge-on-read DELETE changed a " +
+          s"compaction input's deletion vector under $path — nothing " +
+          "was swapped; rerun compact")
+      Some(GraftCommit.Edit(drop = replacedList, publish = merged))
     }
     GraftCommit.deleteTemp(path, tempJob)
   }
@@ -466,8 +434,7 @@ object GraftMaintenance {
       keepVersions: Int = 1, strayGraceMs: Long = 60000L,
       floorVersion: Option[Long] = None): ExpireResult = {
     val root = new File(path)
-    require(new File(root, GraftStore.SuccessFile).isFile,
-      s"graft-store: no committed table at $path")
+    GraftCommit.committedVersion(root) // fails loudly before the first commit
     def relOf(f: File): String = GraftCommit.relOf(root, f)
     val now = System.currentTimeMillis()
     GraftCommit.withMetaLock(root) {
@@ -488,11 +455,7 @@ object GraftMaintenance {
       val (expired, kept) = retired.partition { case (rel, _, ms) =>
         now - ms >= olderThanMs && !protectedRels(rel)
       }
-      expired.foreach { case (rel, _, _) =>
-        val f = new File(root, rel)
-        Files.deleteIfExists(f.toPath)
-        GraftRidx.deleteFor(f)
-      }
+      GraftCommit.unlink(root, expired.map(_._1))
       if (expired.nonEmpty) {
         GraftCommit.writeRetired(root, kept)
         val expiredSet = expired.map(_._1).toSet
@@ -580,19 +543,18 @@ object GraftMaintenance {
     }
   }
 
-  /** Merge the inputs' zone maps; None when row counts must be walked
-    * and the walk finds nothing to describe beyond rows (an input
-    * without stats drops per-column bounds but the row count is
-    * recovered with a record-boundary walk of the merged file).
+  /** Merge the inputs' zone maps (an input without stats drops
+    * per-column bounds, and the row count is recovered with a
+    * record-boundary walk of the merged file).
     */
   private def mergeStats(inputs: Seq[Option[GraftFileStats]],
-      dataFields: Array[StructField], mergedFile: File): Option[GraftFileStats] = {
+      dataFields: Array[StructField], mergedFile: File): GraftFileStats = {
     if (inputs.exists(_.isEmpty)) {
       val parser = new GraftRecordParser(Files.newBufferedReader(
         mergedFile.toPath, StandardCharsets.UTF_8))
       var n = 0L
       try { while (parser.next() != null) n += 1 } finally parser.close()
-      Some(GraftFileStats(n, Map.empty))
+      GraftFileStats(n, Map.empty)
     } else {
       val sts = inputs.map(_.get)
       val cols = dataFields.iterator.filter(f => sts.forall(_.cols.contains(f.name)))
@@ -635,7 +597,7 @@ object GraftMaintenance {
           f.name -> GraftColStatsTxt(cs.map(_.nulls).sum,
             bound(_.min, 1), bound(_.max, -1), sum)
         }.toMap
-      Some(GraftFileStats(sts.map(_.rows).sum, cols))
+      GraftFileStats(sts.map(_.rows).sum, cols)
     }
   }
 

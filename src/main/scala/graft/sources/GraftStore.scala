@@ -30,10 +30,9 @@ import org.apache.spark.unsafe.types.UTF8String
   *   _PARTITIONING                 comma-joined partition column names
   *                                 (only for partitioned tables)
   *   _MANIFEST (+ _MANIFEST.v<N>)  the visible file set of version N
-  *   _SUCCESS                      commit marker, written LAST
+  *   _SUCCESS                      job-completion marker (informational)
   *
-  * Commit protocol (the Hadoop FileOutputCommitter v1 shape, the same
-  * `_SUCCESS` semantics streaming/Pipeline relies on):
+  * Commit protocol (the Hadoop FileOutputCommitter v1 shape):
   *  - each task writes to `_temporary/<jobId>/task-<partition>-<taskId>/`
   *    (taskId is attempt-unique, so retried/speculative attempts never
   *    collide) and hands its file list back in its commit message;
@@ -42,16 +41,17 @@ import org.apache.spark.unsafe.types.UTF8String
   *    (SourcesSpec proves it);
   *  - job commit renames the task files to `part-<jobId>-<n>.csv` inside
   *    their partition dirs (numbered in partition order — deterministic
-  *    layout), writes `_SCHEMA`/`_PARTITIONING`, commits the next
-  *    `_MANIFEST` version — the ONE visibility rule: every table is
-  *    versioned from its first commit (version 1), and a file is visible
-  *    exactly when the current manifest lists it, so a published file
-  *    stays invisible until its commit and an overwrite or DELETE
-  *    RETIRES files that [[GraftMaintenance.expireSnapshots]] later
-  *    erases — and writes `_SUCCESS` last;
-  *  - the READER plans zero partitions unless `_SUCCESS` exists — the
-  *    gate that makes a never-committed directory read as empty — and
-  *    refuses a `_SUCCESS` without `_MANIFEST` loudly (not a table this
+  *    layout), writes `_SCHEMA`/`_PARTITIONING`, and commits the next
+  *    `_MANIFEST` version through [[GraftCommit.commit]], the one commit
+  *    every store write shares. The manifest swap is the ONE visibility
+  *    rule: every table is versioned from its first commit (version 1),
+  *    and a file is visible exactly when the current manifest lists it,
+  *    so a published file stays invisible until its commit, an overwrite
+  *    or DELETE RETIRES files that [[GraftMaintenance.expireSnapshots]]
+  *    later erases, and a location no commit has reached reads as the
+  *    empty version 0. The `_SUCCESS` marker follows the swap (the
+  *    Spark/Hadoop job-completion convention); no reader gates on it,
+  *    and a `_SUCCESS` without `_MANIFEST` fails loudly (not a table this
   *    format wrote).
   *
   * Identity partitioning (VERDICT r9 task 5): declared per-write with
@@ -163,7 +163,6 @@ class GraftStoreProvider extends TableProvider {
 
 object GraftStore {
   val SchemaFile = "_SCHEMA"
-  val SuccessFile = "_SUCCESS"
   val PartitionFile = "_PARTITIONING"
   val StatsFile = "_STATS"
   val ManifestFile = "_MANIFEST"
@@ -1121,7 +1120,7 @@ private[sources] class GraftStoreTable(
       s"graft-store: DELETE supports partition predicates only, got " +
         filters.mkString(", "))
     val root = new File(path)
-    if (!new File(root, GraftStore.SuccessFile).isFile) return
+    if (!root.isDirectory) return // no commit has reached it: nothing to delete
     def matches(rel: String): Boolean = {
       val comps = rel.split('/')
       // depth/shape guard (ADVICE r11 low): a stray file not at exactly
@@ -1152,17 +1151,9 @@ private[sources] class GraftStoreTable(
     // expireSnapshots. Rebase-on-conflict (VERDICT r12 task 1): the
     // predicate is recomputed against the fresh file set each attempt,
     // so the retry composes with any interleaved commit.
-    GraftCommit.withMetaLock(root) {
-      GraftCommit.retryingCommit("partition DELETE") {
-        val m = GraftCommit.current(root)
-        val dead = m.files.filter(matches)
-        if (dead.nonEmpty) {
-          val v = GraftCommit.commitManifest(root,
-            m.files.filterNot(dead.toSet), op = "delete",
-            base = Some(m.version))
-          GraftCommit.retire(root, dead, v)
-        }
-      }
+    GraftCommit.commit(root, "delete") { m =>
+      val dead = m.files.filter(matches)
+      Option.when(dead.nonEmpty)(GraftCommit.Edit(drop = dead))
     }
     ()
   }
@@ -1478,7 +1469,7 @@ private[sources] class GraftStoreScan(
   private def partField(c: String): StructField =
     fullSchema.fields.find(_.name == c).get
 
-  /** The `_SUCCESS` gate + partition pruning of the manifest's files: a
+  /** Partition pruning of the manifest's files: a
     * file whose path refutes a pushed (or runtime) filter is never
     * planned. Surviving files then pass the ZONE-MAP gate: a
     * residual data-column predicate that no row of the file can satisfy
@@ -1507,8 +1498,6 @@ private[sources] class GraftStoreScan(
 
   private def plannedWith(filters: Array[Filter]): Array[GraftFilePartition] = {
     val root = new File(path)
-    if (!new File(root, GraftStore.SuccessFile).isFile)
-      return Array.empty
     def keepByZoneMap(p: GraftFilePartition): Boolean = p.stats match {
       case None => true // no entry — never skip
       case Some(st) =>
@@ -2043,7 +2032,7 @@ private[sources] object GraftCommit {
     */
   def current(root: File): GraftManifest =
     readManifestFull(root).getOrElse {
-      if (new File(root, GraftStore.SuccessFile).isFile)
+      if (new File(root, SuccessFile).isFile)
         throw new IllegalStateException(s"graft-store: $root is not a " +
           "versioned graft-store table (_SUCCESS without _MANIFEST); rewrite it")
       Empty
@@ -2252,8 +2241,101 @@ private[sources] object GraftCommit {
         "it was expired by retention GC or never committed"))
   }
 
+  /** The Spark/Hadoop job-completion marker. [[commit]] writes it after
+    * every swap; no reader gates on it — the `_MANIFEST` swap is the
+    * commit point — and [[current]] refuses it without a manifest.
+    */
+  val SuccessFile = "_SUCCESS"
+
+  /** One commit's change to the version it read: the files it drops
+    * (retired), the files it publishes with their zone maps, the
+    * deletion-vector updates and the COW rewrite pairs (see
+    * [[commitManifest]]). `erase` is the shape-changing overwrite's
+    * history erase (see [[commit]]).
+    */
+  final case class Edit(
+      drop: Seq[String] = Seq.empty,
+      publish: Seq[(String, GraftFileStats)] = Seq.empty,
+      dvUpdates: Map[String, Option[String]] = Map.empty,
+      rewrites: Map[String, Seq[String]] = Map.empty,
+      erase: Option[Erase] = None)
+
+  /** Unlink every file and history version older than the commit instead
+    * of retiring them; `keepLedger` keeps a `_COLUMNS` ledger the new
+    * files were written under.
+    */
+  final case class Erase(keepLedger: Boolean)
+
+  /** THE store commit — every manifest version is made here. Under
+    * [[withMetaLock]] and the CAS rebase loop, each attempt reads the
+    * current manifest and hands it to `edit`, which runs the caller's
+    * checks (throwing aborts the commit; a [[GraftCommitConflictException]]
+    * from the swap reruns it on a fresh read) and returns the edit, or
+    * None when there is nothing to commit. The commit then merges the
+    * published files' `_STATS`, swaps `_MANIFEST` to version N+1 (the
+    * commit point), retires the dropped files — or, for an [[Erase]],
+    * unlinks every older file, history copy and retirement entry inside
+    * the same lock — and finally writes the [[SuccessFile]] marker.
+    * Returns the committed version.
+    */
+  def commit(root: File, op: String)(edit: GraftManifest => Option[Edit]): Option[Long] = {
+    val committed = withMetaLock(root) {
+      retryingCommit(op) {
+        val m = current(root)
+        edit(m).map { e =>
+          val added = e.publish.map(_._1)
+          // replaced files keep their stats entries (retired; pinned
+          // scans still skip by them) — GC drops both together
+          if (e.publish.nonEmpty && e.erase.isEmpty)
+            writeStats(root, (readStats(root) ++ e.publish).toSeq.sortBy(_._1))
+          val dropSet = e.drop.toSet
+          val v = commitManifest(root, m.files.filterNot(dropSet) ++ added,
+            op = op, dvUpdates = e.dvUpdates, base = Some(m.version),
+            rewrites = e.rewrites)
+          e.erase match {
+            case None => retire(root, e.drop, v)
+            case Some(er) =>
+              Option(root.listFiles()).getOrElse(Array.empty)
+                .filter(f => f.getName.startsWith(GraftStore.ManifestFile + ".v") &&
+                  !f.getName.endsWith(s".v$v"))
+                .foreach(f => Files.deleteIfExists(f.toPath))
+              val mine = added.toSet
+              val goners = allPartFiles(root).filterNot(f => mine(relOf(root, f)))
+              goners.foreach(f => Files.delete(f.toPath))
+              writeRetired(root, Seq.empty)
+              writeStats(root, e.publish.sortBy(_._1))
+              if (!er.keepLedger)
+                Files.deleteIfExists(new File(root, GraftStore.ColumnsFile).toPath)
+              pruneEmptyDirs(root, goners.map(_.getParentFile))
+          }
+          v
+        }
+      }
+    }
+    if (committed.isDefined)
+      Files.write(new File(root, SuccessFile).toPath, Array.empty[Byte])
+    committed
+  }
+
+  /** Unlink data files (with their row-index sidecars). */
+  def unlink(root: File, rels: Seq[String]): Unit = rels.foreach { rel =>
+    val f = new File(root, rel)
+    Files.deleteIfExists(f.toPath)
+    GraftRidx.deleteFor(f)
+  }
+
+  /** Abandon a staged write: unlink its published files and its
+    * `_temporary/<tempJob>` dir, then fail with `msg` — nothing was
+    * swapped.
+    */
+  def abortStaged(root: File, tempJob: String, staged: Seq[String], msg: String): Nothing = {
+    unlink(root, staged)
+    deleteTemp(root.getPath, tempJob)
+    throw new IllegalStateException(msg)
+  }
+
   /** Commit a new visible file set as version N+1 with VALIDATE-AND-SWAP
-    * semantics (VERDICT r12 task 1). MUST be called under
+    * semantics (VERDICT r12 task 1). Only [[commit]] calls it, under
     * [[withMetaLock]]; the lock serializes the common case, but it is no
     * longer load-bearing for correctness — a writer whose lock was
     * BROKEN by the staleness breaker can no longer lose another
@@ -2484,15 +2566,15 @@ private[sources] object GraftCommit {
     }
   }
 
-  /** The APPEND-CLASS rebase loop: run `body` (a read-compute-commit
-    * closure that re-reads the current manifest each attempt) and retry
-    * on [[GraftCommitConflictException]]. Appends, partition deletes and
+  /** [[commit]]'s rebase loop: run `body` (a read-compute-commit closure
+    * that re-reads the current manifest each attempt) and retry on
+    * [[GraftCommitConflictException]]. Appends, partition deletes and
     * epoch commits rebase safely — their file edits compose with any
-    * interleaved commit; REWRITES (compact / COW DML) must NOT use this
-    * blindly, their staged output derives from a pinned snapshot and
-    * needs its own conflict checks inside the body.
+    * interleaved commit; REWRITES (compact / COW DML) derive their staged
+    * output from a pinned snapshot, so their edit closures re-run their
+    * conflict checks on every fresh read.
     */
-  def retryingCommit[T](what: String, maxAttempts: Int = 50)(body: => T): T = {
+  private def retryingCommit[T](what: String, maxAttempts: Int = 50)(body: => T): T = {
     var n = 0
     while (true) {
       try return body
@@ -2687,27 +2769,14 @@ private[sources] class GraftBatchWrite(
       alsoDirs
     // the declared schema stands, like an append
     GraftCommit.writeMeta(dir, schema, partCols, keepExisting = true)
-    GraftCommit.withMetaLock(dir) {
-      GraftCommit.retryingCommit("dynamic INSERT OVERWRITE") {
-        val m = GraftCommit.current(dir)
-        val (dead, kept) = m.files.partition(rel => touched(parentOf(rel)))
-        // replaced files keep their stats entries (retired; pinned
-        // scans still skip by them) — GC drops both together
-        GraftCommit.writeStats(dir,
-          (GraftCommit.readStats(dir) ++ published).toSeq.sortBy(_._1))
-        val v = GraftCommit.commitManifest(dir,
-          kept ++ published.map(_._1),
-          op = "overwrite-dynamic", base = Some(m.version))
-        GraftCommit.retire(dir, dead, v)
-      }
+    GraftCommit.commit(dir, "overwrite-dynamic") { m =>
+      Some(GraftCommit.Edit(drop = m.files.filter(rel => touched(parentOf(rel))),
+        publish = published))
     }
     GraftCommit.deleteTemp(path, jobId)
-    Files.write(new File(dir, GraftStore.SuccessFile).toPath, Array.empty[Byte])
-    ()
   }
 
-  /** APPEND: publish, then commit version N+1 under the lock with the
-    * REBASE loop (VERDICT r12 task 1 — a stale-lock survivor's
+  /** APPEND: publish, then commit version N+1 (a stale-lock survivor's
     * validate-and-swap fails and the fresh re-read recomputes; appended
     * file sets are disjoint by job-unique names, so rebasing composes
     * with any interleaved commit).
@@ -2716,21 +2785,8 @@ private[sources] class GraftBatchWrite(
     val published = GraftCommit.publish(dir, messages, n => f"part-$jobId-$n%05d.csv")
     // append: the table's DECLARED schema stands (see writeMeta)
     GraftCommit.writeMeta(dir, schema, partCols, keepExisting = true)
-    GraftCommit.withMetaLock(dir) {
-      GraftCommit.retryingCommit("append") {
-        // zone maps: append-mode keeps prior files' entries; a file with
-        // no entry is simply never skipped — stats stay advisory-but-exact
-        GraftCommit.writeStats(dir,
-          (GraftCommit.readStats(dir) ++ published).toSeq.sortBy(_._1))
-        val m = GraftCommit.current(dir)
-        GraftCommit.commitManifest(dir, m.files ++ published.map(_._1),
-          op = "append", base = Some(m.version))
-      }
-    }
+    GraftCommit.commit(dir, "append")(_ => Some(GraftCommit.Edit(publish = published)))
     GraftCommit.deleteTemp(path, jobId)
-    // the publish point: written last, so the marker implies completeness
-    Files.write(new File(dir, GraftStore.SuccessFile).toPath, Array.empty[Byte])
-    ()
   }
 
   /** OVERWRITE (ADVICE r12 medium: the old order unlinked every data
@@ -2758,7 +2814,6 @@ private[sources] class GraftBatchWrite(
   private def commitOverwrite(dir: File,
       messages: Array[WriterCommitMessage]): Unit = {
     val published = GraftCommit.publish(dir, messages, n => f"part-$jobId-$n%05d.csv")
-    val mine = published.map(_._1).toSet
     val sameLayout = GraftStore.readPartitionCols(path) == partCols
     val declared = schema.fields.map(f => (f.name, f.dataType)).toSeq
     val sameSchema = {
@@ -2771,38 +2826,14 @@ private[sources] class GraftBatchWrite(
     // same shape: the existing declared schema (possibly stricter
     // nullability from catalog DDL) stands; shape change: redeclare
     GraftCommit.writeMeta(dir, schema, partCols, keepExisting = sameShape)
-    GraftCommit.withMetaLock(dir) {
-      GraftCommit.retryingCommit("INSERT OVERWRITE") {
-        val m = GraftCommit.current(dir)
-        if (sameShape) {
-          GraftCommit.writeStats(dir,
-            (GraftCommit.readStats(dir) ++ published).toSeq.sortBy(_._1))
-          val v = GraftCommit.commitManifest(dir, published.map(_._1),
-            op = "overwrite", base = Some(m.version))
-          GraftCommit.retire(dir, m.files.filterNot(mine), v)
-        } else {
-          val v = GraftCommit.commitManifest(dir, published.map(_._1),
-            op = "overwrite", base = Some(m.version))
-          Option(dir.listFiles()).getOrElse(Array.empty)
-            .filter(f => f.getName.startsWith(GraftStore.ManifestFile + ".v") &&
-              !f.getName.endsWith(s".v$v"))
-            .foreach(f => Files.deleteIfExists(f.toPath))
-          val goners = GraftCommit.allPartFiles(dir)
-            .filterNot(f => mine(GraftCommit.relOf(dir, f)))
-          goners.foreach(f => Files.delete(f.toPath))
-          GraftCommit.writeRetired(dir, Seq.empty)
-          GraftCommit.writeStats(dir, published.toSeq.sortBy(_._1))
-          // the old bytes are gone; a ledger the new files were not
-          // written under goes with them (see writeLayoutUsed)
-          if (writeLayoutUsed.isEmpty)
-            Files.deleteIfExists(new File(dir, GraftStore.ColumnsFile).toPath)
-          GraftCommit.pruneEmptyDirs(dir, goners.map(_.getParentFile))
-        }
-      }
+    // the old bytes go with a shape change; a ledger the new files were
+    // not written under goes with them (see writeLayoutUsed)
+    val erase = Option.when(!sameShape)(
+      GraftCommit.Erase(keepLedger = writeLayoutUsed.isDefined))
+    GraftCommit.commit(dir, "overwrite") { m =>
+      Some(GraftCommit.Edit(drop = m.files, publish = published, erase = erase))
     }
     GraftCommit.deleteTemp(path, jobId)
-    Files.write(new File(dir, GraftStore.SuccessFile).toPath, Array.empty[Byte])
-    ()
   }
 
   override def abort(messages: Array[WriterCommitMessage]): Unit =
@@ -3065,48 +3096,32 @@ private[sources] class GraftCowBatchWrite(
         }.toMap
       } else Map.empty
     }
-    def cleanupAbort(msg: String): Nothing = {
-      published.foreach { p =>
-        val f = new File(dir, p._1)
-        Files.deleteIfExists(f.toPath)
-        GraftRidx.deleteFor(f)
-      }
-      GraftCommit.deleteTemp(path, jobId)
-      throw new IllegalStateException(msg)
-    }
-    GraftCommit.withMetaLock(dir) {
-      // CAS-conflict rebase is SAFE for a COW rewrite once the checks
-      // below pass on the fresh read: the rewrite output depends only on
-      // the scanned inputs (immutable files, still present), and files
-      // other writers added are carried through the swap untouched.
-      GraftCommit.retryingCommit(s"COW ${op.command()}") {
-        val mf = GraftCommit.current(dir)
-        val current = mf.files
-        if (!scanned.forall(current.toSet)) cleanupAbort(
-          "graft-store: a concurrent writer removed rewrite inputs under " +
-            s"$path — nothing was swapped; rerun the ${op.command()}")
-        // WRITE-SKEW gate (ADVICE r12 medium): a file appended since the
-        // operation's scan snapshot keeps its rows verbatim — legal only
-        // when the condition provably matches none of them
-        val added = (current.toSet -- op.scanSnapshot.toSet).toSeq.sorted
-        val bad = GraftCommit.unrefutableAdds(dir, op.schema, op.partCols,
-          added, op.scanCondition)
-        if (bad.nonEmpty) cleanupAbort(
-          s"graft-store: a concurrent append under $path committed files " +
-            s"that may contain rows matching the ${op.command()} condition " +
-            s"(${bad.take(5).mkString(", ")}) — write skew; nothing was " +
-            "swapped, rerun the operation")
-        GraftCommit.writeStats(dir,
-          (GraftCommit.readStats(dir) ++ published).toSeq.sortBy(_._1))
-        val v = GraftCommit.commitManifest(dir,
-          current.filterNot(scanned.toSet) ++ published.map(_._1),
-          op = "cow-" + op.command().toString.toLowerCase,
-          base = Some(mf.version), rewrites = pairing)
-        GraftCommit.retire(dir, scanned, v)
-      }
+    def abandon(msg: String): Nothing =
+      GraftCommit.abortStaged(dir, jobId, published.map(_._1), msg)
+    // CAS-conflict rebase is SAFE for a COW rewrite once the checks
+    // below pass on the fresh read: the rewrite output depends only on
+    // the scanned inputs (immutable files, still present), and files
+    // other writers added are carried through the swap untouched.
+    GraftCommit.commit(dir, "cow-" + op.command().toString.toLowerCase) { mf =>
+      val current = mf.files
+      if (!scanned.forall(current.toSet)) abandon(
+        "graft-store: a concurrent writer removed rewrite inputs under " +
+          s"$path — nothing was swapped; rerun the ${op.command()}")
+      // WRITE-SKEW gate (ADVICE r12 medium): a file appended since the
+      // operation's scan snapshot keeps its rows verbatim — legal only
+      // when the condition provably matches none of them
+      val added = (current.toSet -- op.scanSnapshot.toSet).toSeq.sorted
+      val bad = GraftCommit.unrefutableAdds(dir, op.schema, op.partCols,
+        added, op.scanCondition)
+      if (bad.nonEmpty) abandon(
+        s"graft-store: a concurrent append under $path committed files " +
+          s"that may contain rows matching the ${op.command()} condition " +
+          s"(${bad.take(5).mkString(", ")}) — write skew; nothing was " +
+          "swapped, rerun the operation")
+      Some(GraftCommit.Edit(drop = scanned, publish = published,
+        rewrites = pairing))
     }
     GraftCommit.deleteTemp(path, jobId)
-    ()
   }
 
   override def abort(messages: Array[WriterCommitMessage]): Unit =
@@ -3289,16 +3304,8 @@ private[sources] class GraftDvBatchWrite(
       GraftCommit.deleteTemp(path, jobId)
       return // no matching rows, no outputs: no new version
     }
-    def dropFile(rel: String): Unit = {
-      val f = new File(dir, rel)
-      Files.deleteIfExists(f.toPath)
-      GraftRidx.deleteFor(f)
-    }
-    def cleanupAbort(msg: String, alsoDelete: Seq[String] = Seq.empty): Nothing = {
-      (published.map(_._1) ++ alsoDelete).foreach(dropFile)
-      GraftCommit.deleteTemp(path, jobId)
-      throw new IllegalStateException(msg)
-    }
+    def abandon(msg: String, alsoDelete: Seq[String] = Seq.empty): Nothing =
+      GraftCommit.abortStaged(dir, jobId, published.map(_._1) ++ alsoDelete, msg)
     // physical slot layout for the AUTO path's rewrites (ledger-aware)
     lazy val slotLayout: Seq[Option[StructField]] = {
       val dataFields = op.schema.fields.filterNot(f => op.partCols.contains(f.name))
@@ -3375,7 +3382,7 @@ private[sources] class GraftDvBatchWrite(
         }
       // a fully-deleted file republishes NOTHING — it just leaves
       val (matKeep, matEmpty) = mat.partition(_._2.rows > 0)
-      matEmpty.foreach(m => dropFile(m._1))
+      GraftCommit.unlink(dir, matEmpty.map(_._1))
       // REWRITE PAIRING for the auto path (VERDICT r16 task 1): the
       // per-file kept-row materialization is one task per old file, so
       // attribution is exact — and materializeKept streams the file, so
@@ -3389,70 +3396,55 @@ private[sources] class GraftDvBatchWrite(
         }.toMap
       }
       try {
-        GraftCommit.withMetaLock(dir) {
-          GraftCommit.retryingCommit(s"merge-on-read ${op.command()}") {
-            val mf = GraftCommit.current(dir)
-            val current = mf.files
-            val curSet = current.toSet
-            if (!merged.keys.forall(curSet)) cleanupAbort(
-              s"graft-store: a concurrent writer removed merge-on-read " +
-                s"${op.command()} targets under $path — nothing was committed; " +
-                "rerun the operation", alsoDelete = matKeep.map(_._1))
-            val added = (curSet -- op.scanSnapshot.toSet).toSeq.sorted
-            val bad = GraftCommit.unrefutableAdds(dir, op.schema, op.partCols,
-              added, op.scanCondition)
-            if (bad.nonEmpty) cleanupAbort(
-              s"graft-store: a concurrent append under $path committed files " +
-                s"that may contain rows matching the ${op.command()} condition " +
-                s"(${bad.take(5).mkString(", ")}) — write skew; rerun the " +
-                "operation", alsoDelete = matKeep.map(_._1))
-            if (merged.keys.exists(rel => mf.dvs.get(rel) != snapDvs.get(rel))) {
-              // stats a lost-CAS inner retry may have written for this
-              // attempt's rewrites must not linger once the attempt is
-              // abandoned (ADVICE r14 low)
-              val book = GraftCommit.readStats(dir)
-              val drop = matKeep.map(_._1).toSet
-              if (drop.exists(book.contains))
-                GraftCommit.writeStats(dir, (book -- drop).toSeq.sortBy(_._1))
-              throw new StaleRewriteAttempt
-            }
-            var n = 0
-            val updates: Map[String, Option[String]] =
-              toDv.map { case (rel, bits) =>
-                val name = f"dv-$jobId-a$attempt-$n%05d.bin"
-                n += 1
-                GraftDv.write(dir, name, bits)
-                rel -> Option(name)
-              }.toMap
-            if (published.nonEmpty || matKeep.nonEmpty)
-              GraftCommit.writeStats(dir,
-                (GraftCommit.readStats(dir) ++ published ++ matKeep)
-                  .toSeq.sortBy(_._1))
-            val rewrittenSet = toRewrite.map(_._1).toSet
-            val v = GraftCommit.commitManifest(dir,
-              current.filterNot(rewrittenSet) ++ published.map(_._1) ++
-                matKeep.map(_._1),
-              op = "dv-" + op.command().toString.toLowerCase,
-              dvUpdates = updates, base = Some(mf.version),
-              rewrites = rewritePairing)
-            if (rewrittenSet.nonEmpty)
-              GraftCommit.retire(dir, toRewrite.map(_._1), v)
-            v
+        GraftCommit.commit(dir, "dv-" + op.command().toString.toLowerCase) { mf =>
+          val curSet = mf.files.toSet
+          if (!merged.keys.forall(curSet)) abandon(
+            s"graft-store: a concurrent writer removed merge-on-read " +
+              s"${op.command()} targets under $path — nothing was committed; " +
+              "rerun the operation", alsoDelete = matKeep.map(_._1))
+          val added = (curSet -- op.scanSnapshot.toSet).toSeq.sorted
+          val bad = GraftCommit.unrefutableAdds(dir, op.schema, op.partCols,
+            added, op.scanCondition)
+          if (bad.nonEmpty) abandon(
+            s"graft-store: a concurrent append under $path committed files " +
+              s"that may contain rows matching the ${op.command()} condition " +
+              s"(${bad.take(5).mkString(", ")}) — write skew; rerun the " +
+              "operation", alsoDelete = matKeep.map(_._1))
+          if (merged.keys.exists(rel => mf.dvs.get(rel) != snapDvs.get(rel))) {
+            // stats a lost-CAS inner retry may have written for this
+            // attempt's rewrites must not linger once the attempt is
+            // abandoned (ADVICE r14 low)
+            val book = GraftCommit.readStats(dir)
+            val drop = matKeep.map(_._1).toSet
+            if (drop.exists(book.contains))
+              GraftCommit.writeStats(dir, (book -- drop).toSeq.sortBy(_._1))
+            throw new StaleRewriteAttempt
           }
+          var n = 0
+          val updates: Map[String, Option[String]] =
+            toDv.map { case (rel, bits) =>
+              val name = f"dv-$jobId-a$attempt-$n%05d.bin"
+              n += 1
+              GraftDv.write(dir, name, bits)
+              rel -> Option(name)
+            }.toMap
+          Some(GraftCommit.Edit(drop = toRewrite.map(_._1),
+            publish = published ++ matKeep, dvUpdates = updates,
+            rewrites = rewritePairing))
         }
         committed = true
       } catch {
         case _: StaleRewriteAttempt =>
-          matKeep.foreach(m => dropFile(m._1))
+          GraftCommit.unlink(dir, matKeep.map(_._1))
           attempt += 1
-          if (attempt >= 20) cleanupAbort(
+          if (attempt >= 20) abandon(
             s"graft-store: merge-on-read ${op.command()} under $path lost " +
               "the DV-generation race 20 times — giving up; rerun the operation")
         case e: Throwable =>
           // a genuine failure: this attempt's rewrites must not survive
-          // as strays (cleanupAbort already deleted them — deleteIfExists
+          // as strays (abandon already deleted them — deleteIfExists
           // makes the repeat harmless)
-          matKeep.foreach(m => dropFile(m._1))
+          GraftCommit.unlink(dir, matKeep.map(_._1))
           throw e
       }
     }
@@ -3469,10 +3461,10 @@ private[sources] class GraftDvBatchWrite(
   * the epoch id in their name, and a replayed commit (checkpoint
   * recovery) retires the epoch's previously-committed files in the same
   * manifest swap that adds its new ones — re-running an epoch REPLACES
-  * it, it never duplicates it. `_SUCCESS` appears with the first
-  * committed epoch and persists (append-only sink); a reader sees whole
-  * epochs only. One logical stream per table directory (epoch ids are
-  * checkpoint-scoped).
+  * it, it never duplicates it. Each epoch is one [[GraftCommit.commit]],
+  * so a reader sees whole epochs only: the manifest swap makes an epoch
+  * visible, not the `_SUCCESS` marker that follows it. One logical
+  * stream per table directory (epoch ids are checkpoint-scoped).
   */
 private[sources] class GraftStreamingWrite(
     path: String, schema: StructType, partCols: Seq[String])
@@ -3508,21 +3500,12 @@ private[sources] class GraftStreamingWrite(
     // see GraftMaintenance.compact.) Rebase-on-conflict (VERDICT r12
     // task 1): epoch replacement recomputes against the fresh file set
     // each attempt.
-    GraftCommit.withMetaLock(dir) {
-      GraftCommit.retryingCommit("epoch commit") {
-        val m = GraftCommit.current(dir)
-        val old = m.files.filter(_.split('/').last.startsWith(prefix))
-        GraftCommit.writeStats(dir,
-          (GraftCommit.readStats(dir) ++ published).toSeq.sortBy(_._1))
-        val v = GraftCommit.commitManifest(dir,
-          m.files.filterNot(old.toSet) ++ published.map(_._1),
-          op = "epoch", base = Some(m.version))
-        GraftCommit.retire(dir, old, v)
-      }
+    GraftCommit.commit(dir, "epoch") { m =>
+      Some(GraftCommit.Edit(
+        drop = m.files.filter(_.split('/').last.startsWith(prefix)),
+        publish = published))
     }
     GraftCommit.deleteTemp(path, epochJob(epochId))
-    Files.write(new File(dir, GraftStore.SuccessFile).toPath, Array.empty[Byte])
-    ()
   }
 
   override def abort(epochId: Long, messages: Array[WriterCommitMessage]): Unit =

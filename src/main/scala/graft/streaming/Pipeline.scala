@@ -122,11 +122,12 @@ object Pipeline {
     // pure function of user_id, so it is recomputed instead of read
     // from the directory names.
     val batchBkts = b.select("bkt").distinct().collect().map(_.getInt(0))
-    // Trust bucket directories only under the store-level _SUCCESS
-    // commit marker: a failed/partial prior write job leaves bucket dirs
-    // without the marker, and merging those torn files into the new
-    // state would persist the corruption (ADVICE r7 — the round-7
-    // bucket-dir probe dropped this check the round-6 listing had).
+    // Read bucket directories only once the store-level _SUCCESS marker
+    // exists, i.e. after the first (static) write committed. The marker
+    // says nothing about later writes: a failed dynamic-overwrite job
+    // aborts its own staging dir and leaves the committed buckets as
+    // they were, and the store lives in one execution's TempDirs dir, so
+    // no torn write from another run can be found here.
     val committed = new java.io.File(dir, "_SUCCESS").isFile
     val bktDirs =
       if (!committed) Seq.empty[String]

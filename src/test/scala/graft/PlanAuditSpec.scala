@@ -2,7 +2,6 @@ package graft
 
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project, Sort}
 import org.apache.spark.sql.execution.{InputAdapter, LogicalRDD, ProjectExec, SortExec, SparkPlan, WholeStageCodegenExec}
-import org.apache.spark.sql.execution.adaptive.QueryStageExec
 import org.apache.spark.sql.graft.ExecutedPlans
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -48,11 +47,9 @@ class PlanAuditSpec extends AnyFunSuite {
   }
 
   /** [[terminalSort]] for an executed plan: a global `SortExec` at the
-    * root, looked at through projections, the adaptive result stage and
-    * code-generation wrappers.
+    * root, looked at through projections and code-generation wrappers.
     */
   private def sortExecRoot(plan: SparkPlan): Boolean = plan match {
-    case q: QueryStageExec => sortExecRoot(q.plan)
     case p: ProjectExec => sortExecRoot(p.child)
     case w: WholeStageCodegenExec => sortExecRoot(w.child)
     case i: InputAdapter => sortExecRoot(i.child)

@@ -2,7 +2,6 @@ package graft
 
 import org.apache.spark.sql.catalyst.optimizer.{BuildLeft, BuildRight}
 import org.apache.spark.sql.execution.{SparkPlan, UnaryExecNode}
-import org.apache.spark.sql.execution.adaptive.QueryStageExec
 import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
 import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
 import org.apache.spark.sql.execution.joins.BroadcastNestedLoopJoinExec
@@ -336,7 +335,6 @@ class PlanSpec extends AnyFunSuite {
     // a global aggregate (no grouping keys, so exactly 1 row)
     def globalAgg(p: SparkPlan): Boolean = p match {
       case a: BaseAggregateExec => a.groupingExpressions.isEmpty
-      case s: QueryStageExec => globalAgg(s.plan)
       case r: ReusedExchangeExec => globalAgg(r.child)
       case u: UnaryExecNode => globalAgg(u.child)
       case _ => false

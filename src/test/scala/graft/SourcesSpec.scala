@@ -485,7 +485,7 @@ class SourcesSpec extends AnyFunSuite {
     val files = if (d.isDirectory) d.listFiles().map(_.getName).toSet else Set.empty[String]
     assert(!files.contains("_SUCCESS"), s"failed job published a marker: $files")
     assert(!files.exists(_.startsWith("part-")), s"failed job left parts: $files")
-    // the _SUCCESS gate: an explicit-schema read of the aborted dir is empty
+    // no manifest: an explicit-schema read of the aborted dir is the empty version 0
     val back = spark.read.format("graft.sources.GraftStoreProvider")
       .schema("id bigint, v bigint")
       .option("path", dir).load()

@@ -206,7 +206,7 @@ class StreamingSpec extends AnyFunSuite {
       .option("path", store).load()
     val ids = back.select("event_id").collect().map(_.getLong(0)).sorted.toSeq
     assert(ids == (1L to 9L), s"expected each event exactly once, got $ids")
-    // epoch-tagged deterministic layout under the _SUCCESS gate
+    // epoch-tagged deterministic layout, with the marker each epoch commit writes
     val files = new java.io.File(store).listFiles().map(_.getName).toSet
     assert(files.contains("_SUCCESS") && files.contains("_SCHEMA"))
     assert(files.exists(_.startsWith("part-e")), s"no epoch parts: $files")

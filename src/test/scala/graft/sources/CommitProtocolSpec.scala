@@ -26,7 +26,7 @@ class CommitProtocolSpec extends AnyFunSuite {
     GraftCommit.withMetaLock(root) {
       GraftCommit.commitManifest(root, files, op = "create")
     }
-    Files.write(new File(root, GraftStore.SuccessFile).toPath, Array.empty[Byte])
+    Files.write(new File(root, GraftCommit.SuccessFile).toPath, Array.empty[Byte])
     root
   }
 
