@@ -475,7 +475,7 @@ object SourceQueries {
 
   /** Runs a store query on its own session clone with the `graft`
     * catalog bound to a fresh warehouse, plus `conf`: each execution owns
-    * its tables and DML modes, so two executions never see each other's
+    * its tables and DML thresholds, so two executions never see each other's
     * DDL, and the caller's session gets no catalog binding. `body` gets
     * the clone and the warehouse path.
     */
@@ -485,6 +485,12 @@ object SourceQueries {
     Sessions.isolated(s, Seq("spark.sql.catalog.graft" -> "graft.sources.GraftCatalog",
       "spark.sql.catalog.graft.warehouse" -> wh) ++ conf: _*)(body(_, wh))
   }
+
+  /** A row-level DML rewrite threshold at or below 1/(rows per file) for
+    * any file: every file with a matched row rewrites its kept rows.
+    */
+  private val RewriteEveryMatchedFile =
+    graft.sources.GraftStore.AutoRewriteFractionConf -> Double.MinPositiveValue.toString
 
   /** NAMED-TABLE SQL through the graft `TableCatalog` (VERDICT r10 task
     * 3 — the reference's S12/S13 story is *named-table* access,
@@ -530,16 +536,15 @@ object SourceQueries {
       |WHERE (CASE WHEN hour(ts) BETWEEN 6 AND 17 THEN 'day' ELSE 'night' END) = 'day'
       |GROUP BY 1 ORDER BY 1""".stripMargin
 
-  /** VECTORIZED graft-store read (VERDICT r10 task 5; the DEFAULT read
-    * path — measured 1.4x on scan-bound aggregates, PERF.md "Columnar
-    * A/B"; `columnar=false` selects the row reader): the
-    * committed store read through the `ColumnarBatch` path — the
-    * reader fills 4096-row `OnHeapColumnVector`s and Spark consumes
-    * the scan through `ColumnarToRow` whole-stage codegen instead of a
-    * row-at-a-time iterator. Semantics are pinned identical to the row
-    * reader (SourcesSpec compares both paths on one store; PlanSpec
-    * pins the executed plan's ColumnarToRow over the graft-store
-    * scan). The aggregate exercises every supported column type end to
+  /** VECTORIZED graft-store read (VERDICT r10 task 5; the store's one
+    * read path — measured 1.4x over a row reader on scan-bound
+    * aggregates, PERF.md "Columnar A/B"): the committed store read
+    * through the `ColumnarBatch` path — the reader fills 4096-row
+    * `OnHeapColumnVector`s and Spark consumes the scan through
+    * `ColumnarToRow` whole-stage codegen instead of a row-at-a-time
+    * iterator. SourcesSpec compares the read against the written rows;
+    * PlanSpec pins the executed plan's ColumnarToRow over the
+    * graft-store scan. The aggregate exercises every supported column type end to
     * end (long/double/string and a null-bearing column via the
     * day/night flag) so the vector fill paths are all on the oracled
     * path.
@@ -552,7 +557,7 @@ object SourceQueries {
       .write.format("graft.sources.GraftStoreProvider")
       .option("path", dir).mode("overwrite").save()
     s.read.format("graft.sources.GraftStoreProvider")
-      .option("path", dir).option("columnar", "true").load()
+      .option("path", dir).load()
       .filter(col("event_id") % 3 =!= 0L)
       .groupBy("event_type")
       .agg(count(lit(1)).as("n"), count(col("big_type")).as("n_big"),
@@ -625,17 +630,16 @@ object SourceQueries {
   /** ROW-LEVEL DELETE BY ID (VERDICT r11 task 2 — q230's erasure
     * cascade at the TABLE FORMAT level: right-to-be-forgotten deletes
     * by USER, not by partition): a data-column `DELETE` on a graft
-    * catalog table, under the session's DML mode — `auto` by default
-    * since VERDICT r14 task 6, so each file's fate is decided from the
+    * catalog table. Row-level DML decides each file's fate from the
     * commit's own matched counts (the ~1%-hit files here all bind
-    * deletion vectors; a dense hit would rewrite its kept rows on
-    * executors). The delete condition is pushed into the scan
-    * (partition pruning + zone-map refutation bound the touched set),
-    * runtime group filtering narrows it to files actually containing
-    * matches, and one manifest commit binds the whole decision with the
-    * originals' rows RETIRED from visibility (SourcesSpec proves
-    * non-intersecting files are neither opened nor rewritten, and that
-    * all three modes return byte-identical results on this lifecycle).
+    * deletion vectors under the 0.5 default rewrite threshold; a dense
+    * hit would rewrite its kept rows on executors). The delete condition
+    * is pushed into the scan (partition pruning + zone-map refutation
+    * bound the touched set), and one manifest commit binds the whole
+    * decision with the matched rows RETIRED from visibility (SourcesSpec
+    * proves non-intersecting files are neither opened nor rewritten, and
+    * that rewrite thresholds ≈0, 0.5 and 1.0 return byte-identical
+    * results on this lifecycle).
     * The oracle recomputes the surviving aggregate from the source
     * parquet with the negated predicate.
     */
@@ -706,19 +710,20 @@ object SourceQueries {
     * q194/q211 CDC shapes at the TABLE FORMAT level: the versioned
     * manifests become a consumable changelog). The engine drives a full
     * lifecycle — CREATE (v1), INSERT evens (v2), INSERT odds (v3), a
-    * COW DELETE by user id (v4), COMPACT (data-neutral: contributes
-    * NOTHING to the changelog) — then reads the NET row-level changes
-    * since v2 through [[graft.sources.GraftCDC.netChanges]]: the odd
-    * INSERTs and the DELETEd rows, with the COW rewrite's same-version
-    * delete+insert pairs cancelled by a distributed aggregate (the
+    * DELETE by user id that rewrites every matched file (v4), COMPACT
+    * (data-neutral: contributes NOTHING to the changelog) — then reads
+    * the NET row-level changes since v2 through
+    * [[graft.sources.GraftCDC.netChanges]]: the odd INSERTs and the
+    * DELETEd rows, with the rewrites' kept rows cancelled (the
     * Spark-first form of Iceberg's net-changes changelog; planning is
     * O(changed files) per version — manifest diffs, no listing). The
     * oracle recomputes both change sets from the source parquet with
     * the equivalent predicates. SourcesSpec pins the raw changelog's
-    * attribution (COW + DV deletes) and the compact-is-silent contract.
+    * attribution (rewrite + DV deletes) and the compact-is-silent
+    * contract.
     */
   private def q259(s: SparkSession, d: String): DataFrame =
-      onGraftCatalog(s, graft.sources.GraftStore.DeleteModeConf -> "copy-on-write") { (s, wh) =>
+      onGraftCatalog(s, RewriteEveryMatchedFile) { (s, wh) =>
     Tables.events(s, d)
       .select(col("event_id"), col("user_id"), col("value"),
         when(col("event_id") % 2 === 0, "even").otherwise("odd").as("half"))
@@ -733,10 +738,9 @@ object SourceQueries {
     s.sql("""INSERT INTO graft.db.events_cdc
             |SELECT /*+ REPARTITION(2) */ event_id, user_id, value, half
             |FROM q259_src WHERE half = 'odd'""".stripMargin) // version 3
-    // v4: COW delete, PINNED by this query's conf (the session default is
-    // auto, which would bind DVs at this churn — the query's point is the
-    // COW rewrite's same-version pair noise and its relational
-    // cancellation)
+    // v4: every matched file rewrites (this query's threshold; the 0.5
+    // default would bind DVs at this churn — the query's point is the
+    // rewrites' kept rows and their cancellation)
     s.sql("DELETE FROM graft.db.events_cdc WHERE user_id % 7 = 3")
     val path = wh + "/db/events_cdc"
     graft.sources.GraftMaintenance.compact(path) // v5 (emits no changes)
@@ -769,8 +773,8 @@ object SourceQueries {
   /** INCREMENTAL VIEW MAINTENANCE over the store changelog (VERDICT r13
     * task 2, folding in task 3's SQL CDC surface): a materialized
     * per-partition aggregate view absorbs a mixed DML batch — append
-    * (v3), COPY-ON-WRITE DELETE (v4), MERGE-ON-READ UPDATE via deletion
-    * vectors (v5) — by consuming ONLY the net changelog since the
+    * (v3), a DELETE that rewrites every matched file (v4), an UPDATE
+    * through deletion vectors (v5) — by consuming ONLY the net changelog since the
     * version it was built at, read through the PURE-SQL metadata table
     * (`FROM graft.db.events_ivm.changes WHERE _commit_version > v`,
     * zero reader options; the `_commit_version` bound pushes into
@@ -784,8 +788,7 @@ object SourceQueries {
     * are EXACTLY the oracle's recomputation (no float-order drift).
     */
   private def q260(s: SparkSession, d: String): DataFrame =
-      onGraftCatalog(s, graft.sources.GraftStore.DeleteModeConf -> "copy-on-write",
-        graft.sources.GraftStore.UpdateModeConf -> "merge-on-read") { (s, wh) =>
+      onGraftCatalog(s, RewriteEveryMatchedFile) { (s, wh) =>
     Tables.events(s, d)
       .select(col("event_id"), col("user_id"), col("value"),
         when(col("event_id") % 2 === 0, "even").otherwise("odd").as("half"))
@@ -809,12 +812,14 @@ object SourceQueries {
     s.sql("""INSERT INTO graft.db.events_ivm
             |SELECT /*+ REPARTITION(2) */ event_id, user_id, value, half
             |FROM q260_src WHERE event_id % 3 = 0""".stripMargin) // v3: append
-    // v4: COW delete, v5: MOR update, both PINNED by this query's conf
-    // (the documented lifecycle is append + COW + MOR; the auto default
-    // would bind DVs at this churn)
+    // v4: a delete that rewrites every matched file (this query's
+    // threshold; the default would bind DVs at this churn)
     s.sql("DELETE FROM graft.db.events_ivm WHERE user_id % 11 = 5")
+    // v5: the update at the default threshold — ~1/13 of each file
+    // matches, so it binds deletion vectors and reinserts
+    s.conf.unset(graft.sources.GraftStore.AutoRewriteFractionConf)
     s.sql("""UPDATE graft.db.events_ivm SET user_id = user_id + 1000000
-            |WHERE user_id % 13 = 2""".stripMargin) // v5: MOR (DV + reinsert)
+            |WHERE user_id % 13 = 2""".stripMargin)
     // refresh from the changelog alone, addressed in pure SQL
     val changelog = s.sql(
       s"SELECT * FROM graft.db.events_ivm.changes WHERE _commit_version > $v0")
@@ -844,15 +849,15 @@ object SourceQueries {
     * (caller-owned ranges — apply a slice twice and the view corrupts).
     * The engine drives THREE separate stream runs with a full
     * stop/restart between each (the checkpoint survives) over a mixed
-    * DML history: append, pinned COW DELETE (its changelog arrives
-    * pair-diffed, r15 task 4), MOR UPDATE via deletion vectors (its
-    * changelog arrives as row-index seek reads, r15 task 2). The final
+    * DML history: append, a DELETE that rewrites every matched file (its
+    * changelog arrives pair-diffed, r15 task 4), an UPDATE via deletion
+    * vectors (its changelog arrives as row-index seek reads, r15 task
+    * 2). The final
     * view must equal the oracle's recomputation; StreamingSpec pins
     * the replay and crash-window exactly-once cases directly.
     */
   private def q261(s: SparkSession, d: String): DataFrame =
-      onGraftCatalog(s, graft.sources.GraftStore.DeleteModeConf -> "copy-on-write",
-        graft.sources.GraftStore.UpdateModeConf -> "merge-on-read") { (s, wh) =>
+      onGraftCatalog(s, RewriteEveryMatchedFile) { (s, wh) =>
     Tables.events(s, d)
       .select(col("event_id"), col("user_id"), col("value"),
         when(col("event_id") % 2 === 0, "even").otherwise("odd").as("half"))
@@ -885,10 +890,13 @@ object SourceQueries {
             |SELECT /*+ REPARTITION(2) */ event_id, user_id, value, half
             |FROM q261_src WHERE event_id % 3 = 0""".stripMargin)
     refreshOnce()
-    // micro-batch 2: COW delete (pinned) — RESTART from the checkpoint
+    // micro-batch 2: every matched file rewrites — RESTART from the
+    // checkpoint
     s.sql("DELETE FROM graft.db.events_sivm WHERE user_id % 11 = 5")
     refreshOnce()
-    // micro-batch 3: MOR update (pinned) — RESTART again
+    // micro-batch 3: the update at the default threshold binds deletion
+    // vectors (~1/13 of each file matches) — RESTART again
+    s.conf.unset(graft.sources.GraftStore.AutoRewriteFractionConf)
     s.sql("""UPDATE graft.db.events_sivm SET user_id = user_id + 1000000
             |WHERE user_id % 13 = 2""".stripMargin)
     refreshOnce()
@@ -918,12 +926,12 @@ object SourceQueries {
     * non-invertibility REAL: the DELETE removes the top event_id band,
     * killing both groups' current maxima, and the refreshed view must
     * surface each group's runner-up — which no signed-delta algebra
-    * could produce. Append + auto-DML DELETE + MOR UPDATE all feed one
-    * refresh; the DuckDB oracle recomputes the final state from
+    * could produce. Append + DELETE + a deletion-vector UPDATE all feed
+    * one refresh; the DuckDB oracle recomputes the final state from
     * scratch.
     */
   private def q262(s: SparkSession, d: String): DataFrame =
-      onGraftCatalog(s, graft.sources.GraftStore.UpdateModeConf -> "merge-on-read") { (s, wh) =>
+      onGraftCatalog(s) { (s, wh) =>
     Tables.events(s, d)
       .select(col("event_id"), col("user_id"),
         when(col("event_id") % 2 === 0, "even").otherwise("odd").as("half"))
@@ -950,11 +958,11 @@ object SourceQueries {
     s.sql("""INSERT INTO graft.db.events_xivm
             |SELECT /*+ REPARTITION(2) */ event_id, user_id, half
             |FROM q262_src WHERE event_id % 3 = 0""".stripMargin) // v3: append
-    // v4: DELETE the top band under the auto DML default — both groups
+    // v4: DELETE the top band at the default rewrite threshold — both groups
     // lose their current max; the refresh must find the runner-ups
     s.sql(s"DELETE FROM graft.db.events_xivm WHERE event_id > $cut")
     s.sql("""UPDATE graft.db.events_xivm SET user_id = user_id + 1000000
-            |WHERE user_id % 13 = 2""".stripMargin) // v5: MOR (DV + reinsert), pinned
+            |WHERE user_id % 13 = 2""".stripMargin) // v5: DV + reinsert (~1/13 per file)
     val changelog = s.sql(
       s"SELECT * FROM graft.db.events_xivm.changes WHERE _commit_version > $v0")
     graft.sources.GraftIVM.refresh(changelog,
@@ -1153,17 +1161,17 @@ object SourceQueries {
     QueryDef("q254_store_catalog", q254, Some(q254Sql),
       "graft TableCatalog: CREATE NAMESPACE/TABLE + INSERT + partition-pruned SELECT as pure named-table SQL"),
     QueryDef("q255_store_columnar", q255, Some(q255Sql),
-      "graft-store vectorized read: OnHeapColumnVector batches through ColumnarToRow, hash-equal to the row path"),
+      "graft-store vectorized read (the store's one reader): OnHeapColumnVector batches through ColumnarToRow"),
     QueryDef("q256_store_time_travel", q256, Some(q256Sql),
       "graft-store versioned manifests: CREATE/INSERT/INSERT/DELETE lifecycle read back as four VERSION AS OF snapshots"),
     QueryDef("q257_store_cow_delete", q257, Some(q257Sql),
-      "graft-store row-level DELETE by id under the auto COW/MOR default (per-file decision; all three modes spec-pinned byte-identical)"),
+      "graft-store row-level DELETE by id: per-file rewrite-or-DV decision at the default threshold (thresholds ≈0/0.5/1.0 spec-pinned byte-identical)"),
     QueryDef("q258_store_sum_pushdown", q258, Some(q258Sql),
       "graft-store SUM/AVG aggregate pushdown: grouped totals answered from _STATS per-file exact sums"),
     QueryDef("q259_store_cdc", q259, Some(q259Sql),
-      "graft-store changes-between-versions: INSERT/COW-DELETE/compact lifecycle read back as a net row-level changelog"),
+      "graft-store changes-between-versions: INSERT/rewriting-DELETE/compact lifecycle read back as a net row-level changelog"),
     QueryDef("q260_store_ivm", q260, Some(q260Sql),
-      "incremental view maintenance: aggregate view absorbs append/COW-DELETE/MOR-UPDATE by consuming only the SQL-addressed changelog"),
+      "incremental view maintenance: aggregate view absorbs append/rewriting-DELETE/DV-UPDATE by consuming only the SQL-addressed changelog"),
     QueryDef("q261_store_stream_ivm", q261, Some(q261Sql),
       "STREAMING incremental view maintenance: checkpointed changelog + applied watermark refresh the view exactly-once across stop/restart"),
     QueryDef("q262_store_ivm_minmax", q262, Some(q262Sql),

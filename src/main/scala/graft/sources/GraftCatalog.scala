@@ -254,8 +254,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
     * numbers are contiguous, so a winner other than the current version
     * must be succeeded by a RETAINED version committed after t — the
     * read fails loudly instead of silently serving an older snapshot as
-    * if it had been current at t. Pre-timestamp (legacy headerless)
-    * versions carry no clock and are excluded the same loud way.
+    * if it had been current at t.
     */
   override def loadTable(ident: Identifier, timestampMicros: Long): Table = {
     val d = tableDir(ident)
@@ -266,7 +265,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
       s"graft catalog: table $ident has no committed version — " +
         "TIMESTAMP AS OF needs one")
     val cur = versions.map(_._1).max
-    val cands = versions.collect { case (v, Some(ts)) if ts <= tMs => (v, ts) }
+    val cands = versions.filter(_._2 <= tMs)
     if (cands.isEmpty) throw new IllegalStateException(
       s"graft catalog: no retained version of $ident existed at " +
         s"timestamp $tMs ms — it precedes the table (or retention GC " +
@@ -274,7 +273,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
     val (w, _) = cands.maxBy(_._1)
     if (w != cur) {
       val next = versions.find(_._1 == w + 1)
-      if (!next.exists(_._2.exists(_ > tMs))) throw new IllegalStateException(
+      if (!next.exists(_._2 > tMs)) throw new IllegalStateException(
         s"graft catalog: version history of $ident has a gap above " +
           s"version $w (expired by retention GC) — the snapshot current " +
           s"at $tMs ms is no longer resolvable")

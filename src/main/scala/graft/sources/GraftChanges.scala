@@ -37,23 +37,18 @@ import org.apache.spark.unsafe.types.UTF8String
   * `compact` version is DATA-NEUTRAL by construction and emits
   * NOTHING (the file-level diff would be pure rewrite noise).
   *
-  * A rewrite version whose commit recorded its old → new file PAIRING
-  * (`#rw=` manifest headers, VERDICT r15 task 4 + r16 task 1) is read
-  * as PAIR partitions: each old file's live rows diff against its
-  * replacements and kept rows cancel in the reader, so the raw
+  * A row-level DML version (`dv-*`) whose commit recorded its old → new
+  * file PAIRING (`#rw=` manifest headers, VERDICT r15 task 4 + r16 task
+  * 1) is read as PAIR partitions: each rewritten file's kept rows are an
+  * ordered subsequence of its old live rows (materializeKept streams the
+  * file), so the pair diff cancels them in the reader and the raw
   * changelog already carries only the rows that changed — input ∝
-  * churn, no shuffle spent on rewrite noise. That covers cow-delete /
-  * cow-update (narrow plans: ordered merge-diff), the auto-DML `dv-*`
-  * rewrites (materializeKept: ordered subsequence), and cow-merge
-  * where the commit could attribute (join output has no row order —
-  * those pairs cancel by in-reader HASH multiset; see
-  * [[GraftPairPolicy]]). A rewrite WITHOUT pairing (pre-r15 history, a
-  * MERGE whose partition holds several rewritten files — ambiguous
-  * task↔file attribution) falls back to the plain file diff — kept
-  * rows as same-version delete+insert pairs — and
-  * [[GraftCDC.netChanges]] cancels those RELATIONALLY (group by row
-  * content + version, net the signs), the Spark-first shape of
-  * Iceberg's net-changes changelog. All forms are net-identical.
+  * churn, no shuffle spent on rewrite noise. A rewrite WITHOUT pairing
+  * falls back to the plain file diff — kept rows as same-version
+  * delete+insert pairs — and [[GraftCDC.netChanges]] cancels those
+  * RELATIONALLY (group by row content + version, net the signs), the
+  * Spark-first shape of Iceberg's net-changes changelog. Both forms are
+  * net-identical.
   *
   * Streaming: the plain store table now supports `readStream` (TableCapability
   * MICRO_BATCH_READ). Offsets ARE manifest versions; each micro-batch
@@ -86,7 +81,7 @@ private[sources] object GraftChanges {
   /** Manifest at `v`, with v=0 the empty pre-birth baseline. */
   private def at(root: File, v: Long): GraftManifest =
     if (v == 0L) GraftCommit.Empty
-    else GraftCommit.readManifestFullAt(root, v)
+    else GraftCommit.at(root, v)
 
   /** Ops that change the visible file set without changing DATA. */
   private def dataNeutral(op: String): Boolean = op == "compact"
@@ -130,25 +125,13 @@ private[sources] object GraftChanges {
         // the reader, so the changelog carries O(actually-changed rows)
         // instead of the whole old+new sets that netChangesOf would have
         // to shuffle just to cancel. Net-exact under any pairing: every
-        // uncancelled row is still emitted with its sign. The diff
-        // POLICY follows the op's row-order guarantee: a cow-delete's
-        // kept rows are an ordered SUBSEQUENCE (narrow plan) — likewise
-        // an auto-DML (`dv-*`) rewrite, whose materializeKept streams
-        // the file; a cow-update rewrites IN PLACE; a cow-merge's output
-        // passed through a join (no order guarantee), so it cancels by
-        // HASH multiset instead.
-        val pairable = cur.op.startsWith("cow-") || cur.op.startsWith("dv-")
+        // uncancelled row is still emitted with its sign.
         val pairs: Seq[(String, Seq[String])] =
-          if (!pairable) Seq.empty
+          if (!cur.op.startsWith("dv-")) Seq.empty
           else cur.rewrites.toSeq.sortBy(_._1).filter { case (old, news) =>
             removed0.contains(old) && news.forall(n =>
               curSet(n) && !prevSet(n))
           }
-        val policy = cur.op match {
-          case "cow-update" => GraftPairPolicy.InPlace
-          case "cow-merge"  => GraftPairPolicy.Hash
-          case _            => GraftPairPolicy.Subseq // cow-delete, dv-*
-        }
         val pairedOld = pairs.map(_._1).toSet
         val pairedNew = pairs.flatMap(_._2).toSet
         val added = added0.filterNot(pairedNew)
@@ -168,11 +151,11 @@ private[sources] object GraftChanges {
             // newly-deleted rows = ordinals in (dv(v) \ dv(v-1))
             part(rel, "delete", cur.dvs.get(rel), prev.dvs.get(rel), delta = true)) ++
           pairs.map { case (old, news) =>
-            GraftCowPairPartition(onDisk(old).getAbsolutePath,
+            GraftPairPartition(onDisk(old).getAbsolutePath,
               partValuesOf(old, partCols),
               prev.dvs.get(old).map(d => new File(root, d).getAbsolutePath),
               news.map(n => (onDisk(n).getAbsolutePath, partValuesOf(n, partCols))),
-              v, policy)
+              v)
           }
       }
     }
@@ -209,7 +192,7 @@ private[sources] object GraftChanges {
 /** Public batch CDC entry points (the option plumbing, typed). */
 object GraftCDC {
   /** The RAW changelog for versions (fromV, toV] — file-level diff per
-    * version; a COW rewrite's kept rows appear as same-version
+    * version; an unpaired rewrite's kept rows appear as same-version
     * delete+insert pairs (see [[netChanges]]).
     */
   def changes(spark: SparkSession, path: String, fromV: Long,
@@ -402,40 +385,18 @@ private[sources] case class GraftChangePartition(
     dvApply: Option[String], dvOld: Option[String], delta: Boolean)
     extends InputPartition
 
-/** The pair-diff policies, by the committing op's row-order guarantee. */
-private[sources] object GraftPairPolicy {
-  /** Kept rows are an ordered SUBSEQUENCE of the old live rows
-    * (cow-delete's narrow plan; an auto-DML rewrite's materializeKept):
-    * on mismatch only the old side advances, emitting a delete — exact
-    * and minimal.
-    */
-  val Subseq = "subseq"
-  /** Rows rewritten IN PLACE, same order (cow-update's narrow plan): a
-    * mismatch emits delete(old) + insert(new) and advances both.
-    */
-  val InPlace = "inplace"
-  /** No order guarantee (cow-merge: the output passed through a join):
-    * cancel by HASH multiset — the old file's live rows load into an
-    * in-reader multiset (O(one file's rows) memory, the same unit the
-    * DV bitsets and materializeKept already size by), the new rows
-    * stream against it, and the leftovers emit with their signs. The
-    * relational alternative (netChangesOf) shuffles the same bytes
-    * across the cluster to do the identical cancellation.
-    */
-  val Hash = "hash"
-}
-
 /** One PAIR-DIFFED rewrite at one version (VERDICT r15 task 4, r16
   * task 1): the old file's live rows (dvOld applied) diff against its
-  * recorded replacement files under `policy` (see [[GraftPairPolicy]]).
+  * recorded replacement files, whose rows are an ordered SUBSEQUENCE of
+  * them — on mismatch only the old side advances, emitting a delete.
   * Rows are compared as RAW record fields — the codec is canonical, so
   * identical content means identical fields. Under any pairing or
   * ordering the emission is NET-exact: a row is cancelled only against
   * an equal row, so Σinserts − Σdeletes = new − old as multisets.
   */
-private[sources] case class GraftCowPairPartition(
+private[sources] case class GraftPairPartition(
     oldFile: String, oldPartValues: Seq[String], dvOld: Option[String],
-    newFiles: Seq[(String, Seq[String])], version: Long, policy: String)
+    newFiles: Seq[(String, Seq[String])], version: Long)
     extends InputPartition
 
 private[sources] class GraftChangesReaderFactory(
@@ -480,11 +441,11 @@ private[sources] class GraftChangesReaderFactory(
       })
 
     p match {
-      case pp: GraftCowPairPartition =>
+      case pp: GraftPairPartition =>
         // PAIR-DIFF reader (VERDICT r15 task 4): stream the old file's
         // live rows against the concatenated replacements; equal rows
-        // cancel IN the reader (no shuffle), mismatches emit with their
-        // sign under the op's policy (see GraftPairPolicy).
+        // cancel IN the reader (no shuffle), an unmatched old row is a
+        // delete, and new rows left after the old side drains insert.
         val delSlots = slotsFor(pp.version, "delete", pp.oldPartValues)
         val insSlots = pp.newFiles.map { case (_, pv) =>
           slotsFor(pp.version, "insert", pv) }
@@ -497,7 +458,6 @@ private[sources] class GraftChangesReaderFactory(
           private var newParser: GraftRecordParser = null
           private var oldCur: Array[String] = null
           private var newCur: Array[String] = null
-          private var pending: InternalRow = null
           private var row: InternalRow = null
 
           // old side = rows LIVE at v-1 (prev's DV applied). Ordinals
@@ -543,53 +503,7 @@ private[sources] class GraftChangesReaderFactory(
             }
             true
           }
-          // HASH policy state (cow-merge — no row-order guarantee): the
-          // old live rows load as a multiset keyed by trailing-null-
-          // normalized field vectors; new rows stream against it.
-          private var oldCounts:
-            scala.collection.mutable.HashMap[Vector[String], Int] = null
-          private var leftover: Iterator[InternalRow] = null
-          private def keyOf(rec: Array[String]): Vector[String] = {
-            var n = rec.length
-            while (n > 0 && rec(n - 1) == null) n -= 1
-            val b = Vector.newBuilder[String]
-            var i = 0
-            while (i < n) { b += rec(i); i += 1 }
-            b.result()
-          }
-          private def nextHash(): Boolean = {
-            if (oldCounts == null) {
-              oldCounts = scala.collection.mutable.HashMap.empty
-              var r = nextOld()
-              while (r != null) {
-                val k = keyOf(r)
-                oldCounts.update(k, oldCounts.getOrElse(k, 0) + 1)
-                r = nextOld()
-              }
-            }
-            while (leftover == null) {
-              val r = nextNew()
-              if (r == null) {
-                // new side drained: the uncancelled old rows are the
-                // deletes (order irrelevant — the changelog is a multiset)
-                leftover = oldCounts.iterator.flatMap { case (k, c) =>
-                  Iterator.fill(c)(k)
-                }.map(k => rowFor(delSlots, k.toArray))
-              } else {
-                val k = keyOf(r)
-                oldCounts.getOrElse(k, 0) match {
-                  case 0 => // genuinely new content: an insert
-                    row = rowFor(insSlots(nfi), r); return true
-                  case 1 => oldCounts.remove(k) // kept row: cancels
-                  case c => oldCounts.update(k, c - 1)
-                }
-              }
-            }
-            if (leftover.hasNext) { row = leftover.next(); true } else false
-          }
           override def next(): Boolean = {
-            if (pp.policy == GraftPairPolicy.Hash) return nextHash()
-            if (pending != null) { row = pending; pending = null; return true }
             while (true) {
               if (oldCur == null) oldCur = nextOld()
               if (newCur == null) newCur = nextNew()
@@ -600,15 +514,9 @@ private[sources] class GraftChangesReaderFactory(
                 row = rowFor(delSlots, oldCur); oldCur = null; return true
               } else if (same(oldCur, newCur)) {
                 oldCur = null; newCur = null // kept row: cancels in place
-              } else if (pp.policy == GraftPairPolicy.Subseq) {
+              } else {
                 // kept rows are a subsequence: this old row was deleted
                 row = rowFor(delSlots, oldCur); oldCur = null; return true
-              } else {
-                // update-in-place: old out, new in — one pass, both sides
-                row = rowFor(delSlots, oldCur)
-                pending = rowFor(insSlots(nfi), newCur)
-                oldCur = null; newCur = null
-                return true
               }
             }
             false

@@ -23,7 +23,7 @@ import graft.util.Materialize
   *  - THE ALGEBRA. COUNT and SUM are invertible: with no MIN/MAX the
   *    refresh is ONE union-aggregate of the current view rows and the
   *    signed changelog rows (+1/-1 per row for COUNT, ±value for each
-  *    SUM) — no net-change pass and no join, because a COW rewrite's
+  *    SUM) — no net-change pass and no join, because a rewrite's
   *    same-version delete+insert pair contributes +x−x = 0 to every
   *    signed sum. One shuffle over O(changed rows). MIN/MAX are not
   *    invertible (a delete of a group's current maximum needs the base

@@ -76,7 +76,8 @@ object GraftMaintenance {
     * which makes version 1).
     */
   def currentVersion(path: String): Option[Long] =
-    GraftCommit.currentManifestVersion(new File(path))
+    Option.when(new File(path, GraftStore.ManifestFile).isFile)(
+      GraftCommit.committedVersion(new File(path)))
 
   /** Compact every partition directory whose file count exceeds 1,
     * packing inputs (in name order) into merged files of up to
@@ -384,12 +385,12 @@ object GraftMaintenance {
       if (!replacedList.forall(mf.files.toSet)) abandon(
         "graft-store: a concurrent writer removed compaction inputs " +
           s"under $path — nothing was swapped; rerun compact")
-      // a concurrent MERGE-ON-READ delete changed an input's deletion
+      // a concurrent row-level DML changed an input's deletion
       // vector: the staged rewrite was read under the OLD generation,
       // so committing it would resurrect the newly-deleted rows and
       // silently drop the new DV binding — abort loudly instead
       if (replacedList.exists(rel => mf.dvs.get(rel) != pinnedDvs.get(rel))) abandon(
-        "graft-store: a concurrent merge-on-read DELETE changed a " +
+        "graft-store: a concurrent row-level DML changed a " +
           s"compaction input's deletion vector under $path — nothing " +
           "was swapped; rerun compact")
       Some(GraftCommit.Edit(drop = replacedList, publish = merged))
@@ -447,7 +448,7 @@ object GraftMaintenance {
         floorVersion.fold(base)(f => math.min(base, math.max(1L, f)))
       }
       val protectedRels: Set[String] = (keptFrom to cur.version).flatMap { v =>
-        scala.util.Try(GraftCommit.readManifestAt(root, v))
+        scala.util.Try(GraftCommit.at(root, v).files)
           .getOrElse(Seq.empty) // an already-expired kept version: nothing to protect
       }.toSet ++ cur.files
       // 1) expire retired files past the window
@@ -484,7 +485,7 @@ object GraftMaintenance {
             // the pile this clause exists to clear cheaply.)
             val agedOut = v < keptFrom &&
               now - f.lastModified() >= olderThanMs
-            lazy val complete = scala.util.Try(GraftCommit.readManifestAt(root, v))
+            lazy val complete = scala.util.Try(GraftCommit.at(root, v).files)
               .toOption.exists(_.forall(rel => new File(root, rel).isFile))
             if (agedOut || !complete) {
               Files.deleteIfExists(f.toPath); droppedVersions += 1

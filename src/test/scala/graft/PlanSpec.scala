@@ -470,7 +470,19 @@ class PlanSpec extends AnyFunSuite {
     df.collect() // ColumnarToRow is inserted when AQE finalizes the plan
     val plan = df.queryExecution.executedPlan.toString
     assert(plan.contains("graft-store"), s"DSv2 scan missing:\n$plan")
-    assert(plan.contains("Columnar: true"), s"columnar option lost:\n$plan")
+    // the store scan itself produces columnar batches (below AQE's stages)
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
+      case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
+        nodes(a.executedPlan)
+      case q: org.apache.spark.sql.execution.adaptive.QueryStageExec => nodes(q.plan)
+      case other => other.children.flatMap(nodes)
+    })
+    val scans = nodes(df.queryExecution.executedPlan).collect {
+      case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec
+          if b.scan.description().startsWith("graft-store") => b
+    }
+    assert(scans.nonEmpty && scans.forall(_.supportsColumnar),
+      s"graft-store scan is not columnar:\n$plan")
     assert(plan.contains("ColumnarToRow"),
       s"vectorized path not engaged (no ColumnarToRow):\n$plan")
   }

@@ -11,7 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * historical partitions.
   */
 class SourcesSpec extends AnyFunSuite {
-  import TestSpark.{spark, sf}
+  import TestSpark.{spark, sf, withRewriteFraction, RewriteAll, DvOnly}
 
   /** Once-per-session graft catalog registration for the catalog tests
     * (idempotent; the engine-side counterpart lives in SourceQueries).
@@ -22,18 +22,6 @@ class SourcesSpec extends AnyFunSuite {
       spark.conf.set("spark.sql.catalog.graft.warehouse",
         graft.util.TempDirs.create("graft_spec_wh_"))
     }
-
-  /** Run `body` with a row-level command's mode PINNED (the session
-    * default is `auto` since VERDICT r14 task 6 — tests that prove the
-    * copy-on-write or merge-on-read mechanics pin their mode here).
-    */
-  private def withDmlMode[A](command: String, mode: String)(body: => A): A = {
-    val conf = s"spark.graft.store.$command.mode"
-    val prev = spark.conf.getOption(conf)
-    spark.conf.set(conf, mode)
-    try body
-    finally prev.fold(spark.conf.unset(conf))(spark.conf.set(conf, _))
-  }
 
   test("PERMISSIVE csv read quarantines malformed rows instead of failing the job") {
     val dir = Files.createTempDirectory("graft_badcsv_").toString
@@ -223,7 +211,8 @@ class SourcesSpec extends AnyFunSuite {
     val dir = Files.createTempDirectory("graft_store_prune_").toString
     Files.writeString(Paths.get(dir, "_SCHEMA"), "id BIGINT,good BIGINT,poison BIGINT")
     Files.writeString(Paths.get(dir, "part-x-00000.csv"), "1,10,notanumber\n2,20,alsobad\n")
-    Files.writeString(Paths.get(dir, "_MANIFEST"), "#version=1\npart-x-00000.csv\n")
+    Files.writeString(Paths.get(dir, "_MANIFEST"),
+      "#version=1\n#ts=0\n#op=append\npart-x-00000.csv\n")
     Files.writeString(Paths.get(dir, "_SUCCESS"), "")
     val t = spark.read.format("graft.sources.GraftStoreProvider")
       .option("path", dir).load()
@@ -543,7 +532,7 @@ class SourcesSpec extends AnyFunSuite {
     assert(t.filter(col("tag").startsWith("zzz")).count() == 0L)
   }
 
-  test("graft-store columnar read: batch path equals row path, ColumnarToRow in the plan") {
+  test("graft-store columnar read: equals the written rows, ColumnarToRow in the plan") {
     import spark.implicits._
     val dir = graft.util.TempDirs.create("graft_store_col_") + "/t"
     val rows = Seq(
@@ -553,20 +542,17 @@ class SourcesSpec extends AnyFunSuite {
       (4L, 40, 4.25, false, ""),
       (5L, 0, 5.0, true, null),
       (6L, 66, -7.75, false, "café 中文 😀"))
-    rows.toDF("id", "i", "d", "b", "s").coalesce(2)
+    val written = rows.toDF("id", "i", "d", "b", "s")
+    written.coalesce(2)
       .write.format("graft.sources.GraftStoreProvider")
       .option("path", dir).mode("overwrite").save()
-    // columnar is the DEFAULT; `columnar=false` selects the row reader
-    val rowPath = spark.read.format("graft.sources.GraftStoreProvider")
-      .option("path", dir).option("columnar", "false").load()
     val colPath = spark.read.format("graft.sources.GraftStoreProvider")
       .option("path", dir).load()
-    val a = rowPath.orderBy("id").collect().map(_.toString).toSeq
+    val a = written.orderBy("id").collect().map(_.toString).toSeq
     val b = colPath.orderBy("id").collect().map(_.toString).toSeq
-    assert(a == b, s"columnar read diverged:\n$a\n$b")
+    assert(a == b, s"columnar read diverged from the written rows:\n$a\n$b")
     val plan = colPath.queryExecution.executedPlan.toString
     assert(plan.contains("ColumnarToRow"), s"columnar path not engaged:\n$plan")
-    assert(!rowPath.queryExecution.executedPlan.toString.contains("ColumnarToRow"))
     // columnar + pruning + partition constants compose
     val dir2 = graft.util.TempDirs.create("graft_store_col2_") + "/t"
     rows.toDF("id", "i", "d", "b", "s")
@@ -574,7 +560,7 @@ class SourcesSpec extends AnyFunSuite {
       .option("path", dir2).option("partitionBy", "b")
       .mode("overwrite").save()
     val back2 = spark.read.format("graft.sources.GraftStoreProvider")
-      .option("path", dir2).option("columnar", "true").load()
+      .option("path", dir2).load()
     assert(back2.filter(col("b")).select("id").as[Long].collect().sorted.toSeq
       == Seq(1L, 3L, 5L))
     // a >4096-row store crosses batch boundaries losslessly
@@ -583,7 +569,7 @@ class SourcesSpec extends AnyFunSuite {
       .write.format("graft.sources.GraftStoreProvider")
       .option("path", dir3).mode("overwrite").save()
     val big = spark.read.format("graft.sources.GraftStoreProvider")
-      .option("path", dir3).option("columnar", "true").load()
+      .option("path", dir3).load()
     assert(big.count() == 10000L)
     assert(big.agg(sum("v")).head().getLong(0) == (0L until 10000L).map(_ * 3).sum)
   }
@@ -738,14 +724,16 @@ class SourcesSpec extends AnyFunSuite {
     spark.range(10).select(col("id"), (col("id") * 2).as("v"))
       .write.format("graft.sources.GraftStoreProvider")
       .option("path", dir2).mode("overwrite").save()
-    Files.writeString(Paths.get(dir2, "_STATS"), "garbage\twithout\tstructure\n")
+    Files.writeString(Paths.get(dir2, "_STATS"),
+      "#graft-stats-v2\ngarbage\twithout\tstructure\n")
     intercept[Throwable] {
       spark.read.format("graft.sources.GraftStoreProvider")
         .option("path", dir2).load().count()
     }
-    // a torn trailing column group (field count not 2 + 4k) is equally
+    // a torn trailing column group (field count not 2 + 5k) is equally
     // loud — never a silently degraded entry
-    Files.writeString(Paths.get(dir2, "_STATS"), "f.csv\t10\tv\t0\tonly-min\n")
+    Files.writeString(Paths.get(dir2, "_STATS"),
+      "#graft-stats-v2\nf.csv\t10\tv\t0\tonly-min\n")
     intercept[Throwable] {
       spark.read.format("graft.sources.GraftStoreProvider")
         .option("path", dir2).load().count()
@@ -910,14 +898,17 @@ class SourcesSpec extends AnyFunSuite {
     val r2 = spark.sql("SELECT count(*) n, count(note) nn FROM graft.evodb.t").head()
     assert((r2.getLong(0), r2.getLong(1)) == ((15L, 5L)), r2.toString)
     assert(spark.sql("SELECT max(note) FROM graft.evodb.t").head().getString(0) == "n4")
-    // both reader paths agree across generations
+    // the path read equals the written rows across generations
     val tdir = spark.conf.get("spark.sql.catalog.graft.warehouse") + "/evodb/t"
-    val a = spark.read.format("graft.sources.GraftStoreProvider")
-      .option("path", tdir).load().orderBy("id", "v").collect().map(_.toString).toSeq
-    val b = spark.read.format("graft.sources.GraftStoreProvider")
-      .option("path", tdir).option("columnar", "false").load()
-      .orderBy("id", "v").collect().map(_.toString).toSeq
-    assert(a == b)
+    def ordered(rs: Seq[(Long, Long, Option[String])]) =
+      rs.sortBy(r => (r._1, r._2, r._3.getOrElse("")))
+    val got = spark.read.format("graft.sources.GraftStoreProvider")
+      .option("path", tdir).load().collect().map(r =>
+        (r.getAs[Long]("id"), r.getAs[Long]("v"), Option(r.getAs[String]("note"))))
+      .toSeq
+    val written = (0L until 10L).map(i => (i, i * 2, None)) ++
+      (0L until 5L).map(i => (i, i, Some(s"n$i")))
+    assert(ordered(got) == ordered(written))
     // evolutions that would rewrite committed files are rejected
     // (DROP COLUMN is no longer one of them — see the field-id test)
     intercept[Throwable] {
@@ -1064,8 +1055,7 @@ class SourcesSpec extends AnyFunSuite {
     val aBefore = files("a")
     val v0 = graft.sources.GraftMaintenance.currentVersion(tdir).get
 
-    spark.conf.set("spark.graft.store.delete.mode", "auto")
-    try {
+    withRewriteFraction(0.5) {
       // 1 of 100 rows in file a (1% < 0.5 -> DV), 10 of 11 in file b
       // (91% >= 0.5 -> rewrite)
       spark.sql("DELETE FROM graft.autodb.t WHERE id = 5 OR id >= 101")
@@ -1112,7 +1102,7 @@ class SourcesSpec extends AnyFunSuite {
         .head() match {
         case r => r.getLong(0) == 40L && r.getLong(1) == 60L
       })
-    } finally spark.conf.unset("spark.graft.store.delete.mode")
+    }
     spark.sql("DROP TABLE graft.autodb.t")
   }
 
@@ -1133,8 +1123,7 @@ class SourcesSpec extends AnyFunSuite {
     val wh = spark.conf.get("spark.sql.catalog.graft.warehouse")
     val tdir = s"$wh/autodml/t"
     val v0 = graft.sources.GraftMaintenance.currentVersion(tdir).get
-    spark.conf.set("spark.graft.store.update.mode", "auto")
-    try {
+    withRewriteFraction(0.5) {
       // 2% of file a (DV), 90% of file b (rewrite) — one UPDATE
       spark.sql("""UPDATE graft.autodml.t SET v = v + 1000
                   |WHERE id IN (3, 7) OR id >= 101""".stripMargin)
@@ -1154,12 +1143,11 @@ class SourcesSpec extends AnyFunSuite {
       assert(spark.sql("SELECT sum(v) FROM graft.autodml.t").head().getLong(0)
         == (0L until 110L).map(i =>
           if (i == 3 || i == 7 || i >= 101) i + 1000 else i).sum)
-    } finally spark.conf.unset("spark.graft.store.update.mode")
+    }
 
     // MERGE through the same auto plumbing: matched rows update (dense
     // in day=b), unmatched insert — still one commit, still exact
-    spark.conf.set("spark.graft.store.merge.mode", "auto")
-    try {
+    withRewriteFraction(0.5) {
       spark.range(100, 120).selectExpr("id",
         "CASE WHEN id < 110 THEN 'b' ELSE 'c' END AS day", "id * 10 AS nv")
         .createOrReplaceTempView("autodml_src")
@@ -1174,7 +1162,7 @@ class SourcesSpec extends AnyFunSuite {
         .head().getLong(0) == 120L)
       assert(spark.sql("SELECT sum(v) FROM graft.autodml.t WHERE id >= 100")
         .head().getLong(0) == (100L until 120L).map(_ * 10).sum)
-    } finally spark.conf.unset("spark.graft.store.merge.mode")
+    }
     spark.sql("DROP TABLE graft.autodml.t")
   }
 
@@ -1232,13 +1220,16 @@ class SourcesSpec extends AnyFunSuite {
     assert(spark.sql("SELECT count(*) FROM graft.dropdb.t WHERE v >= 1500")
       .head().getLong(0) == 3L)
 
-    // both reader paths agree across all three generations
-    val a = spark.read.format("graft.sources.GraftStoreProvider")
-      .option("path", tdir).load().orderBy("id").collect().map(_.toString).toSeq
-    val b = spark.read.format("graft.sources.GraftStoreProvider")
-      .option("path", tdir).option("columnar", "false").load()
-      .orderBy("id").collect().map(_.toString).toSeq
-    assert(a == b)
+    // the path read equals the written rows across all three generations
+    val got = spark.read.format("graft.sources.GraftStoreProvider")
+      .option("path", tdir).load().orderBy("id").collect().map(r =>
+        (r.getAs[Long]("id"), r.getAs[String]("w"), r.getAs[String]("day"),
+          Option(r.getAs[java.lang.Long]("v")).map(_.longValue))).toSeq
+    val written = (0L until 18L).map { i =>
+      val w = (if (i < 10) "w" else if (i < 15) "x" else "y") + i
+      (i, w, (i % 2).toString, if (i >= 15) Some(i * 100) else None)
+    }
+    assert(got == written)
 
     // TIME TRAVEL across the drop: the pinned pre-drop snapshot reads
     // under the CURRENT schema — surviving columns bind to their original
@@ -1248,10 +1239,10 @@ class SourcesSpec extends AnyFunSuite {
          |FROM graft.dropdb.t VERSION AS OF $vPre""".stripMargin).head()
     assert(tt.getLong(0) == 10L && tt.getLong(1) == 0L && tt.getString(2) == "w9")
 
-    // DML + maintenance preserve the ledger layout: a COW delete rewrites
-    // files with the tombstone padded, compactSorted re-clusters the whole
-    // table, and every generation still reads correctly afterwards
-    withDmlMode("delete", "copy-on-write")(
+    // DML + maintenance preserve the ledger layout: a rewriting delete
+    // pads the tombstone, compactSorted re-clusters the whole table, and
+    // every generation still reads correctly afterwards
+    withRewriteFraction(RewriteAll)(
       spark.sql("DELETE FROM graft.dropdb.t WHERE id = 16"))
     graft.sources.GraftMaintenance.compactSorted(tdir, Seq("id"), spark)
     assert(spark.sql("SELECT count(*), count(v), sum(v) FROM graft.dropdb.t")
@@ -1292,13 +1283,9 @@ class SourcesSpec extends AnyFunSuite {
     spark.sql("ALTER TABLE graft.tombdb.t DROP COLUMN secret")
     val wh = spark.conf.get("spark.sql.catalog.graft.warehouse")
     val tdir = s"$wh/tombdb/t"
-    val prev = spark.conf.getOption("spark.graft.store.delete.mode")
-    spark.conf.set("spark.graft.store.delete.mode", "auto")
-    // 9 of 10 rows deleted: 90% >= the auto threshold -> materialized
+    // 9 of 10 rows deleted: 90% >= the 0.5 threshold -> materialized
     // rewrite (the path that streams old bytes through materializeKept)
-    try spark.sql("DELETE FROM graft.tombdb.t WHERE id < 9")
-    finally prev.fold(spark.conf.unset("spark.graft.store.delete.mode"))(
-      spark.conf.set("spark.graft.store.delete.mode", _))
+    withRewriteFraction(0.5)(spark.sql("DELETE FROM graft.tombdb.t WHERE id < 9"))
     val rewrites = Option(new java.io.File(tdir).listFiles()).get
       .filter(f => f.getName.endsWith(".csv") && f.getName.contains("-m"))
     assert(rewrites.nonEmpty, "the 90%-deleted file must be materialized")
@@ -1367,25 +1354,22 @@ class SourcesSpec extends AnyFunSuite {
         }
       }
       insertBatch() // always end with a write through the final layout
-      // verify every cell against the model, on both reader paths
+      // verify every cell against the model
       val cols = live.map(_._1)
       val wh = spark.conf.get("spark.sql.catalog.graft.warehouse")
-      for (columnar <- Seq(true, false)) {
-        val got = spark.read.format("graft.sources.GraftStoreProvider")
-          .option("path", s"$wh/ledgerdb/t")
-          .option("columnar", columnar.toString).load()
-          .orderBy("key").collect()
-        assert(got.length == rows.length, s"seq $seqNo: row count")
-        got.zip(rows.sortBy(_._1)).foreach { case (r, (key, written)) =>
-          assert(r.getAs[Long]("key") == key)
-          cols.foreach { c =>
-            val expect: Option[Long] = written.get(idOf(c))
-            val actual = if (r.isNullAt(r.fieldIndex(c))) None
-                         else Some(r.getAs[Long](c))
-            assert(actual == expect,
-              s"seq $seqNo key=$key col=$c (field id ${idOf(c)}, " +
-                s"columnar=$columnar): got $actual expected $expect")
-          }
+      val got = spark.read.format("graft.sources.GraftStoreProvider")
+        .option("path", s"$wh/ledgerdb/t").load()
+        .orderBy("key").collect()
+      assert(got.length == rows.length, s"seq $seqNo: row count")
+      got.zip(rows.sortBy(_._1)).foreach { case (r, (key, written)) =>
+        assert(r.getAs[Long]("key") == key)
+        cols.foreach { c =>
+          val expect: Option[Long] = written.get(idOf(c))
+          val actual = if (r.isNullAt(r.fieldIndex(c))) None
+                       else Some(r.getAs[Long](c))
+          assert(actual == expect,
+            s"seq $seqNo key=$key col=$c (field id ${idOf(c)}): " +
+              s"got $actual expected $expect")
         }
       }
     }
@@ -1770,8 +1754,8 @@ class SourcesSpec extends AnyFunSuite {
 
     val vBefore = graft.sources.GraftMaintenance
       .currentVersion(tdir.getAbsolutePath).get
-    withDmlMode("delete", "copy-on-write")( // the test proves COW mechanics
-      spark.sql("DELETE FROM graft.cowdb.t WHERE id = 7")) // data predicate -> COW
+    withRewriteFraction(RewriteAll)( // the test proves rewrite mechanics
+      spark.sql("DELETE FROM graft.cowdb.t WHERE id = 7")) // data predicate -> rewrite
     assert(graft.sources.GraftMaintenance
       .currentVersion(tdir.getAbsolutePath).get > vBefore)
 
@@ -1800,13 +1784,13 @@ class SourcesSpec extends AnyFunSuite {
     // a predicate no file can match rewrites NOTHING (zone maps refute
     // everywhere): same file sets, version may advance but content holds
     val before = Seq("0", "1", "2").map(d => filesIn(d).map(_.getName).toSeq)
-    withDmlMode("delete", "copy-on-write")(
+    withRewriteFraction(RewriteAll)(
       spark.sql("DELETE FROM graft.cowdb.t WHERE id = 999999"))
     assert(Seq("0", "1", "2").map(d => filesIn(d).map(_.getName).toSeq) == before)
     assert(spark.sql("SELECT count(*) FROM graft.cowdb.t").head().getLong(0) == 299L)
 
-    // mixed partition+data predicate: COW, bounded to day=0's first file
-    withDmlMode("delete", "copy-on-write")(
+    // mixed partition+data predicate: a rewrite bounded to day=0's first file
+    withRewriteFraction(RewriteAll)(
       spark.sql("DELETE FROM graft.cowdb.t WHERE day = '0' AND id < 10"))
     assert(spark.sql("SELECT count(*) FROM graft.cowdb.t").head().getLong(0)
       == 299L - 4L) // ids 0,3,6,9
@@ -1845,8 +1829,7 @@ class SourcesSpec extends AnyFunSuite {
     val before = Seq("0", "1").map(filesIn)
     val vBefore = graft.sources.GraftMaintenance.currentVersion(tdir.getAbsolutePath).get
 
-    spark.conf.set("spark.graft.store.delete.mode", "merge-on-read")
-    try {
+    withRewriteFraction(DvOnly) {
       // the r12 done-bar: a 1-row DELETE in a large file rewrites NOTHING
       spark.sql("DELETE FROM graft.dvdb.t WHERE id = 7")
       assert(Seq("0", "1").map(filesIn) == before,
@@ -1856,13 +1839,13 @@ class SourcesSpec extends AnyFunSuite {
       assert(spark.sql("SELECT count(*) FROM graft.dvdb.t WHERE id = 7")
         .head().getLong(0) == 0L)
 
-      // both reader paths agree under a DV
-      val rows = spark.read.format("graft.sources.GraftStoreProvider")
-        .option("path", tdir.getAbsolutePath).option("columnar", "false").load()
+      // the path read under a DV equals the written rows minus the deleted one
       val cols = spark.read.format("graft.sources.GraftStoreProvider")
-        .option("path", tdir.getAbsolutePath).option("columnar", "true").load()
-      assert(rows.orderBy("id").collect().toSeq == cols.orderBy("id").collect().toSeq)
-      assert(rows.count() == 199L)
+        .option("path", tdir.getAbsolutePath).load()
+      assert(cols.orderBy("id").collect().map(r =>
+        (r.getAs[Long]("id"), r.getAs[String]("day"), r.getAs[Long]("v"))).toSeq ==
+        (0L until 200L).filter(_ != 7L).map(i => (i, (i % 2).toString, i * 2)))
+      assert(cols.count() == 199L)
 
       // the pre-DELETE snapshot never sees the DV (it binds to versions)
       assert(spark.sql(s"SELECT count(*) FROM graft.dvdb.t VERSION AS OF $vBefore")
@@ -1913,7 +1896,7 @@ class SourcesSpec extends AnyFunSuite {
       assert(spark.sql("SELECT sum(v) FROM graft.dvdb.t").head().getLong(0)
         == (0L until 200L).filterNot(Set(7L, 9L, 11L)).map(_ * 2).sum)
       spark.sql("DROP TABLE graft.dvdb.t")
-    } finally spark.conf.unset("spark.graft.store.delete.mode")
+    }
   }
 
   test("graft-store changes read: per-version changelog, COW/DV delete attribution, compaction silent") {
@@ -1928,8 +1911,8 @@ class SourcesSpec extends AnyFunSuite {
     spark.sql("""INSERT INTO graft.cdcdb.t
                 |SELECT /*+ REPARTITION(1) */ id, CAST(id % 2 AS STRING), id * 2
                 |FROM range(100, 200)""".stripMargin) // v3
-    withDmlMode("delete", "copy-on-write")(
-      spark.sql("DELETE FROM graft.cdcdb.t WHERE id = 7")) // v4: COW rewrite
+    withRewriteFraction(RewriteAll)(
+      spark.sql("DELETE FROM graft.cdcdb.t WHERE id = 7")) // v4: rewrite
     val wh = spark.conf.get("spark.sql.catalog.graft.warehouse")
     val tpath = s"$wh/cdcdb/t"
     import graft.sources.GraftCDC
@@ -1941,14 +1924,14 @@ class SourcesSpec extends AnyFunSuite {
     assert(c12.filter(col("_change_type") =!= "insert").count() == 0L)
     assert(c12.agg(sum("id")).head().getLong(0) == (0L until 100L).sum)
 
-    // COW delete attribution (r15 pair-diff): the commit recorded the
+    // rewrite delete attribution (r15 pair-diff): the commit recorded the
     // old -> new pairing, so the raw changelog emits ONLY the deleted
     // row — kept rows cancel in the reader's merge-diff, never reaching
     // the consumer (pre-r15 they arrived as delete+insert pairs that
     // netChangesOf had to shuffle away)
     val raw34 = GraftCDC.changes(spark, tpath, 3L, Some(4L))
     assert(raw34.count() == 1L,
-      "a paired cow version's raw changelog must be exactly the churn")
+      "a paired rewrite version's raw changelog must be exactly the churn")
     assert(raw34.filter(col("_change_type") === "delete" && col("id") === 7L)
       .count() == 1L)
     val net34 = GraftCDC.netChanges(spark, tpath, 3L, Some(4L)).collect()
@@ -1967,11 +1950,10 @@ class SourcesSpec extends AnyFunSuite {
     assert(netAll.count() == 201L) // 200 inserts + 1 delete
     assert(netAll.filter(col("_change_type") === "delete").count() == 1L)
 
-    // a MERGE-ON-READ delete's changes are the DV delta: exactly the
+    // a deletion-vector delete's changes are the DV delta: exactly the
     // newly-deleted ordinals, nothing else (no file was rewritten)
-    spark.conf.set("spark.graft.store.delete.mode", "merge-on-read")
-    try spark.sql("DELETE FROM graft.cdcdb.t WHERE id = 11 OR id = 13") // v6
-    finally spark.conf.unset("spark.graft.store.delete.mode")
+    withRewriteFraction(DvOnly)(
+      spark.sql("DELETE FROM graft.cdcdb.t WHERE id = 11 OR id = 13")) // v6
     val dv56 = GraftCDC.changes(spark, tpath, 5L, Some(6L)).collect()
     assert(dv56.map(r => (r.getAs[String]("_change_type"), r.getAs[Long]("id")))
       .toSet == Set(("delete", 11L), ("delete", 13L)))
@@ -1990,7 +1972,7 @@ class SourcesSpec extends AnyFunSuite {
     // the r12 verdict's stated payoff for the changes read: the IVM
     // algebra (q108/q220) runs against the store's changelog instead of
     // recomputing — view(vB) = view(vA) + signed aggregate of the net
-    // changes in (vA, vB], across COW deletes AND merge-on-read updates
+    // changes in (vA, vB], across rewriting deletes AND DV updates
     ensureGraftCatalog()
     spark.sql("CREATE NAMESPACE IF NOT EXISTS graft.ivmdb")
     spark.sql("DROP TABLE IF EXISTS graft.ivmdb.t")
@@ -2006,14 +1988,13 @@ class SourcesSpec extends AnyFunSuite {
       .groupBy("k").agg(sum("v").as("sv"), count(lit(1)).as("n"))
       .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
 
-    // three change generations: append, COW delete, merge-on-read update
+    // three change generations: append, rewriting delete, DV update
     spark.sql(
       "INSERT INTO graft.ivmdb.t SELECT id, id % 7, id * 3 FROM range(500, 800)")
-    withDmlMode("delete", "copy-on-write")(
+    withRewriteFraction(RewriteAll)(
       spark.sql("DELETE FROM graft.ivmdb.t WHERE id % 13 = 5"))
-    spark.conf.set("spark.graft.store.update.mode", "merge-on-read")
-    try spark.sql("UPDATE graft.ivmdb.t SET v = v + 1000000 WHERE id % 17 = 2")
-    finally spark.conf.unset("spark.graft.store.update.mode")
+    withRewriteFraction(DvOnly)(
+      spark.sql("UPDATE graft.ivmdb.t SET v = v + 1000000 WHERE id % 17 = 2"))
     val vB = graft.sources.GraftMaintenance.currentVersion(tpath).get
 
     // MAINTAIN: apply the signed net changes to the old view state
@@ -2055,8 +2036,8 @@ class SourcesSpec extends AnyFunSuite {
     spark.sql("""INSERT INTO graft.metadb.t
                 |SELECT /*+ REPARTITION(1) */ id, CAST(id % 2 AS STRING), id * 2
                 |FROM range(60, 100)""".stripMargin) // v3
-    withDmlMode("delete", "copy-on-write")(
-      spark.sql("DELETE FROM graft.metadb.t WHERE id = 7")) // v4: COW
+    withRewriteFraction(RewriteAll)(
+      spark.sql("DELETE FROM graft.metadb.t WHERE id = 7")) // v4: rewrite
     val wh = spark.conf.get("spark.sql.catalog.graft.warehouse")
     val tpath = s"$wh/metadb/t"
 
@@ -2194,9 +2175,8 @@ class SourcesSpec extends AnyFunSuite {
     // small mixed DML batch against the 1000-row base
     spark.sql("INSERT INTO graft.ivm2db.t SELECT id, id % 5, id * 3 FROM range(1000, 1020)")
     spark.sql("DELETE FROM graft.ivm2db.t WHERE id >= 990 AND id < 1000")
-    spark.conf.set("spark.graft.store.update.mode", "merge-on-read")
-    try spark.sql("UPDATE graft.ivm2db.t SET v = v + 7 WHERE id < 5")
-    finally spark.conf.unset("spark.graft.store.update.mode")
+    withRewriteFraction(DvOnly)(
+      spark.sql("UPDATE graft.ivm2db.t SET v = v + 7 WHERE id < 5"))
 
     val changelog = spark.sql(
       s"SELECT * FROM graft.ivm2db.t.changes WHERE _commit_version > $v0")
@@ -2254,12 +2234,11 @@ class SourcesSpec extends AnyFunSuite {
     val v0 = graft.sources.GraftMaintenance.currentVersion(tpath).get
 
     // the churn: kill group 4's current max (994) and its whole top
-    // decile; bump group 2's values (MOR update); add a brand-new group;
+    // decile; bump group 2's values (DV update); add a brand-new group;
     // delete part of the NULL group (its max 999 goes too)
     spark.sql("DELETE FROM graft.xivmdb.t WHERE k = 4 AND v >= 900")
-    spark.conf.set("spark.graft.store.update.mode", "merge-on-read")
-    try spark.sql("UPDATE graft.xivmdb.t SET v = v - 7 WHERE k = 2 AND v < 100")
-    finally spark.conf.unset("spark.graft.store.update.mode")
+    withRewriteFraction(DvOnly)(
+      spark.sql("UPDATE graft.xivmdb.t SET v = v - 7 WHERE k = 2 AND v < 100"))
     spark.sql("INSERT INTO graft.xivmdb.t SELECT id, 77L, id FROM range(5000, 5020)")
     spark.sql("DELETE FROM graft.xivmdb.t WHERE k IS NULL AND v > 500")
 
@@ -2636,9 +2615,9 @@ class SourcesSpec extends AnyFunSuite {
     ensureGraftCatalog()
     spark.sql("CREATE NAMESPACE IF NOT EXISTS graft.mordb")
 
-    // the same DML sequence on two tables, one per mode — results must
-    // be identical; the merge-on-read table's ORIGINAL files must be
-    // byte-untouched throughout
+    // the same DML sequence on two tables, one rewriting every matched
+    // file and one binding deletion vectors — results must be identical;
+    // the DV table's ORIGINAL files must be byte-untouched throughout
     def build(name: String): Unit = {
       spark.sql(s"DROP TABLE IF EXISTS graft.mordb.$name")
       spark.sql(s"""CREATE TABLE graft.mordb.$name
@@ -2672,30 +2651,18 @@ class SourcesSpec extends AnyFunSuite {
       }.sortBy(_._1)
     val morBefore = dataFiles("mor")
 
-    // group-based copy-on-write, PINNED (the session default is auto)
-    spark.conf.set("spark.graft.store.update.mode", "copy-on-write")
-    spark.conf.set("spark.graft.store.merge.mode", "copy-on-write")
-    try dml("cow")
-    finally {
-      spark.conf.unset("spark.graft.store.update.mode")
-      spark.conf.unset("spark.graft.store.merge.mode")
-    }
-    spark.conf.set("spark.graft.store.update.mode", "merge-on-read")
-    spark.conf.set("spark.graft.store.merge.mode", "merge-on-read")
-    try dml("mor")
-    finally {
-      spark.conf.unset("spark.graft.store.update.mode")
-      spark.conf.unset("spark.graft.store.merge.mode")
-    }
+    // both ends of the rewrite threshold, PINNED (the default is 0.5)
+    withRewriteFraction(RewriteAll)(dml("cow"))
+    withRewriteFraction(DvOnly)(dml("mor"))
 
-    // identical results across modes
+    // identical results across thresholds
     val a = spark.table("graft.mordb.cow").orderBy("id", "v")
       .collect().map(_.toString).toSeq
     val b = spark.table("graft.mordb.mor").orderBy("id", "v")
       .collect().map(_.toString).toSeq
-    assert(a == b, s"mode divergence: cow=${a.take(3)}... mor=${b.take(3)}...")
+    assert(a == b, s"threshold divergence: cow=${a.take(3)}... mor=${b.take(3)}...")
 
-    // the merge-on-read table's ORIGINAL part files are untouched (names,
+    // the DV table's ORIGINAL part files are untouched (names,
     // mtimes, sizes); its changes live in DVs + rewrite-* insert files
     assert(dataFiles("mor") == morBefore,
       "merge-on-read DML must never rewrite a matched data file")
@@ -2749,12 +2716,11 @@ class SourcesSpec extends AnyFunSuite {
     // nothing after changesFrom yet
     run()
     assert(got.isEmpty)
-    // an append streams as inserts; a merge-on-read DELETE streams as
+    // an append streams as inserts; a deletion-vector DELETE streams as
     // retraction rows — the retractions the plain stream must refuse
     spark.sql("INSERT INTO graft.clogdb.t SELECT id, id * 2 FROM range(30, 40)") // v3
-    spark.conf.set("spark.graft.store.delete.mode", "merge-on-read")
-    try spark.sql("DELETE FROM graft.clogdb.t WHERE id = 5 OR id = 35") // v4
-    finally spark.conf.unset("spark.graft.store.delete.mode")
+    withRewriteFraction(DvOnly)(
+      spark.sql("DELETE FROM graft.clogdb.t WHERE id = 5 OR id = 35")) // v4
     run()
     val byType = got.toArray.map(_.asInstanceOf[(String, Long)])
       .groupBy(_._1).view.mapValues(_.map(_._2).toSet).toMap
@@ -2763,18 +2729,55 @@ class SourcesSpec extends AnyFunSuite {
     spark.sql("DROP TABLE graft.clogdb.t")
   }
 
-  test("q257 oracle flow is mode-equivalent: auto / merge-on-read / copy-on-write return byte-identical results") {
-    // the q257 lifecycle (create/insert/DELETE by user id/aggregate) must
-    // produce the SAME result under all three DML modes — the default is
-    // `auto` since VERDICT r14 task 6, and this is the assertion that
-    // makes flipping the default safe
-    val auto = SparkEntry.queries("q257_store_cow_delete")(spark, sf)
-      .collect().toSeq
-    val mor = withDmlMode("delete", "merge-on-read")(
-      SparkEntry.queries("q257_store_cow_delete")(spark, sf).collect().toSeq)
-    val cow = withDmlMode("delete", "copy-on-write")(
-      SparkEntry.queries("q257_store_cow_delete")(spark, sf).collect().toSeq)
-    assert(auto == mor && auto == cow)
+  test("q257 oracle flow is threshold-equivalent: DELETE, UPDATE and MERGE at ≈0, 0.5 and 1.0 give identical content and net changelogs") {
+    // the rewrite threshold chooses only HOW each matched file changes
+    // (kept-row rewrite vs deletion vector), never WHAT the table holds:
+    // the q257 lifecycle (create/insert/DELETE by user id/aggregate) and
+    // a mixed DELETE + UPDATE + MERGE sequence must give byte-identical
+    // content and identical net changelogs at both ends of the range and
+    // at the default
+    val thresholds = Seq(RewriteAll, 0.5, DvOnly)
+    def sorted(df: org.apache.spark.sql.DataFrame): Seq[String] =
+      df.collect().map(_.toString).toSeq.sorted
+    val q257 = thresholds.map(t => withRewriteFraction(t)(
+      sorted(SparkEntry.queries("q257_store_cow_delete")(spark, sf))))
+    assert(q257.distinct.size == 1, s"q257 diverged across thresholds: $q257")
+
+    ensureGraftCatalog()
+    spark.sql("CREATE NAMESPACE IF NOT EXISTS graft.thrdb")
+    val wh = spark.conf.get("spark.sql.catalog.graft.warehouse")
+    spark.range(550, 650).selectExpr("id", "CAST(id % 3 AS STRING) AS day",
+      "id * 5 AS nv").createOrReplaceTempView("thr_src")
+    val runs = thresholds.zipWithIndex.map { case (t, k) =>
+      val name = s"graft.thrdb.t$k"
+      spark.sql(s"DROP TABLE IF EXISTS $name")
+      spark.sql(s"""CREATE TABLE $name (id BIGINT, day STRING, v BIGINT)
+                   |PARTITIONED BY (day)""".stripMargin)
+      spark.sql(s"""INSERT INTO $name
+                   |SELECT /*+ REPARTITION(2) */ id, CAST(id % 3 AS STRING), id * 2
+                   |FROM range(0, 600)""".stripMargin)
+      val path = s"$wh/thrdb/t$k"
+      val v0 = graft.sources.GraftMaintenance.currentVersion(path).get
+      withRewriteFraction(t) {
+        // dense in day=2 (above the default threshold), sparse elsewhere
+        spark.sql(s"DELETE FROM $name WHERE id % 7 = 3 OR (day = '2' AND id < 400)")
+        spark.sql(s"UPDATE $name SET v = v + 100000 WHERE id % 11 = 4")
+        spark.sql(s"""MERGE INTO $name t USING thr_src s ON t.id = s.id
+                     |WHEN MATCHED AND s.id % 2 = 0 THEN DELETE
+                     |WHEN MATCHED THEN UPDATE SET v = s.nv
+                     |WHEN NOT MATCHED THEN INSERT (id, day, v) VALUES (s.id, s.day, s.nv)
+                     |""".stripMargin)
+      }
+      val out = (sorted(spark.table(name)),
+        sorted(graft.sources.GraftCDC.netChanges(spark, path, v0)))
+      spark.sql(s"DROP TABLE $name")
+      out
+    }
+    assert(runs.map(_._1).distinct.size == 1,
+      s"table content diverged across thresholds: ${runs.map(_._1.take(3))}")
+    assert(runs.map(_._2).distinct.size == 1,
+      s"net changelog diverged across thresholds: ${runs.map(_._2.take(3))}")
+    assert(runs.head._1.nonEmpty && runs.head._2.nonEmpty)
   }
 
   test("graft-store sorted compaction: executor-parallel re-cluster restores zone-map skipping") {
@@ -3079,27 +3082,29 @@ class SourcesSpec extends AnyFunSuite {
     poisoned.foreach(f => Files.writeString(f.toPath, "zz,zz\n"))
     val vBefore = graft.sources.GraftMaintenance
       .currentVersion(tdir.getAbsolutePath).get
-    withDmlMode("update", "copy-on-write")(
+    withRewriteFraction(RewriteAll)(
       spark.sql("UPDATE graft.dmldb.t SET v = v + 1000000 WHERE id = 7"))
     poisoned.foreach(f => Files.write(f.toPath, saved(f)))
     assert(spark.sql("SELECT v FROM graft.dmldb.t WHERE id = 7").head().getLong(0)
       == 7L * 2 + 1000000L)
     assert(spark.sql("SELECT count(*) FROM graft.dmldb.t").head().getLong(0) == 300L)
-    // only day=1's first file was rewritten
+    // only day=1's first file was rewritten (its kept rows land in one
+    // materialized `-m` file; the updated row is a reinserted file)
     assert(filesIn("0").forall(_.getName.startsWith("part-")))
     assert(filesIn("2").forall(_.getName.startsWith("part-")))
-    assert(filesIn("1").count(_.getName.startsWith("rewrite-")) == 1)
+    assert(filesIn("1").count(f =>
+      f.getName.startsWith("rewrite-") && f.getName.contains("-m")) == 1)
     // the pre-UPDATE snapshot still answers (retired, not unlinked)
     assert(spark.sql(
       s"SELECT count(*) FROM graft.dmldb.t VERSION AS OF $vBefore")
       .head().getLong(0) == 300L)
 
     // MERGE: matched rows update, unmatched insert (routing to their
-    // partitions through the same rewrite write)
+    // partitions through the same delta write)
     spark.sql("""SELECT id, CAST(id % 3 AS STRING) AS day, id * 100 AS v
                 |FROM range(295, 310)""".stripMargin)
       .createOrReplaceTempView("dml_src")
-    withDmlMode("merge", "copy-on-write")(
+    withRewriteFraction(RewriteAll)(
       spark.sql("""MERGE INTO graft.dmldb.t t USING dml_src s ON t.id = s.id
                 |WHEN MATCHED THEN UPDATE SET v = s.v
                 |WHEN NOT MATCHED THEN INSERT (id, day, v) VALUES (s.id, s.day, s.v)

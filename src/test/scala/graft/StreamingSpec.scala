@@ -8,7 +8,7 @@ import graft.streaming.Pipeline
 import graft.streaming.Pipeline.StreamEvent
 
 class StreamingSpec extends AnyFunSuite {
-  import TestSpark.spark
+  import TestSpark.{spark, withRewriteFraction, DvOnly}
   import spark.implicits._
 
   private def ev(id: Long, user: Long, value: Double = 1.0): StreamEvent =
@@ -446,9 +446,8 @@ class StreamingSpec extends AnyFunSuite {
     // directly-applied range... it was never checkpointed, so the
     // stream REPLAYS (v3, v4] — the watermark skips it — then applies
     // (v4, v5] exactly once: no version skipped, none double-applied
-    spark.conf.set("spark.graft.store.update.mode", "merge-on-read")
-    try spark.sql("UPDATE graft.sivmdb.t SET v = v + 1000 WHERE id % 13 = 2") // v5
-    finally spark.conf.unset("spark.graft.store.update.mode")
+    withRewriteFraction(DvOnly)(
+      spark.sql("UPDATE graft.sivmdb.t SET v = v + 1000 WHERE id % 13 = 2")) // v5
     runStream()
     assert(viewState() == recompute(),
       "the restarted stream must converge on the exact view")
@@ -520,9 +519,8 @@ class StreamingSpec extends AnyFunSuite {
     // every other partition's files alone
     val after1 = snapshot(Seq(0L, 1L, 2L, 4L, 6L, 7L))
     val b1 = GraftIVM.binding(viewPath).get
-    spark.conf.set("spark.graft.store.update.mode", "merge-on-read")
-    try spark.sql("UPDATE graft.spivmdb.t SET v = v + 1000 WHERE k = 5 AND id % 3 = 0") // v5
-    finally spark.conf.unset("spark.graft.store.update.mode")
+    withRewriteFraction(DvOnly)(
+      spark.sql("UPDATE graft.spivmdb.t SET v = v + 1000 WHERE k = 5 AND id % 3 = 0")) // v5
     val v5 = GraftMaintenance.currentVersion(basePath).get
     val slice = GraftCDC.changes(spark, basePath, b1._1, Some(v5))
     assert(GraftIVM.applyBatchExactlyOnce(slice, view, viewPath, basePath).consumed > 0L)
@@ -608,11 +606,10 @@ class StreamingSpec extends AnyFunSuite {
     assert(Seq(0L, 1L, 3L, 4L, 6L, 7L).map(k => k -> filesIn(k)).toMap == before,
       "untouched partitions moved in the extrema streaming refresh")
 
-    // batch 2 DIRECT + crash window: a MOR update pushes k=5's max UP
+    // batch 2 DIRECT + crash window: a DV update pushes k=5's max UP
     val b1 = GraftIVM.binding(viewPath).get
-    spark.conf.set("spark.graft.store.update.mode", "merge-on-read")
-    try spark.sql("UPDATE graft.sxivmdb.t SET v = v + 100000 WHERE k = 5 AND id < 100")
-    finally spark.conf.unset("spark.graft.store.update.mode")
+    withRewriteFraction(DvOnly)(
+      spark.sql("UPDATE graft.sxivmdb.t SET v = v + 100000 WHERE k = 5 AND id < 100"))
     val v = GraftMaintenance.currentVersion(basePath).get
     val slice = GraftCDC.changes(spark, basePath, b1._1, Some(v))
     assert(GraftIVM.applyBatchExactlyOnce(slice, view, viewPath, basePath).consumed > 0L)

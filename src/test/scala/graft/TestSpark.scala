@@ -16,4 +16,21 @@ object TestSpark {
     s
   }
   val sf: String = "/root/testdata/sf0.001"
+
+  /** Run `body` with row-level DML's rewrite threshold
+    * (`GraftStore.AutoRewriteFractionConf`, default 0.5) pinned on the
+    * shared session. [[RewriteAll]] is at or below 1/(rows per file) for
+    * every file, so each file with a match rewrites its kept rows;
+    * [[DvOnly]] binds deletion vectors except where every row of a file
+    * matched.
+    */
+  def withRewriteFraction[A](fraction: Double)(body: => A): A = {
+    val conf = graft.sources.GraftStore.AutoRewriteFractionConf
+    val prev = spark.conf.getOption(conf)
+    spark.conf.set(conf, fraction.toString)
+    try body
+    finally prev.fold(spark.conf.unset(conf))(spark.conf.set(conf, _))
+  }
+  val RewriteAll: Double = Double.MinPositiveValue
+  val DvOnly: Double = 1.0
 }

@@ -34,7 +34,7 @@ class CommitProtocolSpec extends AnyFunSuite {
     val root = mkVersioned(Seq("a.csv"))
     // writer A reads the table (simulating its in-lock read), then its
     // lock is broken and writer B commits first
-    val aRead = GraftCommit.readManifestFull(root).get
+    val aRead = GraftCommit.current(root)
     assert(aRead.version == 1L)
     Files.writeString(new File(root, "b.csv").toPath, "2\n")
     GraftCommit.withMetaLock(root) {
@@ -52,7 +52,7 @@ class CommitProtocolSpec extends AnyFunSuite {
     assert(GraftCommit.current(root).files.toSet == Set("a.csv", "b.csv"))
     // the REBASE path (what commitAppend's retry loop does): re-read,
     // recompute, commit — all three files survive
-    val fresh = GraftCommit.readManifestFull(root).get
+    val fresh = GraftCommit.current(root)
     GraftCommit.commitManifest(root, fresh.files :+ "a2.csv",
       op = "append", base = Some(fresh.version))
     assert(GraftCommit.current(root).files.toSet ==
@@ -76,11 +76,11 @@ class CommitProtocolSpec extends AnyFunSuite {
       GraftCommit.commitManifest(root, Seq("a.csv", "l.csv"),
         op = "append", base = Some(1L))
     }
-    assert(GraftCommit.currentManifestVersion(root).contains(2L),
+    assert(GraftCommit.committedVersion(root) == 2L,
       "a complete crashed winner must be rolled forward")
     assert(GraftCommit.current(root).files.toSet == Set("a.csv", "w.csv"))
     // the loser's rebase then lands on v3 with every file intact
-    val fresh = GraftCommit.readManifestFull(root).get
+    val fresh = GraftCommit.current(root)
     GraftCommit.commitManifest(root, fresh.files :+ "l.csv",
       op = "append", base = Some(fresh.version))
     assert(GraftCommit.current(root).files.toSet ==
@@ -133,7 +133,7 @@ class CommitProtocolSpec extends AnyFunSuite {
     // the append must break the aged lock and commit
     Files.writeString(new File(root, "x.csv").toPath, "x\n")
     GraftCommit.withMetaLock(root) {
-      val m = GraftCommit.readManifestFull(root).get
+      val m = GraftCommit.current(root)
       GraftCommit.commitManifest(root, m.files :+ "x.csv",
         op = "append", base = Some(m.version))
     }
@@ -255,12 +255,12 @@ class CommitProtocolSpec extends AnyFunSuite {
     }
 
   test("auto DML rewrites publish from executors; the driver never streams data file contents") {
-    // VERDICT r14 task 1: the AUTO path's kept-row materialization runs
-    // on the delta scan's executors, OUTSIDE the metadata lock — a
-    // driver-side loop would serialize O(file bytes × files) through one
-    // node while blocking every concurrent committer. materializeKept
-    // counts driver-side (no TaskContext) invocations; an auto DELETE
-    // that crosses the rewrite threshold must leave that count untouched.
+    // VERDICT r14 task 1: row-level DML's kept-row materialization runs
+    // on executors, OUTSIDE the metadata lock — a driver-side loop would
+    // serialize O(file bytes × files) through one node while blocking
+    // every concurrent committer. materializeKept counts driver-side (no
+    // TaskContext) invocations; a DELETE that crosses the rewrite
+    // threshold must leave that count untouched.
     ensureCatalog()
     spark.sql("CREATE NAMESPACE IF NOT EXISTS graft.occdb")
     spark.sql("DROP TABLE IF EXISTS graft.occdb.exec")
@@ -270,11 +270,7 @@ class CommitProtocolSpec extends AnyFunSuite {
     val wh = spark.conf.get("spark.sql.catalog.graft.warehouse")
     val tdir = s"$wh/occdb/exec"
     val driverBefore = GraftStore.DriverMaterializations.get()
-    val prev = spark.conf.getOption(GraftStore.DeleteModeConf)
-    spark.conf.set(GraftStore.DeleteModeConf, "auto")
-    try spark.sql("DELETE FROM graft.occdb.exec WHERE id < 90") // 90% -> rewrite
-    finally prev.fold(spark.conf.unset(GraftStore.DeleteModeConf))(
-      spark.conf.set(GraftStore.DeleteModeConf, _))
+    spark.sql("DELETE FROM graft.occdb.exec WHERE id < 90") // 90% >= 0.5 -> rewrite
     val manifest = Files.readString(Paths.get(tdir, "_MANIFEST"))
     assert(manifest.linesIterator.exists(l =>
       !l.startsWith("#") && l.contains("-m")),
@@ -301,22 +297,18 @@ class CommitProtocolSpec extends AnyFunSuite {
     val wh = spark.conf.get("spark.sql.catalog.graft.warehouse")
     val tdir = s"$wh/occdb/race"
     val base = GraftMaintenance.currentVersion(tdir).get
-    val prev = spark.conf.getOption(GraftStore.DeleteModeConf)
-    spark.conf.set(GraftStore.DeleteModeConf, "auto")
-    try {
-      // each hits 5% of the single file (cumulative 10% < threshold), so
-      // BOTH bind deletion vectors on the SAME target — the racing case
-      val t1 = new Thread(() =>
-        spark.sql("DELETE FROM graft.occdb.race WHERE id >= 0 AND id < 50"))
-      val t2 = new Thread(() =>
-        spark.sql("DELETE FROM graft.occdb.race WHERE id >= 500 AND id < 550"))
-      t1.start(); t2.start(); t1.join(); t2.join()
-    } finally prev.fold(spark.conf.unset(GraftStore.DeleteModeConf))(
-      spark.conf.set(GraftStore.DeleteModeConf, _))
+    // each hits 5% of the single file (cumulative 10% < the 0.5
+    // threshold), so BOTH bind deletion vectors on the SAME target — the
+    // racing case
+    val t1 = new Thread(() =>
+      spark.sql("DELETE FROM graft.occdb.race WHERE id >= 0 AND id < 50"))
+    val t2 = new Thread(() =>
+      spark.sql("DELETE FROM graft.occdb.race WHERE id >= 500 AND id < 550"))
+    t1.start(); t2.start(); t1.join(); t2.join()
     assert(GraftMaintenance.currentVersion(tdir).contains(base + 2),
       "each delete must commit exactly one version")
     // the surviving DV generation carries BOTH deletes' ordinals
-    val mf = GraftCommit.readManifestFull(new File(tdir)).get
+    val mf = GraftCommit.current(new File(tdir))
     assert(mf.dvs.size == 1, s"one file, one cumulative DV: ${mf.dvs}")
     assert(GraftDv.cardinality(
       new File(tdir, mf.dvs.values.head).getAbsolutePath) == 100L)

@@ -6,12 +6,14 @@ import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** VERDICT r15 task 4: COW rewrite pairing. A cow-delete/update commit
-  * records which replacement files hold each rewritten file's kept rows
-  * (`#rw=` manifest headers); the changelog reader then pair-diffs old
-  * against new IN the reader, so a COW version's raw changelog is
-  * exactly the churn — not the whole old file as deletes plus the whole
-  * new file as inserts shuffled away relationally. Pinned here:
+/** VERDICT r15 task 4: rewrite pairing. A row-level DML commit records
+  * which replacement file holds each rewritten file's kept rows (`#rw=`
+  * manifest headers); the changelog reader then pair-diffs old against
+  * new IN the reader, so a rewriting version's raw changelog is exactly
+  * the churn — not the whole old file as deletes plus the whole new file
+  * as inserts shuffled away relationally. The tests that pin a rewrite
+  * set the rewrite threshold at or below 1/(rows per file), so every
+  * file with a match rewrites. Pinned here:
   *
   *  1. DELETE: raw changelog rows == deleted rows (input ∝ churn);
   *  2. UPDATE: raw changelog rows == delete+insert per changed row;
@@ -22,7 +24,7 @@ import org.scalatest.funsuite.AnyFunSuite
   *     all its live rows as deletes.
   */
 class CowPairSpec extends AnyFunSuite {
-  import graft.TestSpark.spark
+  import graft.TestSpark.{spark, withRewriteFraction, RewriteAll}
 
   private def ensureCatalog(): Unit =
     if (spark.conf.getOption("spark.sql.catalog.graft").isEmpty) {
@@ -30,14 +32,6 @@ class CowPairSpec extends AnyFunSuite {
       spark.conf.set("spark.sql.catalog.graft.warehouse",
         graft.util.TempDirs.create("graft_cowpair_wh_"))
     }
-
-  private def withMode[A](command: String, mode: String)(body: => A): A = {
-    val conf = s"spark.graft.store.$command.mode"
-    val prev = spark.conf.getOption(conf)
-    spark.conf.set(conf, mode)
-    try body
-    finally prev.fold(spark.conf.unset(conf))(spark.conf.set(conf, _))
-  }
 
   test("cow pair-diff: DELETE's raw changelog is exactly the deleted rows; fallback nets identical") {
     ensureCatalog()
@@ -48,19 +42,19 @@ class CowPairSpec extends AnyFunSuite {
       .writeTo("graft.pairdb.t").append() // v2: one file
     val wh = spark.conf.get("spark.sql.catalog.graft.warehouse")
     val tpath = s"$wh/pairdb/t"
-    withMode("delete", "copy-on-write")(
+    withRewriteFraction(RewriteAll)(
       spark.sql("DELETE FROM graft.pairdb.t WHERE id % 100 = 7")) // v3
     val v = GraftMaintenance.currentVersion(tpath).get
 
     // the commit recorded the pairing
-    val mf = GraftCommit.readManifestFullAt(new File(tpath), v)
-    assert(mf.op == "cow-delete" && mf.rewrites.size == 1 &&
+    val mf = GraftCommit.at(new File(tpath), v)
+    assert(mf.op == "dv-delete" && mf.rewrites.size == 1 &&
       mf.rewrites.values.head.size == 1, mf.rewrites.toString)
 
     // 1. raw changelog = exactly the 100 deleted rows
     val raw = GraftCDC.changes(spark, tpath, v - 1, Some(v)).collect()
     assert(raw.length == 100,
-      s"paired cow-delete raw changelog must be the churn, got ${raw.length}")
+      s"paired rewrite raw changelog must be the churn, got ${raw.length}")
     assert(raw.forall(_.getAs[String]("_change_type") == "delete"))
     assert(raw.map(_.getAs[Long]("id")).sorted.toSeq ==
       (0L until 10000L).filter(_ % 100 == 7))
@@ -94,11 +88,10 @@ class CowPairSpec extends AnyFunSuite {
       .writeTo("graft.pairdb.u").append()
     val wh = spark.conf.get("spark.sql.catalog.graft.warehouse")
     val tpath = s"$wh/pairdb/u"
-    withMode("update", "copy-on-write")(
+    withRewriteFraction(RewriteAll)(
       spark.sql("UPDATE graft.pairdb.u SET v = v + 1000000 WHERE id % 50 = 3"))
     val v = GraftMaintenance.currentVersion(tpath).get
-    assert(GraftCommit.readManifestFullAt(new File(tpath), v)
-      .rewrites.nonEmpty)
+    assert(GraftCommit.at(new File(tpath), v).rewrites.nonEmpty)
     val raw = GraftCDC.changes(spark, tpath, v - 1, Some(v)).collect()
     assert(raw.length == 200,
       s"100 updated rows -> 100 delete + 100 insert, got ${raw.length}")
@@ -114,13 +107,11 @@ class CowPairSpec extends AnyFunSuite {
   }
 
   test("cow-merge pair-diff: changelog input ∝ changed rows; clustered write keeps file count ∝ rewritten files") {
-    // VERDICT r16 task 1: MERGE is the one DML op whose changelog still
-    // paid the full old+new diff. The commit now records DIRECTORY-level
-    // pairing (a dir with exactly one scanned file owns its replacement
-    // files), the reader cancels by HASH multiset (join output has no
-    // row order), and the write is clustered on `_file` so each scanned
-    // file's survivors land in one task instead of one shard per join
-    // task.
+    // VERDICT r16 task 1: a MERGE's changelog must not pay the full
+    // old+new diff either. Each matched file's kept rows rewrite in one
+    // executor task (so the pairing is exact and the replacement count
+    // is one file per rewritten file), and the merge's updated and
+    // inserted rows arrive as ordinary insert files.
     ensureCatalog()
     spark.sql("CREATE NAMESPACE IF NOT EXISTS graft.pairdb")
     spark.sql("DROP TABLE IF EXISTS graft.pairdb.m")
@@ -140,28 +131,28 @@ class CowPairSpec extends AnyFunSuite {
                 |SELECT id, id, id % 2 FROM range(20000, 20010)""".stripMargin)
     val wh = spark.conf.get("spark.sql.catalog.graft.warehouse")
     val tpath = s"$wh/pairdb/m"
-    withMode("merge", "copy-on-write")(
+    withRewriteFraction(RewriteAll)(
       spark.sql("""MERGE INTO graft.pairdb.m t USING graft.pairdb.msrc s
                   |ON t.id = s.id
                   |WHEN MATCHED AND s.id % 200 IN (13, 14) THEN DELETE
                   |WHEN MATCHED THEN UPDATE SET v = s.v
                   |WHEN NOT MATCHED THEN INSERT *""".stripMargin)) // v3
     val v = GraftMaintenance.currentVersion(tpath).get
-    val mf = GraftCommit.readManifestFullAt(new File(tpath), v)
-    assert(mf.op == "cow-merge", mf.op)
-    // both dirs held exactly one scanned file -> both pair
+    val mf = GraftCommit.at(new File(tpath), v)
+    assert(mf.op == "dv-merge", mf.op)
+    // both matched files rewrote -> both pair
     assert(mf.rewrites.size == 2, mf.rewrites.toString)
-    // clustered-by-_file write: survivors of each scanned file land in
-    // ONE task (+ at most one insert task), not one shard per join task
+    // survivors of each matched file land in ONE replacement file, not
+    // one shard per join task
     val newFiles = mf.rewrites.values.flatten.toSet
     assert(newFiles.nonEmpty && newFiles.size <= 6,
-      s"cow-merge produced ${newFiles.size} replacement files for 2 " +
-        s"rewritten files — the write is not clustered: $newFiles")
+      s"the merge produced ${newFiles.size} replacement files for 2 " +
+        s"rewritten files: $newFiles")
 
     // churn: 200 updates -> delete+insert pairs; 100 deletes; 10 inserts
     val raw = GraftCDC.changes(spark, tpath, v - 1, Some(v)).collect()
     assert(raw.length == 200 * 2 + 100 + 10,
-      s"paired cow-merge raw changelog must be the churn, got ${raw.length}")
+      s"paired merge raw changelog must be the churn, got ${raw.length}")
     val byType = raw.groupBy(_.getAs[String]("_change_type"))
     assert(byType("delete").length == 300 && byType("insert").length == 210)
     assert(byType("insert").map(r => (r.getAs[Long]("id"), r.getAs[Long]("v")))
@@ -191,23 +182,24 @@ class CowPairSpec extends AnyFunSuite {
         r.getAs[Long]("v"))).sorted.toSeq)
     Files.writeString(hist.toPath, body)
 
-    // AMBIGUOUS attribution (several scanned files in one directory):
-    // no pairing recorded, the plain diff stands — never a wrong guess
+    // several matched files in one directory: each rewrite is its own
+    // task, so each pairs with exactly its own replacement
     spark.sql("DROP TABLE IF EXISTS graft.pairdb.m2")
     spark.sql("CREATE TABLE graft.pairdb.m2 (id BIGINT, v BIGINT)")
     spark.range(0, 1000, 1, 1).selectExpr("id", "id AS v")
       .writeTo("graft.pairdb.m2").append() // file A
     spark.range(1000, 2000, 1, 1).selectExpr("id", "id AS v")
       .writeTo("graft.pairdb.m2").append() // file B: same (root) dir
-    withMode("merge", "copy-on-write")(
+    withRewriteFraction(RewriteAll)(
       spark.sql("""MERGE INTO graft.pairdb.m2 t
                   |USING (SELECT id * 2 AS id, -1L AS v FROM range(0, 600)) s
                   |ON t.id = s.id
                   |WHEN MATCHED THEN UPDATE SET v = s.v""".stripMargin))
     val v2 = GraftMaintenance.currentVersion(s"$wh/pairdb/m2").get
-    val mf2 = GraftCommit.readManifestFullAt(new File(s"$wh/pairdb/m2"), v2)
-    assert(mf2.op == "cow-merge" && mf2.rewrites.isEmpty,
-      s"two scanned files in one dir must stay unpaired: ${mf2.rewrites}")
+    val mf2 = GraftCommit.at(new File(s"$wh/pairdb/m2"), v2)
+    assert(mf2.op == "dv-merge" && mf2.rewrites.size == 2 &&
+      mf2.rewrites.values.forall(_.size == 1),
+      s"two matched files in one dir must each pair with its own rewrite: ${mf2.rewrites}")
     val net2 = GraftCDC.netChanges(spark, s"$wh/pairdb/m2", v2 - 1, Some(v2))
       .collect()
     assert(net2.count(_.getAs[String]("_change_type") == "insert") == 600 &&
@@ -218,12 +210,12 @@ class CowPairSpec extends AnyFunSuite {
   }
 
   test("auto-DML rewrite pairing: an above-threshold file's changelog is exactly its churn") {
-    // VERDICT r16 task 1 (auto half): the per-file rewrites the auto
-    // default materializes on executors are one task per old file —
-    // attribution exact, replacement an ordered subsequence — so a
-    // dv-* version's rewritten files pair-diff like a cow-delete while
-    // its below-threshold files keep DV delta reads. One mixed commit:
-    // file A (60% deleted) rewrites, file B (1 row) binds a DV.
+    // VERDICT r16 task 1: the per-file rewrites materialized on
+    // executors are one task per old file — attribution exact,
+    // replacement an ordered subsequence — so a dv-* version's rewritten
+    // files pair-diff while its below-threshold files keep DV delta
+    // reads. One mixed commit at the 0.5 default: file A (60% deleted)
+    // rewrites, file B (1 row) binds a DV.
     ensureCatalog()
     spark.sql("CREATE NAMESPACE IF NOT EXISTS graft.pairdb")
     spark.sql("DROP TABLE IF EXISTS graft.pairdb.a")
@@ -234,10 +226,10 @@ class CowPairSpec extends AnyFunSuite {
       .writeTo("graft.pairdb.a").append() // file B: [10000, 20000)
     val wh = spark.conf.get("spark.sql.catalog.graft.warehouse")
     val tpath = s"$wh/pairdb/a"
-    // auto default: no mode pin
+    // the default threshold: no pin
     spark.sql("DELETE FROM graft.pairdb.a WHERE id < 6000 OR id = 15000")
     val v = GraftMaintenance.currentVersion(tpath).get
-    val mf = GraftCommit.readManifestFullAt(new File(tpath), v)
+    val mf = GraftCommit.at(new File(tpath), v)
     assert(mf.op == "dv-delete", mf.op)
     assert(mf.rewrites.size == 1 && mf.rewrites.values.head.size == 1,
       s"file A must rewrite and pair: ${mf.rewrites}")
@@ -262,12 +254,12 @@ class CowPairSpec extends AnyFunSuite {
       .writeTo("graft.pairdb.w").append() // file B: [1000, 2000)
     val wh = spark.conf.get("spark.sql.catalog.graft.warehouse")
     val tpath = s"$wh/pairdb/w"
-    // kills ALL of file B and 10 rows of file A — one COW commit, two
-    // pairs: A -> [rewrite], B -> []
-    withMode("delete", "copy-on-write")(
+    // kills ALL of file B and 10 rows of file A — one rewriting commit,
+    // two pairs: A -> [rewrite], B -> []
+    withRewriteFraction(RewriteAll)(
       spark.sql("DELETE FROM graft.pairdb.w WHERE id >= 1000 OR id < 10"))
     val v = GraftMaintenance.currentVersion(tpath).get
-    val mf = GraftCommit.readManifestFullAt(new File(tpath), v)
+    val mf = GraftCommit.at(new File(tpath), v)
     assert(mf.rewrites.size == 2, mf.rewrites.toString)
     assert(mf.rewrites.values.count(_.isEmpty) == 1,
       s"the fully-deleted file must pair to NO replacements: ${mf.rewrites}")

@@ -11,7 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * contracts that matter:
   *
   *  1. LIFECYCLE — the sidecar is written with its data file (provider
-  *     write AND auto/COW rewrite), moves through publish in the same
+  *     write AND row-level DML's kept-row rewrite), moves through publish in the same
   *     rename step, and dies with the file (paired delete + GC sweep);
   *  2. SEEK — an indexed delta read never touches blocks holding no
   *     changed ordinals (proved by POISONING block 0's bytes: a
@@ -22,7 +22,7 @@ import org.scalatest.funsuite.AnyFunSuite
   *     accelerator, never a correctness dependency).
   */
 class RowIndexSpec extends AnyFunSuite {
-  import graft.TestSpark.spark
+  import graft.TestSpark.{spark, withRewriteFraction, RewriteAll, DvOnly}
 
   private def ensureCatalog(): Unit =
     if (spark.conf.getOption("spark.sql.catalog.graft").isEmpty) {
@@ -52,12 +52,11 @@ class RowIndexSpec extends AnyFunSuite {
     assert(blockRows == GraftRidx.BlockRows && offs.length == 3 &&
       offs(0) == 0L && offs(1) > 0L && offs(2) > offs(1))
 
-    // a MOR delete in blocks 1 and 2 only (block 0 stays untouched)
+    // a deletion-vector delete in blocks 1 and 2 only (block 0 stays
+    // untouched)
     val expected = Set(5000L, 5001L, 5002L, 5003L, 5004L, 9000L, 9001L)
-    spark.conf.set(GraftStore.DeleteModeConf, "merge-on-read")
-    try spark.sql(
-      "DELETE FROM graft.ridxdb.t WHERE (id >= 5000 AND id < 5005) OR id = 9000 OR id = 9001")
-    finally spark.conf.unset(GraftStore.DeleteModeConf)
+    withRewriteFraction(DvOnly)(spark.sql(
+      "DELETE FROM graft.ridxdb.t WHERE (id >= 5000 AND id < 5005) OR id = 9000 OR id = 9001"))
     val vDel = GraftMaintenance.currentVersion(tdir.getAbsolutePath).get
 
     def deltaIds(): Set[Long] =
@@ -89,19 +88,19 @@ class RowIndexSpec extends AnyFunSuite {
     assert(deltaIds() == expected)
     assert(GraftStore.DeltaSeekReads.get() == seeksBefore2)
 
-    // 4. rewrites re-index: a pinned COW delete materializes the kept
-    // rows (> one block) — the rewrite file carries a fresh sidecar,
-    // and GC unlinks the retired original together with any sidecar
-    spark.conf.set(GraftStore.DeleteModeConf, "copy-on-write")
-    try spark.sql("DELETE FROM graft.ridxdb.t WHERE id >= 11000")
-    finally spark.conf.unset(GraftStore.DeleteModeConf)
+    // 4. rewrites re-index: a delete pinned to rewrite materializes the
+    // kept rows (> one block) — the rewrite file carries a fresh
+    // sidecar, and GC unlinks the retired original together with any
+    // sidecar
+    withRewriteFraction(RewriteAll)(
+      spark.sql("DELETE FROM graft.ridxdb.t WHERE id >= 11000"))
     val rewrite = tdir.listFiles()
       .filter(f => f.getName.startsWith("rewrite-") && f.getName.endsWith(".csv")) match {
       case Array(f) => f
       case other    => fail(s"expected one rewrite file, got ${other.toSeq}")
     }
     assert(GraftRidx.fileFor(rewrite).isFile,
-      "a COW rewrite must publish a fresh row index")
+      "a kept-row rewrite must publish a fresh row index")
     GraftMaintenance.expireSnapshots(tdir.getAbsolutePath, olderThanMs = 0L,
       strayGraceMs = 0L)
     assert(!dataFile.isFile, "the retired original must be GC'd")
@@ -125,7 +124,7 @@ class RowIndexSpec extends AnyFunSuite {
       .writeTo("graft.ridxdb.u").append()
     val wh = spark.conf.get("spark.sql.catalog.graft.warehouse")
     val tdir = new File(s"$wh/ridxdb/u")
-    // auto DELETE of 60% -> the executor-side materializeKept path;
+    // DELETE of 60% at the 0.5 default -> the executor-side materializeKept path;
     // 4000 kept rows = 1 block boundary crossed -> a sidecar
     spark.sql("DELETE FROM graft.ridxdb.u WHERE id < 6000")
     val rewrite = tdir.listFiles()

@@ -47,6 +47,32 @@ class StoreCommitSpec extends AnyFunSuite {
     assert(rows(read(dir)) == expected)
     assert(GraftCommit.committedVersion(new File(dir)) == 2L)
 
+    // every commit writes the `#version=`/`#ts=`/`#op=` headers and the
+    // `#graft-stats-v2` header, so a sidecar without them is not one this
+    // format wrote: it fails loudly instead of reading as a default
+    def loud(what: String)(body: => Any): Unit = {
+      val e = intercept[Throwable](body)
+      val msgs = Iterator.iterate(e)(_.getCause).takeWhile(_ != null).map(_.getMessage)
+      assert(msgs.exists(m => m != null && m.contains(what)),
+        s"expected a loud '$what' failure, got: $e")
+    }
+    val manifest = Paths.get(dir, GraftStore.ManifestFile)
+    val committed = Files.readAllBytes(manifest)
+    val listed = new String(committed, StandardCharsets.UTF_8).linesIterator
+      .filterNot(_.startsWith("#")).mkString("", "\n", "\n")
+    Files.writeString(manifest, listed)
+    loud("#version=")(GraftCommit.current(new File(dir)))
+    loud("#version=")(GraftCommit.committedVersion(new File(dir)))
+    loud("#version=")(read(dir).collect())
+    Files.write(manifest, committed)
+    val stats = Paths.get(dir, GraftStore.StatsFile)
+    val statsBody = Files.readAllBytes(stats)
+    Files.writeString(stats, new String(statsBody, StandardCharsets.UTF_8)
+      .linesIterator.filterNot(_.startsWith("#")).mkString("", "\n", "\n"))
+    loud("#graft-stats-v2")(read(dir).collect())
+    Files.write(stats, statsBody)
+    assert(rows(read(dir)) == expected)
+
     // a location no commit has reached is the empty version 0, and a
     // partition DELETE on it commits nothing
     val schema = StructType.fromDDL("id BIGINT, v BIGINT, day STRING")
@@ -65,6 +91,21 @@ class StoreCommitSpec extends AnyFunSuite {
   }
 
   test("only GraftCommit commits a manifest or names the _SUCCESS marker") {
+    // removed settings: a test or query that still sets one would pass
+    // while pinning nothing, because Spark ignores unknown confs and
+    // reader options
+    val removed = Seq(
+      "spark\\.graft\\.store\\.(delete|update|merge)\\.mode".r,
+      """option\(\s*"columnar"""".r,
+      """"columnar"\s*->""".r)
+    val stale = Files.walk(Paths.get("src")).iterator.asScala
+      .filter(Files.isRegularFile(_)).toSeq
+      .filter(p => removed.exists(_.findFirstIn(
+        new String(Files.readAllBytes(p), StandardCharsets.UTF_8)).isDefined))
+    assert(stale.isEmpty, stale.mkString(
+      "files that name a removed DML mode conf or the removed columnar " +
+        "reader option:\n", "\n", ""))
+
     val root = Paths.get("src/main/scala")
     assert(Files.isDirectory(root), s"$root not found; run from the repository root")
     val store = root.resolve("graft/sources/GraftStore.scala")
