@@ -8,6 +8,7 @@ import org.apache.spark.sql.graft.GraftFunctions.sortedIntersectCount
 import org.apache.spark.sql.graft.Sessions
 
 import graft.{QueryDef, Tables}
+import graft.dedup.NearDup.P
 import graft.util.{Det, Materialize, TempDirs}
 
 /** Deduplication operator family over `documents` — the training-data-
@@ -253,44 +254,11 @@ object DedupQueries {
     .filter(col("id_a") < col("id_b"))
     .select("id_a", "id_b", "arr_a", "arr_b")
 
-  /** Exact-content COLLAPSE shared by every capped pairwise path (the
-    * q161 two-tier lesson applied in-operator): docs with identical
-    * token sets have identical Jaccard/containment to everything, so the
-    * quadratic machinery runs on one REPRESENTATIVE per (lang, arr)
-    * group and results expand back to members afterwards. Groups key on
-    * the ARRAY itself, not a hash of it, so collisions can't merge
-    * distinct contents. Returns (grouped: docs + rep column, reps: one
-    * row per distinct (lang, arr), rep = min member doc_id).
-    */
-  private def collapseGroups(big: DataFrame): (DataFrame, DataFrame) = {
-    val wG = Window.partitionBy("lang", "arr")
-    val grouped = big.withColumn("rep", min("doc_id").over(wG))
-    val reps = grouped.filter(col("doc_id") === col("rep"))
-      .select("doc_id", "lang", "arr")
-    (grouped, reps)
-  }
-
-  /** Driver-side block-size routing stats. Block counts come from
-    * `countsFrom` (callers pass a bare lang-column projection of the
-    * base table, or None to skip stats), NOT from the array frame:
-    * counting the array frame would force its cache to materialize in a
-    * separate serial job before the join can start (+1.2 s measured at
-    * sf0.1). Counting can only over-estimate a block (docs may drop
-    * rows), which at worst routes a borderline block through the capped
-    * path — results are routing-independent either way. The collect is
-    * bounded by |distinct langs| rows, a handful even at 100 TB.
-    */
-  private def bigLangsOf(countsFrom: Option[DataFrame], cap: Int): Array[String] =
-    countsFrom.fold(Array.empty[String])(
-      _.groupBy("lang").agg(count(lit(1)).as("n"))
-        .filter(col("n") > cap).select("lang")
-        .collect().map(_.getString(0)).sorted)
-
-  /** Exact blocked pairwise Jaccard with the skew guard: blocks at or
-    * under `cap` use the all-pairs self-join + native sorted intersect
-    * (fastest on this dup-heavy testdata — see q43's measured
-    * comparison); blocks above it collapse identical contents
-    * ([[collapseGroups]]) and generate rep candidates via
+  /** Exact blocked pairwise Jaccard with the skew guard
+    * ([[NearDup.capRouted]]): blocks at or under `cap` use the all-pairs
+    * self-join + native sorted intersect (fastest on this dup-heavy
+    * testdata — see q43's measured comparison); blocks above it collapse
+    * identical contents to reps and generate rep candidates via
     * [[prefixCandidates]]. Both paths end in the same exact verify, so
     * output is independent of routing. On dup-heavy corpora the collapse
     * is the difference between candidates ∝ blocks² and candidates ∝
@@ -325,33 +293,25 @@ object DedupQueries {
       // queries project them away
       .select(col("id_a"), col("id_b"), (inter.cast("double") / union).as("jaccard"),
         inter.cast("long").as("n_inter"), union.cast("long").as("n_union"))
-    val bigLangs = bigLangsOf(countsFrom, cap)
-    if (bigLangs.isEmpty) verify(arrSelfJoin(docs))
-    else {
-      val big = docs.filter(col("lang").isin(bigLangs.map(x => x: Any): _*))
-      val small = docs.filter(!col("lang").isin(bigLangs.map(x => x: Any): _*))
-      val (grouped, reps) = collapseGroups(big)
-      val repPairs = verify(
-        prefixCandidates(reps, num, den)
-          .join(reps.select(col("doc_id").as("id_a"), col("arr").as("arr_a")), "id_a")
-          .join(reps.select(col("doc_id").as("id_b"), col("arr").as("arr_b")), "id_b")
-          .select("id_a", "id_b", "arr_a", "arr_b"))
-      // cross-group member pairs inherit the rep pair's exact stats
-      val cross = repPairs
-        .join(grouped.select(col("rep").as("id_a"), col("doc_id").as("xa")), "id_a")
-        .join(grouped.select(col("rep").as("id_b"), col("doc_id").as("xb")), "id_b")
-        .select(least(col("xa"), col("xb")).as("id_a"),
-          greatest(col("xa"), col("xb")).as("id_b"),
-          col("jaccard"), col("n_inter"), col("n_union"))
-      // intra-group pairs: identical sets, J = 1 ≥ any num/den ≤ 1
-      val intra = grouped
-        .select(col("rep"), col("doc_id").as("id_a"), size(col("arr")).cast("long").as("sz"))
-        .join(grouped.select(col("rep"), col("doc_id").as("id_b")), "rep")
-        .filter(col("id_a") < col("id_b"))
-        .select(col("id_a"), col("id_b"), lit(1.0).as("jaccard"),
-          col("sz").as("n_inter"), col("sz").as("n_union"))
-      verify(arrSelfJoin(small)).unionAll(cross).unionAll(intra)
+    NearDup.capRouted(docs, cap, countsFrom)(d => verify(arrSelfJoin(d))) { (small, g) =>
+      val repPairs = verify(repCandidates(g, num, den))
+        .withColumnRenamed("id_a", "rep_a").withColumnRenamed("id_b", "rep_b")
+      // within-group pairs: identical sets, J = 1 ≥ any num/den ≤ 1
+      val sz = size(col("arr")).cast("long")
+      verify(arrSelfJoin(small)).unionByName(NearDup.expandPairs(g, repPairs,
+        Seq(lit(1.0).as("jaccard"), sz.as("n_inter"), sz.as("n_union")), lit(true)))
     }
+  }
+
+  /** Prefix-filtered candidate pairs among the reps of an over-cap
+    * block, with both sides' arrays attached for the verify.
+    */
+  private def repCandidates(groups: DataFrame, num: Int, den: Int): DataFrame = {
+    val reps = groups.select(col("rep").as("doc_id"), col("lang"), col("arr"))
+    prefixCandidates(reps, num, den)
+      .join(reps.select(col("doc_id").as("id_a"), col("arr").as("arr_a")), "id_a")
+      .join(reps.select(col("doc_id").as("id_b"), col("arr").as("arr_b")), "id_b")
+      .select("id_a", "id_b", "arr_a", "arr_b")
   }
 
   /** DECISION form of [[jaccardPairs]] (judge r8: the 10× re-measure
@@ -376,29 +336,16 @@ object DedupQueries {
     def perDoc(pairs: DataFrame) = pairs
       .groupBy(col("id_b").as("doc_id"))
       .agg(max(expr("(n_inter * 100) div n_union")).as("max_ratio"))
-    val bigLangs = bigLangsOf(countsFrom, cap)
-    if (bigLangs.isEmpty)
-      perDoc(jaccardPairs(docs, num, den, cap, None))
-    else {
-      val big = docs.filter(col("lang").isin(bigLangs.map(x => x: Any): _*))
-      val small = docs.filter(!col("lang").isin(bigLangs.map(x => x: Any): _*))
-      val (grouped, reps) = collapseGroups(big)
-      // rep pairs via the pair machinery on reps only (cap routing moot:
-      // countsFrom = None compiles the plain self-join... but reps can
-      // still be over-cap, so route through prefixCandidates explicitly
+    NearDup.capRouted(docs, cap, countsFrom)(
+        d => perDoc(jaccardPairs(d, num, den, cap, None))) { (small, g) =>
       val inter = sortedIntersectCount(col("arr_a"), col("arr_b"))
       val union = size(col("arr_a")) + size(col("arr_b")) - inter
-      val repPairs = prefixCandidates(reps, num, den)
-        .join(reps.select(col("doc_id").as("id_a"), col("arr").as("arr_a")), "id_a")
-        .join(reps.select(col("doc_id").as("id_b"), col("arr").as("arr_b")), "id_b")
+      val repDrop = perDoc(repCandidates(g, num, den)
         .filter(inter * den >= union * num)
         .select(col("id_b"), inter.cast("long").as("n_inter"),
-          union.cast("long").as("n_union"))
-      val repDrop = repPairs
-        .groupBy(col("id_b").as("doc_id"))
-        .agg(max(expr("(n_inter * 100) div n_union")).as("max_ratio"))
-      val nonMin = grouped.filter(col("doc_id") =!= col("rep"))
-        .select(col("doc_id"), lit(100L).as("max_ratio"))
+          union.cast("long").as("n_union")))
+      val nonMin = NearDup.memberRows(g).filter(col("member") =!= col("rep"))
+        .select(col("member").as("doc_id"), lit(100L).as("max_ratio"))
       perDoc(jaccardPairs(small, num, den, cap, None))
         .unionAll(repDrop).unionAll(nonMin)
     }
@@ -506,53 +453,24 @@ object DedupQueries {
        |FROM cjpairs
        |ORDER BY id_a, id_b""".stripMargin
 
-  /** MinHash signature parameters: k=16 permutations h_i(x)=(a_i·x+b_i)
-    * mod p, banded 4×4. Constants are fixed odd multipliers / offsets
-    * (pinned, seedless determinism).
-    */
-  private[dedup] val P = 1000000007L
-  private[dedup] val minhashParams: Seq[(Long, Long)] = Seq(
-    (131L, 7L), (137L, 89L), (139L, 283L), (149L, 659L),
-    (151L, 1021L), (157L, 1511L), (163L, 2039L), (167L, 2617L),
-    (173L, 3181L), (179L, 3767L), (181L, 4349L), (191L, 4973L),
-    (193L, 5641L), (197L, 6311L), (199L, 6997L), (211L, 7681L))
-
   /** MinHash + LSH banded dedup (the 100 TB near-dup path): signatures →
-    * 4 long band keys per doc (arithmetic combine of the band's 4
-    * minhashes — [[bandKeyExpr]]) → shuffle on band key → same-bucket
-    * candidate pairs → exact Jaccard verify ≥ 0.9. Recall vs the exact
-    * q42 answer stays probabilistic (≥ ~98% at j=0.9 with 4×4 banding;
-    * DedupSimilaritySpec measures it), but the PIPELINE itself is fully
-    * deterministic, so since round 3 the whole thing is hash-oracled: the
-    * SQL mirror computes the same signatures, bands, candidates, and
-    * verified pairs.
+    * 4 long band keys per doc ([[NearDup.minhashBands]]) → shuffle on
+    * band key → same-bucket candidate pairs → exact Jaccard verify ≥ 0.9.
+    * Recall vs the exact q42 answer stays probabilistic (≥ ~98% at j=0.9
+    * with 4×4 banding; DedupSimilaritySpec measures it), but the PIPELINE
+    * itself is fully deterministic, so since round 3 the whole thing is
+    * hash-oracled: the SQL mirror computes the same signatures, bands,
+    * candidates, and verified pairs.
     *
-    * Signature computation is RELATIONAL: explode the token hashes once
-    * and take the 16 permutation minima in ONE codegen'd hash aggregate —
-    * not 16 `array_min(transform(...))` passes, which are interpreted
-    * higher-order lambdas re-walking the array per permutation (the
-    * dominant cost of the old shape). Candidate pairs are emitted exactly
-    * once via a canonical-discovery filter on the first matching band
-    * (carrying both sides' 4 band hashes, 32 B/row) instead of a
-    * dropDuplicates shuffle over the full candidate set.
-    */
-  /** Banded MinHash candidate ids (shared by q44 and the q184 tuning
-    * report). Input: (doc_id, lang, toks). Output: distinct (id_a, id_b)
-    * same-lang pairs colliding in ≥1 of the 4 bands, emitted exactly once
-    * via the canonical first-matching-band discovery filter.
+    * Banded MinHash candidate ids (q44 and the q184 tuning report).
+    * Input: (doc_id, lang, toks). Output: distinct (id_a, id_b) same-lang
+    * pairs colliding in ≥1 of the 4 bands. Candidate pairs are emitted
+    * exactly once via a canonical-discovery filter on the first matching
+    * band (carrying both sides' first 3 band keys, 24 B/row) instead of
+    * a dropDuplicates shuffle over the full candidate set.
     */
   private def minhashCandidateIds(docs: DataFrame): DataFrame = {
-    val mins = minhashParams.zipWithIndex.map { case ((a, b), i) =>
-      min((col("h") * a + b) % P).as(s"mh_$i")
-    }
-    val sig = docs.select(col("doc_id"), explode(col("toks")).as("h"))
-      .groupBy("doc_id")
-      .agg(mins.head, mins.tail: _*)
-    val withBands = sig.select(col("doc_id") +: (0 until 4).map { b =>
-      bandKeyExpr(b).as(s"band_$b")
-    }: _*)
-      .join(docs.select(col("doc_id"), col("lang")), "doc_id")
-    val banded = withBands.select(col("doc_id"), col("lang"),
+    val banded = NearDup.minhashBands(docs).select(col("doc_id"), col("lang"),
       col("band_0"), col("band_1"), col("band_2"),
       posexplode(array((0 until 4).map(b => col(s"band_$b")): _*))
         .as(Seq("bi", "band_key")))
@@ -578,48 +496,34 @@ object DedupQueries {
     // TWO-TIER (lesson 19 — round 9 collapsed the MIRROR to rep space;
     // the round-10 sf1 bench caught the engine still flat at 50.9 s):
     // identical (lang, toks) docs share signatures, band keys, and every
-    // pairwise Jaccard, so band + verify over one REP per group and
-    // expand member pairs afterwards. Banding/verify cost drops from
-    // Θ((reps·dup)²-ish candidates) to Θ(rep candidates); the expansion
-    // join only copies verified values onto member id pairs. Output is
+    // pairwise Jaccard, so band + verify over one REP per group
+    // ([[NearDup.collapse]]) and expand member pairs afterwards
+    // ([[NearDup.expandPairs]]). Banding/verify cost drops from
+    // Θ((reps·dup)²-ish candidates) to Θ(rep candidates). Output is
     // bit-identical to the flat plan: cross pairs inherit the rep pair's
-    // jaccard (same arrays, same fold — and inter/union are symmetric,
-    // so least/greatest ordering is safe); within-group pairs have
-    // inter == union, whose double division is exactly 1.0.
-    val groups = Tables.documents(s, d)
-      .select(col("doc_id"), col("lang"), hashedToks(col("text")).as("toks"))
-      .groupBy("lang", "toks")
-      .agg(min("doc_id").as("doc_id"), collect_list(col("doc_id")).as("members"))
+    // jaccard (same arrays, same fold — and inter/union are symmetric);
+    // within-group pairs have inter == union, whose double division is
+    // exactly 1.0.
+    val g = NearDup.collapse(Tables.documents(s, d)
+      .select(col("doc_id"), col("lang"), hashedToks(col("text")).as("toks")),
+      "doc_id", Seq("lang", "toks"))
       .transform(m.cache) // hash once per distinct content, not per candidate pair
-    val reps = groups.select("doc_id", "lang", "toks")
-    val candidateIds = minhashCandidateIds(reps)
+    val reps = g.select(col("rep").as("doc_id"), col("lang"), col("toks"))
     val repsA = broadcast(reps.select(col("doc_id").as("id_a"), col("toks").as("toks_a")))
     val repsB = broadcast(reps.select(col("doc_id").as("id_b"), col("toks").as("toks_b")))
     val inter = sortedIntersectCount(col("toks_a"), col("toks_b"))
     val union = size(col("toks_a")) + size(col("toks_b")) - inter
-    val repPairs = candidateIds.join(repsA, "id_a").join(repsB, "id_b")
+    val repPairs = minhashCandidateIds(reps).join(repsA, "id_a").join(repsB, "id_b")
       .filter(inter * 10 >= union * 9)
       .select(col("id_a").as("rep_a"), col("id_b").as("rep_b"),
         (inter.cast("double") / union).as("jaccard"))
-    val mem = groups.select(col("doc_id").as("rep"), explode(col("members")).as("vid"))
-    val cross = repPairs
-      .join(broadcast(mem.select(col("rep").as("rep_a"), col("vid").as("xa"))), "rep_a")
-      .join(broadcast(mem.select(col("rep").as("rep_b"), col("vid").as("xb"))), "rep_b")
-      .select(least(col("xa"), col("xb")).as("id_a"),
-        greatest(col("xa"), col("xb")).as("id_b"), col("jaccard"))
     // Degenerate-group guard (ADVICE r10): a null-text group has null
-    // toks — the flat plan explodes no signature for it, so it yields NO
-    // candidate pairs; the within-group expansion must skip it too or
-    // the two-tier form would invent jaccard=1.0 pairs the flat plan
-    // (and the mirror) never emits. Size-0 can't arise from split(), but
-    // the guard states the actual precondition: a signature-producing key.
-    val within = groups
-      .filter(col("toks").isNotNull && size(col("toks")) > 0)
-      .select(explode(col("members")).as("xa"), col("members"))
-      .select(col("xa"), explode(col("members")).as("xb"))
-      .filter(col("xa") < col("xb"))
-      .select(col("xa").as("id_a"), col("xb").as("id_b"), lit(1.0).as("jaccard"))
-    cross.unionByName(within).localCheckpoint(true)
+    // toks — no signature, so the flat plan yields NO candidate pairs for
+    // it, and its within-group pairs must not appear either (the mirror
+    // never emits them). Size-0 can't arise from split(), but the guard
+    // states the actual precondition: a signature-producing key.
+    NearDup.expandPairs(g, repPairs, Seq(lit(1.0).as("jaccard")),
+      col("toks").isNotNull && size(col("toks")) > 0).localCheckpoint(true)
   }
 
   /** q44's mirror is TWO-TIER like the engine (lesson 19): identical
@@ -718,25 +622,26 @@ object DedupQueries {
     * mapped to its component's min doc_id over the jaccard≥0.9 edge graph.
     *
     * Set-equal docs collapse to one REPRESENTATIVE (min doc_id per
-    * distinct (lang, token-set)) before any pairwise work — q161's
-    * two-tier lesson applied to clustering: exact copies are always in
-    * one component (jaccard 1.0) and rep↔rep jaccard equals member↔member
-    * jaccard (identical sets), so components over the rep graph expand
-    * losslessly to the full labeling, while the pairwise stage's cost
-    * becomes a function of DISTINCT contents, not copy count (decade
-    * corpus: 86 s → ~8 s warm). The component's min doc_id is the min
-    * over its reps because each rep is already its group's min. At
-    * 100 TB the group-by keys a 128-bit content hash, not the raw array
-    * (q41's note), and `members` lists cap at the group level.
+    * distinct (lang, token-set), [[NearDup.collapse]]) before any
+    * pairwise work, and labels expand back to the members through
+    * [[NearDup.memberRows]] — q161's two-tier lesson applied to
+    * clustering: exact copies are always in one component (jaccard 1.0)
+    * and rep↔rep jaccard equals member↔member jaccard (identical sets),
+    * so components over the rep graph expand losslessly to the full
+    * labeling, while the pairwise stage's cost becomes a function of
+    * DISTINCT contents, not copy count (decade corpus: 86 s → ~8 s
+    * warm). The component's min doc_id is the min over its reps because
+    * each rep is already its group's min. At 100 TB the group-by keys a
+    * 128-bit content hash, not the raw array (q41's note), and `members`
+    * lists cap at the group level.
     */
   private def clusterLabels(s: SparkSession, d: String): DataFrame = Materialize.scoped { m =>
     import s.implicits._
-    val all = Tables.documents(s, d)
-      .select(col("doc_id"), col("lang"), hashedToks(col("text")).as("arr"))
-    val groups = all.groupBy(col("lang"), col("arr"))
-      .agg(min("doc_id").as("rep"), collect_list("doc_id").as("members"))
+    val g = NearDup.collapse(Tables.documents(s, d)
+      .select(col("doc_id"), col("lang"), hashedToks(col("text")).as("arr")),
+      "doc_id", Seq("lang", "arr"))
       .transform(m.cache)
-    val reps = groups.select(col("rep").as("doc_id"), col("lang"), col("arr"))
+    val reps = g.select(col("rep").as("doc_id"), col("lang"), col("arr"))
     // routing stats deliberately over-estimate from the RAW lang column
     // (file-size-gated like every caller — lesson 14 — and routing is
     // output-independent per DedupSimilaritySpec; reps ≤ docs per block)
@@ -769,9 +674,9 @@ object DedupQueries {
     val repLabels = labeled.toDF("rep_id", "label")
     // expand rep labels back to every member of each set-equal group; the
     // checkpoint materializes the (doc_id, label) frame before the scope
-    // releases `groups`
-    groups.join(repLabels, col("rep") === col("rep_id"))
-      .select(explode(col("members")).as("doc_id"), col("label"))
+    // releases the collapse
+    NearDup.memberRows(g).join(repLabels, col("rep") === col("rep_id"))
+      .select(col("member").as("doc_id"), col("label"))
       .localCheckpoint(true)
   }
 
@@ -1087,7 +992,7 @@ object DedupQueries {
     // the barrier — the exact chain and the band/candidate chain are now
     // independent subtrees that AQE materializes concurrently, instead of
     // bands waiting on the full exact tier (the r7 critical path).
-    val bands = bandFrameFromToks(
+    val bands = bandRows(
       docs.select(col("doc_id"), col("lang"), col("is_delta"), col("toks")))
     val baseB = bands.filter(!col("is_delta"))
       .select(col("band_key"), col("lang"), col("doc_id").as("base_id"))
@@ -1208,15 +1113,15 @@ object DedupQueries {
     // TWO-TIER like the mirror (lesson 19; the round-10 sf1 bench caught
     // the engine still flat at 28.8 s): the pair verdict depends only on
     // (lang, pfx), so segment-join + DP-verify one REP per identical
-    // prefix group and expand members afterwards — within-group pairs
-    // have ed = 0 bit-identically (levenshtein(x, x)), cross pairs
-    // inherit the rep distance (levenshtein is symmetric).
-    val groups = Tables.documents(s, d)
-      .select(col("doc_id"), col("lang"), substring(col("text"), 1, 16).as("pfx"))
-      .groupBy("lang", "pfx")
-      .agg(min("doc_id").as("doc_id"), collect_list(col("doc_id")).as("members"))
+    // prefix group ([[NearDup.collapse]]) and expand members afterwards
+    // ([[NearDup.expandPairs]]) — within-group pairs have ed = 0
+    // bit-identically (levenshtein(x, x)), cross pairs inherit the rep
+    // distance (levenshtein is symmetric).
+    val groups = NearDup.collapse(Tables.documents(s, d)
+      .select(col("doc_id"), col("lang"), substring(col("text"), 1, 16).as("pfx")),
+      "doc_id", Seq("lang", "pfx"))
       .transform(m.cache)
-    val docs = groups.select("doc_id", "lang", "pfx")
+    val docs = groups.select(col("rep").as("doc_id"), col("lang"), col("pfx"))
     // a-side: the 4 fixed segments, each 4 chars at position 4s
     val segs = docs.select(col("doc_id").as("id_a"), col("lang"),
       posexplode(array((0 until 4).map(g => substring(col("pfx"), 4 * g + 1, 4)): _*))
@@ -1242,23 +1147,12 @@ object DedupQueries {
       .select(col("id_a").as("rep_a"), col("id_b").as("rep_b"),
         levenshtein(col("pfx_a"), col("pfx_b")).cast("long").as("dist"))
       .filter(col("dist") <= 3)
-    val mem = groups.select(col("doc_id").as("rep"), explode(col("members")).as("vid"))
-    val cross = repPairs
-      .join(broadcast(mem.select(col("rep").as("rep_a"), col("vid").as("xa"))), "rep_a")
-      .join(broadcast(mem.select(col("rep").as("rep_b"), col("vid").as("xb"))), "rep_b")
-      .select(least(col("xa"), col("xb")).as("id_a"),
-        greatest(col("xa"), col("xb")).as("id_b"), col("dist"))
     // Degenerate-group guard (ADVICE r10): a null-text group has a null
     // pfx — the flat plan's grams are null (join keys that never match)
     // and levenshtein(null, null) is NULL, not 0, so it emits NO pair;
     // the within-group expansion must skip the null-pfx group too.
-    val within = groups
-      .filter(col("pfx").isNotNull)
-      .select(explode(col("members")).as("xa"), col("members"))
-      .select(col("xa"), explode(col("members")).as("xb"))
-      .filter(col("xa") < col("xb"))
-      .select(col("xa").as("id_a"), col("xb").as("id_b"), lit(0L).as("dist"))
-    cross.unionByName(within).localCheckpoint(true)
+    NearDup.expandPairs(groups, repPairs, Seq(lit(0L).as("dist")), col("pfx").isNotNull)
+      .localCheckpoint(true)
   }
 
   private val q59Sql =
@@ -1332,57 +1226,28 @@ object DedupQueries {
   /** Input row for the streaming near-dup filter. */
   private[dedup] case class DocRow(doc_id: Long, text: String)
 
-  /** (doc_id, band_key) frame: 16-permutation MinHash signature reduced to
-    * 4 ARITHMETIC band keys (polynomial combine mod p — xxhash64 would be
-    * Spark-only and unmirrorable in the oracle). Shared by q129's
-    * streaming batches and nothing else; q44 keeps xxhash64 (no oracle).
+  /** The SQL mirror of [[NearDup.minhashBands]]' band key over a DuckDB
+    * list column `mh`.
     */
-  /** Arithmetic band key over the 16-min signature columns `mh_0..mh_15`:
-    * polynomial combine mod p (intermediates < 2^63, single final mod) —
-    * identical in Spark and the SQL mirror, which is what lets the LSH
-    * queries be hash-oracled (xxhash64 would be Spark-only). Shared by
-    * q44 and q129.
-    */
-  private def bandKeyExpr(b: Int): Column =
-    (0 until 4).foldLeft(lit(b.toLong): Column)((acc, r) =>
-      acc * 31 + col(s"mh_${b * 4 + r}")) % P
-
-  /** The SQL mirror of [[bandKeyExpr]] over a DuckDB list column `mh`. */
   private def bandKeySql(b: String): String =
     s"(((($b * 31 + mh[$b * 4 + 1]) * 31 + mh[$b * 4 + 2]) * 31 " +
       s"+ mh[$b * 4 + 3]) * 31 + mh[$b * 4 + 4]) % $P"
 
   /** The 16 per-permutation minima as SQL over a token-hash list `toks`. */
   private def minhashMinsSql: String =
-    minhashParams.map { case (a, b) =>
+    NearDup.minhashParams.map { case (a, b) =>
       s"list_min(list_transform(toks, x -> (x * $a + $b) % $P))"
     }.mkString(",\n      ")
 
-  /** Band keys from an already-hashed token frame (doc_id, toks) — lets
-    * callers that cache the tokenization (q161) feed the signature
-    * directly instead of re-tokenizing the corpus from text.
+  /** One row per (input row, band): [[NearDup.minhashBands]] with the 4
+    * band keys exploded to `band_key` (q129's store probe, q161's delta
+    * probe). Input: any frame with `toks`; its other columns pass through.
     */
-  private def bandFrameFromToks(docs: DataFrame): DataFrame = {
-    // Per-row projections, NOT explode+groupBy: the 16 permutation minima
-    // are functions of one row's token array, so computing them via a
-    // corpus-wide shuffle (the pre-r8 form) paid a full exchange for what
-    // codegen does in-place — same arithmetic the DuckDB mirror runs as
-    // list_min(list_transform(...)). Removes one shuffle from every LSH
-    // consumer (q44/q129/q161/...).
-    // Every non-toks input column passes through (callers attach role
-    // columns here instead of re-joining the corpus on doc_id afterward).
-    val keep = docs.columns.filter(_ != "toks").map(col)
-    val mhCols = minhashParams.zipWithIndex.map { case ((a, b), i) =>
-      array_min(transform(col("toks"), x => (x * a + b) % P)).as(s"mh_$i")
-    }
-    val sig = docs.select(keep ++ mhCols: _*)
-    sig.select(keep :+
-      explode(array((0 until 4).map(bandKeyExpr): _*)).as("band_key"): _*)
+  private def bandRows(docs: DataFrame): DataFrame = {
+    val keep = docs.columns.filter(_ != "toks").map(col).toSeq
+    NearDup.minhashBands(docs).select(keep :+
+      explode(array((0 until 4).map(b => col(s"band_$b")): _*)).as("band_key"): _*)
   }
-
-  private def bandFrame(docs: DataFrame): DataFrame =
-    bandFrameFromToks(
-      docs.select(col("doc_id"), hashedToks(col("text")).as("toks")))
 
   /** Streaming ingest near-dup filter (the "don't ingest what the corpus
     * already holds" operator): documents arrive in doc_id order in
@@ -1448,7 +1313,7 @@ object DedupQueries {
         // probe below opens ONLY the kind=b bucket directories that
         // appear in this batch, and the append is blind.
         Materialize.scoped { m =>
-          val bands = bandFrame(batch)
+          val bands = bandRows(batch.select(col("doc_id"), hashedToks(col("text")).as("toks")))
             .withColumn("bkt", pmod(col("band_key"), lit(q129StoreBuckets)).cast("int"))
             .transform(m.cache)
           // The bucket-list collect doubles as the cache fill (the
@@ -1528,7 +1393,7 @@ object DedupQueries {
   }
 
   private val q129Sql = {
-    val minExprs = minhashParams.map { case (a, b) =>
+    val minExprs = NearDup.minhashParams.map { case (a, b) =>
       s"list_min(list_transform(hs, x -> (x * $a + $b) % $P))"
     }.mkString(",\n    ")
     s"""WITH th AS (SELECT doc_id, $hashedToksSql AS hs FROM documents),
@@ -1673,16 +1538,6 @@ object DedupQueries {
     * oversized blocks — containment has the same prefix-filter bound with
     * num/den on min-size instead of union).
     */
-  /** q149's core on an injectable (doc_id, lang, arr) frame with q42-style
-    * block-cap routing. Small blocks take the all-pairs self-join; a block
-    * larger than `cap` routes through the RAREST-TOKEN posting filter: if
-    * A ⊆ B then in particular A's within-block-rarest token is in B, so
-    * the sub side posts ONE key per doc (its min-(df, token) token) and
-    * the sup side posts its full token list — candidates ∝ Σ df(rarest),
-    * near-linear, instead of block². Orientation predicate (smaller set,
-    * id tiebreak) makes each candidate unique, so no dedup shuffle.
-    * PropertySpec fuzzes capped ≡ uncapped.
-    */
   /** Orient verified containment pairs as (sub ⊆ sup): smaller set =
     * sub; equal sets (same content) take the id tiebreak.
     */
@@ -1730,7 +1585,7 @@ object DedupQueries {
   }
 
   /** Oriented containment rep pairs of an over-cap block, computed on
-    * [[collapseGroups]] representatives only. Cross-group containment is
+    * [[NearDup.collapse]] representatives only. Cross-group containment is
     * always PROPER (equal sets collapse into one group), so every rep
     * pair has |sub| < |sup| strictly — which is what lets decision-form
     * consumers reason per group. Judge r8: the fresh 10× re-measure
@@ -1739,40 +1594,40 @@ object DedupQueries {
     * posting group is ×copies bigger, candidates ∝ copies²); in rep
     * space df counts distinct CONTENTS, restoring the near-linear bound.
     */
-  private def containRepPairs(reps: DataFrame): DataFrame =
-    containOrient(containPostingJoin(reps))
+  private def containRepPairs(groups: DataFrame): DataFrame =
+    containOrient(containPostingJoin(
+      groups.select(col("rep").as("doc_id"), col("lang"), col("arr"))))
 
   /** q149's core on an injectable (doc_id, lang, arr) frame with
-    * q42-style block-cap routing and the exact-content collapse on the
-    * over-cap path. PropertySpec fuzzes capped ≡ uncapped.
+    * q42-style block-cap routing ([[NearDup.capRouted]]). Small blocks
+    * take the all-pairs self-join; a block larger than `cap` collapses
+    * identical contents and routes the reps through the rarest-token
+    * posting filter ([[containPostingJoin]]). The orientation predicate
+    * (smaller set, id tiebreak) makes each candidate unique, so no dedup
+    * shuffle. PropertySpec fuzzes capped ≡ uncapped.
+    *
+    * The capped path expands rep pairs itself rather than through
+    * [[NearDup.expandPairs]]: a containment pair is ORIENTED (sub ⊆ sup),
+    * not symmetric, so its members must keep their sides instead of being
+    * reordered by id.
     */
   private[graft] def containmentPairs(docs: DataFrame, cap: Int,
-      countsFrom: Option[DataFrame]): DataFrame = {
-    val bigLangs = bigLangsOf(countsFrom, cap)
-    if (bigLangs.isEmpty) containOrient(arrSelfJoin(docs))
-    else {
-      val big = docs.filter(col("lang").isin(bigLangs.map(x => x: Any): _*))
-      val small = docs.filter(!col("lang").isin(bigLangs.map(x => x: Any): _*))
-      val (grouped, reps) = collapseGroups(big)
+      countsFrom: Option[DataFrame]): DataFrame =
+    NearDup.capRouted(docs, cap, countsFrom)(d => containOrient(arrSelfJoin(d))) { (small, g) =>
+      val mem = NearDup.memberRows(g)
       // cross-group member pairs: strictly proper, so every sub-group
       // member is sub_id and every sup-group member is sup_id — no
       // re-orientation needed, n_shared (= |sub|) carries over
-      val cross = containRepPairs(reps)
-        .join(grouped.select(col("rep").as("sub_id"), col("doc_id").as("xa")),
-          "sub_id")
-        .join(grouped.select(col("rep").as("sup_id"), col("doc_id").as("xb")),
-          "sup_id")
+      val cross = containRepPairs(g)
+        .join(mem.select(col("rep").as("sub_id"), col("member").as("xa")), "sub_id")
+        .join(mem.select(col("rep").as("sup_id"), col("member").as("xb")), "sup_id")
         .select(col("xa").as("sub_id"), col("xb").as("sup_id"), col("n_shared"))
       // intra-group pairs: identical sets, mutual containment, id tiebreak
-      val intra = grouped
-        .select(col("rep"), col("doc_id").as("sub_id"),
-          size(col("arr")).cast("long").as("sz"))
-        .join(grouped.select(col("rep"), col("doc_id").as("sup_id")), "rep")
-        .filter(col("sub_id") < col("sup_id"))
-        .select(col("sub_id"), col("sup_id"), col("sz").as("n_shared"))
+      val intra = NearDup.withinPairs(g, Seq(size(col("arr")).cast("long").as("n_shared")),
+          lit(true))
+        .select(col("id_a").as("sub_id"), col("id_b").as("sup_id"), col("n_shared"))
       containOrient(arrSelfJoin(small)).unionAll(cross).unionAll(intra)
     }
-  }
 
   /** DECISION form of [[containmentPairs]] for q177: the distinct ids a
     * containment dedup run drops — a doc whose token set is a PROPER
@@ -1786,30 +1641,17 @@ object DedupQueries {
     */
   private[graft] def containmentDropIds(docs: DataFrame, cap: Int,
       countsFrom: Option[DataFrame]): DataFrame = {
-    def fromPairs(pairs: DataFrame, szOf: DataFrame) = pairs
-      .join(szOf, "sup_id")
+    def fromPairs(d: DataFrame) = containOrient(arrSelfJoin(d))
+      .join(d.select(col("doc_id").as("sup_id"), size(col("arr")).as("sz_sup")), "sup_id")
       .select(when(col("n_shared") < col("sz_sup"), col("sub_id"))
         .otherwise(col("sup_id")).as("doc_id"))
-    val bigLangs = bigLangsOf(countsFrom, cap)
-    val dropped =
-      if (bigLangs.isEmpty)
-        fromPairs(containOrient(arrSelfJoin(docs)),
-          docs.select(col("doc_id").as("sup_id"), size(col("arr")).as("sz_sup")))
-      else {
-        val big = docs.filter(col("lang").isin(bigLangs.map(x => x: Any): _*))
-        val small = docs.filter(!col("lang").isin(bigLangs.map(x => x: Any): _*))
-        val (grouped, reps) = collapseGroups(big)
-        val subGroups = containRepPairs(reps)
-          .select(col("sub_id").as("rep")).distinct()
-        val subMembers = subGroups
-          .join(grouped.select("rep", "doc_id"), "rep").select("doc_id")
-        val nonMin = grouped.filter(col("doc_id") =!= col("rep"))
-          .select("doc_id")
-        fromPairs(containOrient(arrSelfJoin(small)),
-          small.select(col("doc_id").as("sup_id"), size(col("arr")).as("sz_sup")))
-          .unionAll(subMembers).unionAll(nonMin)
-      }
-    dropped.distinct()
+    NearDup.capRouted(docs, cap, countsFrom)(fromPairs) { (small, g) =>
+      val mem = NearDup.memberRows(g)
+      val subGroups = containRepPairs(g).select(col("sub_id").as("rep")).distinct()
+      val subMembers = subGroups.join(mem, "rep").select(col("member").as("doc_id"))
+      val nonMin = mem.filter(col("member") =!= col("rep")).select(col("member").as("doc_id"))
+      fromPairs(small).unionAll(subMembers).unionAll(nonMin)
+    }.distinct()
   }
 
   private def q149(s: SparkSession, d: String): DataFrame = Materialize.scoped { m =>
@@ -2324,13 +2166,15 @@ object DedupQueries {
     // candidate (identical signatures collide in every band) and an
     // exact pair (J = 1.0 ≥ 0.9), contributing C(m,2) to all three
     // counts; a cross-group doc pair is a candidate/exact/hit iff its
-    // REP pair is, contributing m_a·m_b. Sums are exact int64, so
-    // n_cand/n_exact/n_hit — and the two double divisions — are
-    // bit-identical to the flat plan's.
-    val groups = Tables.documents(s, d)
-      .select(col("doc_id"), col("lang"), hashedToks(col("text")).as("toks"))
-      .groupBy("lang", "toks")
-      .agg(min("doc_id").as("doc_id"), count(lit(1)).as("m"))
+    // REP pair is, contributing m_a·m_b (m = the size of the group's
+    // `members` in the shared [[NearDup.collapse]]). Sums are exact
+    // int64, so n_cand/n_exact/n_hit — and the two double divisions —
+    // are bit-identical to the flat plan's.
+    val groups = NearDup.collapse(Tables.documents(s, d)
+      .select(col("doc_id"), col("lang"), hashedToks(col("text")).as("toks")),
+      "doc_id", Seq("lang", "toks"))
+      .select(col("rep").as("doc_id"), col("lang"), col("toks"),
+        size(col("members")).cast("long").as("m"))
       .transform(m.cache)
     val reps = groups.select("doc_id", "lang", "toks")
     val multsA = groups.select(col("doc_id").as("id_a"), col("m").as("m_a"))

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.{QueryDef, Tables}
+import graft.dedup.NearDup
 import graft.util.{Det, Materialize}
 
 /** Similarity-search operator family over `embeddings` (Array[Float], 64-d):
@@ -265,17 +266,15 @@ object SimilarityQueries {
     // caught that the ENGINE was still flat, 82.6 s vs the mirror's
     // 2.8 s at sf1): identical embeddings share every signature and
     // every cosine, so band/verify over one REPRESENTATIVE per distinct
-    // vector and expand member pairs at the end. Raw candidates are
-    // Θ(rep-bucket²) instead of Θ((rep·dup)²) — at 10 copies each
-    // that is a 100× candidate reduction; the expansion emits exactly
-    // the pairs the flat plan verified, bit-identically (same seqDot
-    // fold on the same arrays), so the hash oracle is unchanged.
-    val groups = Tables.embeddings(s, d)
-      .groupBy("embedding")
-      .agg(min("vec_id").as("rep_id"),
-        collect_list(col("vec_id")).as("members"))
-    val reps = groups.select(col("rep_id"), col("embedding"),
-      sqrt(Det.seqNormSq(col("embedding"))).as("norm"))
+    // vector ([[NearDup.collapse]]) and expand member pairs at the end
+    // ([[NearDup.expandPairs]]). Raw candidates are Θ(rep-bucket²)
+    // instead of Θ((rep·dup)²) — at 10 copies each that is a 100×
+    // candidate reduction; the expansion emits exactly the pairs the flat
+    // plan verified, bit-identically (same seqDot fold on the same
+    // arrays), so the hash oracle is unchanged.
+    val g = NearDup.collapse(Tables.embeddings(s, d), "vec_id", Seq("embedding"))
+    val norm = sqrt(Det.seqNormSq(col("embedding")))
+    val reps = g.select(col("rep").as("rep_id"), col("embedding"), norm.as("norm"))
     val buckets = (0 until 4).map { t =>
       val b0 = (Det.seqDot(col("embedding"), typedlit(hyperplanes(2 * t))) >= 0).cast("int")
       val b1 = (Det.seqDot(col("embedding"), typedlit(hyperplanes(2 * t + 1))) >= 0).cast("int")
@@ -294,37 +293,21 @@ object SimilarityQueries {
       col("embedding").as("va"), col("norm").as("norm_a")))
     val rb = broadcast(reps.select(col("rep_id").as("rep_b"),
       col("embedding").as("vb"), col("norm").as("norm_b")))
+    // cos is symmetric bit-exactly (the fold is by index and the per-slot
+    // multiply commutes), so the cross expansion's least/greatest
+    // ordering is safe
     val verified = candidates.join(ra, "rep_a").join(rb, "rep_b")
       .select(col("rep_a"), col("rep_b"),
         cosinePre(Det.seqDot(col("va"), col("vb")),
           col("norm_a"), col("norm_b")).as("cos"))
       .filter(col("cos") >= 0.4)
-    // member expansion — cross-group: every member combo of a verified
-    // rep pair (cos is symmetric bit-exactly: the fold is by index and
-    // the per-slot multiply commutes, so least/greatest ordering is safe)
-    val mem = groups.select(col("rep_id"),
-      explode(col("members")).as("vid"))
-    val memA = broadcast(mem.select(col("rep_id").as("rep_a"), col("vid").as("xa")))
-    val memB = broadcast(mem.select(col("rep_id").as("rep_b"), col("vid").as("xb")))
-    val cross = verified.join(memA, "rep_a").join(memB, "rep_b")
-      .select(least(col("xa"), col("xb")).as("id_a"),
-        greatest(col("xa"), col("xb")).as("id_b"), col("cos"))
     // within-group: identical copies share every bucket, so every pair
     // inside a group was a flat-plan candidate; its cosine is the
     // group's SELF-cosine (computed, not assumed 1.0 — sqrt(n)² ≠ n),
     // filtered by the same bar
-    val self = groups
-      .join(reps.select(col("rep_id"), col("norm")), "rep_id")
-      .select(col("members"),
-        cosinePre(Det.seqDot(col("embedding"), col("embedding")),
-          col("norm"), col("norm")).as("cos"))
-      .filter(col("cos") >= 0.4)
-    val within = self
-      .select(explode(col("members")).as("xa"), col("members"), col("cos"))
-      .select(col("xa"), explode(col("members")).as("xb"), col("cos"))
-      .filter(col("xa") < col("xb"))
-      .select(col("xa").as("id_a"), col("xb").as("id_b"), col("cos"))
-    cross.unionByName(within)
+    NearDup.expandPairs(g, verified,
+      Seq(cosinePre(Det.seqDot(col("embedding"), col("embedding")), norm, norm).as("cos")),
+      col("cos") >= 0.4)
   }
 
   private val q80Sql = {

@@ -94,9 +94,10 @@ private[sources] object GraftChanges {
       insertsOnly: Boolean, surface: String): Seq[InputPartition] = {
     require(fromV <= toV,
       s"graft-store: $surface asked for changes ($fromV, $toV] — empty or inverted range")
-    (fromV + 1 to toV).flatMap { v =>
-      val cur = at(root, v)
-      val prev = at(root, v - 1)
+    // each manifest is parsed once: version v's `cur` is v + 1's `prev`
+    if (fromV == toV) Seq.empty
+    else (fromV to toV).iterator.map(v => v -> at(root, v)).sliding(2).withPartial(false)
+        .flatMap { case Seq((_, prev), (v, cur)) =>
       if (dataNeutral(cur.op)) Seq.empty
       else {
         val curSet = cur.files.toSet
@@ -158,7 +159,7 @@ private[sources] object GraftChanges {
               v)
           }
       }
-    }
+    }.toSeq
   }
 
   /** The full snapshot at `v` as `insert` partitions (the streaming

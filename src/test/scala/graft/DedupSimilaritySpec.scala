@@ -198,6 +198,70 @@ class DedupSimilaritySpec extends AnyFunSuite {
     assert(threeBatches.exists(!_._2) || threeBatches.forall(_._2))
   }
 
+  test("MinHash band keys equal a plain-Scala recompute, null and empty token arrays included") {
+    import spark.implicits._
+    import graft.dedup.NearDup.{P, minhashParams}
+    val rnd = new scala.util.Random(7)
+    val arrays: Seq[Option[Seq[Long]]] = None +: Some(Seq.empty[Long]) +:
+      (0 until 200).map { i =>
+        if (i % 25 == 0) None
+        else if (i % 25 == 1) Some(Seq.empty[Long])
+        else Some(Seq.fill(1 + rnd.nextInt(30))(Math.floorMod(rnd.nextLong(), P)).distinct.sorted)
+      }
+    // the band-key arithmetic, written out: 16 permutation minima, then
+    // band b = ((((b·31 + mh[4b])·31 + mh[4b+1])·31 + mh[4b+2])·31 + mh[4b+3]) mod P
+    def expected(toks: Option[Seq[Long]]): Seq[Option[Long]] = toks.filter(_.nonEmpty) match {
+      case None => Seq.fill(4)(None)
+      case Some(ts) =>
+        val mh = minhashParams.map { case (a, b) => ts.map(x => (x * a + b) % P).min }
+        (0 until 4).map(b => Some((0 until 4).foldLeft(b.toLong)((acc, r) =>
+          acc * 31 + mh(b * 4 + r)) % P))
+    }
+    val docs = arrays.zipWithIndex.map { case (t, i) => (i.toLong, t) }.toDF("doc_id", "toks")
+    val got = graft.dedup.NearDup.minhashBands(docs).collect().map { r =>
+      r.getLong(0) -> (1 to 4).map(c => if (r.isNullAt(c)) None else Some(r.getLong(c)))
+    }.toMap
+    assert(got.size == arrays.size, "one signature row per input row")
+    arrays.zipWithIndex.foreach { case (t, i) =>
+      assert(got(i.toLong) == expected(t), s"band keys of doc $i ($t)")
+    }
+  }
+
+  test("only NearDup builds a MinHash signature, routes block caps or expands rep pairs") {
+    import java.nio.charset.StandardCharsets
+    import java.nio.file.{Files, Paths}
+    import scala.jdk.CollectionConverters._
+    val root = Paths.get("src/main/scala")
+    assert(Files.isDirectory(root), s"$root not found; run from the repository root")
+    val shared = root.resolve("graft/dedup/NearDup.scala")
+    assert(Files.isRegularFile(shared))
+    val outside = Files.walk(root).iterator.asScala
+      .filter(p => Files.isRegularFile(p) && p.toString.endsWith(".scala") && p != shared)
+      .map(p => p -> new String(Files.readAllBytes(p), StandardCharsets.UTF_8)).toSeq
+    // a use of the permutation constants outside NearDup must be a SQL
+    // mirror: the lambda up to its closing brace builds a string and
+    // names no Spark column function
+    val sparkSide = "\\bcol\\(|\\barray_min\\(|(?<![_\\w])min\\(|\\btransform\\(".r
+    val minima = outside.collect {
+      case (p, t) if "minhashParams".r.findAllMatchIn(t).exists { m =>
+        val body = t.substring(m.start, t.indexOf('}', m.start) + 1)
+        !body.contains("s\"") || sparkSide.findFirstIn(body).isDefined
+      } => p
+    }
+    assert(minima.isEmpty, minima.mkString(
+      "files outside NearDup computing MinHash minima on the Spark side:\n", "\n", ""))
+    val routers = outside.collect {
+      case (p, t) if t.contains("bigLangsOf") || t.contains("col(\"lang\").isin(") => p
+    }
+    assert(routers.isEmpty, routers.mkString(
+      "files outside NearDup routing block caps by hand:\n", "\n", ""))
+    val expanders = outside.collect {
+      case (p, t) if "explode\\(\\s*col\\(\\s*\"members\"".r.findFirstIn(t).isDefined => p
+    }
+    assert(expanders.isEmpty, expanders.mkString(
+      "files outside NearDup exploding a members array:\n", "\n", ""))
+  }
+
   test("jaccardPairs skew guard: capped routing is output-identical and candidate-bounded") {
     import spark.implicits._
     import org.apache.spark.sql.functions._

@@ -323,6 +323,65 @@ class PropertySpec extends AnyFunSuite {
     }
   }
 
+  test("NearDup collapse/expand ≡ flat pairwise on duplicate-heavy corpora, null and empty keys included (engine-checked)") {
+    import graft.dedup.NearDup
+    // keys over a 6-token universe repeat often (the duplicate-heavy
+    // regime the collapse exists for); null and empty keys are degenerate
+    // groups whose within pairs only the guard decides
+    val keyGen: Gen[Option[Seq[Long]]] = Gen.frequency(
+      1 -> Gen.const(None),
+      1 -> Gen.const(Some(Seq.empty[Long])),
+      6 -> Gen.nonEmptyListOf(Gen.choose(1L, 6L)).map(l => Some(l.distinct.sorted)))
+    val corpusGen = Gen.listOfN(24, Gen.zip(Gen.oneOf("aa", "bb"), keyGen))
+    // ids are a permutation of 0..23, so a group's min id is not its
+    // first row and cross pairs need least/greatest
+    def id(i: Int) = (i * 7 % 24).toLong
+    // Jaccard-style: score J ≥ 1/2 on non-empty sets, within pairs 1.0
+    // and only for a signature-producing (non-null, non-empty) key;
+    // edit-style: |A Δ B| ≤ 2 on non-null sets, within pairs 0
+    val jaccardSql = "CAST(size(array_intersect(ka, kb)) AS DOUBLE) / size(array_union(ka, kb))"
+    val styles = Seq(
+      ("jaccard", s"size(ka) > 0 AND size(kb) > 0 AND 2 * size(array_intersect(ka, kb)) >= size(array_union(ka, kb))",
+        jaccardSql, lit(1.0), col("arr").isNotNull && size(col("arr")) > 0,
+        (a: Option[Seq[Long]], b: Option[Seq[Long]]) => (a, b) match {
+          case (Some(x), Some(y)) if x.nonEmpty && y.nonEmpty &&
+              2 * x.intersect(y).size >= x.union(y).distinct.size =>
+            Some(x.intersect(y).size.toDouble / x.union(y).distinct.size: Any)
+          case _ => None
+        }),
+      ("dist", "size(array_union(ka, kb)) - size(array_intersect(ka, kb)) <= 2",
+        "CAST(size(array_union(ka, kb)) - size(array_intersect(ka, kb)) AS BIGINT)",
+        lit(0L), col("arr").isNotNull,
+        (a: Option[Seq[Long]], b: Option[Seq[Long]]) => (a, b) match {
+          case (Some(x), Some(y)) if x.union(y).distinct.size - x.intersect(y).size <= 2 =>
+            Some((x.union(y).distinct.size - x.intersect(y).size).toLong: Any)
+          case _ => None
+        }))
+    var tested = 0
+    forAllSampled(corpusGen, n = 8) { corpus =>
+      val docs = corpus.zipWithIndex
+        .map { case ((lang, arr), i) => (id(i), lang, arr) }
+        .toDF("doc_id", "lang", "arr")
+      val g = NearDup.collapse(docs, "doc_id", Seq("lang", "arr"))
+      for ((name, pred, score, within, guard, ref) <- styles) {
+        val repPairs = g.select(col("rep").as("rep_a"), col("lang"), col("arr").as("ka"))
+          .join(g.select(col("rep").as("rep_b"), col("lang"), col("arr").as("kb")), "lang")
+          .filter(col("rep_a") < col("rep_b") && expr(pred))
+          .select(col("rep_a"), col("rep_b"), expr(score).as(name))
+        val got = NearDup.expandPairs(g, repPairs, Seq(within.as(name)), guard)
+          .collect().map(r => (r.getLong(0), r.getLong(1), r.get(2))).toSeq.sortBy(t => (t._1, t._2))
+        val rows = corpus.zipWithIndex.map { case ((lang, arr), i) => (id(i), lang, arr) }
+        val expected = (for {
+          (ia, la, a) <- rows; (ib, lb, b) <- rows if ia < ib && la == lb
+          v <- ref(a, b)
+        } yield (ia, ib, v)).sortBy(t => (t._1, t._2))
+        assert(got == expected, s"$name expansion diverged on $corpus")
+        tested += 1
+      }
+    }
+    assert(tested == 16)
+  }
+
   test("BPE trainer ≡ classic reference on random tie-heavy corpora (engine-checked)") {
     // 3-letter alphabet ⇒ argmax TIES are common — exactly where a wrong
     // tiebreak in either engine or oracle-mirror order would diverge.
