@@ -9,6 +9,7 @@ import org.apache.spark.sql.graft.Sessions
 
 import graft.{QueryDef, Tables}
 import graft.dedup.NearDup.P
+import graft.streaming.Pipeline
 import graft.util.{Det, Materialize, TempDirs}
 
 /** Deduplication operator family over `documents` — the training-data-
@@ -296,10 +297,13 @@ object DedupQueries {
     NearDup.capRouted(docs, cap, countsFrom)(d => verify(arrSelfJoin(d))) { (small, g) =>
       val repPairs = verify(repCandidates(g, num, den))
         .withColumnRenamed("id_a", "rep_a").withColumnRenamed("id_b", "rep_b")
-      // within-group pairs: identical sets, J = 1 ≥ any num/den ≤ 1
+      // within-group pairs: identical sets, J = 1 ≥ any num/den ≤ 1; a
+      // null array verifies against nothing on the flat path, so its
+      // group emits no pairs
       val sz = size(col("arr")).cast("long")
       verify(arrSelfJoin(small)).unionByName(NearDup.expandPairs(g, repPairs,
-        Seq(lit(1.0).as("jaccard"), sz.as("n_inter"), sz.as("n_union")), lit(true)))
+        Seq(lit(1.0).as("jaccard"), sz.as("n_inter"), sz.as("n_union")),
+        col("arr").isNotNull))
     }
   }
 
@@ -344,7 +348,9 @@ object DedupQueries {
         .filter(inter * den >= union * num)
         .select(col("id_b"), inter.cast("long").as("n_inter"),
           union.cast("long").as("n_union")))
-      val nonMin = NearDup.memberRows(g).filter(col("member") =!= col("rep"))
+      // (a null-array group is no content group: the flat path drops none)
+      val nonMin = NearDup.memberRows(g.filter(col("arr").isNotNull))
+        .filter(col("member") =!= col("rep"))
         .select(col("member").as("doc_id"), lit(100L).as("max_ratio"))
       perDoc(jaccardPairs(small, num, den, cap, None))
         .unionAll(repDrop).unionAll(nonMin)
@@ -1270,7 +1276,7 @@ object DedupQueries {
     * and a blind append. State grows with the corpus, not the stream —
     * which is why it lives in a table, not in executor memory.
     *
-    * Harness note: the MemoryStream feed `collect()`s the documents
+    * Harness note: the in-memory stream feed `collect()`s the documents
     * table to the driver to slice it into micro-batches — a test-feed
     * convenience bounded by testdata size. A production ingest replaces
     * the feed with a real source (file/Kafka); the store/probe side has
@@ -1294,16 +1300,12 @@ object DedupQueries {
   private[graft] def q129WithSlices(s: SparkSession, d: String, nSlices: Int): DataFrame =
       Sessions.isolated(s, "spark.sql.shuffle.partitions" -> "4") { s =>
     import s.implicits._
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     val store = TempDirs.create("graft_lsh_store_") + "/store"
     val input = Tables.documents(s, d).select(col("doc_id"), col("text"))
       .orderBy("doc_id").as[DocRow].collect().toSeq
     val slice = math.max(1, (input.size + nSlices - 1) / nSlices)
-    val stream = MemoryStream[DocRow](s)
-    val ckpt = TempDirs.create("ckpt_q129")
-    val q = stream.toDF().writeStream.outputMode("append")
-      .option("checkpointLocation", ckpt)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
+    Pipeline.drive(s, "graft_q129", input.grouped(slice).toSeq)(
+      _.toDF().writeStream.outputMode("append").foreachBatch { (batch: DataFrame, _: Long) =>
         val sp = batch.sparkSession
         // one store, two row kinds ('b' = band fingerprint, 'a' = accept
         // mark), ONE write job per batch. With partitionBy(kind, bkt)
@@ -1377,14 +1379,7 @@ object DedupQueries {
             .repartition(col("kind"), col("bkt")).write.mode("append")
             .partitionBy("kind", "bkt").parquet(store)
         }
-      }
-      .queryName("graft_q129").start()
-    input.grouped(slice).foreach { sl =>
-      stream.addData(sl)
-      q.processAllAvailable()
-    }
-    q.stop(); q.awaitTermination()
-    TempDirs.delete(ckpt)
+      })
     val acc = s.read.parquet(store).filter(col("kind") === "a")
       .select(col("k").as("doc_id"), lit(true).as("accepted"))
     Tables.documents(s, d).select("doc_id")
@@ -1623,8 +1618,9 @@ object DedupQueries {
         .join(mem.select(col("rep").as("sup_id"), col("member").as("xb")), "sup_id")
         .select(col("xa").as("sub_id"), col("xb").as("sup_id"), col("n_shared"))
       // intra-group pairs: identical sets, mutual containment, id tiebreak
+      // (none for a null array, which contains nothing on the flat path)
       val intra = NearDup.withinPairs(g, Seq(size(col("arr")).cast("long").as("n_shared")),
-          lit(true))
+          col("arr").isNotNull)
         .select(col("id_a").as("sub_id"), col("id_b").as("sup_id"), col("n_shared"))
       containOrient(arrSelfJoin(small)).unionAll(cross).unionAll(intra)
     }
@@ -1646,7 +1642,9 @@ object DedupQueries {
       .select(when(col("n_shared") < col("sz_sup"), col("sub_id"))
         .otherwise(col("sup_id")).as("doc_id"))
     NearDup.capRouted(docs, cap, countsFrom)(fromPairs) { (small, g) =>
-      val mem = NearDup.memberRows(g)
+      // a null-array group is no content group: the flat path drops none
+      // of its members (and the posting join never makes it a sub group)
+      val mem = NearDup.memberRows(g.filter(col("arr").isNotNull))
       val subGroups = containRepPairs(g).select(col("sub_id").as("rep")).distinct()
       val subMembers = subGroups.join(mem, "rep").select(col("member").as("doc_id"))
       val nonMin = mem.filter(col("member") =!= col("rep")).select(col("member").as("doc_id"))

@@ -517,12 +517,16 @@ object GraftMaintenance {
       // 4) sweep DELETION-VECTOR generations no retained version
       // references (superseded by a newer cumulative DV, materialized
       // away by compaction, or orphaned by a crashed commit) — aged past
-      // the same grace as other strays so a mid-commit sidecar survives
-      val dvRefs = GraftCommit.retainedDvRefs(root)
-      Option(root.listFiles()).getOrElse(Array.empty)
+      // the same grace as other strays so a mid-commit sidecar survives.
+      // The retained references parse every kept manifest, so they are
+      // read only when an aged sidecar exists to check against them.
+      val agedDvs = Option(root.listFiles()).getOrElse(Array.empty)
         .filter(f => f.isFile && f.getName.startsWith("dv-") &&
-          !dvRefs(f.getName) && now - f.lastModified() >= strayGraceMs)
-        .foreach(f => Files.deleteIfExists(f.toPath))
+          now - f.lastModified() >= strayGraceMs)
+      if (agedDvs.nonEmpty) {
+        val dvRefs = GraftCommit.retainedDvRefs(root)
+        agedDvs.filterNot(f => dvRefs(f.getName)).foreach(f => Files.deleteIfExists(f.toPath))
+      }
       // 5) sweep ROW-INDEX sidecars whose data file is gone — the
       // paired deletes handle every normal path; this catches a crash
       // between a data-file unlink and its sidecar's

@@ -1,10 +1,13 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import scala.util.control.NonFatal
+
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, SparkSession}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
+import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout,
+  OutputMode, StreamingQuery}
 import org.apache.spark.sql.types.StructType
 
 import graft.enrich.Features
@@ -13,6 +16,16 @@ import graft.util.{Det, TempDirs}
 /** The hot path (SURVEY §3.1) as Structured Streaming: micro-batch source →
   * row-local enrichment → foreachBatch{keyed upsert + batch-local anomaly} +
   * cross-batch author-activity state.
+  *
+  * Every bounded streaming query in the engine runs through one driver,
+  * [[drive]]: it owns the checkpoint (create, `checkpointLocation`,
+  * delete), the query name, the feed (each MemoryStream slice added and
+  * waited on, or one drain of a file source) and the cleanup (stop, wait
+  * for the end, drop the checkpoint), which runs in a `finally` so a
+  * failing batch leaves nothing behind. Callers pass only their plan and
+  * `DataStreamWriter` — output mode and sink stay theirs.
+  * `GraftIVM.streamRefresh` is the one exception: it returns its query to
+  * the caller, which restarts it against one checkpoint.
   *
   * Semantics owed (SURVEY §2.12):
   *  - ST1: micro-batching — bounded batches via MemoryStream slices (the
@@ -277,35 +290,57 @@ object Pipeline {
         })
   }
 
-  /** Drive a MemoryStream through `build` in fixed-size slices, blocking
-    * per batch so micro-batch boundaries are exactly the slices.
+  /** The one stream driver (ST1): start `writer` — the caller's output
+    * mode and sink, memory, `foreachBatch` or graft-store — on a fresh
+    * checkpoint under the query name `name`, feed it, stop it, wait for
+    * it to end and drop the checkpoint. This overload drains a source
+    * the writer already reads (a file source) with one
+    * `processAllAvailable`; the other feeds a MemoryStream one slice per
+    * micro-batch.
     */
-  def runSliced[T](spark: SparkSession, events: Seq[StreamEvent], sliceSize: Int,
-      sinkName: String)(build: Dataset[StreamEvent] => DataFrame)(
-      foreach: Option[(DataFrame, Long) => Unit] = None): DataFrame = {
-    import spark.implicits._
-    val stream = MemoryStream[StreamEvent](spark)
-    val transformed = build(stream.toDS())
-    val ckpt = TempDirs.create(s"ckpt_$sinkName")
-    val query: StreamingQuery = foreach match {
-      case Some(fn) =>
-        transformed.writeStream.outputMode("update")
-          .option("checkpointLocation", ckpt)
-          .foreachBatch((b: DataFrame, id: Long) => fn(b, id))
-          .queryName(sinkName).start()
-      case None =>
-        transformed.writeStream.outputMode("append")
-          .option("checkpointLocation", ckpt)
-          .format("memory").queryName(sinkName).start()
+  def drive(name: String)(writer: DataStreamWriter[_]): Unit =
+    run(name, writer)(_.processAllAvailable())
+
+  /** [[drive]] over a MemoryStream of `A`: `writer` builds the sink on
+    * the stream, and each slice is added and waited on before the next,
+    * so micro-batch boundaries are exactly the slices.
+    */
+  def drive[A: Encoder](spark: SparkSession, name: String, slices: Seq[Seq[A]])(
+      writer: Dataset[A] => DataStreamWriter[_]): Unit = {
+    val stream = MemoryStream[A](spark)
+    run(name, writer(stream.toDS())) { q =>
+      slices.foreach { sl => stream.addData(sl); q.processAllAvailable() }
     }
-    events.grouped(sliceSize).foreach { slice =>
-      stream.addData(slice)
-      query.processAllAvailable()
+  }
+
+  /** The driver's lifecycle. Stop, wait and checkpoint delete run in the
+    * `finally`, so a failing batch leaves no running query and no
+    * checkpoint behind. Every cleanup step runs; while the body's error
+    * propagates, a cleanup error only rides along suppressed —
+    * `awaitTermination` rethrows the query's own death cause, often the
+    * very error in flight.
+    */
+  private def run(name: String, writer: DataStreamWriter[_])(
+      feed: StreamingQuery => Unit): Unit = {
+    val ckpt = TempDirs.create(s"ckpt_${name}_")
+    var query: StreamingQuery = null
+    var failure: Throwable = null
+    try {
+      query = writer.option("checkpointLocation", ckpt).queryName(name).start()
+      feed(query)
+    } catch {
+      case e: Throwable => failure = e; throw e
+    } finally {
+      var first = failure
+      def step(f: => Unit): Unit =
+        try f catch {
+          case NonFatal(e) =>
+            if (first == null) first = e else if (e ne first) first.addSuppressed(e)
+        }
+      if (query != null) { step(query.stop()); step(query.awaitTermination()) }
+      step(TempDirs.delete(ckpt))
+      if (failure == null && first != null) throw first
     }
-    query.stop()
-    query.awaitTermination()
-    TempDirs.delete(ckpt)
-    if (foreach.isEmpty) spark.table(sinkName) else spark.emptyDataFrame
   }
 
   /** File-source streaming read of the events table (S8/ST2: the Kinesis

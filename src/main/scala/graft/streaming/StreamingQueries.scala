@@ -1,25 +1,32 @@
 package graft.streaming
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.Sessions
+import org.apache.spark.sql.types.StructType
 
 import graft.{QueryDef, Tables}
 import graft.util.{Det, TempDirs}
 import Pipeline.{NoDataBatchesOff, StateWidth}
 
 /** Streaming operator family. Each query RUNS a genuine Structured
-  * Streaming job (file source or MemoryStream micro-batches) and returns
-  * the final materialized result, which — because the inputs are bounded
-  * and batch slicing is pinned — is deterministic and hash-comparable
-  * against a batch SQL oracle. This is the strongest correctness statement
-  * available for streaming: stream result ≡ batch result over the same
-  * (bounded) input. Each body runs on its own session clone
-  * ([[Sessions.isolated]]), so its sink names, state width and trigger
-  * conf stay private to that execution.
+  * Streaming job (file source or slice-fed in-memory micro-batches) and
+  * returns the final materialized result, which — because the inputs are
+  * bounded and batch slicing is pinned — is deterministic and
+  * hash-comparable against a batch SQL oracle. This is the strongest
+  * correctness statement available for streaming: stream result ≡ batch
+  * result over the same (bounded) input. Each body runs on its own
+  * session clone ([[Sessions.isolated]]), so its sink names, state width
+  * and trigger conf stay private to that execution.
+  *
+  * A body states only its plan, its output mode and sink, and its feed
+  * (the slices, or a file source drained once); [[Pipeline.drive]] owns
+  * the rest of the lifecycle — checkpoint, query name, start, feed, stop
+  * and checkpoint delete, with the cleanup in a `finally`.
   */
 object StreamingQueries {
 
@@ -34,13 +41,7 @@ object StreamingQueries {
       .withWatermark("ts", "10 minutes")
       .groupBy(window(col("ts"), "5 minutes"), col("event_type"))
       .agg(count(lit(1)).as("n"), Det.dsum(col("value")).as("sum_v"))
-    val ckpt = TempDirs.create("ckpt_q60")
-    val q = agg.writeStream.outputMode("complete")
-      .option("checkpointLocation", ckpt)
-      .format("memory").queryName(sinkName).start()
-    q.processAllAvailable()
-    q.stop(); q.awaitTermination()
-    TempDirs.delete(ckpt)
+    Pipeline.drive(sinkName)(agg.writeStream.outputMode("complete").format("memory"))
     s.table(sinkName)
       .select(date_format(col("window.start"), "yyyy-MM-dd HH:mm:ss").as("win_start"),
         col("event_type"), col("n"), col("sum_v"))
@@ -58,11 +59,12 @@ object StreamingQueries {
     * the final store is exactly "latest event per user, enriched".
     */
   private def q61(s: SparkSession, d: String): DataFrame = Sessions.isolated(s, StateWidth) { s =>
+    import s.implicits._
     val eventsSeq = Pipeline.collectEvents(s, d, 1000)
     val dir = TempDirs.create("graft_upsert_")
-    Pipeline.runSliced(s, eventsSeq, 100, "graft_q61_sink")(
-      ds => Pipeline.enrich(ds.toDF()))(
-      Some((batch, _) => Pipeline.upsertBatch(s, batch, dir)))
+    Pipeline.drive(s, "graft_q61_sink", eventsSeq.grouped(100).toSeq)(
+      ds => Pipeline.enrich(ds.toDF()).writeStream.outputMode("update")
+        .foreachBatch((batch: DataFrame, _: Long) => Pipeline.upsertBatch(s, batch, dir)))
     s.read.parquet(dir)
       .select("user_id", "event_id", "value", "pop", "time_of_day")
   }
@@ -124,17 +126,13 @@ object StreamingQueries {
     // the pinned n_batches oracle even though the upsert is idempotent
     // (ADVICE r9).
     val seenBatchIds = java.util.concurrent.ConcurrentHashMap.newKeySet[Long]()
-    val ckpt = TempDirs.create("ckpt_q227")
     val stream = s.readStream.schema(sch)
       .option("maxFilesPerTrigger", "1").parquet(srcDir.toString)
-    val q = Pipeline.enrich(stream).writeStream
-      .option("checkpointLocation", ckpt)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
+    Pipeline.drive("graft_q227")(Pipeline.enrich(stream).writeStream
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
         seenBatchIds.add(batchId)
-        Pipeline.upsertBatch(s, batch.toDF(), store)
-      }.start()
-    q.processAllAvailable(); q.stop(); q.awaitTermination()
-    TempDirs.delete(ckpt)
+        Pipeline.upsertBatch(s, batch, store)
+      })
     s.read.parquet(store)
       .select("user_id", "event_id", "value", "pop", "time_of_day")
       .crossJoin(broadcast(
@@ -172,20 +170,9 @@ object StreamingQueries {
     import s.implicits._
     val eventsSeq = Pipeline.collectEvents(s, d, 1000)
     val store = TempDirs.create("graft_ssink_") + "/store"
-    val ckpt = TempDirs.create("ckpt_q251")
-    val stream = org.apache.spark.sql.execution.streaming.runtime
-      .MemoryStream[Pipeline.StreamEvent](s)
-    val q = Pipeline.enrich(stream.toDS().toDF()).writeStream
-      .outputMode("append")
-      .option("checkpointLocation", ckpt)
-      .format("graft.sources.GraftStoreProvider")
-      .option("path", store)
-      .start()
-    eventsSeq.grouped(250).foreach { sl =>
-      stream.addData(sl); q.processAllAvailable()
-    }
-    q.stop(); q.awaitTermination()
-    TempDirs.delete(ckpt)
+    Pipeline.drive(s, "graft_q251", eventsSeq.grouped(250).toSeq)(
+      ds => Pipeline.enrich(ds.toDF()).writeStream.outputMode("append")
+        .format("graft.sources.GraftStoreProvider").option("path", store))
     val t = s.read.format("graft.sources.GraftStoreProvider")
       .option("path", store).load()
     val nRows = t.agg(count(lit(1)).as("n_rows"))
@@ -210,14 +197,15 @@ object StreamingQueries {
       |FROM ranked WHERE rn = 1 ORDER BY user_id""".stripMargin
 
   /** Cross-batch stateful author counts (ST5/A7): flatMapGroupsWithState
-    * accumulating per-user totals across 4 MemoryStream micro-batches,
+    * accumulating per-user totals across 4 slice-fed micro-batches,
     * emitting the as-of count on every row. Stream ≡ batch running count.
     */
   private def q62(s: SparkSession, d: String): DataFrame = Sessions.isolated(s, StateWidth) { s =>
     import s.implicits._
     val eventsSeq = Pipeline.collectEvents(s, d, 1000)
-    Pipeline.runSliced(s, eventsSeq, 250, "graft_q62_sink")(
-      ds => Pipeline.authorCounts(ds).toDF())(None)
+    Pipeline.drive(s, "graft_q62_sink", eventsSeq.grouped(250).toSeq)(
+      Pipeline.authorCounts(_).writeStream.outputMode("append").format("memory"))
+    s.table("graft_q62_sink")
   }
 
   private val q62Sql =
@@ -238,29 +226,21 @@ object StreamingQueries {
     * O(history).
     */
   private def q108(s: SparkSession, d: String): DataFrame = Sessions.isolated(s, StateWidth) { s =>
+    import s.implicits._
     val eventsSeq = Pipeline.collectEvents(s, d, 1000)
     val dir = TempDirs.create("graft_incr_agg_")
-    def mergeBatch(batch: DataFrame, @annotation.unused id: Long): Unit = {
-      val delta = batch.groupBy("event_type")
-        .agg(count(lit(1)).as("n"),
-          sum(col("value").cast("decimal(18,4)")).as("sum_v_dec"))
-      val existing =
-        if (Files.exists(java.nio.file.Paths.get(dir, "_SUCCESS")))
-          s.read.parquet(dir)
-        else delta.limit(0)
-      val merged = existing.unionByName(delta)
-        .groupBy("event_type")
-        .agg(sum(col("n")).as("n"), sum(col("sum_v_dec")).as("sum_v_dec"))
-      val tmp = dir + ".tmp"
-      merged.coalesce(1).write.mode("overwrite").parquet(tmp)
-      val fs = org.apache.hadoop.fs.FileSystem.get(s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(dir), true)
-      fs.rename(new org.apache.hadoop.fs.Path(tmp), new org.apache.hadoop.fs.Path(dir))
-    }
+    val aggSchema = StructType.fromDDL("event_type STRING, n BIGINT, sum_v_dec DECIMAL(28,4)")
     // 3 refresh cycles prove the cross-batch merge; each cycle pays a
     // fixed read-merge-write cost, so slice count is the cost knob
-    Pipeline.runSliced(s, eventsSeq, 334, "graft_q108_sink")(_.toDF())(
-      Some(mergeBatch))
+    Pipeline.drive(s, "graft_q108_sink", eventsSeq.grouped(334).toSeq)(
+      _.toDF().writeStream.outputMode("update").foreachBatch { (batch: DataFrame, _: Long) =>
+        val delta = batch.groupBy("event_type")
+          .agg(count(lit(1)).as("n"),
+            sum(col("value").cast("decimal(18,4)")).as("sum_v_dec"))
+        swapTable(s, dir, aggSchema)(_.unionByName(delta)
+          .groupBy("event_type")
+          .agg(sum(col("n")).as("n"), sum(col("sum_v_dec")).as("sum_v_dec")))
+      })
     s.read.parquet(dir)
       .select(col("event_type"), col("n"),
         col("sum_v_dec").cast("double").as("sum_v"))
@@ -271,6 +251,23 @@ object StreamingQueries {
       |  CAST(sum(CAST(value AS DECIMAL(18,4))) AS DOUBLE) AS sum_v
       |FROM (SELECT * FROM events ORDER BY event_id LIMIT 1000)
       |GROUP BY 1 ORDER BY 1""".stripMargin
+
+  /** One refresh of a derived parquet table from a micro-batch (q108,
+    * q201): read the current table at `dir` (empty, of `schema`, before
+    * the first refresh), write `merge(current)` beside it and swap it in
+    * by delete + rename.
+    */
+  private def swapTable(s: SparkSession, dir: String, schema: StructType)(
+      merge: DataFrame => DataFrame): Unit = {
+    val existing =
+      if (Files.exists(Paths.get(dir, "_SUCCESS"))) s.read.parquet(dir)
+      else s.createDataFrame(java.util.Collections.emptyList[Row](), schema)
+    val tmp = dir + ".tmp"
+    merge(existing).coalesce(1).write.mode("overwrite").parquet(tmp)
+    val fs = FileSystem.get(s.sparkContext.hadoopConfiguration)
+    fs.delete(new Path(dir), true)
+    fs.rename(new Path(tmp), new Path(dir))
+  }
 
   /** Streaming SCD2 history maintenance — the CDC-to-warehouse pattern
     * q88 computes in one batch pass, maintained INCREMENTALLY under
@@ -286,19 +283,15 @@ object StreamingQueries {
     * per refresh, never O(history).
     */
   private def q201(s: SparkSession, d: String): DataFrame = Sessions.isolated(s, StateWidth) { s =>
+    import s.implicits._
     val eventsSeq = Pipeline.collectEvents(s, d, 1000)
     val dir = TempDirs.create("graft_scd2_stream_")
-    val histSchema = org.apache.spark.sql.types.StructType.fromDDL(
+    val histSchema = StructType.fromDDL(
       "user_id BIGINT, version BIGINT, state STRING, " +
         "valid_from_sec BIGINT, valid_to_sec BIGINT, is_current BIGINT")
-    def mergeBatch(batch: DataFrame, @annotation.unused id: Long): Unit = {
+    def mergeBatch(batch: DataFrame, existing: DataFrame): DataFrame = {
       val ev = batch.select(col("user_id"), col("event_id"),
         col("ts_sec"), col("event_type"))
-      val existing =
-        if (Files.exists(java.nio.file.Paths.get(dir, "_SUCCESS")))
-          s.read.parquet(dir)
-        else s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          histSchema)
       val open = existing.filter(col("is_current") === 1L)
         .select(col("user_id"), col("version").as("seed_version"),
           col("state").as("seed_state"))
@@ -327,16 +320,12 @@ object StreamingQueries {
           coalesce(col("close_at"), col("valid_to_sec")).as("valid_to_sec"),
           when(col("close_at").isNull, col("is_current")).otherwise(0L)
             .as("is_current"))
-      val merged = existing.filter(col("is_current") === 0L)
+      existing.filter(col("is_current") === 0L)
         .unionByName(openUpdated).unionByName(newRows)
-      val tmp = dir + ".tmp"
-      merged.coalesce(1).write.mode("overwrite").parquet(tmp)
-      val fs = org.apache.hadoop.fs.FileSystem.get(s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(dir), true)
-      fs.rename(new org.apache.hadoop.fs.Path(tmp), new org.apache.hadoop.fs.Path(dir))
     }
-    Pipeline.runSliced(s, eventsSeq, 250, "graft_q201_sink")(_.toDF())(
-      Some(mergeBatch))
+    Pipeline.drive(s, "graft_q201_sink", eventsSeq.grouped(250).toSeq)(
+      _.toDF().writeStream.outputMode("update").foreachBatch((batch: DataFrame, _: Long) =>
+        swapTable(s, dir, histSchema)(mergeBatch(batch, _))))
     s.read.parquet(dir)
       .select("user_id", "version", "state", "valid_from_sec",
         "valid_to_sec", "is_current")
@@ -371,8 +360,9 @@ object StreamingQueries {
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider") { s =>
     import s.implicits._
     val eventsSeq = Pipeline.collectEvents(s, d, 1000)
-    Pipeline.runSliced(s, eventsSeq, 250, "graft_q102_sink")(
-      ds => Pipeline.authorCountsTws(ds).toDF())(None)
+    Pipeline.drive(s, "graft_q102_sink", eventsSeq.grouped(250).toSeq)(
+      Pipeline.authorCountsTws(_).writeStream.outputMode("append").format("memory"))
+    s.table("graft_q102_sink")
   }
 
   /** Batch-local anomaly detection (ST4/M2): Z-scores computed per
@@ -381,10 +371,11 @@ object StreamingQueries {
     * reference's pandas-per-poll (S/kinesis_processing_2.py:104-119).
     */
   private def q63(s: SparkSession, d: String): DataFrame = Sessions.isolated(s, StateWidth) { s =>
+    import s.implicits._
     val eventsSeq = Pipeline.collectEvents(s, d, 1000)
     val dir = TempDirs.create("graft_anomaly_")
-    Pipeline.runSliced(s, eventsSeq, 250, "graft_q63_sink")(_.toDF())(
-      Some((batch, id) =>
+    Pipeline.drive(s, "graft_q63_sink", eventsSeq.grouped(250).toSeq)(
+      _.toDF().writeStream.outputMode("update").foreachBatch((batch: DataFrame, id: Long) =>
         Pipeline.batchAnomalies(batch, id).write.mode("append").parquet(dir)))
     s.read.parquet(dir)
       .select("batch_id", "event_id", "user_id", "value", "z")
@@ -420,17 +411,9 @@ object StreamingQueries {
     val slices = (0 until 300 by 100).map(i => eventsSeq.slice(i, i + 150))
       .filter(_.nonEmpty)
     import s.implicits._
-    val stream = org.apache.spark.sql.execution.streaming.runtime
-      .MemoryStream[Pipeline.StreamEvent](s)
-    val ckpt = TempDirs.create("ckpt_q64")
-    val q = stream.toDS().dropDuplicates("event_id")
+    Pipeline.drive(s, "graft_q64_sink", slices)(_.dropDuplicates("event_id")
       .select(col("event_id"), col("user_id"), col("value"))
-      .writeStream.outputMode("append")
-      .option("checkpointLocation", ckpt)
-      .format("memory").queryName("graft_q64_sink").start()
-    slices.foreach { sl => stream.addData(sl); q.processAllAvailable() }
-    q.stop(); q.awaitTermination()
-    TempDirs.delete(ckpt)
+      .writeStream.outputMode("append").format("memory"))
     s.table("graft_q64_sink")
   }
 
@@ -454,9 +437,6 @@ object StreamingQueries {
     val slices = (0 until 300 by 100).map(i => eventsSeq.slice(i, i + 150))
       .filter(_.nonEmpty)
     import s.implicits._
-    val stream = org.apache.spark.sql.execution.streaming.runtime
-      .MemoryStream[Pipeline.StreamEvent](s)
-    val ckpt = TempDirs.create("ckpt_q101")
     // No-data micro-batches OFF (r17, guide §2.4): dedup emits each key's
     // FIRST occurrence during its data batch; the no-data batches only
     // evict expired keys (3 of the 6 batches, ~0.7 s of a 2.35 s warm run
@@ -468,17 +448,12 @@ object StreamingQueries {
     // outside the watermark is unchanged at scale — eviction still runs,
     // during data batches. Interleaved A/B (sf0.1): median 1.75 → 1.11 s,
     // 5/5 pairs; oracle PASS.
-    val q = stream.toDS()
+    Pipeline.drive(s, "graft_q101_sink", slices)(_
       .withColumn("ts", timestamp_seconds(col("ts_sec")))
       .withWatermark("ts", "1 hour")
       .dropDuplicatesWithinWatermark("event_id")
       .select(col("event_id"), col("user_id"), col("value"))
-      .writeStream.outputMode("append")
-      .option("checkpointLocation", ckpt)
-      .format("memory").queryName("graft_q101_sink").start()
-    slices.foreach { sl => stream.addData(sl); q.processAllAvailable() }
-    q.stop(); q.awaitTermination()
-    TempDirs.delete(ckpt)
+      .writeStream.outputMode("append").format("memory"))
     s.table("graft_q101_sink")
   }
 
@@ -493,12 +468,14 @@ object StreamingQueries {
     * formulation — lag() + cumulative sum — over the same bounded input.
     */
   private def q68(s: SparkSession, d: String): DataFrame = Sessions.isolated(s, StateWidth) { s =>
+    import s.implicits._
     val eventsSeq = Pipeline.collectEvents(s, d, 1000)
-    val snapshots = Pipeline.runSliced(s, eventsSeq, 250, "graft_q68_sink")(
-      ds => Pipeline.sessionize(ds, 1800L).toDF("user_id", "n_sessions", "n_events"))(None)
+    Pipeline.drive(s, "graft_q68_sink", eventsSeq.grouped(250).toSeq)(
+      Pipeline.sessionize(_, 1800L).toDF("user_id", "n_sessions", "n_events")
+        .writeStream.outputMode("append").format("memory"))
     // final snapshot per user: n_events strictly increases, so max(struct)
     // picks the last state deterministically
-    snapshots
+    s.table("graft_q68_sink")
       .groupBy("user_id")
       .agg(max(struct(col("n_events"), col("n_sessions"))).as("fin"))
       .select(col("user_id"), col("fin.n_sessions").as("n_sessions"),
@@ -519,6 +496,32 @@ object StreamingQueries {
       |  count(*) AS n_events
       |FROM flagged GROUP BY user_id ORDER BY user_id""".stripMargin
 
+  /** The purchase/click interval join q69 (inner) and q146 (left outer)
+    * stream: purchases joined to the same user's clicks within the
+    * preceding 10 minutes, both sides watermarked 1 hour. Second-precision
+    * event times make the interval condition exactly the oracles'
+    * integer-seconds band.
+    */
+  private def purchaseClicks(joinType: String)(
+      events: Dataset[Pipeline.StreamEvent]): DataFrame = {
+    val base = events
+      .select(col("event_id"), col("user_id"), col("event_type"),
+        timestamp_seconds(col("ts_sec")).as("ts"))
+    val purchases = base.filter(col("event_type") === "purchase")
+      .select(col("event_id").as("purchase_id"), col("user_id").as("p_user"),
+        col("ts").as("p_ts"))
+      .withWatermark("p_ts", "1 hour")
+    val clicks = base.filter(col("event_type") === "click")
+      .select(col("event_id").as("click_id"), col("user_id").as("c_user"),
+        col("ts").as("c_ts"))
+      .withWatermark("c_ts", "1 hour")
+    purchases.join(clicks,
+      col("p_user") === col("c_user") &&
+        col("c_ts") >= col("p_ts") - expr("INTERVAL 10 MINUTES") &&
+        col("c_ts") < col("p_ts"),
+      joinType)
+  }
+
   /** Watermarked stream-stream self-join: purchases joined to the same
     * user's clicks within the preceding 10 minutes, both sides streaming
     * (2 micro-batches — enough to prove matches span batch boundaries
@@ -531,24 +534,6 @@ object StreamingQueries {
       Sessions.isolated(s, StateWidth, NoDataBatchesOff) { s =>
     import s.implicits._
     val eventsSeq = Pipeline.collectEvents(s, d, 1000)
-    val stream = org.apache.spark.sql.execution.streaming.runtime
-      .MemoryStream[Pipeline.StreamEvent](s)
-    val base = stream.toDS()
-      .select(col("event_id"), col("user_id"), col("event_type"),
-        timestamp_seconds(col("ts_sec")).as("ts"))
-    val purchases = base.filter(col("event_type") === "purchase")
-      .select(col("event_id").as("purchase_id"), col("user_id").as("p_user"),
-        col("ts").as("p_ts"))
-      .withWatermark("p_ts", "1 hour")
-    val clicks = base.filter(col("event_type") === "click")
-      .select(col("event_id").as("click_id"), col("user_id").as("c_user"),
-        col("ts").as("c_ts"))
-      .withWatermark("c_ts", "1 hour")
-    val joined = purchases.join(clicks,
-      col("p_user") === col("c_user") &&
-        col("c_ts") >= col("p_ts") - expr("INTERVAL 10 MINUTES") &&
-        col("c_ts") < col("p_ts"))
-    val ckpt = TempDirs.create("ckpt_q69")
     // No-data micro-batches OFF (r17, guide §2.4): an INNER stream-stream
     // join emits every match during the data batch that completes it;
     // the watermark-advance no-data batches only evict
@@ -559,12 +544,8 @@ object StreamingQueries {
     // the eviction) replaces them with an explicit two-sentinel close.
     // Interleaved A/B (sf0.1): median 3.58 → 2.24 s, 5/5 pairs; oracle
     // PASS.
-    val q = joined.writeStream.outputMode("append")
-      .option("checkpointLocation", ckpt)
-      .format("memory").queryName("graft_q69_sink").start()
-    eventsSeq.grouped(500).foreach { sl => stream.addData(sl); q.processAllAvailable() }
-    q.stop(); q.awaitTermination()
-    TempDirs.delete(ckpt)
+    Pipeline.drive(s, "graft_q69_sink", eventsSeq.grouped(500).toSeq)(
+      purchaseClicks("inner")(_).writeStream.outputMode("append").format("memory"))
     s.table("graft_q69_sink")
       .select(col("p_user").as("user_id"), col("purchase_id"), col("click_id"))
   }
@@ -590,7 +571,7 @@ object StreamingQueries {
     *
     * Harness: a far-future sentinel pair (user −999, filtered from the
     * result) advances both watermarks past every real event so all
-    * pending outer rows flush — the MemoryStream equivalent of a
+    * pending outer rows flush — the slice-fed equivalent of a
     * quiescent-stream close. Stream ≡ batch: the sink must equal the
     * batch LEFT JOIN oracle exactly.
     *
@@ -618,25 +599,6 @@ object StreamingQueries {
     val sentinels2 = Seq(
       Pipeline.StreamEvent(9999993L, maxTs + 2 * 86400L, -999L, "purchase", 0.0, "{}"),
       Pipeline.StreamEvent(9999994L, maxTs + 2 * 86400L, -999L, "click", 0.0, "{}"))
-    val stream = org.apache.spark.sql.execution.streaming.runtime
-      .MemoryStream[Pipeline.StreamEvent](s)
-    val base = stream.toDS()
-      .select(col("event_id"), col("user_id"), col("event_type"),
-        timestamp_seconds(col("ts_sec")).as("ts"))
-    val purchases = base.filter(col("event_type") === "purchase")
-      .select(col("event_id").as("purchase_id"), col("user_id").as("p_user"),
-        col("ts").as("p_ts"))
-      .withWatermark("p_ts", "1 hour")
-    val clicks = base.filter(col("event_type") === "click")
-      .select(col("event_id").as("click_id"), col("user_id").as("c_user"),
-        col("ts").as("c_ts"))
-      .withWatermark("c_ts", "1 hour")
-    val joined = purchases.join(clicks,
-      col("p_user") === col("c_user") &&
-        col("c_ts") >= col("p_ts") - expr("INTERVAL 10 MINUTES") &&
-        col("c_ts") < col("p_ts"),
-      "left_outer")
-    val ckpt = TempDirs.create("ckpt_q146")
     // Two-sentinel quiescence instead of no-data micro-batches (r17,
     // guide §2.4): the outer join ran 6 micro-batches — 3 data + 3
     // watermark-advance no-data batches whose only job was evicting state
@@ -647,14 +609,8 @@ object StreamingQueries {
     // by sentinel batch 2 — the watermark after sentinel 1 exceeds every
     // real p_ts + band). Interleaved A/B (sf0.1): median 4.49 → 3.34 s,
     // 5/5 pairs; oracle PASS.
-    val q = joined.writeStream.outputMode("append")
-      .option("checkpointLocation", ckpt)
-      .format("memory").queryName("graft_q146_sink").start()
-    eventsSeq.grouped(500).foreach { sl => stream.addData(sl); q.processAllAvailable() }
-    stream.addData(sentinels); q.processAllAvailable()
-    stream.addData(sentinels2); q.processAllAvailable()
-    q.stop(); q.awaitTermination()
-    TempDirs.delete(ckpt)
+    Pipeline.drive(s, "graft_q146_sink", eventsSeq.grouped(500).toSeq :+ sentinels :+ sentinels2)(
+      purchaseClicks("left_outer")(_).writeStream.outputMode("append").format("memory"))
     s.table("graft_q146_sink")
       .filter(col("p_user") =!= -999L)
       .select(col("p_user").as("user_id"), col("purchase_id"), col("click_id"))
@@ -691,13 +647,7 @@ object StreamingQueries {
       .join(broadcast(dim), "mod5")
       .groupBy("dim_name")
       .agg(count(lit(1)).as("n"), Det.dsum(col("value")).as("sum_v"))
-    val ckpt = TempDirs.create("ckpt_q123")
-    val q = joined.writeStream.outputMode("complete")
-      .option("checkpointLocation", ckpt)
-      .format("memory").queryName(sinkName).start()
-    q.processAllAvailable()
-    q.stop(); q.awaitTermination()
-    TempDirs.delete(ckpt)
+    Pipeline.drive(sinkName)(joined.writeStream.outputMode("complete").format("memory"))
     s.table(sinkName)
   }
 
@@ -740,22 +690,13 @@ object StreamingQueries {
       eventsSeq.map(_.ts_sec).max + 86400L, -1L, "sentinel", 0.0, "{}")
     val slices = (0 until 400 by 100).map(i => eventsSeq.slice(i, i + 100))
       .filter(_.nonEmpty) :+ Seq(sentinel)
-    val stream = org.apache.spark.sql.execution.streaming.runtime
-      .MemoryStream[Pipeline.StreamEvent](s)
-    val ckpt = TempDirs.create("ckpt_q214")
-    val q = stream.toDS()
+    Pipeline.drive(s, "graft_q214_sink", slices)(_
       .withColumn("ts", timestamp_seconds(col("ts_sec")))
       .withWatermark("ts", "10 minutes")
       .groupBy(window(col("ts"), "5 minutes"), col("user_id"))
       .agg(count(lit(1)).as("n"))
-      .writeStream.outputMode("append")
-      .option("checkpointLocation", ckpt)
-      .format("memory").queryName("graft_q214_sink").start()
-    slices.foreach { sl => stream.addData(sl); q.processAllAvailable() }
-    q.stop(); q.awaitTermination()
-    TempDirs.delete(ckpt)
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("win_start").orderBy(desc("n"), asc("user_id"))
+      .writeStream.outputMode("append").format("memory"))
+    val w = Window.partitionBy("win_start").orderBy(desc("n"), asc("user_id"))
     s.table("graft_q214_sink")
       .select(date_format(col("window.start"), "yyyy-MM-dd HH:mm:ss").as("win_start"),
         col("user_id"), col("n"))
@@ -861,21 +802,13 @@ object StreamingQueries {
       eventsSeq.map(_.ts_sec).max + 30L * 86400L, -1L, "sentinel", 0.0, "{}")
     val slices = (0 until 600 by 150).map(i => eventsSeq.slice(i, i + 150))
       .filter(_.nonEmpty) :+ Seq(sentinel)
-    val stream = org.apache.spark.sql.execution.streaming.runtime
-      .MemoryStream[Pipeline.StreamEvent](s)
-    val ckpt = TempDirs.create("ckpt_q229")
-    val q = stream.toDS()
+    Pipeline.drive(s, "graft_q229_sink", slices)(_
       .filter(col("user_id") < 30 || col("user_id") === -1L)
       .withColumn("ts", timestamp_seconds(col("ts_sec")))
       .withWatermark("ts", "10 minutes")
       .groupBy(col("user_id"), session_window(col("ts"), "30 minutes"))
       .agg(count(lit(1)).as("n_events"))
-      .writeStream.outputMode("append")
-      .option("checkpointLocation", ckpt)
-      .format("memory").queryName("graft_q229_sink").start()
-    slices.foreach { sl => stream.addData(sl); q.processAllAvailable() }
-    q.stop(); q.awaitTermination()
-    TempDirs.delete(ckpt)
+      .writeStream.outputMode("append").format("memory"))
     s.table("graft_q229_sink")
       .filter(col("user_id") >= 0)
       .select(col("user_id"),

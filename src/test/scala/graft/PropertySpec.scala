@@ -150,13 +150,24 @@ class PropertySpec extends AnyFunSuite {
     }
   }
 
+  /** Corpora for the capped ≡ uncapped fuzzes: `n` docs over two langs
+    * with sets from `setGen` and null arrays drawn in, plus two null-array
+    * docs always in block "aa" — over every fuzzed cap, so the capped path
+    * always sees a null-array group.
+    */
+  private def cappedCorpus(n: Int, setGen: Gen[List[Long]]) =
+    Gen.listOfN(n, Gen.zip(Gen.oneOf("aa", "bb"),
+      Gen.frequency(1 -> Gen.const(None), 7 -> setGen.map(Option(_)))))
+      .map(_ ++ List("aa" -> None, "aa" -> None))
+
   test("jaccardPairs: capped routing ≡ all-pairs on random corpora (engine-checked)") {
     // differential fuzz of the round-5 skew guard: random small corpora,
     // two langs, random sorted-distinct long sets; prefix-posting path
     // (cap=3 forces it for any block ≥ 4) must emit exactly the all-pairs
     // result at several thresholds — including boundary-heavy 1/2 sets
+    // and null arrays, which pair with nothing on either path
     val setGen = Gen.nonEmptyListOf(Gen.choose(1L, 25L)).map(_.distinct.sorted)
-    val corpusGen = Gen.listOfN(24, Gen.zip(Gen.oneOf("aa", "bb"), setGen))
+    val corpusGen = cappedCorpus(24, setGen)
     var tested = 0
     forAllSampled(corpusGen, n = 12) { corpus =>
       val docs = corpus.zipWithIndex
@@ -258,7 +269,7 @@ class PropertySpec extends AnyFunSuite {
     // (Gen.choose(1L, 8L) over short lists makes identical sets common,
     // which is what the rep-space shortcut reasons about)
     val setGen = Gen.nonEmptyListOf(Gen.choose(1L, 8L)).map(_.distinct.sorted)
-    val corpusGen = Gen.listOfN(20, Gen.zip(Gen.oneOf("aa", "bb"), setGen))
+    val corpusGen = cappedCorpus(20, setGen)
     forAllSampled(corpusGen, n = 10) { corpus =>
       val docs = corpus.zipWithIndex
         .map { case ((lang, arr), i) => (i.toLong, lang, arr) }
@@ -281,10 +292,11 @@ class PropertySpec extends AnyFunSuite {
 
   test("containmentDropIds ≡ pair-list drop rule, capped and uncapped (engine-checked)") {
     val setGen = Gen.nonEmptyListOf(Gen.choose(1L, 10L)).map(_.distinct.sorted)
-    val corpusGen = Gen.listOfN(20, Gen.zip(Gen.oneOf("aa", "bb"), setGen))
+    val corpusGen = cappedCorpus(20, setGen)
     forAllSampled(corpusGen, n = 10) { corpus =>
+      // a null array contains nothing and is contained by nothing
       val byId = corpus.zipWithIndex
-        .map { case ((lang, arr), i) => i.toLong -> ((lang, arr.toSet)) }.toMap
+        .collect { case ((lang, Some(arr)), i) => i.toLong -> ((lang, arr.toSet)) }.toMap
       val docs = corpus.zipWithIndex
         .map { case ((lang, arr), i) => (i.toLong, lang, arr) }
         .toDF("doc_id", "lang", "arr")
@@ -311,7 +323,7 @@ class PropertySpec extends AnyFunSuite {
     // any block ≥ 4, which must emit exactly the all-pairs result —
     // including equal-set ties and multi-containment chains
     val setGen = Gen.nonEmptyListOf(Gen.choose(1L, 12L)).map(_.distinct.sorted)
-    val corpusGen = Gen.listOfN(20, Gen.zip(Gen.oneOf("aa", "bb"), setGen))
+    val corpusGen = cappedCorpus(20, setGen)
     forAllSampled(corpusGen, n = 12) { corpus =>
       val docs = corpus.zipWithIndex
         .map { case ((lang, arr), i) => (i.toLong, lang, arr) }

@@ -2,6 +2,7 @@ package graft
 
 import java.nio.file.Files
 
+import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.streaming.Pipeline
@@ -19,8 +20,9 @@ class StreamingSpec extends AnyFunSuite {
       ev(1, 10), ev(2, 20), ev(3, 10), // batch 1
       ev(4, 10), ev(5, 20), ev(6, 30), // batch 2
       ev(7, 10), ev(8, 30), ev(9, 20)) // batch 3
-    val out = Pipeline.runSliced(spark, events, 3, "spec_author_sink")(
-      ds => Pipeline.authorCounts(ds).toDF())(None)
+    Pipeline.drive(spark, "spec_author_sink", events.grouped(3).toSeq)(
+      Pipeline.authorCounts(_).writeStream.outputMode("append").format("memory"))
+    val out = spark.table("spec_author_sink")
       .collect().map(r => r.getLong(0) -> r.getLong(2)).toMap
     // per-row as-of counts, state carried across batches
     assert(out == Map(1L -> 1L, 3L -> 2L, 4L -> 3L, 7L -> 4L, // user 10
@@ -37,9 +39,12 @@ class StreamingSpec extends AnyFunSuite {
       ev(1, 10), ev(2, 20), ev(3, 10),
       ev(4, 10), ev(5, 20), ev(6, 30),
       ev(7, 10), ev(8, 30), ev(9, 20))
-    def run(sink: String) = Pipeline.runSliced(spark, events, 3, sink)(
-      ds => Pipeline.authorCounts(ds).toDF())(None)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+    def run(sink: String) = {
+      Pipeline.drive(spark, sink, events.grouped(3).toSeq)(
+        Pipeline.authorCounts(_).writeStream.outputMode("append").format("memory"))
+      spark.table(sink).collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+    }
     val default = run("spec_rocks_base_sink")
     val key = "spark.sql.streaming.stateStore.providerClass"
     val prev = spark.conf.getOption(key)
@@ -90,9 +95,9 @@ class StreamingSpec extends AnyFunSuite {
     val events = Seq(ev(1, 10, 1.0), ev(2, 20, 2.0), ev(3, 10, 3.0),
       ev(4, 20, 4.0), ev(5, 10, 5.0))
     val dir = Files.createTempDirectory("spec_upsert_").toString
-    Pipeline.runSliced(spark, events, 2, "spec_upsert_sink")(
-      ds => Pipeline.enrich(ds.toDF()))(
-      Some((b, _) => Pipeline.upsertBatch(spark, b, dir)))
+    Pipeline.drive(spark, "spec_upsert_sink", events.grouped(2).toSeq)(
+      ds => Pipeline.enrich(ds.toDF()).writeStream.outputMode("update")
+        .foreachBatch((b: DataFrame, _: Long) => Pipeline.upsertBatch(spark, b, dir)))
     val state = spark.read.parquet(dir).collect()
       .map(r => r.getAs[Long]("user_id") -> r.getAs[Long]("event_id")).toMap
     assert(state == Map(10L -> 5L, 20L -> 4L))
@@ -103,9 +108,9 @@ class StreamingSpec extends AnyFunSuite {
     // rewrites that bucket, so it must merge the stored user 9 back in
     val events = Seq(ev(1, 1, 1.0), ev(2, 9, 2.0), ev(3, 1, 3.0))
     val dir = Files.createTempDirectory("spec_upsert_shared_").toString
-    Pipeline.runSliced(spark, events, 2, "spec_upsert_shared_sink")(
-      ds => Pipeline.enrich(ds.toDF()))(
-      Some((b, _) => Pipeline.upsertBatch(spark, b, dir)))
+    Pipeline.drive(spark, "spec_upsert_shared_sink", events.grouped(2).toSeq)(
+      ds => Pipeline.enrich(ds.toDF()).writeStream.outputMode("update")
+        .foreachBatch((b: DataFrame, _: Long) => Pipeline.upsertBatch(spark, b, dir)))
     val state = spark.read.parquet(dir).collect()
       .map(r => r.getAs[Long]("user_id") -> r.getAs[Long]("event_id")).toMap
     assert(state == Map(1L -> 3L, 9L -> 2L))
@@ -119,9 +124,9 @@ class StreamingSpec extends AnyFunSuite {
     // ∝ batches.
     val events = (1L to 40L).map(i => ev(i, i % 10, i.toDouble))
     val dir = Files.createTempDirectory("spec_upsert_files_").toString
-    Pipeline.runSliced(spark, events, 10, "spec_upsert_files_sink")(
-      ds => Pipeline.enrich(ds.toDF()))(
-      Some((b, _) => Pipeline.upsertBatch(spark, b, dir)))
+    Pipeline.drive(spark, "spec_upsert_files_sink", events.grouped(10).toSeq)(
+      ds => Pipeline.enrich(ds.toDF()).writeStream.outputMode("update")
+        .foreachBatch((b: DataFrame, _: Long) => Pipeline.upsertBatch(spark, b, dir)))
     val bktDirs = new java.io.File(dir).listFiles()
       .filter(f => f.isDirectory && f.getName.startsWith("bkt="))
     assert(bktDirs.nonEmpty)
@@ -157,6 +162,58 @@ class StreamingSpec extends AnyFunSuite {
     val ids = Pipeline.batchAnomalies(batch.toDF(), 0L)
       .collect().map(_.getAs[Long]("event_id")).toSet
     assert(ids.subsetOf(batch.map(_.event_id).toSet))
+  }
+
+  test("the stream driver stops the query and drops its checkpoint when a batch fails") {
+    val name = "spec_driver_fail"
+    // TempDirs' scratch roots: tmpfs where present, else java.io.tmpdir
+    def leftCheckpoints() =
+      Seq("/dev/shm", System.getProperty("java.io.tmpdir")).distinct
+        .flatMap(d => Option(new java.io.File(d).listFiles()).getOrElse(Array.empty))
+        .map(_.getName).filter(_.startsWith(s"ckpt_${name}_"))
+    assert(leftCheckpoints().isEmpty)
+    val err = intercept[Exception] {
+      Pipeline.drive(spark, name, (1L to 6L).map(i => ev(i, i % 2)).grouped(2).toSeq)(
+        _.toDF().writeStream.foreachBatch { (_: DataFrame, id: Long) =>
+          if (id == 1L) throw new IllegalStateException("spec batch 1 fails")
+        })
+    }
+    val causes = Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null).toSeq
+    assert(causes.exists(c => Option(c.getMessage).exists(_.contains("spec batch 1 fails"))),
+      s"the caller must see the failing batch's error, got $err")
+    assert(spark.streams.active.isEmpty, "the failed query must be stopped")
+    assert(leftCheckpoints().isEmpty, "the failed query's checkpoint must be deleted")
+  }
+
+  test("only Pipeline.drive feeds a stream or sets a checkpoint") {
+    import java.nio.charset.StandardCharsets
+    import java.nio.file.Paths
+    import scala.jdk.CollectionConverters._
+    def sources(dir: String) = {
+      val root = Paths.get(dir)
+      assert(Files.isDirectory(root), s"$root not found; run from the repository root")
+      Files.walk(root).iterator.asScala
+        .filter(p => Files.isRegularFile(p) && p.toString.endsWith(".scala"))
+        .map(p => p -> new String(Files.readAllBytes(p), StandardCharsets.UTF_8)).toSeq
+    }
+    val removed = "run" + "Sliced"
+    val stale = sources("src").collect { case (p, t) if t.contains(removed) => p }
+    assert(stale.isEmpty, stale.mkString(s"files that name the removed $removed:\n", "\n", ""))
+    val driver = Paths.get("src/main/scala/graft/streaming/Pipeline.scala")
+    // GraftIVM.streamRefresh hands its AvailableNow query to the caller,
+    // who restarts it against one checkpoint
+    val ivm = Paths.get("src/main/scala/graft/sources/GraftIVM.scala")
+    val outside = sources("src/main/scala").filter(_._1 != driver)
+    val feeders = outside.collect {
+      case (p, t) if t.contains("processAllAvailable") || t.contains("MemoryStream") => p
+    }
+    assert(feeders.isEmpty, feeders.mkString(
+      "files outside Pipeline that feed or drain a stream by hand:\n", "\n", ""))
+    val checkpointers = outside.collect {
+      case (p, t) if p != ivm && t.contains("\"checkpointLocation\"") => p
+    }
+    assert(checkpointers.isEmpty, checkpointers.mkString(
+      "files outside Pipeline that set a checkpoint by hand:\n", "\n", ""))
   }
 
   test("file sink + checkpoint: query restart resumes offsets exactly once") {
