@@ -5,12 +5,12 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import org.apache.spark.sql.graft.GraftFunctions.sortedIntersectCount
-import org.apache.spark.sql.graft.Sessions
 
 import graft.{QueryDef, Tables}
 import graft.dedup.NearDup.P
+import graft.sources.GraftCatalog.onGraftCatalog
 import graft.streaming.Pipeline
-import graft.util.{Det, Materialize, TempDirs}
+import graft.util.{Det, Materialize}
 
 /** Deduplication operator family over `documents` — the training-data-
   * pipeline operators: exact dedup, blocked token-set Jaccard, word-n-gram
@@ -1267,14 +1267,16 @@ object DedupQueries {
     * is hash-checked against a batch oracle (stream ≡ batch).
     *
     * Store layout IS the scale argument, not just a comment: the store
-    * is written `partitionBy(kind, bkt)` where `bkt = band_key mod 16`,
-    * and the per-batch probe reads it with partition filters — only the
-    * `kind=b` partitions whose bucket appears in the batch are opened
-    * (accept-mark files are never touched by the probe). At 100 TB the
-    * bucket count grows with the corpus but the mechanism is identical:
-    * a narrow (band_key, doc_id) join against matching buckets only,
-    * and a blind append. State grows with the corpus, not the stream —
-    * which is why it lives in a table, not in executor memory.
+    * is a graft-store table partitioned by `(kind, bkt)` where
+    * `bkt = band_key mod 16`, created before the stream starts, and the
+    * per-batch probe is a filter on `kind = 'b' AND bkt IN (…)` — the
+    * store prunes its manifest to the `kind=b` files of the batch's
+    * buckets (accept-mark files are never touched by the probe). At
+    * 100 TB the bucket count grows with the corpus but the mechanism is
+    * identical: a narrow (band_key, doc_id) join against matching
+    * buckets only, and a blind append. State grows with the corpus, not
+    * the stream — which is why it lives in a table, not in executor
+    * memory.
     *
     * Harness note: the in-memory stream feed `collect()`s the documents
     * table to the driver to slice it into micro-batches — a test-feed
@@ -1298,9 +1300,9 @@ object DedupQueries {
   private val q129StoreBuckets = 16
 
   private[graft] def q129WithSlices(s: SparkSession, d: String, nSlices: Int): DataFrame =
-      Sessions.isolated(s, "spark.sql.shuffle.partitions" -> "4") { s =>
+      onGraftCatalog(s, "spark.sql.shuffle.partitions" -> "4") { (s, _) =>
     import s.implicits._
-    val store = TempDirs.create("graft_lsh_store_") + "/store"
+    val store = Pipeline.storeTable(s, "lsh_store", "kind STRING, bkt INT, k BIGINT", "kind", "bkt")
     val input = Tables.documents(s, d).select(col("doc_id"), col("text"))
       .orderBy("doc_id").as[DocRow].collect().toSeq
     val slice = math.max(1, (input.size + nSlices - 1) / nSlices)
@@ -1308,12 +1310,10 @@ object DedupQueries {
       _.toDF().writeStream.outputMode("append").foreachBatch { (batch: DataFrame, _: Long) =>
         val sp = batch.sparkSession
         // one store, two row kinds ('b' = band fingerprint, 'a' = accept
-        // mark), ONE write job per batch. With partitionBy(kind, bkt)
-        // the job commits several files, so bands-without-marks safety
-        // rests on the committer's job-level commit (not a single-file
-        // rename). The store is laid out partitionBy(kind, bkt); the
-        // probe below opens ONLY the kind=b bucket directories that
-        // appear in this batch, and the append is blind.
+        // mark), ONE write job per batch: its files become visible in one
+        // manifest commit, so bands never land without their marks. The
+        // probe below reads ONLY the kind=b buckets that appear in this
+        // batch, and the append is blind.
         Materialize.scoped { m =>
           val bands = bandRows(batch.select(col("doc_id"), hashedToks(col("text")).as("toks")))
             .withColumn("bkt", pmod(col("band_key"), lit(q129StoreBuckets)).cast("int"))
@@ -1321,21 +1321,17 @@ object DedupQueries {
           // The bucket-list collect doubles as the cache fill (the
           // minhash aggregation runs once, parallel — it must NOT first
           // run inside the write job, whose final stage is narrower),
-          // and drives the store read: matching bucket directories are
-          // handed to the reader as explicit paths with an explicit
-          // schema. Round 6 expressed the same restriction as a
-          // broadcast-semi-join + dynamic partition pruning over a
-          // discovery-listed store — 5+ extra jobs per batch (full
-          // store listing, schema inference, DPP subquery, broadcast)
-          // to avoid one driver round-trip that is at most
-          // `q129StoreBuckets` ints (VERDICT r6 "What's wrong" 2).
-          // The collect is bounded by the bucket-count knob, never the
-          // corpus, so it holds at 100 TB.
+          // and drives the store read: the bucket list is a partition
+          // filter the store answers from its manifest. Round 6
+          // expressed the same restriction as a broadcast-semi-join +
+          // dynamic partition pruning over a discovery-listed store —
+          // 5+ extra jobs per batch (full store listing, schema
+          // inference, DPP subquery, broadcast) to avoid one driver
+          // round-trip that is at most `q129StoreBuckets` ints (VERDICT
+          // r6 "What's wrong" 2). The collect is bounded by the
+          // bucket-count knob, never the corpus, so it holds at 100 TB.
           val batchBkts = bands.select("bkt").distinct()
             .as[Int].collect().sorted
-          val bktDirs = batchBkts
-            .map(b => new java.io.File(s"$store/kind=b/bkt=$b"))
-            .filter(_.isDirectory).map(_.toString).toSeq
           // DISTINCT before the probe join: the store is a key SET, but
           // appended batches can repeat a key (and round-10's sf1 bench
           // caught the cost of not collapsing: duplicate-heavy corpora
@@ -1343,13 +1339,10 @@ object DedupQueries {
           // membership left-join multiplied batch rows by store
           // multiplicity — 42 s vs 12 s for the 3-batch run at sf1).
           // A max over duplicated rows was CORRECT, just quadratic.
-          val storeKeys =
-            if (bktDirs.nonEmpty)
-              sp.read.schema("k LONG").parquet(bktDirs: _*)
-                .select(col("k").as("band_key")).distinct()
-                .select(col("band_key"), lit(true).as("in_store"))
-            else sp.range(0).select(col("id").as("band_key"),
-              lit(true).as("in_store"))
+          val storeKeys = sp.table(store)
+            .filter(col("kind") === "b" && col("bkt").isin(batchBkts.toSeq: _*))
+            .select(col("k").as("band_key")).distinct()
+            .select(col("band_key"), lit(true).as("in_store"))
           // one pass over the cached bands: a band dooms its doc if the
           // store already holds it, or an earlier same-batch doc does
           // (min-over-window); max() over the doc's bands folds that to
@@ -1369,18 +1362,17 @@ object DedupQueries {
           // propagates its 1-task width into the whole final stage
           // (probe joins + accept anti-join all single-threaded); the
           // repartition exchange keeps upstream parallel and still
-          // lands one file per (kind, bkt) directory.
+          // lands one file per (kind, bkt) partition.
           // the 'b' rows are a probe key SET — write each key once per
           // batch (same sf1 lesson as the probe-side distinct above)
           bands.select(lit("b").as("kind"), col("bkt"), col("band_key").as("k"))
             .distinct()
             .unionAll(accepted.select(lit("a").as("kind"),
               lit(-1).cast("int").as("bkt"), col("doc_id").as("k")))
-            .repartition(col("kind"), col("bkt")).write.mode("append")
-            .partitionBy("kind", "bkt").parquet(store)
+            .repartition(col("kind"), col("bkt")).writeTo(store).append()
         }
       })
-    val acc = s.read.parquet(store).filter(col("kind") === "a")
+    val acc = s.table(store).filter(col("kind") === "a")
       .select(col("k").as("doc_id"), lit(true).as("accepted"))
     Tables.documents(s, d).select("doc_id")
       .join(acc, Seq("doc_id"), "left")

@@ -134,9 +134,14 @@ private[graft] object NearDup {
     * over-cap blocks [[collapse]]d on (lang, arr) — the (small, groups)
     * split every capped path starts from. Output is routing-independent
     * by each caller's contract (PropertySpec fuzzes capped ≡ uncapped).
+    * An empty `arr` is no content, exactly like a null one, on both
+    * routes: it pairs with nothing and is dropped by nothing (a flat
+    * Jaccard of two empty sets would divide by a zero union, and an
+    * empty set is contained in every set).
     */
-  def capRouted[T](docs: DataFrame, cap: Int, countsFrom: Option[DataFrame])(
+  def capRouted[T](docs0: DataFrame, cap: Int, countsFrom: Option[DataFrame])(
       flat: DataFrame => T)(capped: (DataFrame, DataFrame) => T): T = {
+    val docs = docs0.withColumn("arr", when(size(col("arr")) > 0, col("arr")))
     val bigLangs = bigLangsOf(countsFrom, cap)
     if (bigLangs.isEmpty) flat(docs)
     else {

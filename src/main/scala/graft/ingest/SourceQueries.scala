@@ -3,10 +3,10 @@ package graft.ingest
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graft.Sessions
 import org.apache.spark.sql.types._
 
 import graft.{QueryDef, Tables}
+import graft.sources.GraftCatalog.onGraftCatalog
 import graft.util.Det
 
 /** Source/sink + catalog operator family (SURVEY §2.1): CSV write/read
@@ -472,19 +472,6 @@ object SourceQueries {
       |FROM events
       |WHERE event_id >= 100 AND event_id < 400
       |GROUP BY 1 ORDER BY 1""".stripMargin
-
-  /** Runs a store query on its own session clone with the `graft`
-    * catalog bound to a fresh warehouse, plus `conf`: each execution owns
-    * its tables and DML thresholds, so two executions never see each other's
-    * DDL, and the caller's session gets no catalog binding. `body` gets
-    * the clone and the warehouse path.
-    */
-  private def onGraftCatalog(s: SparkSession, conf: (String, String)*)(
-      body: (SparkSession, String) => DataFrame): DataFrame = {
-    val wh = graft.util.TempDirs.create("graft_warehouse_")
-    Sessions.isolated(s, Seq("spark.sql.catalog.graft" -> "graft.sources.GraftCatalog",
-      "spark.sql.catalog.graft.warehouse" -> wh) ++ conf: _*)(body(_, wh))
-  }
 
   /** A row-level DML rewrite threshold at or below 1/(rows per file) for
     * any file: every file with a matched row rewrites its kept rows.

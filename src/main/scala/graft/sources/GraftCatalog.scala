@@ -5,9 +5,11 @@ import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, StandardCopyOption}
 import java.util
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.analysis.{NamespaceAlreadyExistsException, NoSuchNamespaceException, NoSuchTableException, TableAlreadyExistsException}
 import org.apache.spark.sql.connector.catalog.{Identifier, NamespaceChange, StagedTable, StagingTableCatalog, SupportsNamespaces, Table, TableCatalog, TableChange, TableInfo}
 import org.apache.spark.sql.connector.expressions.Transform
+import org.apache.spark.sql.graft.Sessions
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
@@ -646,5 +648,21 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
       GraftCommit.deleteRecursively(d)
       true
     }
+  }
+}
+
+object GraftCatalog {
+
+  /** Runs a query body on its own session clone with the `graft`
+    * catalog bound to a fresh warehouse, plus `conf`: each execution owns
+    * its tables and DML thresholds, so two executions never see each
+    * other's DDL, and the caller's session gets no catalog binding.
+    * `body` gets the clone and the warehouse path.
+    */
+  def onGraftCatalog(s: SparkSession, conf: (String, String)*)(
+      body: (SparkSession, String) => DataFrame): DataFrame = {
+    val wh = graft.util.TempDirs.create("graft_warehouse_")
+    Sessions.isolated(s, Seq("spark.sql.catalog.graft" -> classOf[GraftCatalog].getName,
+      "spark.sql.catalog.graft.warehouse" -> wh) ++ conf: _*)(body(_, wh))
   }
 }

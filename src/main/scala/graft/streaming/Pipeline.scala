@@ -39,8 +39,9 @@ import graft.util.{Det, TempDirs}
   *    `flatMapGroupsWithState` (exact per-row parity, not just
   *    `groupBy.count` update mode).
   *  - S10: keyed upsert (DynamoDB put_item) — last-write-wins by key via
-  *    read∪batch → row_number dedup → overwrite (a Delta/Hudi MERGE at
-  *    cluster scale; plain parquet rewrite here).
+  *    read∪batch → row_number dedup → dynamic partition overwrite of a
+  *    graft-store table (a Delta/Hudi MERGE at cluster scale; here the
+  *    store's manifest swap is the commit).
   */
 object Pipeline {
 
@@ -112,78 +113,57 @@ object Pipeline {
     */
   val UpsertBuckets = 8
 
-  /** Keyed last-write-wins upsert of a micro-batch into a parquet store
-    * laid out `partitionBy(bkt = user_id mod UpsertBuckets)` — the
-    * bucket-wise MERGE shape: only buckets containing one of the batch's
-    * keys are read (partition filter on the probe) and only those buckets
-    * are rewritten (dynamic partition overwrite); untouched buckets are
-    * never opened. Rewrite cost is ∝ the batch's key spread, NOT the
-    * total store size. At cluster scale this is a Delta/Hudi MERGE on a
-    * table bucketed by key; the mechanism here is identical, minus the
-    * transaction log.
+  /** Creates the graft-store table `graft.<name>` with columns `ddl`,
+    * partitioned by `partitionBy`, on a session bound by
+    * [[graft.sources.GraftCatalog.onGraftCatalog]], and returns its name.
+    * A streaming body creates each table it writes and reads back before
+    * its stream starts: CREATE commits an empty version, so the first
+    * batch reads and writes the table like any later one.
     */
-  def upsertBatch(spark: SparkSession, batch: DataFrame, dir: String): Unit = {
+  def storeTable(s: SparkSession, name: String, ddl: String, partitionBy: String*): String = {
+    val t = s"graft.$name"
+    s.sql(s"CREATE TABLE $t ($ddl)" +
+      (if (partitionBy.isEmpty) "" else partitionBy.mkString(" PARTITIONED BY (", ", ", ")")))
+    t
+  }
+
+  /** The keyed upsert store's columns: the [[enrich]]ed batch plus `bkt`. */
+  val UpsertDdl =
+    "event_id BIGINT, user_id BIGINT, value DOUBLE, pop DOUBLE, time_of_day STRING, bkt INT"
+
+  /** Keyed last-write-wins upsert of a micro-batch into the graft-store
+    * table `table` ([[storeTable]] of [[UpsertDdl]], partitioned by
+    * `bkt = user_id mod UpsertBuckets`) — the bucket-wise MERGE shape:
+    * only buckets containing one of the batch's keys are read (the store
+    * prunes its manifest on the `bkt IN (…)` filter) and only those
+    * buckets are replaced (`overwritePartitions`, one manifest commit
+    * that retires the touched buckets' old files; every bucket read
+    * holds ≥ 1 batch row, so the write replaces exactly the buckets it
+    * read); untouched buckets are never opened. Rewrite cost is ∝ the
+    * batch's key spread, NOT the total store size. The bucket collect is
+    * bounded by UpsertBuckets ints — a layout knob, never data volume.
+    */
+  def upsertBatch(spark: SparkSession, batch: DataFrame, table: String): Unit = {
     val b = batch.withColumn("bkt",
       pmod(col("user_id"), lit(UpsertBuckets)).cast("int"))
-    // Restrict the store read to the batch's buckets by handing the
-    // reader the matching bucket DIRECTORIES with an explicit schema —
-    // the round-6 broadcast-semi-join + dynamic-partition-pruning form
-    // avoided a driver round-trip but paid a full store listing, schema
-    // inference, and the DPP subquery machinery EVERY batch (the q129
-    // profile finding; same store shape). The collect is bounded by
-    // UpsertBuckets ints — a layout knob, never data volume. bkt is a
-    // pure function of user_id, so it is recomputed instead of read
-    // from the directory names.
     val batchBkts = b.select("bkt").distinct().collect().map(_.getInt(0))
-    // Read bucket directories only once the store-level _SUCCESS marker
-    // exists, i.e. after the first (static) write committed. The marker
-    // says nothing about later writes: a failed dynamic-overwrite job
-    // aborts its own staging dir and leaves the committed buckets as
-    // they were, and the store lives in one execution's TempDirs dir, so
-    // no torn write from another run can be found here.
-    val committed = new java.io.File(dir, "_SUCCESS").isFile
-    val bktDirs =
-      if (!committed) Seq.empty[String]
-      else batchBkts
-        .map(v => new java.io.File(s"$dir/bkt=$v"))
-        .filter(_.isDirectory).map(_.toString).toSeq
-    val existing =
-      if (bktDirs.nonEmpty)
-        spark.read.schema(batch.schema).parquet(bktDirs: _*)
-          .withColumn("bkt", pmod(col("user_id"), lit(UpsertBuckets)).cast("int"))
-      else b.limit(0)
-    // ONE exchange per batch, not two (r17, guide §2.4): the pre-r17 form
-    // windowed by user_id (Exchange hashpartitioning(user_id)) and then
-    // repartitioned by bkt for the write (a second Exchange of the same
-    // rows). bkt is a pure function of user_id, so hash-partitioning by
-    // bkt ALREADY co-locates each user's rows: partition by bkt once,
-    // window by (bkt, user_id) — HashPartitioning(bkt) satisfies
-    // ClusteredDistribution(bkt, user_id), so the window adds only a
-    // local sort — and write directly. Same winner per user (event_id is
-    // unique per user), same one-file-per-bucket layout (each bkt still
-    // lives in exactly one task). Interleaved A/B (sf0.1, local[32]):
-    // q61 median 4.05 → 3.95 s (min 3.82 → 3.41), q227 median
-    // 2.69 → 2.42 s — optimized arm won all 10 pairs; oracle PASS both.
+    // ONE exchange per batch (r17): bkt is a pure function of user_id, so
+    // hash-partitioning by bkt already co-locates each user's rows —
+    // HashPartitioning(bkt) satisfies ClusteredDistribution(bkt, user_id),
+    // so the window adds only a local sort, and the write needs no second
+    // exchange (A/B at sf0.1, local[32]: q61 median 4.05 → 3.95 s, q227
+    // 2.69 → 2.42 s, 10/10 pairs). Each bucket lives in exactly one task,
+    // so every touched bucket commits one file (the next probe's file
+    // list stays ∝ buckets, not ∝ batches) while buckets write in
+    // parallel.
     val w = Window.partitionBy("bkt", "user_id").orderBy(desc("event_id"))
-    val merged = existing.unionByName(b)
+    spark.table(table).filter(col("bkt").isin(batchBkts.toSeq: _*))
+      .unionByName(b)
       .repartition(UpsertBuckets, col("bkt"))
       .withColumn("rn", row_number().over(w))
       .filter(col("rn") === 1)
       .drop("rn")
-    // dynamic overwrite replaces exactly the partitions present in
-    // `merged` = the touched buckets (each holds ≥1 batch row by
-    // construction). Hash-repartition on bkt keeps each bucket's rows in
-    // ONE task → one file per bucket dir (the next probe's file list
-    // stays ∝ buckets, not ∝ batches) while buckets write in parallel —
-    // the earlier coalesce(1) kept the one-file invariant but serialized
-    // the whole merge (window + write) into a single thread per batch.
-    // The mode is a writer option, so it holds whichever session `merged`
-    // belongs to. An uncommitted store is written STATIC: only a static
-    // overwrite leaves the store-level _SUCCESS marker the probe above
-    // requires (a dynamic one commits the bucket dirs alone).
-    merged.write.mode("overwrite")
-      .option("partitionOverwriteMode", if (committed) "dynamic" else "static")
-      .partitionBy("bkt").parquet(dir)
+      .writeTo(table).overwritePartitions()
   }
 
   /** Batch-local Z-score anomalies (ST4): mean/std of THIS micro-batch

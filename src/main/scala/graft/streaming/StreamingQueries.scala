@@ -1,15 +1,12 @@
 package graft.streaming
 
-import java.nio.file.{Files, Paths}
-
-import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.Sessions
-import org.apache.spark.sql.types.StructType
 
 import graft.{QueryDef, Tables}
+import graft.sources.GraftCatalog.onGraftCatalog
 import graft.util.{Det, TempDirs}
 import Pipeline.{NoDataBatchesOff, StateWidth}
 
@@ -27,6 +24,14 @@ import Pipeline.{NoDataBatchesOff, StateWidth}
   * (the slices, or a file source drained once); [[Pipeline.drive]] owns
   * the rest of the lifecycle — checkpoint, query name, start, feed, stop
   * and checkpoint delete, with the cleanup in a `finally`.
+  *
+  * Every table a body writes and reads back across micro-batches (q61
+  * and q227's keyed upsert, q108 and q201's refreshed tables, q63's
+  * anomaly log) is a graft-store table in the `graft` catalog, bound on
+  * the body's clone by [[onGraftCatalog]] and created before the stream
+  * starts ([[Pipeline.storeTable]]). The store's manifest swap is the one
+  * commit, so a refresh is an overwrite of the same table and a bucket
+  * probe is a partition filter.
   */
 object StreamingQueries {
 
@@ -58,14 +63,14 @@ object StreamingQueries {
     * keyed store, last write per user_id wins. Stream-equals-batch oracle:
     * the final store is exactly "latest event per user, enriched".
     */
-  private def q61(s: SparkSession, d: String): DataFrame = Sessions.isolated(s, StateWidth) { s =>
+  private def q61(s: SparkSession, d: String): DataFrame = onGraftCatalog(s, StateWidth) { (s, _) =>
     import s.implicits._
     val eventsSeq = Pipeline.collectEvents(s, d, 1000)
-    val dir = TempDirs.create("graft_upsert_")
+    val t = Pipeline.storeTable(s, "upsert", Pipeline.UpsertDdl, "bkt")
     Pipeline.drive(s, "graft_q61_sink", eventsSeq.grouped(100).toSeq)(
       ds => Pipeline.enrich(ds.toDF()).writeStream.outputMode("update")
-        .foreachBatch((batch: DataFrame, _: Long) => Pipeline.upsertBatch(s, batch, dir)))
-    s.read.parquet(dir)
+        .foreachBatch((batch: DataFrame, _: Long) => Pipeline.upsertBatch(s, batch, t)))
+    s.table(t)
       .select("user_id", "event_id", "value", "pop", "time_of_day")
   }
 
@@ -98,11 +103,11 @@ object StreamingQueries {
     * over a 100 TB backlog — per-batch work stays ∝ files admitted, and
     * the upsert store probe stays ∝ touched buckets (upsertBatch).
     */
-  private def q227(s: SparkSession, d: String): DataFrame = Sessions.isolated(s, StateWidth) { s =>
+  private def q227(s: SparkSession, d: String): DataFrame = onGraftCatalog(s, StateWidth) { (s, _) =>
     import s.implicits._
     val base = TempDirs.create("graft_mft_")
     val srcDir = new java.io.File(base, "src"); srcDir.mkdirs()
-    val store = base + "/store"
+    val store = Pipeline.storeTable(s, "upsert", Pipeline.UpsertDdl, "bkt")
     val eventsSeq = Pipeline.collectEvents(s, d, 1000)
     val slices = eventsSeq.grouped(250).toSeq
     slices.zipWithIndex.foreach { case (sl, i) =>
@@ -133,7 +138,7 @@ object StreamingQueries {
         seenBatchIds.add(batchId)
         Pipeline.upsertBatch(s, batch, store)
       })
-    s.read.parquet(store)
+    s.table(store)
       .select("user_id", "event_id", "value", "pop", "time_of_day")
       .crossJoin(broadcast(
         s.range(1).select(lit(seenBatchIds.size().toLong).as("n_batches"))))
@@ -225,25 +230,28 @@ object StreamingQueries {
     * dashboard aggregate current — O(batch) work per refresh instead of
     * O(history).
     */
-  private def q108(s: SparkSession, d: String): DataFrame = Sessions.isolated(s, StateWidth) { s =>
+  private def q108(s: SparkSession, d: String): DataFrame = onGraftCatalog(s, StateWidth) { (s, _) =>
     import s.implicits._
     val eventsSeq = Pipeline.collectEvents(s, d, 1000)
-    val dir = TempDirs.create("graft_incr_agg_")
-    val aggSchema = StructType.fromDDL("event_type STRING, n BIGINT, sum_v_dec DECIMAL(28,4)")
+    // the exact running sum is a BIGINT count of 10⁻⁴ units: the
+    // decimal(18,4) value times 10⁴, summed without rounding
+    val t = Pipeline.storeTable(s, "incr_agg", "event_type STRING, n BIGINT, sum_v_units BIGINT")
     // 3 refresh cycles prove the cross-batch merge; each cycle pays a
     // fixed read-merge-write cost, so slice count is the cost knob
     Pipeline.drive(s, "graft_q108_sink", eventsSeq.grouped(334).toSeq)(
       _.toDF().writeStream.outputMode("update").foreachBatch { (batch: DataFrame, _: Long) =>
         val delta = batch.groupBy("event_type")
           .agg(count(lit(1)).as("n"),
-            sum(col("value").cast("decimal(18,4)")).as("sum_v_dec"))
-        swapTable(s, dir, aggSchema)(_.unionByName(delta)
+            sum((col("value").cast("decimal(18,4)") * 10000).cast("long")).as("sum_v_units"))
+        s.table(t).unionByName(delta)
           .groupBy("event_type")
-          .agg(sum(col("n")).as("n"), sum(col("sum_v_dec")).as("sum_v_dec")))
+          .agg(sum(col("n")).as("n"), sum(col("sum_v_units")).as("sum_v_units"))
+          .coalesce(1).writeTo(t).overwrite(lit(true))
       })
-    s.read.parquet(dir)
+    s.table(t)
       .select(col("event_type"), col("n"),
-        col("sum_v_dec").cast("double").as("sum_v"))
+        (col("sum_v_units").cast("decimal(20,0)") * lit(BigDecimal("0.0001")))
+          .cast("double").as("sum_v"))
   }
 
   private val q108Sql =
@@ -251,23 +259,6 @@ object StreamingQueries {
       |  CAST(sum(CAST(value AS DECIMAL(18,4))) AS DOUBLE) AS sum_v
       |FROM (SELECT * FROM events ORDER BY event_id LIMIT 1000)
       |GROUP BY 1 ORDER BY 1""".stripMargin
-
-  /** One refresh of a derived parquet table from a micro-batch (q108,
-    * q201): read the current table at `dir` (empty, of `schema`, before
-    * the first refresh), write `merge(current)` beside it and swap it in
-    * by delete + rename.
-    */
-  private def swapTable(s: SparkSession, dir: String, schema: StructType)(
-      merge: DataFrame => DataFrame): Unit = {
-    val existing =
-      if (Files.exists(Paths.get(dir, "_SUCCESS"))) s.read.parquet(dir)
-      else s.createDataFrame(java.util.Collections.emptyList[Row](), schema)
-    val tmp = dir + ".tmp"
-    merge(existing).coalesce(1).write.mode("overwrite").parquet(tmp)
-    val fs = FileSystem.get(s.sparkContext.hadoopConfiguration)
-    fs.delete(new Path(dir), true)
-    fs.rename(new Path(tmp), new Path(dir))
-  }
 
   /** Streaming SCD2 history maintenance — the CDC-to-warehouse pattern
     * q88 computes in one batch pass, maintained INCREMENTALLY under
@@ -282,13 +273,11 @@ object StreamingQueries {
     * is how dimension history stays current: O(batch + open rows) work
     * per refresh, never O(history).
     */
-  private def q201(s: SparkSession, d: String): DataFrame = Sessions.isolated(s, StateWidth) { s =>
+  private def q201(s: SparkSession, d: String): DataFrame = onGraftCatalog(s, StateWidth) { (s, _) =>
     import s.implicits._
     val eventsSeq = Pipeline.collectEvents(s, d, 1000)
-    val dir = TempDirs.create("graft_scd2_stream_")
-    val histSchema = StructType.fromDDL(
-      "user_id BIGINT, version BIGINT, state STRING, " +
-        "valid_from_sec BIGINT, valid_to_sec BIGINT, is_current BIGINT")
+    val t = Pipeline.storeTable(s, "scd2", "user_id BIGINT, version BIGINT, state STRING, " +
+      "valid_from_sec BIGINT, valid_to_sec BIGINT, is_current BIGINT")
     def mergeBatch(batch: DataFrame, existing: DataFrame): DataFrame = {
       val ev = batch.select(col("user_id"), col("event_id"),
         col("ts_sec"), col("event_type"))
@@ -325,8 +314,8 @@ object StreamingQueries {
     }
     Pipeline.drive(s, "graft_q201_sink", eventsSeq.grouped(250).toSeq)(
       _.toDF().writeStream.outputMode("update").foreachBatch((batch: DataFrame, _: Long) =>
-        swapTable(s, dir, histSchema)(mergeBatch(batch, _))))
-    s.read.parquet(dir)
+        mergeBatch(batch, s.table(t)).coalesce(1).writeTo(t).overwrite(lit(true))))
+    s.table(t)
       .select("user_id", "version", "state", "valid_from_sec",
         "valid_to_sec", "is_current")
   }
@@ -370,14 +359,15 @@ object StreamingQueries {
     * streaming aggregate; the stats reset every batch exactly like the
     * reference's pandas-per-poll (S/kinesis_processing_2.py:104-119).
     */
-  private def q63(s: SparkSession, d: String): DataFrame = Sessions.isolated(s, StateWidth) { s =>
+  private def q63(s: SparkSession, d: String): DataFrame = onGraftCatalog(s, StateWidth) { (s, _) =>
     import s.implicits._
     val eventsSeq = Pipeline.collectEvents(s, d, 1000)
-    val dir = TempDirs.create("graft_anomaly_")
+    val t = Pipeline.storeTable(s, "anomalies",
+      "event_id BIGINT, user_id BIGINT, value DOUBLE, z DOUBLE, batch_id BIGINT")
     Pipeline.drive(s, "graft_q63_sink", eventsSeq.grouped(250).toSeq)(
       _.toDF().writeStream.outputMode("update").foreachBatch((batch: DataFrame, id: Long) =>
-        Pipeline.batchAnomalies(batch, id).write.mode("append").parquet(dir)))
-    s.read.parquet(dir)
+        Pipeline.batchAnomalies(batch, id).writeTo(t).append()))
+    s.table(t)
       .select("batch_id", "event_id", "user_id", "value", "z")
   }
 

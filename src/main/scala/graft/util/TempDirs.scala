@@ -4,11 +4,11 @@ import java.nio.file.{Files, Path, Paths}
 import scala.collection.mutable
 
 /** Scratch directories for queries that round-trip through a filesystem
-  * store (CSV/ORC/XML round trips, streaming upsert stores, the q129
-  * fingerprint store, graft warehouses) and for throwaway streaming
-  * checkpoints. A directory is removed by [[delete]] or, failing that, by
-  * a JVM shutdown hook, so repeated bench/verify runs don't accumulate
-  * disk.
+  * store (CSV/ORC/XML round trips, q227's slice files, graft
+  * warehouses, which hold the streaming family's tables) and for
+  * throwaway streaming checkpoints. A directory is removed by [[delete]]
+  * or, failing that, by a JVM shutdown hook, so repeated bench/verify
+  * runs don't accumulate disk.
   */
 object TempDirs {
   private val registered = mutable.LinkedHashSet.empty[Path]

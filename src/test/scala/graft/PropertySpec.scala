@@ -151,21 +151,23 @@ class PropertySpec extends AnyFunSuite {
   }
 
   /** Corpora for the capped ≡ uncapped fuzzes: `n` docs over two langs
-    * with sets from `setGen` and null arrays drawn in, plus two null-array
-    * docs always in block "aa" — over every fuzzed cap, so the capped path
-    * always sees a null-array group.
+    * with sets from `setGen` and null and empty arrays drawn in, plus two
+    * null-array and two empty-array docs always in block "aa" — over
+    * every fuzzed cap, so the capped path always sees a null-array and an
+    * empty-array group.
     */
   private def cappedCorpus(n: Int, setGen: Gen[List[Long]]) =
     Gen.listOfN(n, Gen.zip(Gen.oneOf("aa", "bb"),
-      Gen.frequency(1 -> Gen.const(None), 7 -> setGen.map(Option(_)))))
-      .map(_ ++ List("aa" -> None, "aa" -> None))
+      Gen.frequency(1 -> Gen.const(None), 1 -> Gen.const(Some(Nil)),
+        6 -> setGen.map(Option(_)))))
+      .map(_ ++ List("aa" -> None, "aa" -> None, "aa" -> Some(Nil), "aa" -> Some(Nil)))
 
   test("jaccardPairs: capped routing ≡ all-pairs on random corpora (engine-checked)") {
     // differential fuzz of the round-5 skew guard: random small corpora,
     // two langs, random sorted-distinct long sets; prefix-posting path
     // (cap=3 forces it for any block ≥ 4) must emit exactly the all-pairs
     // result at several thresholds — including boundary-heavy 1/2 sets
-    // and null arrays, which pair with nothing on either path
+    // and null and empty arrays, which pair with nothing on either path
     val setGen = Gen.nonEmptyListOf(Gen.choose(1L, 25L)).map(_.distinct.sorted)
     val corpusGen = cappedCorpus(24, setGen)
     var tested = 0
@@ -294,9 +296,10 @@ class PropertySpec extends AnyFunSuite {
     val setGen = Gen.nonEmptyListOf(Gen.choose(1L, 10L)).map(_.distinct.sorted)
     val corpusGen = cappedCorpus(20, setGen)
     forAllSampled(corpusGen, n = 10) { corpus =>
-      // a null array contains nothing and is contained by nothing
+      // a null or empty array contains nothing and is contained by nothing
       val byId = corpus.zipWithIndex
-        .collect { case ((lang, Some(arr)), i) => i.toLong -> ((lang, arr.toSet)) }.toMap
+        .collect { case ((lang, Some(arr)), i) if arr.nonEmpty => i.toLong -> ((lang, arr.toSet)) }
+        .toMap
       val docs = corpus.zipWithIndex
         .map { case ((lang, arr), i) => (i.toLong, lang, arr) }
         .toDF("doc_id", "lang", "arr")

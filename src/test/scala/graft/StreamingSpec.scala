@@ -2,9 +2,12 @@ package graft
 
 import java.nio.file.Files
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.sources.GraftCatalog.onGraftCatalog
 import graft.streaming.Pipeline
 import graft.streaming.Pipeline.StreamEvent
 
@@ -91,15 +94,30 @@ class StreamingSpec extends AnyFunSuite {
     assert(stateRows < 7, s"expected evicted state, store still holds $stateRows rows")
   }
 
+  /** Streams `batches` through [[Pipeline.upsertBatch]] into a fresh
+    * upsert table, on a session clone with `conf`; returns the final
+    * user → event map and the table dir.
+    */
+  private def upsertRun(name: String, batches: Seq[Seq[StreamEvent]],
+      conf: (String, String)*): (Map[Long, Long], java.io.File) = {
+    var dir: java.io.File = null
+    val table = onGraftCatalog(spark, conf: _*) { (s, wh) =>
+      val t = Pipeline.storeTable(s, "upsert", Pipeline.UpsertDdl, "bkt")
+      dir = new java.io.File(wh, "upsert")
+      Pipeline.drive(s, name, batches)(
+        ds => Pipeline.enrich(ds.toDF()).writeStream.outputMode("update")
+          .foreachBatch((b: DataFrame, _: Long) => Pipeline.upsertBatch(s, b, t)))
+      s.table(t)
+    }
+    val state = table.collect()
+      .map(r => r.getAs[Long]("user_id") -> r.getAs[Long]("event_id")).toMap
+    (state, dir)
+  }
+
   test("keyed upsert: last write per user wins across batches (S10)") {
     val events = Seq(ev(1, 10, 1.0), ev(2, 20, 2.0), ev(3, 10, 3.0),
       ev(4, 20, 4.0), ev(5, 10, 5.0))
-    val dir = Files.createTempDirectory("spec_upsert_").toString
-    Pipeline.drive(spark, "spec_upsert_sink", events.grouped(2).toSeq)(
-      ds => Pipeline.enrich(ds.toDF()).writeStream.outputMode("update")
-        .foreachBatch((b: DataFrame, _: Long) => Pipeline.upsertBatch(spark, b, dir)))
-    val state = spark.read.parquet(dir).collect()
-      .map(r => r.getAs[Long]("user_id") -> r.getAs[Long]("event_id")).toMap
+    val (state, _) = upsertRun("spec_upsert_sink", events.grouped(2).toSeq)
     assert(state == Map(10L -> 5L, 20L -> 4L))
   }
 
@@ -107,37 +125,34 @@ class StreamingSpec extends AnyFunSuite {
     // users 1 and 9 share bucket 1 (user_id mod 8); the second batch
     // rewrites that bucket, so it must merge the stored user 9 back in
     val events = Seq(ev(1, 1, 1.0), ev(2, 9, 2.0), ev(3, 1, 3.0))
-    val dir = Files.createTempDirectory("spec_upsert_shared_").toString
-    Pipeline.drive(spark, "spec_upsert_shared_sink", events.grouped(2).toSeq)(
-      ds => Pipeline.enrich(ds.toDF()).writeStream.outputMode("update")
-        .foreachBatch((b: DataFrame, _: Long) => Pipeline.upsertBatch(spark, b, dir)))
-    val state = spark.read.parquet(dir).collect()
-      .map(r => r.getAs[Long]("user_id") -> r.getAs[Long]("event_id")).toMap
+    val (state, _) = upsertRun("spec_upsert_shared_sink", events.grouped(2).toSeq)
     assert(state == Map(1L -> 3L, 9L -> 2L))
   }
 
-  test("keyed upsert keeps one file per touched bucket dir (r17 one-exchange merge)") {
+  test("keyed upsert: the manifest lists one file per touched bucket") {
     // The r17 merge rewrite (partition by bkt once, window by (bkt,
     // user_id)) must preserve the store layout invariant the probe relies
-    // on: each bucket directory holds exactly ONE parquet file after any
-    // number of batches — the probe's file list stays ∝ buckets, never
-    // ∝ batches.
+    // on: the current manifest lists exactly ONE file per bucket after
+    // any number of batches — the probe's file list stays ∝ buckets,
+    // never ∝ batches. A bucket overwrite retires the replaced files
+    // instead of deleting them, so the manifest, not a directory
+    // listing, is the layout.
     val events = (1L to 40L).map(i => ev(i, i % 10, i.toDouble))
-    val dir = Files.createTempDirectory("spec_upsert_files_").toString
-    Pipeline.drive(spark, "spec_upsert_files_sink", events.grouped(10).toSeq)(
-      ds => Pipeline.enrich(ds.toDF()).writeStream.outputMode("update")
-        .foreachBatch((b: DataFrame, _: Long) => Pipeline.upsertBatch(spark, b, dir)))
-    val bktDirs = new java.io.File(dir).listFiles()
-      .filter(f => f.isDirectory && f.getName.startsWith("bkt="))
-    assert(bktDirs.nonEmpty)
-    bktDirs.foreach { bd =>
-      val files = bd.listFiles().filter(_.getName.endsWith(".parquet"))
+    // AQE would coalesce this input's small shuffles into one task, which
+    // hides a merge that splits a bucket across tasks
+    val (state, dir) = upsertRun("spec_upsert_files_sink", events.grouped(10).toSeq,
+      "spark.sql.adaptive.coalescePartitions.enabled" -> "false")
+    // manifest lines are encoded table-relative paths, one per file
+    val listed = Files.readAllLines(dir.toPath.resolve("_MANIFEST")).asScala.toSeq
+      .filterNot(l => l.isEmpty || l.startsWith("#"))
+      .map(graft.sources.GraftStore.decodePartValue)
+    val perBucket = listed.groupBy(_.takeWhile(_ != '/'))
+    assert(perBucket.keySet == (0 until 8).map(b => s"bkt=$b").toSet)
+    perBucket.foreach { case (bucket, files) =>
       assert(files.length == 1,
-        s"${bd.getName} holds ${files.length} files; expected exactly 1")
+        s"the manifest lists ${files.length} files in $bucket; expected exactly 1")
     }
     // and the merge semantics are unchanged: last event per user wins
-    val state = spark.read.parquet(dir).collect()
-      .map(r => r.getAs[Long]("user_id") -> r.getAs[Long]("event_id")).toMap
     assert(state == (0L to 9L).map(u => u -> (30L + ((u + 10 - 1) % 10) + 1)).toMap)
   }
 
@@ -188,7 +203,6 @@ class StreamingSpec extends AnyFunSuite {
   test("only Pipeline.drive feeds a stream or sets a checkpoint") {
     import java.nio.charset.StandardCharsets
     import java.nio.file.Paths
-    import scala.jdk.CollectionConverters._
     def sources(dir: String) = {
       val root = Paths.get(dir)
       assert(Files.isDirectory(root), s"$root not found; run from the repository root")

@@ -109,7 +109,6 @@ class StoreCommitSpec extends AnyFunSuite {
     val root = Paths.get("src/main/scala")
     assert(Files.isDirectory(root), s"$root not found; run from the repository root")
     val store = root.resolve("graft/sources/GraftStore.scala")
-    val sources = root.resolve("graft/sources")
     def text(p: java.nio.file.Path) =
       new String(Files.readAllBytes(p), StandardCharsets.UTF_8)
     // GraftCommit's body: from its header to the first top-level `}`
@@ -134,10 +133,28 @@ class StoreCommitSpec extends AnyFunSuite {
     assert(calls.sorted == Seq("commitManifest", "retryingCommit"),
       s"GraftCommit must swap a manifest at exactly one call site: $calls")
     val markers = outside.collect {
-      case (p, t) if p.startsWith(sources) &&
-          (t.contains("SuccessFile") || t.contains("\"_SUCCESS\"")) => p
+      case (p, t) if t.contains("SuccessFile") || t.contains("\"_SUCCESS\"") => p
     }
     assert(markers.isEmpty, markers.mkString(
-      "graft/sources files outside GraftCommit that name the _SUCCESS marker:\n", "\n", ""))
+      "src/main/scala files outside GraftCommit that name the _SUCCESS marker:\n", "\n", ""))
+  }
+
+  test("no table outside the store swaps itself or builds its own bucket paths") {
+    // a delete + rename swap leaves a window where the table does not
+    // exist, and a hand-built bucket directory path bypasses the manifest
+    // that decides which files are visible
+    val removed = "swap" + "Table"
+    val swaps = Files.walk(Paths.get("src")).iterator.asScala
+      .filter(p => Files.isRegularFile(p) && p.toString.endsWith(".scala")).toSeq
+      .filter(p => new String(Files.readAllBytes(p), StandardCharsets.UTF_8).contains(removed))
+    assert(swaps.isEmpty, swaps.mkString(s"files that name the removed $removed:\n", "\n", ""))
+    val root = Paths.get("src/main/scala")
+    val sources = root.resolve("graft/sources")
+    val bucketPaths = Files.walk(root).iterator.asScala
+      .filter(p => Files.isRegularFile(p) && p.toString.endsWith(".scala") && !p.startsWith(sources))
+      .filter(p => new String(Files.readAllBytes(p), StandardCharsets.UTF_8).contains("bkt="))
+      .toSeq
+    assert(bucketPaths.isEmpty, bucketPaths.mkString(
+      "files outside graft/sources that build a bkt= bucket path by hand:\n", "\n", ""))
   }
 }

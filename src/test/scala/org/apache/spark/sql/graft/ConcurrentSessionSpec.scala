@@ -19,7 +19,8 @@ class ConcurrentSessionSpec extends AnyFunSuite {
   import TestSpark.{spark, sf}
 
   private val names = Seq("q64_stream_dedup", "q69_stream_stream_join",
-    "q102_tws_author_state", "q259_store_cdc", "q13_correlated_subq")
+    "q102_tws_author_state", "q259_store_cdc", "q13_correlated_subq",
+    "q61_stream_upsert", "q227_rate_limited_upsert")
 
   private def sortedRows(name: String): Seq[String] =
     Registry.queries(name)(spark, sf).collect().map(_.toString).toSeq.sorted
@@ -62,7 +63,7 @@ class ConcurrentSessionSpec extends AnyFunSuite {
 
   private def listeners(): Set[AnyRef] = spark.sparkContext.listenerBus.listeners.asScala.toSet
 
-  test("two copies each of five session-owning queries on 4 threads match their serial runs") {
+  test("two copies each of seven session-owning queries on 4 threads match their serial runs") {
     val serial = names.map(n => n -> sortedRows(n)).toMap
     val listeners0 = listeners()
     val conf0 = spark.conf.getAll
